@@ -1,0 +1,1 @@
+"""pdfspark benchmark: seeded workloads, end-to-end and per-layer metrics."""
