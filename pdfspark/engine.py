@@ -5,12 +5,17 @@ Dataflow (all vectorized — the ONLY Python surfaces are mapInPandas
 stages over Arrow batches; no row-wise udf() anywhere, per input_hint):
 
     documents(doc_id, text, ...)                      [driver parquet]
-      → synth_spans_df      pure Spark SQL expressions (JVM, codegen)
-      → interleaved table (doc_id, spans[])           [input_hint shape]
-      → generate_payloads   mapInPandas → (doc_id, payload, size_class)
-      → salt_by_size        explicit skew repartition  (scale.py)
+      → salt_docs_by_size   explicit skew repartition of the text rows
+                            (scale.py) — the pipeline's ONLY Exchange
+      → generate_payloads   mapInPandas → (doc_id, payload, size_class);
+                            spans synthesize in-worker from text
       → extract             mapInPandas → (doc_id, status, error, spans[])
       → explode to rows for comparison / sinks
+
+generate → extract pipeline in one stage behind the salt. The
+interleaved table (doc_id, spans[]) of the input_hint shape is
+synth_spans_df — pure Spark SQL expressions (JVM, codegen) — for the
+consumers that read spans directly.
 
 The per-document kernel state (xref maps, object caches) lives inside
 one mapInPandas batch pass per document and never crosses an executor
@@ -208,11 +213,10 @@ def generate_payloads(
     - a spans-only frame (doc_id, spans[]): spans cross the Arrow
       boundary as struct arrays and payloads build from the structs.
 
-    size_class = log4 bucket of payload length — the explicit skew
-    column consumed by scale.salt_by_size when salting post-generation
-    (the checkpointed sink path); the flagship pipeline salts BEFORE
-    this stage instead (scale.salt_spans_by_size /
-    scale.salt_docs_by_size)."""
+    size_class = log4 bucket of payload length. Skew salting happens
+    BEFORE this stage (scale.salt_docs_by_size /
+    scale.salt_spans_by_size), so callers that salted pass
+    ensure=False and generation pipelines into extraction."""
     # NB: ensure_parallelism inspects df.rdd, which under AQE
     # materializes upstream shuffle stages eagerly (the work then runs
     # twice). Callers that already repartitioned pass ensure=False.

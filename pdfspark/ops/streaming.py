@@ -436,7 +436,7 @@ def run_streaming_extraction_to_table(
     import time
 
     from ..engine import extract_flat
-    from ..scale import overwrite_partitions
+    from ..scale import _lineage_df, overwrite_partitions
 
     data_dir = os.path.join(out_dir, "spans")
     lineage_dir = os.path.join(out_dir, "lineage")
@@ -470,10 +470,11 @@ def run_streaming_extraction_to_table(
             .first()
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage = spark.createDataFrame(
+        lineage = _lineage_df(
+            spark,
             [(int(batch_id), "done", int(stats.docs), int(stats.rows), wall_ms)],
             "batch_id long, status string, doc_count long, rows_out long, wall_ms long",
-        ).coalesce(1)
+        )
         # partition-overwrite on batch_id: a replayed batch REPLACES
         # its lineage row instead of appending a duplicate
         overwrite_partitions(lineage, spark, lineage_dir, "batch_id")

@@ -4,10 +4,12 @@ resumable bucketed execution (SURVEY.md §4.2, north_rule).
 Three thin app-level pieces ride on built-in Spark (everything else is
 AQE + Arrow + Catalyst; no custom rules):
 
-1. ``salt_by_size`` — AQE skew handling does NOT cover UDF stages, so
-   large-PDF skew in the mapInPandas extract stage is handled with an
-   explicit (size_class, salt) repartition: a handful of 100 MB docs
-   must not serialize one task (SURVEY §4.2(a)).
+1. ``salt_docs_by_size`` — AQE skew handling does NOT cover UDF
+   stages, so large-PDF skew in the mapInPandas stages is handled with
+   an explicit (size_class, salt) repartition of the cheap text rows
+   BEFORE generation: a handful of 100 MB docs must not serialize one
+   task (SURVEY §4.2(a)), and generation and extraction then pipeline
+   in one stage behind that single Exchange.
 2. ``lineage`` table — per-bucket checkpoint/metrics rows
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
    wall_ms, attempt).
@@ -31,6 +33,7 @@ import tempfile
 import time
 from typing import Optional
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -157,31 +160,6 @@ def salt_docs_by_size(
     return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
 
 
-def salt_by_size(
-    payloads: DataFrame,
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 4096,
-) -> DataFrame:
-    """Repartition the payload stream on (size_class, salt) ahead of
-    the extract UDF stage.
-
-    size_class is a log4 size bucket computed at generation time;
-    hashing (size_class, salt) spreads same-class docs evenly, so a skewed
-    tail of huge documents fans out across tasks instead of landing in
-    one. At 1000 executors, num_partitions ≈ 2-3× total cores; locally
-    AQE re-coalesces small outputs afterwards.
-    """
-    sc = payloads.sparkSession.sparkContext
-    n = num_partitions or max(sc.defaultParallelism * 3, 8)
-    # salt cardinality must be ≫ partition count: with only a handful
-    # of distinct (size_class, salt) keys, hash partitioning goes
-    # Poisson-lumpy and single partitions straggle
-    salted = payloads.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-    )
-    return salted.repartition(n, "size_class", "salt").drop("salt")
-
-
 # ---------------------------------------------------------------------------
 # 2 + 3. Lineage + resumable bucketed run
 # ---------------------------------------------------------------------------
@@ -198,31 +176,71 @@ def _has_lineage(lineage_dir: str) -> bool:
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_dir: str) -> set[int]:
-    if not _has_lineage(lineage_dir):
-        return set()
-    rows = (
-        spark.read.parquet(lineage_dir)
-        .where(F.col("status") == "done")
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    return {r.bucket for r in rows}
+def _lineage_df(
+    spark: SparkSession, rows: list[tuple], schema: str = LINEAGE_SCHEMA
+) -> DataFrame:
+    """A handful of lineage rows as a one-partition frame (one file per
+    write), built from pandas through Arrow: Spark turns it into a
+    JVM-local relation, so writing it runs no Python worker
+    (``createDataFrame`` over a list of tuples pickles the rows and
+    converts them in a Python-worker job)."""
+    names = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema).coalesce(1)
 
 
-def bucket_attempts(spark: SparkSession, lineage_dir: str) -> dict[int, int]:
-    """Max attempt recorded per bucket (any status) — the retry
+def _lineage_state(
+    spark: SparkSession, lineage_dir: str
+) -> tuple[set[int], dict[int, int]]:
+    """(buckets with a 'done' row, max attempt per bucket over any
+    status) from ONE lineage scan — the resume set and the retry
     counter carried into the next run's lineage rows."""
     if not _has_lineage(lineage_dir):
-        return {}
+        return set(), {}
     rows = (
         spark.read.parquet(lineage_dir)
         .groupBy("bucket")
-        .agg(F.max("attempt").alias("a"))
+        .agg(
+            F.max(F.col("status") == "done").alias("done"),
+            F.max("attempt").alias("a"),
+        )
         .collect()
     )
-    return {r.bucket: r.a for r in rows}
+    return {r.bucket for r in rows if r.done}, {r.bucket: r.a for r in rows}
+
+
+def completed_buckets(spark: SparkSession, lineage_dir: str) -> set[int]:
+    return _lineage_state(spark, lineage_dir)[0]
+
+
+def bucket_attempts(spark: SparkSession, lineage_dir: str) -> dict[int, int]:
+    return _lineage_state(spark, lineage_dir)[1]
+
+
+def _group_frame(
+    spark: SparkSession,
+    sf_dir: str,
+    group: list[int],
+    n_buckets: int,
+    variant: str,
+    replicate: int,
+) -> DataFrame:
+    """One commit group's plan — the flagship shape of
+    engine.roundtrip_rows: bucket-filtered (doc_id, text) →
+    salt_docs_by_size → generate_payloads → extract, tagged with its
+    bucket. The salt is the plan's only Exchange and moves text rows,
+    not payload bytes; generation and extraction pipeline in one
+    stage behind it."""
+    from .engine import extract, generate_payloads, load_documents, replicate_docs
+
+    docs = load_documents(spark, sf_dir).select("doc_id", "text")
+    if replicate > 1:
+        # deterministic in-plan corpus scale-up (scaling/stress runs
+        # at the deployment surface — no data files written)
+        docs = replicate_docs(docs, replicate)
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    docs = docs.where(bucket.isin(group))
+    payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
+    return extract(payloads).withColumn("bucket", bucket)
 
 
 def run_checkpointed(
@@ -238,6 +256,11 @@ def run_checkpointed(
     sink: str = "parquet",
 ) -> int:
     """Extraction over bucket(doc_id) groups with per-group commit.
+
+    Each group runs :func:`_group_frame`, the flagship plan with one
+    Exchange of text rows ahead of a pipelined generate → extract
+    stage. Lineage rows are written from Arrow-built local frames
+    (:func:`_lineage_df`), and a resume reads the lineage once.
 
     ``sink="null"`` runs the IDENTICAL per-bucket-group loop (same
     corpus scans, bucket filters, salting, generation, extraction,
@@ -259,11 +282,6 @@ def run_checkpointed(
     data-written/lineage-pending window to exercise exactly that
     non-atomic gap.
     """
-    from .engine import (
-        extract, generate_payloads, load_documents, replicate_docs,
-        synth_spans_df,
-    )
-
     lineage_dir = os.path.join(out_dir, "lineage")
     data_dir = os.path.join(out_dir, "spans")
     # resume-config guard: a rerun with different corpus-shaping
@@ -303,42 +321,21 @@ def run_checkpointed(
         with os.fdopen(fd, "w") as f:
             _json.dump(cfg, f)
         os.replace(tmp, cfg_path)
-    done = set() if null_sink else completed_buckets(spark, lineage_dir)
-    attempts = {} if null_sink else bucket_attempts(spark, lineage_dir)
+    done, attempts = (set(), {}) if null_sink else _lineage_state(spark, lineage_dir)
     pending = [b for b in range(n_buckets) if b not in done]
     # record that this run is attempting the pending buckets BEFORE
     # doing the work: a crash mid-group leaves 'attempted' rows, so
     # the next run's lineage shows the true attempt count
     if pending and not null_sink:
-        spark.createDataFrame(
-            [
-                (int(b), "attempted", 0, 0, 0, 0, int(attempts.get(b, 0)) + 1)
-                for b in pending
-            ],
-            LINEAGE_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(lineage_dir)
-        attempts = {b: attempts.get(b, 0) + 1 for b in pending} | {
-            b: a for b, a in attempts.items() if b not in pending
-        }
+        attempts |= {b: attempts.get(b, 0) + 1 for b in pending}
+        _lineage_df(
+            spark, [(b, "attempted", 0, 0, 0, 0, attempts[b]) for b in pending]
+        ).write.mode("append").parquet(lineage_dir)
     processed = 0
     for i in range(0, len(pending), buckets_per_commit):
         group = pending[i : i + buckets_per_commit]
         t0 = time.monotonic()
-        docs = load_documents(spark, sf_dir)
-        if replicate > 1:
-            # deterministic in-plan corpus scale-up (scaling/stress
-            # runs at the deployment surface — no data files written)
-            docs = replicate_docs(docs, replicate)
-        docs = docs.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
-        docs = docs.where(F.col("bucket").isin([int(b) for b in group]))
-        spans = synth_spans_df(docs.drop("bucket"))
-        payloads = generate_payloads(spans, variant)
-        payloads = salt_by_size(payloads)
-        extracted = extract(payloads).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+        extracted = _group_frame(spark, sf_dir, group, n_buckets, variant, replicate)
         if null_sink:
             # compute-only twin: the SAME per-group plan (corpus scan,
             # bucket filter, salt, generate, extract) discarded through
@@ -359,7 +356,7 @@ def run_checkpointed(
         # generate+extract pipeline, which would double the work
         stats = (
             spark.read.parquet(data_dir)
-            .where(F.col("bucket").isin([int(b) for b in group]))
+            .where(F.col("bucket").isin(group))
             .groupBy("bucket")
             .agg(
                 F.count("*").alias("doc_count"),
@@ -369,21 +366,15 @@ def run_checkpointed(
             .collect()
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage_rows = [
-            (int(r.bucket), "done", int(r.doc_count), int(r.bytes_in or 0),
-             int(r.spans_out or 0), wall_ms, int(attempts.get(int(r.bucket), 1)))
-            for r in stats
-        ]
+        counts = {
+            r.bucket: (r.doc_count, r.bytes_in or 0, r.spans_out or 0) for r in stats
+        }
         # empty buckets still need a done row so resume skips them
-        seen = {r[0] for r in lineage_rows}
-        lineage_rows += [
-            (int(b), "done", 0, 0, 0, wall_ms, int(attempts.get(b, 1)))
-            for b in group
-            if b not in seen
-        ]
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(lineage_dir)
+        _lineage_df(
+            spark,
+            [(b, "done", *counts.get(b, (0, 0, 0)), wall_ms, attempts.get(b, 1))
+             for b in group],
+        ).write.mode("append").parquet(lineage_dir)
         processed += len(group)
         if fail_after is not None and processed >= fail_after:
             raise RuntimeError(f"injected failure after {processed} buckets")

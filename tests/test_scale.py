@@ -10,14 +10,18 @@ import pyspark.sql.functions as F
 import pytest
 
 from conftest import SF_SMOKE
-from pdfspark.engine import generate_payloads, load_documents, synth_spans_df
-from pdfspark.scale import completed_buckets, run_checkpointed, salt_by_size
+from pdfspark.engine import generate_payloads, load_documents
+from pdfspark.scale import (
+    LINEAGE_SCHEMA, _group_frame, _lineage_df, completed_buckets,
+    run_checkpointed, salt_docs_by_size,
+)
 
 
-def test_salt_by_size_spreads_partitions(spark):
-    docs = load_documents(spark, SF_SMOKE).limit(64)
-    payloads = generate_payloads(synth_spans_df(docs), "classic")
-    salted = salt_by_size(payloads, num_partitions=8)
+def test_salt_docs_by_size_spreads_partitions(spark):
+    docs = load_documents(spark, SF_SMOKE).limit(64).select("doc_id", "text")
+    salted = generate_payloads(
+        salt_docs_by_size(docs, num_partitions=8), "classic", ensure=False
+    )
     assert salted.rdd.getNumPartitions() == 8
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
@@ -86,19 +90,21 @@ def test_crash_between_data_write_and_lineage_commit(spark, tmp_path):
 
 def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
     """skew_large family (FIXTURES §3): 0.1%-style oversized docs must
-    not concentrate: after salt_by_size, no partition should carry more
-    than ~2 of the 8 planted giants (they differ in salt, so they
-    spread), and the byte-heaviest partition must hold well under the
-    giants' combined weight."""
+    not concentrate: after salt_docs_by_size (and the generation it
+    pipelines into), no partition should carry more than ~2 of the 8
+    planted giants (they differ in salt, so they spread), and the
+    byte-heaviest partition must hold well under the giants' combined
+    weight."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(40)
     giants = (
         docs.limit(8)
         .withColumn("doc_id", F.col("doc_id") + 900000)
         .withColumn("text", F.expr("repeat(text, 120)"))  # ~100-200× spans
     )
-    both = docs.unionByName(giants)
-    payloads = generate_payloads(synth_spans_df(both), "classic")
-    salted = salt_by_size(payloads, num_partitions=8)
+    both = docs.unionByName(giants).select("doc_id", "text")
+    salted = generate_payloads(
+        salt_docs_by_size(both, num_partitions=8), "classic", ensure=False
+    )
     per_part = (
         salted.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -112,6 +118,59 @@ def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
     assert max(r.giants for r in per_part) <= 3  # salted spread
     total = sum(r.bytes for r in per_part)
     assert max(r.bytes for r in per_part) < 0.55 * total
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Physical operator names, depth-first from the root, looking
+    through adaptive wrappers and query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_nodes(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _plan_nodes(plan.plan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))]
+
+
+def test_group_frame_plan_has_one_exchange_below_generate(spark):
+    """The checkpointed job's per-group plan is the flagship shape:
+    exactly one shuffle (of text rows) below the generate stage, and
+    generate → extract pipelined with no Exchange between them."""
+    df = _group_frame(spark, SF_SMOKE, [0, 1], 4, "mixed", 1)
+    df.collect()  # run it, so the adaptive plan is the final one
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+    extract_at, gen_at = [i for i, n in enumerate(nodes) if n == "MapInPandasExec"]
+    assert extract_at < gen_at < nodes.index("ShuffleExchangeExec"), nodes
+    assert not any("Exchange" in n for n in nodes[extract_at:gen_at]), nodes
+
+
+def test_lineage_rows_keep_schema_and_old_lineage_resumes(spark, tmp_path):
+    """Lineage written from the Arrow-built frame has exactly the
+    LINEAGE_SCHEMA parquet types, and a lineage file written the old
+    way (createDataFrame over a list of tuples) still drives resume:
+    its done buckets are skipped, and both kinds of file read back
+    together."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    new_dir = str(tmp_path / "new_lineage")
+    _lineage_df(spark, [(0, "done", 1, 2, 3, 4, 1)]).write.parquet(new_dir)
+    written = pq.read_table(new_dir).schema
+    assert {f.name: f.type for f in written} == {
+        "bucket": pa.int32(), "status": pa.string(), "doc_count": pa.int64(),
+        "bytes_in": pa.int64(), "spans_out": pa.int64(), "wall_ms": pa.int64(),
+        "attempt": pa.int32(),
+    }
+
+    out = str(tmp_path / "old")
+    spark.createDataFrame(
+        [(0, "done", 0, 0, 0, 7, 1), (1, "done", 0, 0, 0, 7, 1)], LINEAGE_SCHEMA
+    ).coalesce(1).write.parquet(os.path.join(out, "lineage"))
+    assert run_checkpointed(spark, SF_SMOKE, out, n_buckets=4) == 2
+    assert completed_buckets(spark, os.path.join(out, "lineage")) == {0, 1, 2, 3}
+    spans = spark.read.parquet(os.path.join(out, "spans"))
+    assert {r.bucket for r in spans.select("bucket").distinct().collect()} == {2, 3}
 
 
 def test_iceberg_dispatch_mocked(spark, monkeypatch):
