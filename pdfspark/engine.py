@@ -17,21 +17,41 @@ interleaved table (doc_id, spans[]) of the input_hint shape is
 synth_spans_df — pure Spark SQL expressions (JVM, codegen) — for the
 consumers that read spans directly.
 
+Every Python stage runs through ONE helper, ``per_doc``: it owns the
+Arrow batch loop and the fault policy of the reference (one document,
+one outcome — SURVEY §2.8, ``exception/EParseError.java``). A kernel
+``EParseError`` aborts only its own document (zero rows); any other
+exception fails the task, so a kernel bug is a failed query, never a
+silently missing row. Wrappers whose contract reports a broken
+document as a row (``extract``'s status='error') catch inside the
+per-document function.
+
 The per-document kernel state (xref maps, object caches) lives inside
-one mapInPandas batch pass per document and never crosses an executor
-boundary (SURVEY §1.3, §3 'boundaries').
+one call per document and never crosses an executor boundary
+(SURVEY §1.3, §3 'boundaries').
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional, Sequence
+from typing import Callable, Iterator, Sequence
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
-from .codec import build_pdf, variant_for
+from .codec import SPANS_PER_PAGE, build_pdf, synth_spans_py, variant_for
+from .kernel import (
+    EParseError,
+    extract_meta,
+    extract_meta_doc,
+    extract_spans,
+    extract_spans_geo,
+    parse_document,
+)
+from .kernel.cos import CDict, CString, Name
+from .kernel.errors import ParserSettings
 from .scale import salt_docs_by_size  # no cycle: scale's engine uses are lazy
 
 # ---------------------------------------------------------------------------
@@ -45,6 +65,42 @@ EXTRACT_SCHEMA = f"doc_id bigint, status string, error string, spans {SPANS_SCHE
 ROWS_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
 
 CHUNK = 80  # must match codec.synth_spans_py and the oracle SQL
+
+# ---------------------------------------------------------------------------
+# The per-document stage helper (every Python stage below runs through it)
+# ---------------------------------------------------------------------------
+
+
+def per_doc(
+    frame: DataFrame,
+    fn: Callable[..., list],
+    schema: str,
+    cols: Sequence[str] = ("doc_id", "payload"),
+) -> DataFrame:
+    """The one per-document Python stage: ``fn(*row)`` runs once per
+    row of ``frame`` (the values of ``cols``, in order) and returns a
+    list of output tuples in ``schema`` column order.
+
+    Fault policy: a kernel ``EParseError`` gives zero rows for that
+    document; any other exception fails the task. ``fn`` must return a
+    list, not a generator, so an ``EParseError`` is raised before any
+    of the document's rows are kept."""
+    names = [f.name for f in StructType.fromDDL(schema).fields]
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for row in zip(*(pdf[c] for c in cols)):
+                try:
+                    out = fn(*row)
+                except EParseError:
+                    continue
+                rows.extend(out)
+            # tuple rows measured faster than per-column lists here
+            yield pd.DataFrame(rows, columns=names)
+
+    return frame.mapInPandas(stage, schema=schema)
+
 
 # ---------------------------------------------------------------------------
 # Stage 1 — spans synthesis (pure Spark SQL; mirrors codec.synth_spans_py
@@ -87,9 +143,9 @@ def synth_spans_df(docs: DataFrame) -> DataFrame:
 
     The source ``text`` column rides along (r9): spans are a pure
     function of text (lockstep-pinned against codec.synth_spans_py),
-    so downstream stages that only need text — salt_spans_by_size's
-    closed-form size estimate, generate_payloads' in-worker synthesis —
-    let Catalyst prune the struct array out of the plan entirely, while
+    so downstream stages that only need text — the salt's closed-form
+    size estimate, generate_payloads' in-worker synthesis — let
+    Catalyst prune the struct array out of the plan entirely, while
     consumers of ``spans`` (spans_rows, the doc_spans SQL view) are
     unaffected."""
     return docs.select("doc_id", "text", F.expr(_SPANS_EXPR).alias("spans"))
@@ -119,10 +175,6 @@ def spans_rows(spans_df: DataFrame) -> DataFrame:
 # Stage 2 — payload generation (mapInPandas; the reference's produce()
 # path S3 run as a vectorized batch stage)
 # ---------------------------------------------------------------------------
-
-
-def _spans_to_tuples(spans) -> list[tuple]:
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
 def _parse_byte_size(v: str) -> int:
@@ -193,63 +245,47 @@ def ensure_parallelism(df: DataFrame, factor: int = 3) -> DataFrame:
     return df
 
 
-def generate_payloads(
-    spans_df: DataFrame, variant: str = "mixed", ensure: bool = True
+def _build_payloads(
+    docs: DataFrame,
+    build: Callable[..., bytes],
+    cols: Sequence[str] = ("doc_id", "text"),
 ) -> DataFrame:
-    """(doc_id, spans) or (doc_id, text) → (doc_id, payload, size_class).
+    """(doc_id, …) → (doc_id, payload, size_class): ``build(did, *rest)``
+    makes one document's PDF bytes from the values of ``cols``;
+    size_class = log4 bucket of payload length."""
 
-    Two accepted input shapes (r9, guide §4 — pass only the columns
-    the function needs):
-    - a TEXT frame carrying a ``text`` column (with or without a
-      derived ``spans`` column — synth_spans_df emits both): spans are
-      synthesized in-Python per document (codec.synth_spans_py — the
-      lockstep mirror of engine._SPANS_EXPR, so payload bytes are
-      identical), which skips the JVM struct synthesis and ships ~4×
-      fewer bytes through Arrow; a spans column present alongside text
-      is pruned out of the plan by Catalyst. NB this makes ``text``
-      authoritative: a frame whose spans were NOT derived from its
-      text by the canonical synthesis must drop the text column to
-      take the struct path.
-    - a spans-only frame (doc_id, spans[]): spans cross the Arrow
-      boundary as struct arrays and payloads build from the structs.
+    def one(did, *rest):
+        p = build(int(did), *rest)
+        return [(did, p, max(len(p), 1).bit_length() // 2)]
+
+    return per_doc(docs, one, PAYLOAD_SCHEMA, cols)
+
+
+def generate_payloads(
+    docs: DataFrame, variant: str = "mixed", ensure: bool = True
+) -> DataFrame:
+    """(doc_id, text) → (doc_id, payload, size_class).
+
+    Text is the only input (r9, guide §4 — pass only the columns the
+    function needs): spans are synthesized in-Python per document
+    (codec.synth_spans_py — the lockstep mirror of engine._SPANS_EXPR,
+    so payload bytes equal those built from synth_spans_df's structs),
+    which skips the JVM struct synthesis and ships ~4× fewer bytes
+    through Arrow. Other columns are dropped first, so Catalyst prunes
+    synth_spans_df's struct synthesis out of the plan.
 
     size_class = log4 bucket of payload length. Skew salting happens
-    BEFORE this stage (scale.salt_docs_by_size /
-    scale.salt_spans_by_size), so callers that salted pass
-    ensure=False and generation pipelines into extraction."""
-    # NB: ensure_parallelism inspects df.rdd, which under AQE
-    # materializes upstream shuffle stages eagerly (the work then runs
-    # twice). Callers that already repartitioned pass ensure=False.
-    from_text = "text" in spans_df.columns
-    if from_text:
-        spans_df = spans_df.select("doc_id", "text")
+    BEFORE this stage (scale.salt_docs_by_size), so callers that salted
+    pass ensure=False and generation pipelines into extraction."""
+    docs = docs.select("doc_id", "text")
     if ensure:
-        spans_df = ensure_parallelism(spans_df)
+        docs = ensure_parallelism(docs)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import synth_spans_py
+    def build(did: int, text: str) -> bytes:
+        v = variant_for(did, variant)
+        return build_pdf(str(did), synth_spans_py(str(did), text), v)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            if from_text:
-                for did, text in zip(ids, pdf["text"]):
-                    v = variant_for(int(did), variant)
-                    payloads.append(
-                        build_pdf(str(did), synth_spans_py(str(did), text), v)
-                    )
-            else:
-                for did, spans in zip(ids, pdf["spans"]):
-                    v = variant_for(int(did), variant)
-                    payloads.append(
-                        build_pdf(str(did), _spans_to_tuples(spans), v)
-                    )
-            sizes = [max(len(p), 1).bit_length() // 2 for p in payloads]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads, "size_class": sizes}
-            )
-
-    return spans_df.mapInPandas(gen, schema=PAYLOAD_SCHEMA)
+    return _build_payloads(docs, build)
 
 
 # ---------------------------------------------------------------------------
@@ -263,32 +299,18 @@ def extract(payloads: DataFrame) -> DataFrame:
 
     PERMISSIVE per-document fault policy (§2.8): malformed payloads
     yield status='error' and never spans, never a failed stage."""
+    return per_doc(payloads, _spans_row, EXTRACT_SCHEMA)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans  # import inside worker
 
-        for pdf in batches:
-            out_status, out_err, out_spans = [], [], []
-            for payload in pdf["payload"]:
-                status, err, spans = extract_spans(bytes(payload))
-                out_status.append(status)
-                out_err.append(err)
-                out_spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": m, "offset": o}
-                        for (k, t, m, o) in spans
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "status": out_status,
-                    "error": out_err,
-                    "spans": out_spans,
-                }
-            )
-
-    return payloads.mapInPandas(ker, schema=EXTRACT_SCHEMA)
+def _spans_row(key, payload) -> list[tuple]:
+    """(key, status, error, spans[]) for one payload — extract's row,
+    keyed by doc_id or (extract_pdf_files) by path."""
+    status, err, spans = extract_spans(bytes(payload))
+    # a dict display measured ~2.5× faster than dict(zip(keys, s))
+    return [(key, status, err, [
+        {"kind": k, "text": t, "media_ref": m, "offset": o}
+        for (k, t, m, o) in spans
+    ])]
 
 
 FLAT_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
@@ -315,39 +337,17 @@ def extract_flat(
     order) instead of content paint order; untagged docs unchanged.
     ``infer_spaces=True`` (r8) turns on §9.10-adjacent word-boundary
     inference (spaces from positioning-only glyph gaps)."""
+    settings = ParserSettings(allow_reconstruction=True) if lenient else None
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans
-        from .kernel.errors import ParserSettings
+    def one(did, payload):
+        # an error document's spans are [] — it contributes no rows
+        _status, _err, spans = extract_spans(
+            bytes(payload), settings, reading_order=reading_order,
+            infer_spaces=infer_spaces,
+        )
+        return [(did, o, k, t, m) for (k, t, m, o) in spans]
 
-        settings = ParserSettings(allow_reconstruction=True) if lenient else None
-
-        for pdf in batches:
-            ids, offs, kinds, texts, refs = [], [], [], [], []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, _err, spans = extract_spans(
-                    bytes(payload), settings, reading_order=reading_order,
-                    infer_spaces=infer_spaces,
-                )
-                if status != "ok":
-                    continue
-                for (k, t, m, o) in spans:
-                    ids.append(did)
-                    offs.append(o)
-                    kinds.append(k)
-                    texts.append(t)
-                    refs.append(m)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "offset": offs,
-                    "kind": kinds,
-                    "text": texts,
-                    "media_ref": refs,
-                }
-            )
-
-    return payloads.mapInPandas(ker, schema=FLAT_SCHEMA)
+    return per_doc(payloads, one, FLAT_SCHEMA)
 
 
 META_SCHEMA = (
@@ -370,25 +370,12 @@ def extract_metadata(payloads: DataFrame) -> DataFrame:
     metadata queries never decode content streams (the lazy-page
     optimization, SURVEY §4.1)."""
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_meta
+    def one(did, payload):
+        status, err, meta = extract_meta(bytes(payload))
+        meta = meta or {}
+        return [(did, status, err, *[meta.get(c) for c in _META_COLS])]
 
-        names = ("doc_id", "status", "error", *_META_COLS)
-        for pdf in batches:
-            # columnar assembly (r9): pd.DataFrame from per-column
-            # lists skips the per-row dict → per-cell inference path
-            data = {c: [] for c in names}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, err, meta = extract_meta(bytes(payload))
-                meta = meta or {}
-                data["doc_id"].append(did)
-                data["status"].append(status)
-                data["error"].append(err)
-                for c in _META_COLS:
-                    data[c].append(meta.get(c))
-            yield pd.DataFrame(data)
-
-    return payloads.mapInPandas(ker, schema=META_SCHEMA)
+    return per_doc(payloads, one, META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -416,8 +403,6 @@ def roundtrip_rows(
     READING-ORDER contract (r8): the generator paints marked-content
     sections in scrambled (two-column) order, so the identity holds
     only when extraction re-sequences by structure-tree traversal."""
-    from .scale import salt_docs_by_size
-
     # r9: ship (doc_id, text) to the Python stages — spans synthesize
     # in-worker (generate_payloads text path, byte-identical payloads)
     # instead of materializing struct arrays JVM-side and Arrow-
@@ -447,33 +432,15 @@ def extract_geometry(payloads: DataFrame, tj_kerning: bool = False) -> DataFrame
     Same single-UDF-stage shape as extract_flat. ``tj_kerning=True``
     counts TJ kern displacements toward span width (§9.4.3)."""
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans_geo
+    def one(did, payload):
+        _status, _err, spans = extract_spans_geo(
+            bytes(payload), tj_kerning=tj_kerning
+        )
+        return [
+            (did, o, k, x, y, w, h) for (k, _t, _m, o, x, y, w, h) in spans
+        ]
 
-        for pdf in batches:
-            ids, offs, kinds, xs, ys, ws, hs = [], [], [], [], [], [], []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, _err, spans = extract_spans_geo(
-                    bytes(payload), tj_kerning=tj_kerning
-                )
-                if status != "ok":
-                    continue
-                for (k, _t, _m, o, x, y, w, h) in spans:
-                    ids.append(did)
-                    offs.append(o)
-                    kinds.append(k)
-                    xs.append(x)
-                    ys.append(y)
-                    ws.append(w)
-                    hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "offset": offs, "kind": kinds,
-                    "x": xs, "y": ys, "w": ws, "h": hs,
-                }
-            )
-
-    return payloads.mapInPandas(ker, schema=GEO_SCHEMA)
+    return per_doc(payloads, one, GEO_SCHEMA)
 
 
 def salvage_rows(spark, sf_dir: str, encrypted: bool = False) -> DataFrame:
@@ -484,8 +451,6 @@ def salvage_rows(spark, sf_dir: str, encrypted: bool = False) -> DataFrame:
     ``encrypted=True`` (driver query `pdf_salvage_encrypted`) breaks
     cipher- and layout-rotated ENCRYPTED docs instead: reconstruction
     must harvest /Encrypt, unlock, then expand the object streams."""
-    from .scale import salt_docs_by_size
-
     variant = (
         "malformed:no_startxref_encrypted"
         if encrypted
@@ -502,8 +467,6 @@ def geometry_rows(
     """Span-geometry pipeline: the roundtrip path with the
     geometry-widened extractor (driver query `pdf_span_geometry`;
     `pdf_span_geometry_kerned` passes tj_kerning=True)."""
-    from .scale import salt_docs_by_size
-
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
     return extract_geometry(payloads, tj_kerning=tj_kerning)
@@ -514,46 +477,27 @@ def status_rows(spark, sf_dir: str, modulo: int = 17) -> DataFrame:
     malformed payload (kind rotates) — those must land status='error'
     with zero spans (FileHandlingTest contract §5.2)."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
+    kinds = ("noise", "only_header", "header_eof", "zerosized", "no_startxref")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import synth_spans_py
-
-        kinds = ("noise", "only_header", "header_eof", "zerosized", "no_startxref")
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for did, text in zip(ids, pdf["text"]):
-                did = int(did)
-                if did % modulo == 0:
-                    v = f"malformed:{kinds[(did // modulo) % len(kinds)]}"
-                else:
-                    v = variant_for(did, "mixed")
-                payloads.append(
-                    build_pdf(str(did), synth_spans_py(str(did), text), v)
-                )
-            sizes = [max(len(p), 1).bit_length() // 2 for p in payloads]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads, "size_class": sizes})
-
-    payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
+    def build(did: int, text: str) -> bytes:
+        if did % modulo == 0:
+            v = f"malformed:{kinds[(did // modulo) % len(kinds)]}"
+        else:
+            v = variant_for(did, "mixed")
+        return build_pdf(str(did), synth_spans_py(str(did), text), v)
 
     # r9: the query only needs (status, span COUNT) — emit them
     # directly from the kernel stage instead of shipping every span as
     # an Arrow struct array through Python→JVM just to size() it
     # (guide §4: pass/return only what the consumer needs).
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans
+    def one(did, payload):
+        status, _err, spans = extract_spans(bytes(payload))
+        return [(did, status, len(spans))]
 
-        for pdf in batches:
-            ids, sts, ns = [], [], []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                status, _err, spans = extract_spans(bytes(payload))
-                ids.append(did)
-                sts.append(status)
-                ns.append(len(spans))
-            yield pd.DataFrame({"doc_id": ids, "status": sts, "n_spans": ns})
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, status string, n_spans int"
+    return per_doc(
+        _build_payloads(salt_docs_by_size(docs), build),
+        one,
+        "doc_id bigint, status string, n_spans int",
     )
 
 
@@ -585,26 +529,13 @@ def attachments_rows(spark, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "attachments", ensure=False)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
+    def one(did, payload):
+        return [
+            (did, r["att_name"], r["filename"], r["size"], r["content_md5"])
+            for r in parse_document(bytes(payload)).embedded_files()
+        ]
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    doc = parse_document(bytes(payload))
-                    for r in doc.embedded_files():
-                        rows.append({"doc_id": did, **r})
-                except Exception:
-                    continue  # PERMISSIVE per-doc policy (§2.8)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "att_name", "filename", "size", "content_md5",
-                ],
-            )
-
-    return payloads.mapInPandas(ker, schema=ATT_SCHEMA)
+    return per_doc(payloads, one, ATT_SCHEMA)
 
 
 def outlines_rows(spark, sf_dir: str) -> DataFrame:
@@ -615,30 +546,11 @@ def outlines_rows(spark, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "navigation", ensure=False)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
+    def one(did, payload):
+        return [(did, *r) for r in parse_document(bytes(payload)).outlines()]
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for (pos, level, title) in parse_document(
-                        bytes(payload)
-                    ).outlines():
-                        rows.append(
-                            {
-                                "doc_id": did, "pos": pos,
-                                "level": level, "title": title,
-                            }
-                        )
-                except Exception:
-                    continue  # PERMISSIVE per-doc policy (§2.8)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "pos", "level", "title"]
-            )
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, pos int, level int, title string"
+    return per_doc(
+        payloads, one, "doc_id bigint, pos int, level int, title string"
     )
 
 
@@ -665,56 +577,33 @@ def reference_golden_rows(spark, sf_dir: str) -> DataFrame:
     pins of this engine's text-op layer (the reference has none).
     ``sf_dir`` is unused (the inputs are the fixed real files) but
     kept for the driver's (spark, sf_dir) calling contract."""
-    import os
+    import hashlib
 
     paths = [os.path.join(REFERENCE_PDF_DIR, f) for f in REFERENCE_PDFS]
     payloads = spark.read.format("binaryFile").load(paths)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import os as _os
+    def one(path, content):
+        data = bytes(content)
+        try:  # §2.8 per-file fault policy for the meta pass: a row, not a drop
+            meta = extract_meta_doc(data)
+        except Exception:
+            meta = {"title": "", "author": "", "page_count": 0, "page_mode": ""}
+        status, _err, spans = extract_spans(data)
+        h = hashlib.md5()
+        for (k, t, m, o) in spans:
+            h.update(f"{k}|{t or ''}|{m or ''}|{o}\x1e".encode())
+        return [(
+            os.path.basename(path), meta["title"], meta["author"],
+            meta["page_count"], meta["page_mode"], status, len(spans),
+            h.hexdigest()[:16],
+        )]
 
-        from .kernel import extract_meta_doc, extract_spans
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                try:  # §2.8 per-file fault policy for the meta pass
-                    meta = extract_meta_doc(data)
-                except Exception:
-                    meta = {
-                        "title": "", "author": "", "page_count": 0,
-                        "page_mode": "",
-                    }
-                status, _err, spans = extract_spans(data)
-                h = hashlib.md5()
-                for (k, t, m, o) in spans:
-                    h.update(f"{k}|{t or ''}|{m or ''}|{o}\x1e".encode())
-                rows.append(
-                    {
-                        "fname": _os.path.basename(path),
-                        "title": meta["title"],
-                        "author": meta["author"],
-                        "page_count": meta["page_count"],
-                        "page_mode": meta["page_mode"],
-                        "status": status,
-                        "n_spans": len(spans),
-                        "spans_md5": h.hexdigest()[:16],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "fname", "title", "author", "page_count", "page_mode",
-                    "status", "n_spans", "spans_md5",
-                ],
-            )
-
-    return payloads.mapInPandas(
-        ker,
-        schema="fname string, title string, author string, page_count int,"
+    return per_doc(
+        payloads,
+        one,
+        "fname string, title string, author string, page_count int,"
         " page_mode string, status string, n_spans bigint, spans_md5 string",
+        ("path", "content"),
     )
 
 
@@ -747,31 +636,18 @@ def reference_malformed_rows(spark, sf_dir: str) -> DataFrame:
         os.path.join(MALFORMED_PDF_DIR, "*.pdf")
     )
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
+    def one(path, content):
+        status, err, spans = extract_spans(bytes(content))
+        return [(
+            os.path.basename(path), status, (err or "").split(":")[0],
+            len(spans),
+        )]
 
-        from .kernel import extract_spans
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                status, err, spans = extract_spans(bytes(content))
-                rows.append(
-                    {
-                        "fname": _os.path.basename(path),
-                        "status": status,
-                        "err_class": (err or "").split(":")[0],
-                        "n_spans": len(spans),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["fname", "status", "err_class", "n_spans"]
-            )
-
-    got = payloads.mapInPandas(
-        ker,
-        schema="fname string, status string, err_class string,"
-        " n_spans bigint",
+    got = per_doc(
+        payloads,
+        one,
+        "fname string, status string, err_class string, n_spans bigint",
+        ("path", "content"),
     )
     expected = spark.createDataFrame(
         [(f,) for f in MALFORMED_PDFS], "fname string"
@@ -806,44 +682,26 @@ def mutation_rows(spark, sf_dir: str) -> DataFrame:
     control — fuzz.GEN_FUZZ_VARIANTS) union in, built AND mutated
     in-executor from just their variant names.
     ``sf_dir`` unused (fixed real inputs; driver calling contract)."""
-    from .fuzz import GEN_FUZZ_VARIANTS
+    from .fuzz import GEN_FUZZ_VARIANTS, generator_seed_payload, mutant_rows_for
 
     schema = (
         "fname string, kind string, seed int, status string,"
         " err_class string, n_spans bigint"
     )
-    cols = ["fname", "kind", "seed", "status", "err_class", "n_spans"]
     paths = [os.path.join(REFERENCE_PDF_DIR, f) for f in REFERENCE_PDFS]
     payloads = spark.read.format("binaryFile").load(paths)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
+    def one(path, content):
+        return mutant_rows_for(os.path.basename(path), bytes(content))
 
-        from .fuzz import mutant_rows_for
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(
-                    mutant_rows_for(_os.path.basename(path), bytes(content))
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    def gen_ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .fuzz import generator_seed_payload, mutant_rows_for
-
-        for pdf in batches:
-            rows = []
-            for v in pdf["variant"]:
-                fname, payload = generator_seed_payload(v)
-                rows.extend(mutant_rows_for(fname, payload))
-            yield pd.DataFrame(rows, columns=cols)
+    def one_seed(variant):
+        return mutant_rows_for(*generator_seed_payload(variant))
 
     gen_seeds = spark.createDataFrame(
         [(v,) for v in GEN_FUZZ_VARIANTS], "variant string"
     ).repartition(len(GEN_FUZZ_VARIANTS))
-    return payloads.mapInPandas(ker, schema=schema).unionByName(
-        gen_seeds.mapInPandas(gen_ker, schema=schema)
+    return per_doc(payloads, one, schema, ("path", "content")).unionByName(
+        per_doc(gen_seeds, one_seed, schema, ("variant",))
     )
 
 
@@ -857,32 +715,13 @@ def form_fields_rows(spark, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "acroform", ensure=False)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
+    def one(did, payload):
+        return [(did, *r) for r in parse_document(bytes(payload)).form_fields()]
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for (pos, name, ftype, value) in parse_document(
-                        bytes(payload)
-                    ).form_fields():
-                        rows.append(
-                            {
-                                "doc_id": did, "pos": pos, "name": name,
-                                "ftype": ftype, "value": value,
-                            }
-                        )
-                except Exception:
-                    continue  # PERMISSIVE per-doc policy (§2.8)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "pos", "name", "ftype", "value"]
-            )
-
-    return payloads.mapInPandas(
-        ker,
-        schema="doc_id bigint, pos int, name string, ftype string,"
-        " value string",
+    return per_doc(
+        payloads,
+        one,
+        "doc_id bigint, pos int, name string, ftype string, value string",
     )
 
 
@@ -894,26 +733,10 @@ def links_rows(spark, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     payloads = generate_payloads(salt_docs_by_size(docs), "navigation", ensure=False)
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
+    def one(did, payload):
+        return [(did, *r) for r in parse_document(bytes(payload)).link_uris()]
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for (page_idx, uri) in parse_document(
-                        bytes(payload)
-                    ).link_uris():
-                        rows.append(
-                            {"doc_id": did, "page_idx": page_idx, "uri": uri}
-                        )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "uri"])
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, page_idx int, uri string"
-    )
+    return per_doc(payloads, one, "doc_id bigint, page_idx int, uri string")
 
 
 PAGE_MODES_ROTATION = (
@@ -927,34 +750,18 @@ def catalog_fields_rows(spark, sf_dir: str) -> DataFrame:
     metadata kernel reads them back. Oracle: the source columns."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text", "lang")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import build_pdf, synth_spans_py
-        from .kernel.cos import CString, Name
+    def build(did: int, text: str, lang: str) -> bytes:
+        mode = PAGE_MODES_ROTATION[did % len(PAGE_MODES_ROTATION)]
+        return build_pdf(
+            str(did),
+            synth_spans_py(str(did), text),
+            "classic",
+            catalog_extra={"Lang": CString.from_text(lang), "PageMode": Name(mode)},
+        )
 
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for did, text, lang in zip(ids, pdf["text"], pdf["lang"]):
-                did = int(did)
-                spans = synth_spans_py(str(did), text)
-                payloads.append(
-                    build_pdf(
-                        str(did),
-                        spans,
-                        "classic",
-                        catalog_extra={
-                            "Lang": CString.from_text(lang),
-                            "PageMode": Name(
-                                PAGE_MODES_ROTATION[did % len(PAGE_MODES_ROTATION)]
-                            ),
-                        },
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads, "size_class": [1] * len(ids)}
-            )
-
-    payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
+    payloads = _build_payloads(
+        salt_docs_by_size(docs), build, ("doc_id", "text", "lang")
+    )
     meta = extract_metadata(payloads)
     return meta.select("doc_id", "lang", "page_mode")
 
@@ -971,8 +778,6 @@ def _page_label_ranges(did: int, n_pages: int) -> list:
     style by doc_id (/St omitted when it would be the default 1);
     docs with >= 3 pages open a second prefixed range at page 2 —
     prefix-only (no /S) when doc_id % 7 == 0."""
-    from .kernel.cos import CDict, CString, Name
-
     r1 = CDict()
     r1[Name("S")] = Name(PAGE_LABEL_STYLES[did % 5])
     st1 = did % 3 + 1
@@ -994,8 +799,6 @@ def page_label_tree(did: int, n_pages: int):
     two ranges exercises the /Kids + /Limits shape (§7.9.7); the kids
     stay direct dicts (legal — deref handles both). Everything else
     gets a flat /Nums leaf."""
-    from .kernel.cos import CDict, Name
-
     ranges = _page_label_ranges(did, n_pages)
     root = CDict()
     if did % 4 == 0 and len(ranges) == 2:
@@ -1026,54 +829,23 @@ def page_labels_rows(spark, sf_dir: str) -> DataFrame:
     PDFDocCatalog.java's mode/layout/lang trio)."""
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import SPANS_PER_PAGE, build_pdf, synth_spans_py
+    def build(did: int, text: str) -> bytes:
+        spans = synth_spans_py(str(did), str(text) * PL_REP)
+        n_pages = max(1, -(-len(spans) // SPANS_PER_PAGE))
+        return build_pdf(
+            str(did), spans, "classic",
+            catalog_extra={"PageLabels": page_label_tree(did, n_pages)},
+        )
 
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for did, text in zip(ids, pdf["text"]):
-                did = int(did)
-                spans = synth_spans_py(str(did), str(text) * PL_REP)
-                n_pages = max(1, -(-len(spans) // SPANS_PER_PAGE))
-                payloads.append(
-                    build_pdf(
-                        str(did),
-                        spans,
-                        "classic",
-                        catalog_extra={
-                            "PageLabels": page_label_tree(did, n_pages)
-                        },
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads,
-                 "size_class": [1] * len(ids)}
-            )
+    def one(did, payload):
+        labels = parse_document(bytes(payload)).page_labels()
+        return [(did, idx, lab) for idx, lab in enumerate(labels)]
 
-    payloads = salt_docs_by_size(docs).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel.extract import parse_document
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for idx, lab in enumerate(
-                        parse_document(bytes(payload)).page_labels()
-                    ):
-                        rows.append(
-                            {"doc_id": did, "page_idx": idx, "label": lab}
-                        )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "label"])
-
-    return payloads.mapInPandas(
-        ker, schema="doc_id bigint, page_idx int, label string"
+    return per_doc(
+        _build_payloads(salt_docs_by_size(docs), build),
+        one,
+        "doc_id bigint, page_idx int, label string",
     )
-
 
 
 def date_rows(spark, sf_dir: str) -> DataFrame:
@@ -1109,27 +881,9 @@ def extract_pdf_files(spark, path_glob: str) -> DataFrame:
         .load(path_glob)
         .select(F.col("path"), F.col("content").alias("payload"))
     )
-
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import extract_spans
-
-        for pdf in batches:
-            rows = []
-            for path, payload in zip(pdf["path"], pdf["payload"]):
-                status, err, spans = extract_spans(bytes(payload))
-                rows.append(
-                    {
-                        "path": path,
-                        "status": status,
-                        "error": err,
-                        "spans": [
-                            {"kind": k, "text": t, "media_ref": m, "offset": o}
-                            for (k, t, m, o) in spans
-                        ],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(
-        ker, schema=f"path string, status string, error string, spans {SPANS_SCHEMA}"
+    return per_doc(
+        files,
+        _spans_row,
+        f"path string, status string, error string, spans {SPANS_SCHEMA}",
+        ("path", "payload"),
     )

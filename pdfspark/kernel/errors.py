@@ -8,9 +8,13 @@ Re-expresses the reference's fault model (SURVEY.md §2.8):
   ``parser/Diagnostics.java:20-42`` dispatch): a failed soft assert
   either logs-and-continues or raises, per flag.
 
-At Spark scale every hard failure is caught per document inside the
-mapInPandas kernel and becomes ``(status='error', error=msg)`` —
-PERMISSIVE-mode semantics; a malformed doc never fails a stage.
+At Spark scale every stage runs through ``engine.per_doc``: an
+``EParseError`` there gives zero rows for its document, and any other
+exception fails the task, so a kernel bug is never a silently missing
+row. The extraction wrappers (``extract.extract_spans*``,
+``extract.extract_meta``) instead catch every failure of one document
+and report it as ``(status='error', error=msg)`` — PERMISSIVE-mode
+semantics; a malformed doc never fails a stage there.
 """
 
 from __future__ import annotations

@@ -223,7 +223,17 @@ def minhash_pairs_df(
     the shingles of CANDIDATE docs only — the candidate id set is
     broadcast and the big shingle table is semi-join-filtered before
     any shuffle (§3.2's pre-filter move; candidate ids are bounded by
-    Σ_buckets cap², orders of magnitude below the corpus)."""
+    Σ_buckets cap², orders of magnitude below the corpus).
+
+    ``verify_docs`` (optional) must hold the SAME (doc_id, text) rows as
+    ``docs`` — only its partitioning may differ. The verify pass
+    inner-joins candidate pairs against it, so a candidate doc missing
+    from it silently loses its pairs and a doc with different text
+    gets a wrong Jaccard count."""
+    if verify_docs is not None:
+        missing = {"doc_id", "text"} - set(verify_docs.columns)
+        if missing:
+            raise ValueError(f"verify_docs lacks columns {sorted(missing)}")
     # one Exchange on (band, band_val): bucket membership, cap, and
     # i<j pair expansion all inside the aggregation's partitioning.
     # Shingles are NOT persisted (r9): the signature pass streams them
@@ -260,8 +270,7 @@ def minhash_pairs_df(
     # that slim frame for both the intersection join and the set sizes.
     # verify_docs (r9): callers whose `docs` carries a parallelism
     # repartition pass the raw scan here — the broadcast-join filter
-    # then runs scan-side instead of behind a full-corpus Exchange
-    # (same rows either way; the repartition only moves bytes).
+    # then runs scan-side instead of behind a full-corpus Exchange.
     vdocs = verify_docs if verify_docs is not None else docs
     cand_ids = (
         cand.select(F.col("a_id").alias("doc_id"))

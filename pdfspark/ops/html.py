@@ -13,12 +13,10 @@ shuffle anywhere in the query (scan → UDF → result).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..engine import ensure_parallelism, per_doc
 from ..kernel.htmlops import MIN_BLOCK_CHARS, main_content_blocks, strip_boilerplate
 from ..kernel.htmlops import MAX_LINK_DENSITY  # r7: html_links oracle
 
@@ -66,8 +64,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row-group parquet. ensure_parallelism conditionally
     # repartitions on doc_id so the Python stage fans out; row-wise
     # computation, so results are partition-invariant.
-    from ..engine import ensure_parallelism
-
     return ensure_parallelism(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
@@ -76,16 +72,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def html_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, main_text): wrap → strip in one Arrow-batched stage."""
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                strip_boilerplate(wrap_html(str(d), t or ""))
-                for d, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "main_text": out})
+    def one(d, t):
+        return [(d, strip_boilerplate(wrap_html(str(d), t or "")))]
 
-    return _docs(spark, sf_dir).mapInPandas(
-        ker, schema="doc_id bigint, main_text string"
+    return per_doc(
+        _docs(spark, sf_dir), one, "doc_id bigint, main_text string",
+        ("doc_id", "text"),
     )
 
 
@@ -93,31 +85,24 @@ def html_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_kept, n_dropped, content_chars, boiler_chars): the
     block classifier's feature surface, per document."""
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                blocks = main_content_blocks(wrap_html(str(d), t or ""))
-                kept = [b for b in blocks if b["keep"]]
-                dropped = [b for b in blocks if not b["keep"]]
-                rows.append(
-                    (
-                        d,
-                        len(kept),
-                        len(dropped),
-                        sum(b["n_chars"] for b in kept),
-                        sum(b["n_chars"] for b in dropped),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_kept", "n_dropped", "content_chars", "boiler_chars"],
-            )
+    def one(d, t):
+        blocks = main_content_blocks(wrap_html(str(d), t or ""))
+        kept = [b for b in blocks if b["keep"]]
+        dropped = [b for b in blocks if not b["keep"]]
+        return [(
+            d,
+            len(kept),
+            len(dropped),
+            sum(b["n_chars"] for b in kept),
+            sum(b["n_chars"] for b in dropped),
+        )]
 
-    return _docs(spark, sf_dir).mapInPandas(
-        ker,
-        schema="doc_id bigint, n_kept int, n_dropped int, "
+    return per_doc(
+        _docs(spark, sf_dir),
+        one,
+        "doc_id bigint, n_kept int, n_dropped int, "
         "content_chars bigint, boiler_chars bigint",
+        ("doc_id", "text"),
     )
 
 
@@ -239,22 +224,15 @@ def html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     One mapInPandas stage, zero shuffles."""
     from ..kernel.htmlops import link_rows as _lr
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                for o, (href, anchor, keep) in enumerate(
-                    _lr(wrap_html_linked(str(d), t or ""))
-                ):
-                    rows.append((d, o, href, anchor, keep))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "ord", "href", "anchor", "in_main"]
-            )
+    def one(d, t):
+        links = _lr(wrap_html_linked(str(d), t or ""))
+        return [(d, o, *link) for o, link in enumerate(links)]
 
-    return _docs(spark, sf_dir).mapInPandas(
-        ker,
-        schema="doc_id bigint, ord int, href string, anchor string, "
-        "in_main boolean",
+    return per_doc(
+        _docs(spark, sf_dir),
+        one,
+        "doc_id bigint, ord int, href string, anchor string, in_main boolean",
+        ("doc_id", "text"),
     )
 
 
@@ -263,18 +241,12 @@ def html_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — the HTML analog of pdf_outlines. One mapInPandas stage."""
     from ..kernel.htmlops import heading_outline as _ho
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                for o, lvl, title in _ho(wrap_html_sections(str(d), t or "")):
-                    rows.append((d, o, lvl, title))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "ord", "level", "title"]
-            )
+    def one(d, t):
+        return [(d, *h) for h in _ho(wrap_html_sections(str(d), t or ""))]
 
-    return _docs(spark, sf_dir).mapInPandas(
-        ker, schema="doc_id bigint, ord int, level int, title string"
+    return per_doc(
+        _docs(spark, sf_dir), one, "doc_id bigint, ord int, level int, title string",
+        ("doc_id", "text"),
     )
 
 

@@ -82,21 +82,30 @@ def overwrite_partitions(
 # ---------------------------------------------------------------------------
 
 
-def salt_spans_by_size(
-    spans_df: DataFrame,
+def salt_docs_by_size(
+    docs_df: DataFrame,
     num_partitions: Optional[int] = None,
     salt_buckets: int = 4096,
 ) -> DataFrame:
-    """Skew-salt BEFORE the expensive UDF stages, using the spans
-    array itself as the size proxy (payload bytes are linear in total
-    span text). Shuffling here moves the small spans rows — not the
+    """Skew-salt the (doc_id, text) rows BEFORE the expensive UDF
+    stages. Shuffling here moves the small text rows — not the
     generated payload bytes — and both generation and extraction then
     run pipelined in ONE stage with no further exchange (measured
-    2.3× faster than salting the payload stream between them).
+    2.3× faster than salting the payload stream between them). Other
+    columns (synth_spans_df's ``spans``) ride along unchanged.
 
-    size_class = log4 bucket of the total text length; salt spreads
-    same-class docs. At 1000 executors this is the only shuffle in the
-    whole extraction pipeline.
+    size_class = log4 bucket of the estimated payload size; salt
+    spreads same-class docs. The span synthesis is deterministic in
+    ``text`` (engine._SPANS_EXPR == codec.synth_spans_py), so the
+    estimate is CLOSED-FORM in the text length:
+
+        k       = ceil(len/CHUNK)            text chunks
+        n_media = k div 3                    media spans (i%3==2)
+        est     = len + 64·k + (32+64)·n_media
+
+    which is exactly aggregate(spans, acc + coalesce(length(text),32)
+    + 64) over the synthesized spans (pinned by
+    tests/test_engine.py), without materializing the struct array.
 
     Partition count: data-driven at scale (≈ input_bytes / 128 MB,
     which at 100 TB is tens of thousands of partitions ≫ cores, so
@@ -104,51 +113,6 @@ def salt_spans_by_size(
     to ≈ one task per core, which measurement confirms is fastest —
     size_class co-location keeps waves homogeneous, so extra waves
     only add scheduling overhead."""
-    sc = spans_df.sparkSession.sparkContext
-    n = num_partitions or max(sc.defaultParallelism, 8)
-    if "text" in spans_df.columns:
-        # r9: synth_spans_df keeps the source text column, and the
-        # spans aggregate below is a closed form of the text length
-        # (see salt_docs_by_size — same k/est identity, pinned by the
-        # synthesis-lockstep tests). Computing est from text lets
-        # Catalyst prune the struct synthesis out of plans whose
-        # downstream consumers (generate_payloads text path) never
-        # read `spans`; size_class/salt and hence the partitioning are
-        # IDENTICAL either way.
-        k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
-        est = F.expr(f"length(text) + 64L * {k} + 96L * ({k} DIV 3)")
-    else:
-        est = F.expr(
-            "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 32L) + 64L)"
-        )
-    salted = spans_df.withColumn(
-        "size_class",
-        F.floor(F.log2(F.greatest(est, F.lit(2))) / 2).cast("int"),
-    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
-    return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
-
-
-def salt_docs_by_size(
-    docs_df: DataFrame,
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 4096,
-) -> DataFrame:
-    """Text-frame twin of :func:`salt_spans_by_size` (r9, guide §4:
-    ship only the columns the Python stage needs). The span synthesis
-    is deterministic in ``text`` (engine._SPANS_EXPR ==
-    codec.synth_spans_py), so the per-doc size estimate — and with it
-    size_class, salt, and the resulting partitioning — is computed
-    CLOSED-FORM from the text length instead of materializing the
-    spans array first:
-
-        k       = ceil(len/CHUNK)            text chunks
-        n_media = k div 3                    media spans (i%3==2)
-        est     = len + 64·k + (32+64)·n_media
-
-    which is exactly aggregate(spans, acc + coalesce(length(text),32)
-    + 64) over the synthesized spans. Same shuffle, ~4× fewer bytes
-    (no struct array), and the generate stage synthesizes spans
-    in-Python from the text it already holds."""
     sc = docs_df.sparkSession.sparkContext
     n = num_partitions or max(sc.defaultParallelism, 8)
     k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
@@ -158,6 +122,11 @@ def salt_docs_by_size(
         F.floor(F.log2(F.greatest(est, F.lit(2))) / 2).cast("int"),
     ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
     return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
+
+
+# the frozen bench.py and tools/{ab,scaling,skew}_bench.py compose this
+# name over synth_spans_df output, which carries ``text``
+salt_spans_by_size = salt_docs_by_size
 
 
 # ---------------------------------------------------------------------------

@@ -24,15 +24,14 @@ from .engine import (
     load_documents,
     synth_spans_df,
 )
-from .scale import salt_spans_by_size
+from .scale import salt_docs_by_size
 
 
 def register(spark: SparkSession, sf_dir: str, variant: str = "mixed") -> None:
     docs = load_documents(spark, sf_dir)
     docs.createOrReplaceTempView("documents")
-    spans = synth_spans_df(docs)
-    spans.createOrReplaceTempView("doc_spans")
-    salted = salt_spans_by_size(spans)
+    synth_spans_df(docs).createOrReplaceTempView("doc_spans")
+    salted = salt_docs_by_size(docs.select("doc_id", "text"))
     payloads = generate_payloads(salted, variant, ensure=False)
     extract_flat(payloads).createOrReplaceTempView("pdf_spans")
     extract_metadata(payloads).createOrReplaceTempView("pdf_meta")

@@ -9,14 +9,17 @@ import pytest
 from conftest import SF_SMOKE
 from pdfspark.codec import synth_spans_py
 from pdfspark.engine import (
+    EXTRACT_SCHEMA,
     extract,
     generate_payloads,
     load_documents,
     metadata_rows,
+    per_doc,
     roundtrip_rows,
     status_rows,
     synth_spans_df,
 )
+from pdfspark.kernel import EParseError
 
 
 def test_synth_spans_lockstep(spark):
@@ -59,28 +62,11 @@ def test_roundtrip_rows_matches_synthesis(spark):
 
 
 def test_generate_payloads_struct_and_text_paths_identical(spark):
-    """r9: generate_payloads prefers the text path when a text column
-    is present (synth_spans_df keeps text alongside spans). Pin that
-    (a) the struct path — a spans-only frame — still works and builds
-    byte-identical payloads, and (b) salt_spans_by_size's closed-form
-    text size estimate equals the spans aggregate for every doc."""
-    import pyspark.sql.functions as F
-
-    from pdfspark.scale import salt_spans_by_size
-
+    """Text is the only input to generation, so the salt's size
+    estimate must be a closed form of the text: pin that it equals the
+    spans aggregate over the synthesized structs for every doc."""
     docs = load_documents(spark, SF_SMOKE).limit(40)
     both = synth_spans_df(docs)  # (doc_id, text, spans)
-    via_text = {
-        r.doc_id: bytes(r.payload)
-        for r in generate_payloads(both, "mixed", ensure=False).collect()
-    }
-    via_struct = {
-        r.doc_id: bytes(r.payload)
-        for r in generate_payloads(
-            both.drop("text"), "mixed", ensure=False
-        ).collect()
-    }
-    assert via_text == via_struct and via_text
 
     k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
     est_text = F.expr(f"length(text) + 64L * {k} + 96L * ({k} DIV 3)")
@@ -91,9 +77,57 @@ def test_generate_payloads_struct_and_text_paths_identical(spark):
         est_text.alias("a"), est_spans.alias("b")
     ).where("a <> b").count()
     assert diff == 0
-    # and the exported salt wrapper accepts both shapes
-    assert salt_spans_by_size(both).columns == ["doc_id", "text", "spans"]
-    assert salt_spans_by_size(both.drop("text")).columns == ["doc_id", "spans"]
+
+
+def _per_doc_frame(spark):
+    return spark.createDataFrame(
+        [(i, f"t{i}") for i in range(6)], "doc_id bigint, payload string"
+    ).repartition(2)
+
+
+def test_per_doc_eparse_error_drops_only_that_doc(spark):
+    """A kernel EParseError aborts its own document (zero rows); every
+    other document keeps all its rows."""
+
+    def fn(did, payload):
+        if did == 3:
+            raise EParseError("bad xref")
+        return [(did, payload), (did, payload + "!")]
+
+    rows = per_doc(
+        _per_doc_frame(spark), fn, "doc_id bigint, s string"
+    ).collect()
+    got = sorted((r.doc_id, r.s) for r in rows)
+    assert got == sorted(
+        (i, s) for i in range(6) if i != 3 for s in (f"t{i}", f"t{i}!")
+    )
+
+
+def test_per_doc_other_exception_fails_the_task(spark):
+    """Anything but EParseError is a bug, not a malformed document: a
+    planted TypeError must fail the query instead of dropping rows."""
+
+    def fn(did, payload):
+        if did == 4:
+            return [(did, payload + 1)]  # str + int: TypeError
+        return [(did, payload)]
+
+    with pytest.raises(Exception, match="TypeError"):
+        per_doc(_per_doc_frame(spark), fn, "doc_id bigint, s string").collect()
+
+
+def test_per_doc_column_names_from_nested_schema(spark):
+    """Column names come from the parsed schema, so commas inside
+    struct<…> do not split a column (EXTRACT_SCHEMA's spans)."""
+
+    def fn(did, payload):
+        span = {"kind": "text", "text": payload, "media_ref": None, "offset": 0}
+        return [(did, "ok", None, [span])]
+
+    df = per_doc(_per_doc_frame(spark), fn, EXTRACT_SCHEMA)
+    assert df.columns == ["doc_id", "status", "error", "spans"]
+    r = df.where("doc_id = 2").collect()[0]
+    assert (r.status, r.spans[0].text, r.spans[0].offset) == ("ok", "t2", 0)
 
 
 def test_malformed_policy(spark):

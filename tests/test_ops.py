@@ -193,6 +193,9 @@ def test_minhash_verify_docs_source_equivalent(spark):
         for r in dedup.minhash_pairs_df(repart, verify_docs=docs).collect()
     }
     assert one == two and len(one) > 0
+    # a verify source without text cannot be the same rows: refused
+    with pytest.raises(ValueError, match="text"):
+        dedup.minhash_pairs_df(repart, verify_docs=docs.select("doc_id"))
 
 
 def test_dedup_clusters_planted_group(spark, tmp_path):

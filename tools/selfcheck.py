@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a second checkout checks its own code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
