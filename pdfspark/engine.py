@@ -5,17 +5,22 @@ Dataflow (all vectorized — the ONLY Python surfaces are mapInPandas
 stages over Arrow batches; no row-wise udf() anywhere, per input_hint):
 
     documents(doc_id, text, ...)                      [driver parquet]
-      → salt_docs_by_size   explicit skew repartition of the text rows
-                            (scale.py) — the pipeline's ONLY Exchange
-      → generate_payloads   mapInPandas → (doc_id, payload, size_class);
-                            spans synthesize in-worker from text
+      → generate_payloads   salt_docs_by_size (scale.py): explicit skew
+                            repartition of the (doc_id, text) rows — the
+                            pipeline's ONLY Exchange — then mapInPandas
+                            → (doc_id, payload, size_class); spans
+                            synthesize in-worker from text
       → extract             mapInPandas → (doc_id, status, error, spans[])
       → explode to rows for comparison / sinks
 
-generate → extract pipeline in one stage behind the salt. The
-interleaved table (doc_id, spans[]) of the input_hint shape is
-synth_spans_df — pure Spark SQL expressions (JVM, codegen) — for the
-consumers that read spans directly.
+Generation salts its own input, so every caller passes the raw
+documents frame and generate → extract pipeline in one stage behind
+the salt. The interleaved table (doc_id, spans[]) of the input_hint
+shape is synth_spans_df — pure Spark SQL expressions (JVM, codegen) —
+for the consumers that read spans directly.
+
+``queries()`` at the bottom is the PDF half of the driver's query
+table (``__spark_entry__.queries`` adds the ops modules' tables).
 
 Every Python stage runs through ONE helper, ``per_doc``: it owns the
 Arrow batch loop and the fault policy of the reference (one document,
@@ -34,6 +39,7 @@ one call per document and never crosses an executor boundary
 from __future__ import annotations
 
 import os
+from functools import partial
 from typing import Callable, Iterator, Sequence
 
 import pandas as pd
@@ -221,26 +227,21 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
 
 
 def ensure_parallelism(df: DataFrame, factor: int = 3) -> DataFrame:
-    """A single small parquet file scans as ONE partition — which
-    would serialize every downstream mapInPandas stage. If the scan is
-    under-partitioned relative to the cluster, hash-repartition on
-    doc_id up front (at 10^12-doc scale the source is already
-    thousands of multi-split files and this is a no-op).
+    """Scan-parallelism floor, for callers that run a Python stage or
+    a heavy explode straight over a file scan: a single small parquet
+    file scans as ONE partition, which would serialize that stage. If
+    the scan is under-partitioned relative to the cluster,
+    hash-repartition on doc_id (at 10^12-doc scale the source is
+    already thousands of multi-split files and this is a no-op).
 
     The decision uses `inputFiles()` metadata + Spark's split-packing
     formula (_estimated_scan_partitions) — NOT
     `df.rdd.getNumPartitions()`, which under AQE would materialize
     every upstream shuffle stage eagerly (the work then runs twice).
-    A frame with no input files (in-memory/derived) is assumed
-    under-partitioned and repartitioned; callers that already
-    repartitioned pass ensure=False."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    try:
-        est = _estimated_scan_partitions(df)
-    except Exception:
-        est = 0
-    if est < target:
+    A frame with no input files (in-memory or already repartitioned
+    by its builder) passes through unchanged."""
+    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    if 0 < _estimated_scan_partitions(df) < target:
         return df.repartition(target, "doc_id")
     return df
 
@@ -249,10 +250,20 @@ def _build_payloads(
     docs: DataFrame,
     build: Callable[..., bytes],
     cols: Sequence[str] = ("doc_id", "text"),
+    ensure: bool = True,
 ) -> DataFrame:
-    """(doc_id, …) → (doc_id, payload, size_class): ``build(did, *rest)``
-    makes one document's PDF bytes from the values of ``cols``;
-    size_class = log4 bucket of payload length."""
+    """(doc_id, text, …) → (doc_id, payload, size_class): the one
+    generation builder. ``build(did, *rest)`` makes one document's PDF
+    bytes from the values of ``cols``; size_class = log4 bucket of
+    payload length.
+
+    The rows are cut to ``cols`` and skew-salted first
+    (scale.salt_docs_by_size): the plan's one Exchange moves the cheap
+    text rows, and generation pipelines into extraction behind it.
+    ``ensure=False`` means the caller already salted."""
+    docs = docs.select(*cols)
+    if ensure:
+        docs = salt_docs_by_size(docs)
 
     def one(did, *rest):
         p = build(int(did), *rest)
@@ -264,7 +275,10 @@ def _build_payloads(
 def generate_payloads(
     docs: DataFrame, variant: str = "mixed", ensure: bool = True
 ) -> DataFrame:
-    """(doc_id, text) → (doc_id, payload, size_class).
+    """(doc_id, text) → (doc_id, payload, size_class), salted by
+    default (see _build_payloads); ``ensure=False`` means the caller
+    already salted (or deliberately runs unsalted) and adds no
+    Exchange.
 
     Text is the only input (r9, guide §4 — pass only the columns the
     function needs): spans are synthesized in-Python per document
@@ -272,20 +286,13 @@ def generate_payloads(
     so payload bytes equal those built from synth_spans_df's structs),
     which skips the JVM struct synthesis and ships ~4× fewer bytes
     through Arrow. Other columns are dropped first, so Catalyst prunes
-    synth_spans_df's struct synthesis out of the plan.
-
-    size_class = log4 bucket of payload length. Skew salting happens
-    BEFORE this stage (scale.salt_docs_by_size), so callers that salted
-    pass ensure=False and generation pipelines into extraction."""
-    docs = docs.select("doc_id", "text")
-    if ensure:
-        docs = ensure_parallelism(docs)
+    synth_spans_df's struct synthesis out of the plan."""
 
     def build(did: int, text: str) -> bytes:
         v = variant_for(did, variant)
         return build_pdf(str(did), synth_spans_py(str(did), text), v)
 
-    return _build_payloads(docs, build)
+    return _build_payloads(docs, build, ensure=ensure)
 
 
 # ---------------------------------------------------------------------------
@@ -391,29 +398,27 @@ def roundtrip_rows(
     spark,
     sf_dir: str,
     variant: str = "mixed",
-    salt: bool = True,
     reading_order: bool = False,
     infer_spaces: bool = False,
 ) -> DataFrame:
-    """Flagship pipeline: synth → generate → (salt) → extract →
-    exploded span rows. Correct iff output == synth_spans rows (the
-    round-trip identity; oracle = the same synthesis in DuckDB SQL).
+    """Flagship pipeline: salt → generate → extract → exploded span
+    rows. Correct iff output == synth_spans rows (the round-trip
+    identity; oracle = the same synthesis in DuckDB SQL).
 
     With ``variant='tagged', reading_order=True`` the identity is the
     READING-ORDER contract (r8): the generator paints marked-content
     sections in scrambled (two-column) order, so the identity holds
-    only when extraction re-sequences by structure-tree traversal."""
-    # r9: ship (doc_id, text) to the Python stages — spans synthesize
-    # in-worker (generate_payloads text path, byte-identical payloads)
-    # instead of materializing struct arrays JVM-side and Arrow-
-    # transferring them. Same single pre-generation salt Exchange,
-    # ~4× fewer shuffled/transferred bytes.
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    if salt:
-        # skew-salt the (cheap) text rows BEFORE generation: one
-        # shuffle total; generate → extract then pipeline in one stage
-        docs = salt_docs_by_size(docs)
-    payloads = generate_payloads(docs, variant, ensure=not salt)
+    only when extraction re-sequences by structure-tree traversal
+    (ISO 32000-1 §14.7-14.8).
+
+    With ``variant='nospace', infer_spaces=True`` it is the
+    word-boundary contract (r8): no space glyph is painted, every ' '
+    is a positioning-only gap (TJ −500 kern on even spans, Td jump on
+    odd), and extraction re-inserts one space per gap strictly
+    exceeding half the word-space displacement (θ = ½, exact binary
+    fractions). The identity holds iff the heuristic fires on every
+    real gap and never on a kern (−250 lands ON the boundary)."""
+    payloads = generate_payloads(load_documents(spark, sf_dir), variant)
     return extract_flat(
         payloads, reading_order=reading_order, infer_spaces=infer_spaces
     )
@@ -456,8 +461,7 @@ def salvage_rows(spark, sf_dir: str, encrypted: bool = False) -> DataFrame:
         if encrypted
         else "malformed:no_startxref"
     )
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), variant)
     return extract_flat(payloads, lenient=True)
 
 
@@ -467,8 +471,7 @@ def geometry_rows(
     """Span-geometry pipeline: the roundtrip path with the
     geometry-widened extractor (driver query `pdf_span_geometry`;
     `pdf_span_geometry_kerned` passes tj_kerning=True)."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), variant)
     return extract_geometry(payloads, tj_kerning=tj_kerning)
 
 
@@ -476,7 +479,6 @@ def status_rows(spark, sf_dir: str, modulo: int = 17) -> DataFrame:
     """Malformed-family pipeline: every doc_id % modulo == 0 gets a
     malformed payload (kind rotates) — those must land status='error'
     with zero spans (FileHandlingTest contract §5.2)."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
     kinds = ("noise", "only_header", "header_eof", "zerosized", "no_startxref")
 
     def build(did: int, text: str) -> bytes:
@@ -495,7 +497,7 @@ def status_rows(spark, sf_dir: str, modulo: int = 17) -> DataFrame:
         return [(did, status, len(spans))]
 
     return per_doc(
-        _build_payloads(salt_docs_by_size(docs), build),
+        _build_payloads(load_documents(spark, sf_dir), build),
         one,
         "doc_id bigint, status string, n_spans int",
     )
@@ -505,8 +507,7 @@ def metadata_rows(spark, sf_dir: str) -> DataFrame:
     """Metadata pipeline over classic-layout payloads; every output
     column is recomputable in ANSI SQL from the documents table (the
     M7/M3 oracle)."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), "classic", ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), "classic")
     meta = extract_metadata(payloads)
     return meta.select(
         "doc_id", "status", "title", "author", "subject", "keywords",
@@ -526,8 +527,7 @@ def attachments_rows(spark, sf_dir: str) -> DataFrame:
     /EmbeddedFiles name tree (both §7.9.6 shapes, raw/flate rotating);
     the kernel walks the tree, decodes each embedded stream and emits
     (name, filename, size, md5) — all recomputable in SQL."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), "attachments", ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), "attachments")
 
     def one(did, payload):
         return [
@@ -543,8 +543,7 @@ def outlines_rows(spark, sf_dir: str) -> DataFrame:
     generator plants a deterministic /Outlines tree (1-3 top items,
     even items carry two children); the kernel's /First→/Next DFS
     emits (pos, level, title) in display order — closed-form SQL."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), "navigation", ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), "navigation")
 
     def one(did, payload):
         return [(did, *r) for r in parse_document(bytes(payload)).outlines()]
@@ -712,8 +711,7 @@ def form_fields_rows(spark, sf_dir: str) -> DataFrame:
     inheritable /FT the kids omit — the kernel's §12.7 DFS rebuilds
     dotted full names and the inheritance chain, emitting (pos, name,
     ftype, value) per terminal field, all closed-form in doc_id."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), "acroform", ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), "acroform")
 
     def one(did, payload):
         return [(did, *r) for r in parse_document(bytes(payload)).form_fields()]
@@ -730,8 +728,7 @@ def links_rows(spark, sf_dir: str) -> DataFrame:
     annotation with a /URI action per page; the kernel walks page
     /Annots and emits (page_idx, uri) — the hyperlink projection a
     web-scale pipeline extracts alongside text."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), "navigation", ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), "navigation")
 
     def one(did, payload):
         return [(did, *r) for r in parse_document(bytes(payload)).link_uris()]
@@ -748,7 +745,6 @@ def catalog_fields_rows(spark, sf_dir: str) -> DataFrame:
     """M9 end-to-end: the generator writes catalog /Lang (from the
     documents.lang column) and /PageMode (rotating by doc_id); the
     metadata kernel reads them back. Oracle: the source columns."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text", "lang")
 
     def build(did: int, text: str, lang: str) -> bytes:
         mode = PAGE_MODES_ROTATION[did % len(PAGE_MODES_ROTATION)]
@@ -760,7 +756,7 @@ def catalog_fields_rows(spark, sf_dir: str) -> DataFrame:
         )
 
     payloads = _build_payloads(
-        salt_docs_by_size(docs), build, ("doc_id", "text", "lang")
+        load_documents(spark, sf_dir), build, ("doc_id", "text", "lang")
     )
     meta = extract_metadata(payloads)
     return meta.select("doc_id", "lang", "page_mode")
@@ -827,7 +823,6 @@ def page_labels_rows(spark, sf_dir: str) -> DataFrame:
     doc_id, page count from the amplified span formula). EXTENSION —
     the reference reads no number trees (its catalog surface is
     PDFDocCatalog.java's mode/layout/lang trio)."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
 
     def build(did: int, text: str) -> bytes:
         spans = synth_spans_py(str(did), str(text) * PL_REP)
@@ -842,7 +837,7 @@ def page_labels_rows(spark, sf_dir: str) -> DataFrame:
         return [(did, idx, lab) for idx, lab in enumerate(labels)]
 
     return per_doc(
-        _build_payloads(salt_docs_by_size(docs), build),
+        _build_payloads(load_documents(spark, sf_dir), build),
         one,
         "doc_id bigint, page_idx int, label string",
     )
@@ -853,10 +848,27 @@ def date_rows(spark, sf_dir: str) -> DataFrame:
     D:YYYYMMDDHHmmSS+02'00' CreationDate and normalizes to UTC; DuckDB
     re-derives the same instant from the md5 the generator used
     (codec._det_date)."""
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(salt_docs_by_size(docs), "classic", ensure=False)
+    payloads = generate_payloads(load_documents(spark, sf_dir), "classic")
     meta = extract_metadata(payloads)
     return meta.select("doc_id", "creation_date", "creation_ts")
+
+
+def span_stats_rows(spark, sf_dir: str) -> DataFrame:
+    """Extraction output joined back to the documents dim (broadcast)
+    + aggregation: per-(lang, kind) span counts and text volume —
+    the UDF-output-into-relational-shell path (driver query
+    `pdf_span_stats`)."""
+    rows = roundtrip_rows(spark, sf_dir, variant="classic")
+    dim = load_documents(spark, sf_dir).select("doc_id", "lang")
+    return (
+        rows.join(F.broadcast(dim), "doc_id")
+        .groupBy("lang", "kind")
+        .agg(
+            F.count("*").alias("n_spans"),
+            F.sum(F.coalesce(F.length("text"), F.lit(0))).alias("text_chars"),
+            F.countDistinct("doc_id").alias("n_docs"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -887,3 +899,60 @@ def extract_pdf_files(spark, path_glob: str) -> DataFrame:
         f"path string, status string, error string, spans {SPANS_SCHEMA}",
         ("path", "payload"),
     )
+
+
+# ---------------------------------------------------------------------------
+# The PDF driver queries: (spark, sf_dir) → DataFrame, in registration
+# order (__spark_entry__ moves its driver window to the front)
+# ---------------------------------------------------------------------------
+
+
+def queries() -> dict[str, Callable]:
+    return {
+        "pdf_roundtrip_interleaved": partial(roundtrip_rows, variant="mixed"),
+        "pdf_roundtrip_objstream": partial(roundtrip_rows, variant="objstream"),
+        "pdf_roundtrip_incremental": partial(roundtrip_rows, variant="incremental"),
+        "pdf_roundtrip_filters": partial(roundtrip_rows, variant="filters_rotate"),
+        "pdf_roundtrip_encrypted": partial(roundtrip_rows, variant="encrypted"),
+        "pdf_roundtrip_cjk": partial(roundtrip_rows, variant="cjk"),
+        "pdf_roundtrip_cjk_embedded": partial(roundtrip_rows, variant="cjk:embedded"),
+        "pdf_roundtrip_hanzi": partial(roundtrip_rows, variant="cjk:hanzi"),
+        "pdf_roundtrip_japan1": partial(roundtrip_rows, variant="cjk:japan1"),
+        "pdf_roundtrip_gb1": partial(roundtrip_rows, variant="cjk:gb1"),
+        "pdf_roundtrip_cns1": partial(roundtrip_rows, variant="cjk:cns1"),
+        "pdf_roundtrip_korea1": partial(roundtrip_rows, variant="cjk:korea1"),
+        "pdf_roundtrip_forms": partial(roundtrip_rows, variant="forms"),
+        "pdf_roundtrip_type3": partial(roundtrip_rows, variant="type3"),
+        "pdf_roundtrip_pubsec": partial(roundtrip_rows, variant="pubsec"),
+        "pdf_reading_order": partial(
+            roundtrip_rows, variant="tagged", reading_order=True
+        ),
+        "pdf_roundtrip_nospace": partial(
+            roundtrip_rows, variant="nospace", infer_spaces=True
+        ),
+        "pdf_salvage": salvage_rows,
+        "pdf_salvage_encrypted": partial(salvage_rows, encrypted=True),
+        "pdf_span_geometry": partial(geometry_rows, variant="classic"),
+        # per-CID /W [0 127 500] + /DW 1000 give ASCII the simple font's
+        # 500/1000-em advance, so the same closed-form oracle holds
+        "pdf_span_geometry_cid": partial(geometry_rows, variant="cjk:embedded"),
+        # the form-1 TJ kern (-250 at Tfs 12, Tz 50) widens by exactly 1.5
+        "pdf_span_geometry_kerned": partial(
+            geometry_rows, variant="classic", tj_kerning=True
+        ),
+        # /Widths 32 × FontMatrix 1/64 (exact binary fraction) = 500/1000 em
+        "pdf_span_geometry_type3": partial(geometry_rows, variant="type3"),
+        "pdf_attachments": attachments_rows,
+        "pdf_outlines": outlines_rows,
+        "pdf_links": links_rows,
+        "pdf_form_fields": form_fields_rows,
+        "pdf_reference_golden": reference_golden_rows,
+        "pdf_malformed_golden": reference_malformed_rows,
+        "pdf_mutation_golden": mutation_rows,
+        "pdf_malformed_policy": status_rows,
+        "pdf_metadata": metadata_rows,
+        "pdf_dates": date_rows,
+        "pdf_span_stats": span_stats_rows,
+        "pdf_catalog_fields": catalog_fields_rows,
+        "pdf_page_labels": page_labels_rows,
+    }

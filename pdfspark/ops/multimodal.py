@@ -32,13 +32,17 @@ media_ref → the whole pipeline has a DuckDB oracle via md5() SQL.
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..codec import _media_stub_bytes
+from ..engine import per_doc
+
 MEDIA_BYTES_SCHEMA = "doc_id bigint, media_ref string, payload binary"
+_MEDIA_REF_COLS = ("doc_id", "media_ref")
+_MEDIA_BYTES_COLS = ("doc_id", "media_ref", "payload")
 MEDIA_META_SCHEMA = (
     "doc_id bigint, media_ref string, fmt string, width int, height int, "
     "n_bytes int, thumb_w int, thumb_h int"
@@ -1055,15 +1059,10 @@ def attach_media_bytes(media: DataFrame) -> DataFrame:
     """media_ref → opaque binary payload (the generator's DCT stub),
     Arrow-batched."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import _media_stub_bytes
+    def one(did, mref):
+        return [(did, mref, _media_stub_bytes(mref))]
 
-        for pdf in batches:
-            yield pdf.assign(
-                payload=[_media_stub_bytes(m) for m in pdf["media_ref"]]
-            )
-
-    return media.mapInPandas(gen, schema=MEDIA_BYTES_SCHEMA)
+    return per_doc(media, one, MEDIA_BYTES_SCHEMA, _MEDIA_REF_COLS)
 
 
 def decode_media(with_bytes: DataFrame) -> DataFrame:
@@ -1071,26 +1070,15 @@ def decode_media(with_bytes: DataFrame) -> DataFrame:
     payloads in, typed metadata out. thumb = fit into 64×64 (integer
     math, oracle-exact)."""
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, mref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                m = _fake_decode(bytes(payload))
-                scale_den = max(m["width"], m["height"])
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "media_ref": mref,
-                        **m,
-                        "thumb_w": max(1, m["width"] * 64 // scale_den),
-                        "thumb_h": max(1, m["height"] * 64 // scale_den),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def one(did, mref, payload):
+        m = _fake_decode(bytes(payload))
+        w, h = m["width"], m["height"]
+        return [(
+            did, mref, m["fmt"], w, h, m["n_bytes"],
+            max(1, w * 64 // max(w, h)), max(1, h * 64 // max(w, h)),
+        )]
 
-    return with_bytes.mapInPandas(ker, schema=MEDIA_META_SCHEMA)
+    return per_doc(with_bytes, one, MEDIA_META_SCHEMA, _MEDIA_BYTES_COLS)
 
 
 def media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,29 +1143,17 @@ def sample_frames(with_bytes: DataFrame) -> DataFrame:
     FRAME_STEP-th frame with a deterministic tag (stub for the real
     frame grab — ffmpeg on a production cluster)."""
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def one(did, mref, payload):
+        # frame count from container bytes [8:10) — which are digest
+        # bytes, so the SQL oracle can re-derive them from
+        # md5(media_ref) (DuckDB's md5 has no BLOB form)
+        n_frames = 1 + int.from_bytes(bytes(payload)[8:10], "big") % 48
+        return [
+            (did, mref, fi, hashlib.md5(f"{mref}:{fi}".encode()).hexdigest()[:8])
+            for fi in range(0, n_frames, FRAME_STEP)
+        ]
 
-        for pdf in batches:
-            ids, refs, idxs, tags = [], [], [], []
-            for did, mref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                p = bytes(payload)
-                # frame count from container bytes [8:10) — which are
-                # digest bytes, so the SQL oracle can re-derive them
-                # from md5(media_ref) (DuckDB's md5 has no BLOB form)
-                n_frames = 1 + int.from_bytes(p[8:10], "big") % 48
-                for fi in range(0, n_frames, FRAME_STEP):
-                    ids.append(did)
-                    refs.append(mref)
-                    idxs.append(fi)
-                    tags.append(hashlib.md5(f"{mref}:{fi}".encode()).hexdigest()[:8])
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_ref": refs, "frame_idx": idxs, "frame_tag": tags}
-            )
-
-    return with_bytes.mapInPandas(ker, schema=FRAMES_SCHEMA)
+    return per_doc(with_bytes, one, FRAMES_SCHEMA, _MEDIA_BYTES_COLS)
 
 
 def media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1207,46 +1183,30 @@ def media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     format, dims and channel means from md5(media_ref); for JPEG the
     means are the YCbCr fixed-point roundtrip of the color (the one
     lossy step — mirrored integer-exactly in SQL)."""
+    from ..codec import (
+        _media_bmp_bytes, _media_gif_bytes, _media_jpeg_420_bytes,
+        _media_jpeg_bytes, _media_jpeg_dri_bytes,
+        _media_jpeg_progressive_bytes, _media_png_bytes,
+        _media_tiff_bytes,
+    )
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    makers = (
+        _media_bmp_bytes, _media_png_bytes, _media_gif_bytes,
+        _media_tiff_bytes, _media_jpeg_bytes,
+        _media_jpeg_progressive_bytes, _media_jpeg_420_bytes,
+        _media_jpeg_dri_bytes,
+    )
 
-        from ..codec import (
-            _media_bmp_bytes, _media_gif_bytes, _media_jpeg_420_bytes,
-            _media_jpeg_bytes, _media_jpeg_dri_bytes,
-            _media_jpeg_progressive_bytes, _media_png_bytes,
-            _media_tiff_bytes,
-        )
+    def one(did, mref):
+        maker = makers[hashlib.md5(mref.encode()).digest()[5] % 8]
+        m = decode_image_real(maker(mref))
+        return [(
+            did, mref, m["fmt"], m["width"], m["height"],
+            m["mean_r"], m["mean_g"], m["mean_b"],
+        )]
 
-        makers = (
-            _media_bmp_bytes, _media_png_bytes, _media_gif_bytes,
-            _media_tiff_bytes, _media_jpeg_bytes,
-            _media_jpeg_progressive_bytes, _media_jpeg_420_bytes,
-            _media_jpeg_dri_bytes,
-        )
-        for pdf in batches:
-            rows = []
-            for did, mref in zip(pdf["doc_id"], pdf["media_ref"]):
-                maker = makers[hashlib.md5(mref.encode()).digest()[5] % 8]
-                m = decode_image_real(maker(mref))
-                rows.append(
-                    {
-                        "doc_id": did, "media_ref": mref, "fmt": m["fmt"],
-                        "width": m["width"], "height": m["height"],
-                        "mean_r": m["mean_r"], "mean_g": m["mean_g"],
-                        "mean_b": m["mean_b"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "fmt", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return media_spans(spark, sf_dir).mapInPandas(
-        ker, schema=MEDIA_DECODE_SCHEMA
+    return per_doc(
+        media_spans(spark, sf_dir), one, MEDIA_DECODE_SCHEMA, _MEDIA_REF_COLS
     )
 
 
@@ -1266,33 +1226,17 @@ def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives geometry, frame count, codec and the per-frame
     shifted color (MJPEG: its YCbCr fixed-point roundtrip) from
     md5(media_ref)."""
+    from ..codec import _media_avi_bytes
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import _media_avi_bytes
+    def one(did, mref):
+        m = decode_image_real(_media_avi_bytes(mref))
+        return [
+            (did, mref, m["codec"], fi, m["width"], m["height"], mr, mg, mb)
+            for (fi, mr, mg, mb) in m["frames"]
+        ]
 
-        for pdf in batches:
-            rows = []
-            for did, mref in zip(pdf["doc_id"], pdf["media_ref"]):
-                m = decode_image_real(_media_avi_bytes(mref))
-                for (fi, mr, mg, mb) in m["frames"]:
-                    rows.append(
-                        {
-                            "doc_id": did, "media_ref": mref,
-                            "codec": m["codec"], "frame_idx": fi,
-                            "width": m["width"], "height": m["height"],
-                            "mean_r": mr, "mean_g": mg, "mean_b": mb,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "codec", "frame_idx",
-                    "width", "height", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return media_spans(spark, sf_dir).mapInPandas(
-        ker, schema=MEDIA_VIDEO_SCHEMA
+    return per_doc(
+        media_spans(spark, sf_dir), one, MEDIA_VIDEO_SCHEMA, _MEDIA_REF_COLS
     )
 
 
@@ -1379,32 +1323,17 @@ def media_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic in media_ref) and runs through the real decoder
     (RIFF chunk walk + numpy sample statistics). Closed-form oracle
     over md5(media_ref)."""
+    from ..codec import _media_wav_bytes
 
-    def ker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import _media_wav_bytes
+    def one(did, mref):
+        m = decode_image_real(_media_wav_bytes(mref))
+        return [(
+            did, mref, m["fmt"], m["sample_rate"], m["n_channels"],
+            m["n_samples"], m["peak"],
+        )]
 
-        for pdf in batches:
-            rows = []
-            for did, mref in zip(pdf["doc_id"], pdf["media_ref"]):
-                m = decode_image_real(_media_wav_bytes(mref))
-                rows.append(
-                    {
-                        "doc_id": did, "media_ref": mref, "fmt": m["fmt"],
-                        "sample_rate": m["sample_rate"],
-                        "n_channels": m["n_channels"],
-                        "n_samples": m["n_samples"], "peak": m["peak"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "fmt", "sample_rate",
-                    "n_channels", "n_samples", "peak",
-                ],
-            )
-
-    return media_spans(spark, sf_dir).mapInPandas(
-        ker, schema=MEDIA_AUDIO_SCHEMA
+    return per_doc(
+        media_spans(spark, sf_dir), one, MEDIA_AUDIO_SCHEMA, _MEDIA_REF_COLS
     )
 
 

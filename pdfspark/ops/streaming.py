@@ -140,20 +140,22 @@ def stream_extract_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch sink writes per-batch partitions + lineage — and the
     final spans table must equal the batch round-trip, so the SAME
     spans-identity SQL oracle gates it. Upgrades streaming from
-    pytest-only to a driver-oracled surface."""
+    pytest-only to a driver-oracled surface. The landing files are
+    the salted generation's partitions (one Exchange, of text rows)."""
     import os
     import tempfile
 
     from ..engine import generate_payloads, load_documents
 
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
-    payloads = generate_payloads(docs, "classic")
+    payloads = generate_payloads(load_documents(spark, sf_dir), "classic")
     base = tempfile.mkdtemp(prefix="pdfspark-streamq-")
     landing = os.path.join(base, "landing")
     out = os.path.join(base, "out")
-    payloads.repartition(4).write.parquet(landing)
+    payloads.write.parquet(landing)
+    # two micro-batches, whatever the salt's partition (file) count
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(landing))
     run_streaming_extraction_to_table(
-        spark, landing, out, max_files_per_trigger=2
+        spark, landing, out, max_files_per_trigger=max(1, -(-n_files // 2))
     )
     return spark.read.parquet(os.path.join(out, "spans")).select(
         "doc_id", "offset", "kind", "text", "media_ref"
@@ -380,31 +382,6 @@ def oracles():
 # payload parquet lands in a directory, each micro-batch runs the same
 # mapInPandas extract, results stream to the sink
 # ---------------------------------------------------------------------------
-
-
-def run_streaming_extraction(
-    spark: SparkSession, landing_dir: str, name: str = "extract_out"
-) -> DataFrame:
-    """readStream over a payload landing dir → extract_flat → memory
-    sink (exactly-once per file via Spark's file-source tracking). The
-    extraction operator is literally the batch one — mapInPandas is
-    streaming-compatible, so the 10^12-doc batch pipeline doubles as
-    the incremental-ingest path."""
-    from ..engine import FLAT_SCHEMA, extract_flat
-
-    payloads = spark.readStream.schema(
-        "doc_id bigint, payload binary, size_class int"
-    ).parquet(landing_dir)
-    rows = extract_flat(payloads)
-    q = (
-        rows.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def run_streaming_extraction_to_table(

@@ -9,7 +9,8 @@ AQE + Arrow + Catalyst; no custom rules):
    an explicit (size_class, salt) repartition of the cheap text rows
    BEFORE generation: a handful of 100 MB docs must not serialize one
    task (SURVEY §4.2(a)), and generation and extraction then pipeline
-   in one stage behind that single Exchange.
+   in one stage behind that single Exchange. Generation
+   (``engine._build_payloads``) applies it to its own input.
 2. ``lineage`` table — per-bucket checkpoint/metrics rows
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
    wall_ms, attempt).
@@ -195,21 +196,20 @@ def _group_frame(
 ) -> DataFrame:
     """One commit group's plan — the flagship shape of
     engine.roundtrip_rows: bucket-filtered (doc_id, text) →
-    salt_docs_by_size → generate_payloads → extract, tagged with its
+    generate_payloads (which salts first) → extract, tagged with its
     bucket. The salt is the plan's only Exchange and moves text rows,
     not payload bytes; generation and extraction pipeline in one
     stage behind it."""
     from .engine import extract, generate_payloads, load_documents, replicate_docs
 
-    docs = load_documents(spark, sf_dir).select("doc_id", "text")
+    docs = load_documents(spark, sf_dir)
     if replicate > 1:
         # deterministic in-plan corpus scale-up (scaling/stress runs
         # at the deployment surface — no data files written)
         docs = replicate_docs(docs, replicate)
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     docs = docs.where(bucket.isin(group))
-    payloads = generate_payloads(salt_docs_by_size(docs), variant, ensure=False)
-    return extract(payloads).withColumn("bucket", bucket)
+    return extract(generate_payloads(docs, variant)).withColumn("bucket", bucket)
 
 
 def run_checkpointed(

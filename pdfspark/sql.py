@@ -24,14 +24,12 @@ from .engine import (
     load_documents,
     synth_spans_df,
 )
-from .scale import salt_docs_by_size
 
 
 def register(spark: SparkSession, sf_dir: str, variant: str = "mixed") -> None:
     docs = load_documents(spark, sf_dir)
     docs.createOrReplaceTempView("documents")
     synth_spans_df(docs).createOrReplaceTempView("doc_spans")
-    salted = salt_docs_by_size(docs.select("doc_id", "text"))
-    payloads = generate_payloads(salted, variant, ensure=False)
+    payloads = generate_payloads(docs, variant)
     extract_flat(payloads).createOrReplaceTempView("pdf_spans")
     extract_metadata(payloads).createOrReplaceTempView("pdf_meta")

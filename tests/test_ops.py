@@ -217,14 +217,16 @@ def test_dedup_clusters_planted_group(spark, tmp_path):
 
 def test_streaming_extraction_equals_batch(spark, tmp_path):
     """The batch extract kernel under readStream: spans from the
-    streaming run must equal the batch round trip."""
+    streaming sink must equal the batch round trip."""
     from pdfspark.engine import generate_payloads, load_documents, synth_spans_df
-    from pdfspark.ops.streaming import run_streaming_extraction
+    from pdfspark.ops.streaming import run_streaming_extraction_to_table
 
     landing = str(tmp_path / "landing")
+    out = str(tmp_path / "out")
     docs = load_documents(spark, SF_SMOKE).limit(30)
     generate_payloads(synth_spans_df(docs), "classic").write.parquet(landing)
-    got = run_streaming_extraction(spark, landing, "t_extract")
+    run_streaming_extraction_to_table(spark, landing, out)
+    got = spark.read.parquet(f"{out}/spans")
     batch = {
         (r.doc_id, r.offset, r.kind, r.text, r.media_ref)
         for r in spark.read.parquet(landing)

@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from conftest import SF_SMOKE
-from pdfspark.engine import generate_payloads, load_documents
+from pdfspark.engine import ensure_parallelism, generate_payloads, load_documents
 from pdfspark.scale import (
     LINEAGE_SCHEMA, _group_frame, _lineage_df, completed_buckets,
     run_checkpointed, salt_docs_by_size,
@@ -135,7 +135,9 @@ def _plan_nodes(plan) -> list[str]:
 def test_group_frame_plan_has_one_exchange_below_generate(spark):
     """The checkpointed job's per-group plan is the flagship shape:
     exactly one shuffle (of text rows) below the generate stage, and
-    generate → extract pipelined with no Exchange between them."""
+    generate → extract pipelined with no Exchange between them. Plain
+    generate_payloads at its default has the same one shuffle below
+    it: generation salts its own input."""
     df = _group_frame(spark, SF_SMOKE, [0, 1], 4, "mixed", 1)
     df.collect()  # run it, so the adaptive plan is the final one
     nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
@@ -143,6 +145,28 @@ def test_group_frame_plan_has_one_exchange_below_generate(spark):
     extract_at, gen_at = [i for i, n in enumerate(nodes) if n == "MapInPandasExec"]
     assert extract_at < gen_at < nodes.index("ShuffleExchangeExec"), nodes
     assert not any("Exchange" in n for n in nodes[extract_at:gen_at]), nodes
+
+    gen = generate_payloads(load_documents(spark, SF_SMOKE), "classic")
+    gen.collect()
+    nodes = _plan_nodes(gen._jdf.queryExecution().executedPlan())
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+    assert nodes.index("MapInPandasExec") < nodes.index("ShuffleExchangeExec"), nodes
+
+
+def test_ensure_parallelism_passes_frames_without_input_files(spark):
+    """A derived frame with no input files (here one its builder
+    already repartitioned) passes through: it keeps its 5 partitions
+    and gains no Exchange. An under-split file scan still gets the
+    floor (defaultParallelism × 3 partitions)."""
+    df = spark.range(40).withColumnRenamed("id", "doc_id").repartition(5, "doc_id")
+    out = ensure_parallelism(df)
+    assert out.rdd.getNumPartitions() == 5
+    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+
+    scan = load_documents(spark, SF_SMOKE)
+    floor = spark.sparkContext.defaultParallelism * 3
+    assert ensure_parallelism(scan).rdd.getNumPartitions() == floor
 
 
 def test_lineage_rows_keep_schema_and_old_lineage_resumes(spark, tmp_path):

@@ -67,9 +67,15 @@ def main() -> int:
     qs = se.queries()
     orc = se.oracle_sql()
     failures = 0
+    for name in sorted(orc.keys() ^ qs.keys()):
+        if not only or name in only:
+            missing = "an oracle" if name in qs else "a query"
+            print(f"FAIL {name}: no {missing}")
+            failures += 1
     for name, fn in qs.items():
-        if only and name not in only:
+        if (only and name not in only) or name not in orc:
             continue
+        sql = orc[name]
         try:
             df = fn(spark, sf_dir)
             cols = df.columns
@@ -77,10 +83,6 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
-            continue
-        sql = orc.get(name)
-        if sql is None:
-            print(f"SKIP {name}: no oracle (rows={len(rows)})")
             continue
         try:
             # Fetch through pandas, as the driver does: DuckDB types
