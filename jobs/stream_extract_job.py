@@ -10,8 +10,12 @@ same mapInPandas extract as the batch job and commits through the
 exactly-once foreachBatch sink (per-batch partition OVERWRITE + a
 lineage row — a batch replayed after a crash replaces its partition,
 never duplicates it; see ops/streaming.run_streaming_extraction_to_table
-and the kill-and-rerun test). Re-running with the same --out resumes
-from the checkpointed source offsets.
+and the kill-and-rerun test). --out/spans holds the batch job's
+per-document table, (doc_id, status, error, spans[]) partitioned by
+batch_id, so a document that fails extraction is a status='error'
+row; --out/lineage has one row per batch (doc_count, rows_out,
+wall_ms). Re-running with the same --out resumes from the
+checkpointed source offsets.
 """
 
 from __future__ import annotations

@@ -138,17 +138,24 @@ def stream_extract_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming path — payload parquet lands in a directory, readStream
     micro-batches run the identical extract kernel, the exactly-once
     foreachBatch sink writes per-batch partitions + lineage — and the
-    final spans table must equal the batch round-trip, so the SAME
-    spans-identity SQL oracle gates it. Upgrades streaming from
-    pytest-only to a driver-oracled surface. The landing files are
-    the salted generation's partitions (one Exchange, of text rows)."""
+    final spans table, exploded, must equal the batch round-trip, so
+    the SAME spans-identity SQL oracle gates it. Upgrades streaming
+    from pytest-only to a driver-oracled surface. The landing files
+    are the salted generation's partitions (one Exchange, of text
+    rows)."""
+    import atexit
+    import functools
     import os
+    import shutil
     import tempfile
 
-    from ..engine import generate_payloads, load_documents
+    from ..engine import generate_payloads, load_documents, spans_rows
 
     payloads = generate_payloads(load_documents(spark, sf_dir), "classic")
+    # unique per invocation, removed at process exit: the returned
+    # frame reads the output parquet lazily
     base = tempfile.mkdtemp(prefix="pdfspark-streamq-")
+    atexit.register(functools.partial(shutil.rmtree, base, ignore_errors=True))
     landing = os.path.join(base, "landing")
     out = os.path.join(base, "out")
     payloads.write.parquet(landing)
@@ -157,9 +164,7 @@ def stream_extract_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_streaming_extraction_to_table(
         spark, landing, out, max_files_per_trigger=max(1, -(-n_files // 2))
     )
-    return spark.read.parquet(os.path.join(out, "spans")).select(
-        "doc_id", "offset", "kind", "text", "media_ref"
-    )
+    return spans_rows(spark.read.parquet(os.path.join(out, "spans")))
 
 
 def stream_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,7 +385,7 @@ def oracles():
 # ---------------------------------------------------------------------------
 # Streaming extraction: the batch kernel unchanged under readStream —
 # payload parquet lands in a directory, each micro-batch runs the same
-# mapInPandas extract, results stream to the sink
+# mapInPandas extract and commits through the batch job's commit step
 # ---------------------------------------------------------------------------
 
 
@@ -391,8 +396,17 @@ def run_streaming_extraction_to_table(
     max_files_per_trigger: int = 1,
     fail_after_batches: int | None = None,
 ) -> int:
-    """Production streaming sink: readStream → extract_flat →
+    """Production streaming sink: readStream → extract →
     foreachBatch → per-batch-partition OVERWRITE + lineage row.
+
+    The table has the batch job's per-document shape, ``(doc_id,
+    status, error, spans[])`` partitioned by ``batch_id`` (read span
+    rows through ``engine.spans_rows``): a document that fails
+    extraction lands as a ``status='error'`` row instead of vanishing.
+    Each batch commits through ``scale.commit_observed``, the batch
+    job's commit step, so its lineage row (``doc_count`` = every
+    document, error ones included; ``rows_out`` = spans) is observed
+    during the write, with no read-back.
 
     Exactly-once without an idempotent sink format: Spark's
     checkpointed file-source offsets guarantee a replayed micro-batch
@@ -412,8 +426,8 @@ def run_streaming_extraction_to_table(
     import os
     import time
 
-    from ..engine import extract_flat
-    from ..scale import _lineage_df, overwrite_partitions
+    from ..engine import extract
+    from ..scale import _lineage_df, commit_observed, overwrite_partitions
 
     data_dir = os.path.join(out_dir, "spans")
     lineage_dir = os.path.join(out_dir, "lineage")
@@ -425,31 +439,22 @@ def run_streaming_extraction_to_table(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(landing_dir)
     )
-    rows = extract_flat(payloads)
+    rows = extract(payloads)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        data = batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-        overwrite_partitions(data, spark, data_dir, "batch_id")
+        b = int(batch_id)
+        docs, spans = commit_observed(batch_df, spark, data_dir, "batch_id", F.lit(b), [b])[b]
         if (
             fail_after_batches is not None
             and committed["n"] + 1 >= fail_after_batches
         ):
             # crash INSIDE the data-written/lineage-pending window
             raise RuntimeError(f"injected failure in batch {batch_id}")
-        stats = (
-            spark.read.parquet(data_dir)
-            .where(F.col("batch_id") == int(batch_id))
-            .agg(
-                F.count("*").alias("rows"),
-                F.countDistinct("doc_id").alias("docs"),
-            )
-            .first()
-        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         lineage = _lineage_df(
             spark,
-            [(int(batch_id), "done", int(stats.docs), int(stats.rows), wall_ms)],
+            [(b, "done", docs, spans, wall_ms)],
             "batch_id long, status string, doc_count long, rows_out long, wall_ms long",
         )
         # partition-overwrite on batch_id: a replayed batch REPLACES

@@ -13,11 +13,15 @@ AQE + Arrow + Catalyst; no custom rules):
    (``engine._build_payloads``) applies it to its own input.
 2. ``lineage`` table — per-bucket checkpoint/metrics rows
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
-   wall_ms, attempt).
+   wall_ms, attempt). The counts are observed while the data is
+   written (``commit_observed``, ``DataFrame.observe``); no job reads
+   the output back to compute them.
 3. ``run_checkpointed`` — bucket-granular commit + resume: an
    interrupted run reprocesses only buckets without a 'done' lineage
    row (resume = anti-join of pending vs completed; kill-and-rerun is
-   tested in tests/test_scale.py).
+   tested in tests/test_scale.py). Its commit step,
+   ``commit_observed``, is also the streaming sink's
+   (ops/streaming.run_streaming_extraction_to_table).
 
 Iceberg: the north rule targets Iceberg tables; this sandbox has no
 Iceberg jars on the classpath (import-gated below), so the warehouse
@@ -36,7 +40,7 @@ from typing import Optional
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def have_iceberg(spark: SparkSession) -> bool:
@@ -186,6 +190,47 @@ def bucket_attempts(spark: SparkSession, lineage_dir: str) -> dict[int, int]:
     return _lineage_state(spark, lineage_dir)[1]
 
 
+def commit_observed(
+    df: DataFrame,
+    spark: SparkSession,
+    target: str,
+    key_col: str,
+    key: Column,
+    keys: list[int],
+) -> dict[int, tuple[int, int]]:
+    """The one commit step of both extraction sinks: tag the
+    per-document frame ``(doc_id, status, error, spans)`` with
+    ``key_col`` = ``key``, write it with :func:`overwrite_partitions`
+    and return each key's ``(doc_count, spans_out)``.
+
+    The counts are observed on the rows as the write consumes them
+    (``DataFrame.observe``: one conditional count and one conditional
+    sum per key), so no job reads the output back. The observed node
+    sits in the write's result stage, above any Exchange, so a retried
+    map task cannot count twice; the metrics are read only after the
+    write has returned. It observes ``df`` itself, below the key
+    column's projection, so it does not split the write's generated
+    code in two. Error documents count in ``doc_count`` and add no
+    spans."""
+    obs = Observation()
+    metrics = []
+    for k in keys:
+        hit = key == k
+        # count(when(…)), not count_if: count_if plans a projection of
+        # its own below the observed node
+        metrics += [F.count(F.when(hit, 1)).alias(f"d{k}"),
+                    F.sum(F.when(hit, F.size("spans"))).alias(f"s{k}")]
+    df = df.observe(obs, *metrics).withColumn(key_col, key)
+    overwrite_partitions(df, spark, target, key_col)
+    m = obs.get
+    # a key with no rows sums to NULL
+    return {k: (m[f"d{k}"], m[f"s{k}"] or 0) for k in keys}
+
+
+def _bucket(n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def _group_frame(
     spark: SparkSession,
     sf_dir: str,
@@ -193,13 +238,16 @@ def _group_frame(
     n_buckets: int,
     variant: str,
     replicate: int,
-) -> DataFrame:
+) -> tuple[DataFrame, Observation]:
     """One commit group's plan — the flagship shape of
     engine.roundtrip_rows: bucket-filtered (doc_id, text) →
-    generate_payloads (which salts first) → extract, tagged with its
-    bucket. The salt is the plan's only Exchange and moves text rows,
-    not payload bytes; generation and extraction pipeline in one
-    stage behind it."""
+    generate_payloads (which salts first) → extract. The salt is the
+    plan's only Exchange and moves text rows, not payload bytes;
+    generation and extraction pipeline in one stage behind it.
+
+    The Observation carries each bucket's ``bytes_in`` (alias
+    ``b<bucket>``): the payload bytes handed to extraction, observed
+    on generation's output in that same stage."""
     from .engine import extract, generate_payloads, load_documents, replicate_docs
 
     docs = load_documents(spark, sf_dir)
@@ -207,9 +255,14 @@ def _group_frame(
         # deterministic in-plan corpus scale-up (scaling/stress runs
         # at the deployment surface — no data files written)
         docs = replicate_docs(docs, replicate)
-    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    docs = docs.where(bucket.isin(group))
-    return extract(generate_payloads(docs, variant)).withColumn("bucket", bucket)
+    bucket = _bucket(n_buckets)
+    payloads = generate_payloads(docs.where(bucket.isin(group)), variant)
+    obs = Observation()
+    payloads = payloads.observe(
+        obs,
+        *[F.sum(F.when(bucket == b, F.length("payload"))).alias(f"b{b}") for b in group],
+    )
+    return extract(payloads), obs
 
 
 def run_checkpointed(
@@ -228,16 +281,18 @@ def run_checkpointed(
 
     Each group runs :func:`_group_frame`, the flagship plan with one
     Exchange of text rows ahead of a pipelined generate → extract
-    stage. Lineage rows are written from Arrow-built local frames
+    stage, and commits through :func:`commit_observed`: its lineage
+    stats are observed during that one write, with no read-back.
+    Lineage rows are written from Arrow-built local frames
     (:func:`_lineage_df`), and a resume reads the lineage once.
 
     ``sink="null"`` runs the IDENTICAL per-bucket-group loop (same
     corpus scans, bucket filters, salting, generation, extraction,
     same group scheduling) but discards each group's result through
-    Spark's noop datasource — no span parquet, no lineage, no
-    read-back stats, no resume state. This is the compute-only twin
-    used to split compute wall from sink wall in deployment-surface
-    scaling runs (BENCH/BASELINE.md).
+    Spark's noop datasource — no span parquet, no lineage, no resume
+    state. This is the compute-only twin used to split compute wall
+    from sink wall in deployment-surface scaling runs
+    (BENCH/BASELINE.md).
 
     Resume semantics: rerunning with the same out_dir skips buckets
     already marked done (anti-join of pending vs lineage). A bucket is
@@ -300,19 +355,24 @@ def run_checkpointed(
         _lineage_df(
             spark, [(b, "attempted", 0, 0, 0, 0, attempts[b]) for b in pending]
         ).write.mode("append").parquet(lineage_dir)
+    bucket = _bucket(n_buckets)
     processed = 0
     for i in range(0, len(pending), buckets_per_commit):
         group = pending[i : i + buckets_per_commit]
         t0 = time.monotonic()
-        extracted = _group_frame(spark, sf_dir, group, n_buckets, variant, replicate)
+        extracted, bytes_in = _group_frame(
+            spark, sf_dir, group, n_buckets, variant, replicate
+        )
         if null_sink:
             # compute-only twin: the SAME per-group plan (corpus scan,
             # bucket filter, salt, generate, extract) discarded through
-            # the noop datasource — no data, no lineage, no read-back
-            extracted.write.format("noop").mode("overwrite").save()
+            # the noop datasource — no data, no lineage
+            extracted.withColumn("bucket", bucket).write.format("noop").mode(
+                "overwrite"
+            ).save()
             processed += len(group)
             continue
-        overwrite_partitions(extracted, spark, data_dir, "bucket")
+        counts = commit_observed(extracted, spark, data_dir, "bucket", bucket, group)
         if fail_before_commit and fail_after is not None and (
             processed + len(group) >= fail_after
         ):
@@ -320,28 +380,13 @@ def run_checkpointed(
                 f"injected failure after data write, before lineage commit "
                 f"(buckets {group})"
             )
-        # stats come from the data actually committed (read-back of the
-        # just-written partitions) — NOT a re-execution of the full
-        # generate+extract pipeline, which would double the work
-        stats = (
-            spark.read.parquet(data_dir)
-            .where(F.col("bucket").isin(group))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("doc_count"),
-                F.sum(F.length(F.to_json("spans"))).alias("bytes_in"),
-                F.sum(F.size("spans")).alias("spans_out"),
-            )
-            .collect()
-        )
         wall_ms = int((time.monotonic() - t0) * 1000)
-        counts = {
-            r.bucket: (r.doc_count, r.bytes_in or 0, r.spans_out or 0) for r in stats
-        }
+        b_in = bytes_in.get
         # empty buckets still need a done row so resume skips them
         _lineage_df(
             spark,
-            [(b, "done", *counts.get(b, (0, 0, 0)), wall_ms, attempts.get(b, 1))
+            [(b, "done", counts[b][0], b_in[f"b{b}"] or 0, counts[b][1], wall_ms,
+              attempts.get(b, 1))
              for b in group],
         ).write.mode("append").parquet(lineage_dir)
         processed += len(group)

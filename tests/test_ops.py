@@ -142,8 +142,9 @@ def test_streaming_sink_exactly_once_after_kill(spark, tmp_path):
     n2 = run_streaming_extraction_to_table(spark, landing, out)
     assert n2 >= 3  # replayed batch + the rest
 
-    got = spark.read.parquet(os.path.join(out, "spans"))
-    from pdfspark.engine import extract_flat
+    from pdfspark.engine import extract_flat, spans_rows
+
+    got = spans_rows(spark.read.parquet(os.path.join(out, "spans")))
 
     expect = extract_flat(payloads)
     assert got.count() == expect.count()  # no duplicate rows
@@ -217,16 +218,26 @@ def test_dedup_clusters_planted_group(spark, tmp_path):
 
 def test_streaming_extraction_equals_batch(spark, tmp_path):
     """The batch extract kernel under readStream: spans from the
-    streaming sink must equal the batch round trip."""
-    from pdfspark.engine import generate_payloads, load_documents, synth_spans_df
+    streaming sink must equal the batch round trip, and a payload that
+    fails extraction lands as a status='error' row counted in the
+    lineage."""
+    from pdfspark.codec import build_pdf
+    from pdfspark.engine import (
+        PAYLOAD_SCHEMA, generate_payloads, load_documents, spans_rows, synth_spans_df,
+    )
     from pdfspark.ops.streaming import run_streaming_extraction_to_table
 
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
     docs = load_documents(spark, SF_SMOKE).limit(30)
     generate_payloads(synth_spans_df(docs), "classic").write.parquet(landing)
+    noise_id = 10**9
+    spark.createDataFrame(
+        [(noise_id, build_pdf(str(noise_id), [], "malformed:noise"), 0)], PAYLOAD_SCHEMA
+    ).write.mode("append").parquet(landing)
     run_streaming_extraction_to_table(spark, landing, out)
-    got = spark.read.parquet(f"{out}/spans")
+    table = spark.read.parquet(f"{out}/spans")
+    got = spans_rows(table)
     batch = {
         (r.doc_id, r.offset, r.kind, r.text, r.media_ref)
         for r in spark.read.parquet(landing)
@@ -235,6 +246,9 @@ def test_streaming_extraction_equals_batch(spark, tmp_path):
     }
     assert {(r.doc_id, r.offset, r.kind, r.text, r.media_ref) for r in got.collect()} == batch
     assert len(batch) > 0
+    assert [r.status for r in table.where(F.col("doc_id") == noise_id).collect()] == ["error"]
+    lin = spark.read.parquet(f"{out}/lineage")
+    assert lin.agg(F.sum("doc_count")).first()[0] == 31
 
 
 def test_sketch_aggregates_near_exact(spark):

@@ -62,6 +62,34 @@ def test_checkpoint_resume_after_kill(spark, tmp_path):
     lin = spark.read.parquet(os.path.join(out, "lineage"))
     row = lin.agg(F.sum("doc_count").alias("d"), F.sum("spans_out").alias("s")).first()
     assert row.d == n_docs and row.s > 0
+    # per bucket: doc_count and spans_out equal a read-back of the
+    # bucket's written partition, bytes_in the payload bytes generated
+    # for its documents
+    done = {r.bucket: (r.doc_count, r.spans_out, r.bytes_in)
+            for r in lin.where(F.col("status") == "done").collect()}
+    read_back = spans.groupBy("bucket").agg(
+        F.count("*").alias("d"), F.sum(F.size("spans")).alias("s")
+    )
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int")
+    payload_bytes = (
+        generate_payloads(load_documents(spark, SF_SMOKE), "mixed")
+        .groupBy(bucket.alias("bucket"))
+        .agg(F.sum(F.length("payload")).alias("b"))
+    )
+    expect = {r.bucket: (r.d, r.s, r.b)
+              for r in read_back.join(payload_bytes, "bucket").collect()}
+    assert done == expect
+
+    # an empty bucket still gets a done row, of zeros
+    one_doc = str(tmp_path / "one_doc")
+    load_documents(spark, SF_SMOKE).limit(1).write.parquet(f"{one_doc}/documents.parquet")
+    out1 = str(tmp_path / "ckpt_one")
+    assert run_checkpointed(spark, one_doc, out1, n_buckets=4) == 4
+    lin1 = spark.read.parquet(os.path.join(out1, "lineage")).where(F.col("status") == "done")
+    rows = {r.bucket: (r.doc_count, r.bytes_in, r.spans_out) for r in lin1.collect()}
+    assert set(rows) == {0, 1, 2, 3}
+    assert sorted(d for d, _, _ in rows.values()) == [0, 0, 0, 1]
+    assert sum(v == (0, 0, 0) for v in rows.values()) == 3
 
 
 def test_crash_between_data_write_and_lineage_commit(spark, tmp_path):
@@ -138,7 +166,7 @@ def test_group_frame_plan_has_one_exchange_below_generate(spark):
     generate → extract pipelined with no Exchange between them. Plain
     generate_payloads at its default has the same one shuffle below
     it: generation salts its own input."""
-    df = _group_frame(spark, SF_SMOKE, [0, 1], 4, "mixed", 1)
+    df, _ = _group_frame(spark, SF_SMOKE, [0, 1], 4, "mixed", 1)
     df.collect()  # run it, so the adaptive plan is the final one
     nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
     assert nodes.count("ShuffleExchangeExec") == 1, nodes
