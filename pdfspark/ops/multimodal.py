@@ -522,19 +522,22 @@ class _JpegBitReader:
 
     def restart(self, expect: int) -> None:
         """Consume one RSTn marker at a restart boundary (T.81
-        F.2.1.3.1, r8): discard the partial byte's pad bits, skip any
-        pad bytes (incl. a stuffed FF 00 the 1-fill can produce) up to
-        the marker, verify the modulo-8 sequence number, and resume
-        bit reading after it.  Out-of-sequence or missing markers
-        raise — the caller falls back to header dims, never emits
-        silently-wrong pixels."""
+        F.2.1.3.1, r8): discard the partial byte's pad bits, skip at
+        most one stuffed FF 00 (a 1-fill pad byte) and any FF fill
+        bytes (B.1.1.2) before the marker, verify the modulo-8
+        sequence number, and resume bit reading after it.  Any other
+        byte before the marker, or an out-of-sequence or missing
+        marker, raises — the caller falls back to header dims, never
+        emits silently-wrong pixels."""
         self.n = 0
         buf, p = self.buf, self.pos
-        while p + 1 < len(buf) and not (
-            buf[p] == 0xFF and buf[p + 1] != 0x00
-        ):
+        if buf[p : p + 2] == b"\xff\x00":
+            p += 2
+        while buf[p : p + 2] == b"\xff\xff":
             p += 1
-        if p + 1 >= len(buf) or not (0xD0 <= buf[p + 1] <= 0xD7):
+        if p + 1 >= len(buf) or buf[p] != 0xFF or not (
+            0xD0 <= buf[p + 1] <= 0xD7
+        ):
             raise NotImplementedError("missing JPEG restart marker")
         if (buf[p + 1] & 7) != (expect & 7):
             raise NotImplementedError("JPEG restart marker out of sequence")
@@ -659,12 +662,13 @@ def _jpeg_decode(payload: bytes) -> dict:
                  ri_state)
             )
             # skip entropy-coded data to the next true marker (RSTn
-            # markers live INSIDE the entropy data — skip past them)
+            # markers and the FF fill bytes before them live INSIDE
+            # the entropy data — skip past them)
             j = data_off
             while j + 1 < len(payload):
                 if (
                     payload[j] == 0xFF
-                    and payload[j + 1] != 0x00
+                    and payload[j + 1] not in (0x00, 0xFF)
                     and not 0xD0 <= payload[j + 1] <= 0xD7
                 ):
                     break

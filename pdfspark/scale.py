@@ -112,12 +112,10 @@ def salt_docs_by_size(
     + 64) over the synthesized spans (pinned by
     tests/test_engine.py), without materializing the struct array.
 
-    Partition count: data-driven at scale (≈ input_bytes / 128 MB,
-    which at 100 TB is tens of thousands of partitions ≫ cores, so
-    waves amortize stragglers). At bench scale that formula resolves
-    to ≈ one task per core, which measurement confirms is fastest —
-    size_class co-location keeps waves homogeneous, so extra waves
-    only add scheduling overhead."""
+    Partition count: ``num_partitions`` when given, else
+    ``max(defaultParallelism, 8)`` — one wave at local[8] and wider,
+    8 tasks in 2 waves on a 4-core host. It does not grow with the
+    input size."""
     sc = docs_df.sparkSession.sparkContext
     n = num_partitions or max(sc.defaultParallelism, 8)
     k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
@@ -356,6 +354,7 @@ def run_checkpointed(
             spark, [(b, "attempted", 0, 0, 0, 0, attempts[b]) for b in pending]
         ).write.mode("append").parquet(lineage_dir)
     bucket = _bucket(n_buckets)
+    sc = spark.sparkContext
     processed = 0
     for i in range(0, len(pending), buckets_per_commit):
         group = pending[i : i + buckets_per_commit]
@@ -363,16 +362,24 @@ def run_checkpointed(
         extracted, bytes_in = _group_frame(
             spark, sf_dir, group, n_buckets, variant, replicate
         )
-        if null_sink:
-            # compute-only twin: the SAME per-group plan (corpus scan,
-            # bucket filter, salt, generate, extract) discarded through
-            # the noop datasource — no data, no lineage
-            extracted.withColumn("bucket", bucket).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            processed += len(group)
-            continue
-        counts = commit_observed(extracted, spark, data_dir, "bucket", bucket, group)
+        # names the group's write jobs in the UI and the event log
+        sc.setJobDescription(f"extract_job buckets {group}")
+        try:
+            if null_sink:
+                # compute-only twin: the SAME per-group plan (corpus
+                # scan, bucket filter, salt, generate, extract)
+                # discarded through the noop datasource — no data, no
+                # lineage
+                extracted.withColumn("bucket", bucket).write.format(
+                    "noop"
+                ).mode("overwrite").save()
+                processed += len(group)
+                continue
+            counts = commit_observed(
+                extracted, spark, data_dir, "bucket", bucket, group
+            )
+        finally:
+            sc.setJobDescription(None)
         if fail_before_commit and fail_after is not None and (
             processed + len(group) >= fail_after
         ):

@@ -130,6 +130,86 @@ def test_per_doc_column_names_from_nested_schema(spark):
     assert (r.status, r.spans[0].text, r.spans[0].offset) == ("ok", "t2", 0)
 
 
+def test_zip_listings_reread_only_under_spark_files_root(tmp_path, monkeypatch):
+    """No Spark: once installed, invalidate_caches() re-reads a zip
+    under the SparkFiles root (addPyFile) but not one outside it
+    (Spark's own pyspark.zip, py4j, the spark-core jar); installing
+    twice changes nothing further."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from pyspark.core.files import SparkFiles
+
+    import pdfspark
+
+    root = tmp_path / "userFiles"
+    root.mkdir()
+    runtime, added = str(tmp_path / "runtime.zip"), str(root / "added.zip")
+    for path in (runtime, added):
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr("m.py", "")
+        monkeypatch.setitem(sys.path_importer_cache, path, zipimport.zipimporter(path))
+    reads = []
+    stock_read = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: reads.append(a) or stock_read(a)
+    )
+    monkeypatch.setattr(SparkFiles, "_root_directory", str(root))
+    # restored at teardown, like every attribute set above
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+
+    importlib.invalidate_caches()
+    assert (reads.count(runtime), reads.count(added)) == (1, 1)  # stock
+    installed = set()
+    for _ in range(2):
+        pdfspark.keep_spark_zip_directories()
+        installed.add(zipimport.zipimporter.invalidate_caches)
+        reads.clear()
+        importlib.invalidate_caches()
+        assert (reads.count(runtime), reads.count(added)) == (0, 1)
+    assert len(installed) == 1
+
+
+def test_per_doc_worker_imports_zip_added_at_runtime(spark, tmp_path):
+    """Workers that ran a pdfspark stage keep Spark's own zip listings
+    across tasks, yet a zip added afterwards with addPyFile (it lands
+    under the SparkFiles root) imports in the next stage on those same
+    reused workers."""
+    import os
+    import zipfile
+
+    def fixed(did, payload):
+        import os
+        import zipimport
+
+        return [(did, os.getpid(), zipimport.zipimporter.invalidate_caches.__module__)]
+
+    # more tasks than pooled workers, so every idle worker runs one
+    frame = spark.range(0, 32, numPartitions=16).selectExpr("id AS doc_id", "'' AS payload")
+    first = per_doc(frame, fixed, "doc_id bigint, pid int, fix string").collect()
+    assert {r.fix for r in first} == {"pdfspark"}
+
+    name = f"pdfspark_added_{os.getpid()}"
+    path = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{name}.py", "VALUE = 42\n")
+    spark.sparkContext.addPyFile(str(path))
+
+    def imports(did, payload):
+        import importlib
+        import os
+
+        return [(did, os.getpid(), importlib.import_module(name).VALUE)]
+
+    second = per_doc(_per_doc_frame(spark), imports, "doc_id bigint, pid int, v int").collect()
+    assert {r.v for r in second} == {42}
+    assert {r.pid for r in second} <= {r.pid for r in first}  # reused workers
+
+
 def test_malformed_policy(spark):
     rows = status_rows(spark, SF_SMOKE).collect()
     assert rows

@@ -706,6 +706,30 @@ def test_jpeg_restart_interval_decode_real():
     assert "mean_r" not in m  # header-dims fallback, no fake pixels
 
 
+def test_jpeg_restart_skips_only_fill_bytes():
+    """Before an RSTn marker the decoder may skip FF fill bytes (T.81
+    B.1.1.2) and one stuffed FF 00 pad byte, nothing else: those
+    decode to the unpadded stream's pixels, while any other byte in
+    front of the marker is corrupt data and falls back to header
+    dims."""
+    from pdfspark.codec import _jpeg_dri_bytes
+
+    W, H = 48, 32
+    p = _jpeg_dri_bytes(W, H, lambda j, i: (9 * i, 200 - 5 * j, 77), ri=2)
+    k = p.index(b"\xff\xd0", p.index(b"\xff\xda"))
+    want = multimodal.decode_image_real(p)
+    want.pop("n_bytes")
+    assert "mean_r" in want
+    for pad in (b"\xff\xff\xff", b"\xff\x00", b"\xff\x00\xff\xff"):
+        m = multimodal.decode_image_real(p[:k] + pad + p[k:])
+        m.pop("n_bytes")
+        assert m == want
+    for junk in (b"\x5a", b"\x12\x34\xff\xff", b"\xff\x00\xff\x00"):
+        m = multimodal.decode_image_real(p[:k] + junk + p[k:])
+        assert (m["width"], m["height"]) == (W, H)
+        assert "mean_r" not in m  # header-dims fallback, no fake pixels
+
+
 def test_jpeg_progressive_decode_real():
     """r7: REAL progressive (SOF2) decode — DC successive
     approximation (first pass Al=1 + raw-LSB refinement), per

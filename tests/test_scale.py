@@ -383,3 +383,29 @@ def test_null_sink_runs_plan_without_output(spark, tmp_path):
     n = run_checkpointed(spark, SF_SMOKE, out, n_buckets=4, sink="null")
     assert n == 4
     assert not os.path.exists(out)  # no sidecar, no spans, no lineage
+
+
+def test_commit_group_writes_carry_job_description(spark, tmp_path):
+    """Each commit group's write jobs run under the description
+    ``extract_job buckets [..]`` (read back from Spark's own job
+    status store), and the description is cleared after the run."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+
+    def descriptions():
+        jvm_sc.listenerBus().waitUntilEmpty()
+        jobs = jvm_sc.statusStore().jobsList(None)
+        out = {}
+        for i in range(jobs.size()):
+            job = jobs.apply(i)
+            d = job.description()
+            out[job.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    before = set(descriptions())
+    out = str(tmp_path / "described")
+    assert run_checkpointed(spark, SF_SMOKE, out, n_buckets=4, buckets_per_commit=2) == 4
+    new = {d for j, d in descriptions().items() if j not in before}
+    groups = {"extract_job buckets [0, 1]", "extract_job buckets [2, 3]"}
+    assert groups <= new <= groups | {None}  # lineage jobs carry none
+    assert sc.getLocalProperty("spark.job.description") is None
