@@ -10,6 +10,10 @@ bit-for-bit. At 10^12 docs:
 - MinHash banding keeps the candidate join linear: docs shuffle on
   (band, value) buckets instead of all-pairs — the only quadratic
   step is within-bucket, bounded by bucket size;
+- exact set Jaccard (the MinHash verify and ngram_jaccard) is computed
+  from each document's distinct shingle or trigram array: the counts
+  are size(array_intersect(a, b)) and size(a) + size(b) - that, so no
+  set is exploded into rows and joined to itself;
 - SimHash is one narrow projection (no shuffle at all until the
   optional pair join).
 """
@@ -120,11 +124,11 @@ END
 """
 
 
-def shingles_df(docs: DataFrame) -> DataFrame:
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): each document's DISTINCT word 3-shingles as one
+    array — the per-document set both MinHash passes start from."""
     pre = docs.select("doc_id", "text", F.split("text", " ").alias("w"))
-    return pre.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(_SHINGLES_SPARK))).alias("sh")
-    )
+    return pre.select("doc_id", F.array_distinct(F.expr(_SHINGLES_SPARK)).alias("sh"))
 
 
 def _hex_prefix_to_int(expr: str, n: int = 15) -> str:
@@ -142,38 +146,36 @@ def _hex_prefix_to_int(expr: str, n: int = 15) -> str:
     return "(" + " + ".join(digits) + ")"
 
 
-def minhash_signatures(
-    docs: DataFrame, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
-) -> DataFrame:
-    return signatures_from_shingles(shingles_df(docs), n_hashes, n_bands)
-
-
-def signatures_from_shingles(
-    shingles: DataFrame, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, band, band_val): universal-hash minhash — h0 =
     md5-prefix int per shingle, hᵢ = min (aᵢ·h0 + bᵢ) mod P; bands of
-    r = n_hashes/n_bands values hashed together. Aggregation is
-    map-side combinable (min) → one shuffle by doc_id. Takes the
-    (doc_id, sh) frame so callers that also need shingles downstream
-    (the verify join) compute + cache them ONCE."""
-    sh = shingles.selectExpr(
-        # 8 hex digits (32 bits) is plenty of entropy for a minhash
-        # seed value. conv(hex, 16, 10) == the digit-weighted
-        # _hex_prefix_to_int sum (the DuckDB oracle keeps the portable
-        # chain; Spark-side conv is ~35% cheaper per shingle — r9)
+    r = N_HASHES/N_BANDS values hashed together. Aggregation is
+    map-side combinable (min) → one shuffle by doc_id."""
+    # hash the set, then explode the hashes. Ahead of an explode of the
+    # bare `sh` column Spark infers `size(sh) > 0` and pushes it below
+    # the projection with `w` inlined, re-shingling every document in
+    # O(words²) (measured 8× slower on the shingle stage).
+    # 8 hex digits (32 bits) is plenty of entropy for a minhash seed
+    # value. conv(hex, 16, 10) == the digit-weighted _hex_prefix_to_int
+    # sum (the DuckDB oracle keeps the portable chain; Spark-side conv
+    # is ~35% cheaper per shingle — r9)
+    h0 = shingle_sets(docs).select(
         "doc_id",
-        f"CAST(conv(substr(md5(sh), 1, 8), 16, 10) AS BIGINT)"
-        f" % {P_MINHASH} AS h0",
+        F.explode(
+            F.expr(
+                "transform(sh, s -> CAST(conv(substr(md5(s), 1, 8), 16, 10)"
+                f" AS BIGINT) % {P_MINHASH})"
+            )
+        ).alias("h0"),
     )
     aggs = []
-    for i in range(n_hashes):
+    for i in range(N_HASHES):
         a, b = _minhash_seed(i)
         aggs.append(F.expr(f"min(({a} * h0 + {b}) % {P_MINHASH})").alias(f"h{i}"))
-    sig = sh.groupBy("doc_id").agg(*aggs)
+    sig = h0.groupBy("doc_id").agg(*aggs)
     bands = []
-    r = n_hashes // n_bands
-    for b in range(n_bands):
+    r = N_HASHES // N_BANDS
+    for b in range(N_BANDS):
         cols = [F.col(f"h{b * r + j}").cast("string") for j in range(r)]
         bands.append(
             F.struct(
@@ -199,8 +201,6 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_pairs_df(
     docs: DataFrame,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
     bucket_cap: int = BUCKET_CAP,
     verify_docs: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -212,18 +212,20 @@ def minhash_pairs_df(
     pair expansion: one degenerate key (empty/boilerplate text) would
     otherwise put O(bucket²) pairs in a single task.
 
-    r9 plan shape (guide §2.4/§3.1 — measured 2× on the full query):
-    the old shape paid a count-over-(band, band_val) window PLUS a
-    bands⋈bands self-join PLUS two full-shingle-table sort-merge
-    joins for the Jaccard verify. Now ONE groupBy(band, band_val)
-    builds each bucket's sorted member list (cap applied on its
-    size — the window is gone), candidate pairs expand IN-ARRAY from
-    the ≤cap member list (no self-join; the groupBy partitioning IS
-    the old join's partitioning), and the verify joins run against
-    the shingles of CANDIDATE docs only — the candidate id set is
-    broadcast and the big shingle table is semi-join-filtered before
-    any shuffle (§3.2's pre-filter move; candidate ids are bounded by
-    Σ_buckets cap², orders of magnitude below the corpus).
+    Plan: ONE groupBy(band, band_val) builds each bucket's sorted
+    member list (the cap is a size() check on it), and a < b candidate
+    pairs expand in-array inside that partitioning; the distinct pairs
+    are checkpointed, since both the id set and the verify read them.
+    The verify computes both counts from each candidate document's
+    shingle set: n_inter = size(array_intersect(a, b)) and n_union =
+    size(a) + size(b) - n_inter — no shingle explode, no shuffle join.
+    The sets are built once from the document scan, semi-joined to
+    the broadcast candidate id set, and broadcast to both pair
+    endpoints (the second broadcast reuses the first Exchange). Every
+    broadcast here is bounded by the candidate budget Σ_buckets cap²,
+    orders of magnitude below the corpus; the sets broadcast also
+    carries each candidate document's shingle strings, so its size is
+    that id count times the candidates' shingle-set bytes.
 
     ``verify_docs`` (optional) must hold the SAME (doc_id, text) rows as
     ``docs`` — only its partitioning may differ. The verify pass
@@ -235,13 +237,9 @@ def minhash_pairs_df(
         if missing:
             raise ValueError(f"verify_docs lacks columns {sorted(missing)}")
     # one Exchange on (band, band_val): bucket membership, cap, and
-    # i<j pair expansion all inside the aggregation's partitioning.
-    # Shingles are NOT persisted (r9): the signature pass streams them
-    # straight into the map-side agg, and the verify pass re-shingles
-    # only the (tiny) candidate-doc subset below — cheaper than
-    # materializing ~30 rows/word of cache for the whole corpus.
+    # i<j pair expansion all inside the aggregation's partitioning
     cand = (
-        signatures_from_shingles(shingles_df(docs), n_hashes, n_bands)
+        minhash_signatures(docs)
         .groupBy("band", "band_val")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where((F.size("ids") >= 2) & (F.size("ids") <= bucket_cap))
@@ -250,7 +248,7 @@ def minhash_pairs_df(
                 F.expr(
                     # ids is sorted+distinct (one row per doc per
                     # band), so slice(i+2..) enumerates exactly the
-                    # a < b pairs the old self-join produced
+                    # a < b pairs of the bucket
                     "flatten(transform(ids, (a, i) ->"
                     " transform(slice(ids, i + 2, size(ids)),"
                     " b -> struct(a AS a_id, b AS b_id))))"
@@ -260,55 +258,31 @@ def minhash_pairs_df(
         .select("p.a_id", "p.b_id")
         .distinct()
         # tiny (bounded by Σ cap²/bucket); materialize eagerly so the
-        # downstream broadcasts (ids + pairs) don't each re-run the
-        # whole signature aggregation lineage
+        # id set and the verify don't each re-run the whole signature
+        # aggregation lineage
         .localCheckpoint(eager=True)
     )
-    # Jaccard verify over candidate docs only: broadcast the id set,
-    # prune the DOCUMENT scan before re-shingling (the filter lands
-    # ahead of the explode, so only candidate docs pay it), and reuse
-    # that slim frame for both the intersection join and the set sizes.
-    # verify_docs (r9): callers whose `docs` carries a parallelism
-    # repartition pass the raw scan here — the broadcast-join filter
-    # then runs scan-side instead of behind a full-corpus Exchange.
     vdocs = verify_docs if verify_docs is not None else docs
     cand_ids = (
         cand.select(F.col("a_id").alias("doc_id"))
         .union(cand.select(F.col("b_id").alias("doc_id")))
         .distinct()
     )
-    shc = shingles_df(vdocs.join(F.broadcast(cand_ids), "doc_id")).persist()
-    sizes = shc.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        F.broadcast(cand)
-        .join(shc.alias("sa"), F.col("sa.doc_id") == F.col("a_id"))
-        .join(
-            shc.alias("sb"),
-            (F.col("sb.doc_id") == F.col("b_id")) & (F.col("sa.sh") == F.col("sb.sh")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    out = (
-        inter.join(F.broadcast(sizes.alias("na")), F.col("na.doc_id") == F.col("a_id"))
-        .join(F.broadcast(sizes.alias("nb")), F.col("nb.doc_id") == F.col("b_id"))
+    sets = F.broadcast(shingle_sets(vdocs.join(F.broadcast(cand_ids), "doc_id")))
+    sa, sb = sets.alias("sa"), sets.alias("sb")
+    n_inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
+    n_union = F.size("sa.sh") + F.size("sb.sh") - n_inter
+    return (
+        cand.join(sa, F.col("sa.doc_id") == F.col("a_id"))
+        .join(sb, F.col("sb.doc_id") == F.col("b_id"))
         .select(
             "a_id",
             "b_id",
-            F.col("n_inter").cast("bigint").alias("n_inter"),
-            (F.col("na.n") + F.col("nb.n") - F.col("n_inter"))
-            .cast("bigint")
-            .alias("n_union"),
+            n_inter.cast("bigint").alias("n_inter"),
+            n_union.cast("bigint").alias("n_union"),
         )
         .where(F.col("n_inter") * 2 >= F.col("n_union"))  # jaccard ≥ 0.5
     )
-    # materialize the (small) verified-pairs result eagerly so the two
-    # heavyweight intermediates can be unpersisted HERE — otherwise
-    # repeated invocations (bench best-of-N, selfcheck sessions) pile
-    # cached shingle/band partitions into executor storage forever
-    out = out.localCheckpoint(eager=True)
-    shc.unpersist()
-    return out
 
 
 def _cc_propagate(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
@@ -488,7 +462,7 @@ FROM reach GROUP BY doc_id
 """
 
 
-def _bands_cte_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> str:
+def _bands_cte_sql() -> str:
     """The shared DuckDB CTE chain documents → shingles → universal-
     hash minhash signatures → (doc_id, band, band_val) rows; consumed
     by the pairs oracle AND the skipped-bucket accounting oracle."""
@@ -496,14 +470,14 @@ def _bands_cte_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> str:
         "min(({a} * h0 + {b}) % {p}) AS h{i}".format(
             a=_minhash_seed(i)[0], b=_minhash_seed(i)[1], p=P_MINHASH, i=i
         )
-        for i in range(n_hashes)
+        for i in range(N_HASHES)
     )
-    r = n_hashes // n_bands
+    r = N_HASHES // N_BANDS
     band_rows = "\nUNION ALL\n".join(
         f"SELECT doc_id, {b} AS band, md5(concat_ws('#', "
         + ", ".join(f"CAST(h{b * r + j} AS VARCHAR)" for j in range(r))
         + ")) AS band_val FROM sig"
-        for b in range(n_bands)
+        for b in range(N_BANDS)
     )
     return f"""
 WITH sh AS (
@@ -525,15 +499,11 @@ bands AS (
 )"""
 
 
-def _minhash_oracle_sql(
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    bucket_cap: int = BUCKET_CAP,
-) -> str:
-    return f"""{_bands_cte_sql(n_hashes, n_bands)},
+def _minhash_oracle_sql() -> str:
+    return f"""{_bands_cte_sql()},
 capped AS (
   SELECT doc_id, band, band_val FROM bands
-  QUALIFY count(*) OVER (PARTITION BY band, band_val) <= {bucket_cap}
+  QUALIFY count(*) OVER (PARTITION BY band, band_val) <= {BUCKET_CAP}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -557,27 +527,21 @@ WHERE i.n_inter * 2 >= na.n + nb.n - i.n_inter
 """
 
 
-def dedup_skipped_buckets(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    bucket_cap: int = BUCKET_CAP,
-) -> DataFrame:
+def dedup_skipped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-cap ACCOUNTING for minhash_pairs_df (r2 advisor: the cap
     silently drops degenerate buckets — at corpus scale users need the
     drop on the record). One row per band: total buckets, buckets over
     the cap (skipped before the self-join), and the doc-membership
     rows those buckets held — the denominator for 'how much of the
     corpus was never pair-checked in this band'. Same single shuffle
-    key as the pair join; tiny output (n_bands rows)."""
+    key as the pair join; tiny output (N_BANDS rows)."""
     docs = _docs_parallel(spark, sf_dir)
     bstat = (
-        minhash_signatures(docs, n_hashes, n_bands)
+        minhash_signatures(docs)
         .groupBy("band", "band_val")
         .agg(F.count("*").alias("n"))
     )
-    over = F.col("n") > bucket_cap
+    over = F.col("n") > BUCKET_CAP
     return (
         bstat.groupBy("band")
         .agg(
@@ -592,20 +556,16 @@ def dedup_skipped_buckets(
     )
 
 
-def _skipped_oracle_sql(
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    bucket_cap: int = BUCKET_CAP,
-) -> str:
-    return f"""{_bands_cte_sql(n_hashes, n_bands)},
+def _skipped_oracle_sql() -> str:
+    return f"""{_bands_cte_sql()},
 bstat AS (
   SELECT band, band_val, count(*) AS n FROM bands GROUP BY band, band_val
 )
 SELECT CAST(band AS INT) AS band,
        CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(CASE WHEN n > {bucket_cap} THEN 1 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN n > {BUCKET_CAP} THEN 1 ELSE 0 END) AS BIGINT)
          AS skipped_buckets,
-       CAST(sum(CASE WHEN n > {bucket_cap} THEN n ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN n > {BUCKET_CAP} THEN n ELSE 0 END) AS BIGINT)
          AS docs_in_skipped
 FROM bstat GROUP BY band
 """
@@ -633,7 +593,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).groupBy("doc_id", "w").agg(F.count("*").alias("c"))
-    # conv == the digit-weighted chain (r9, see signatures_from_shingles);
+    # conv == the digit-weighted chain (r9, see minhash_signatures);
     # the DuckDB oracle keeps the portable _hex4_to_int text
     h = F.expr("CAST(conv(substr(md5(w), 1, 4), 16, 10) AS INT)").alias("h")
     words = words.select("doc_id", "c", h)
@@ -682,46 +642,28 @@ SELECT doc_id, CAST({sim} AS INT) AS simhash FROM agg
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram Jaccard for each (2k, 2k+1) doc pair — the
     pairwise-verify primitive in isolation (the LSH pipeline above
-    supplies candidate pairs at scale)."""
-    docs = _docs(spark, sf_dir)
-    grams = docs.select(
+    supplies candidate pairs at scale). Each document's distinct
+    trigrams are one array, and both counts come from the pair's two
+    arrays, as in the MinHash verify."""
+    grams = _docs(spark, sf_dir).select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, greatest(length(text) - 2, 1)),"
-                    " i -> substring(text, i, 3))"
-                )
+        F.array_distinct(
+            F.expr(
+                "transform(sequence(1, greatest(length(text) - 2, 1)),"
+                " i -> substring(text, i, 3))"
             )
         ).alias("g"),
     )
     a = grams.where(F.col("doc_id") % 2 == 0).alias("a")
     b = grams.where(F.col("doc_id") % 2 == 1).alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("b.doc_id") == F.col("a.doc_id") + 1) & (F.col("a.g") == F.col("b.g")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n"))
-    return (
-        sizes.where(F.col("doc_id") % 2 == 0)
-        .alias("na")
-        .join(
-            sizes.where(F.col("doc_id") % 2 == 1).alias("nb"),
-            F.col("nb.doc_id") == F.col("na.doc_id") + 1,
-        )
-        .join(inter, F.col("a_id") == F.col("na.doc_id"), "left")
-        .select(
-            F.col("na.doc_id").alias("a_id"),
-            F.col("nb.doc_id").alias("b_id"),
-            F.coalesce("n_inter", F.lit(0)).cast("bigint").alias("n_inter"),
-            (F.col("na.n") + F.col("nb.n") - F.coalesce("n_inter", F.lit(0)))
-            .cast("bigint")
-            .alias("n_union"),
-        )
+    # a NULL text's set is [NULL]: it counts toward its size but, as a
+    # NULL join key, never toward an intersection
+    n_inter = F.size(F.array_intersect(F.array_compact("a.g"), "b.g"))
+    return a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1).select(
+        F.col("a.doc_id").alias("a_id"),
+        F.col("b.doc_id").alias("b_id"),
+        n_inter.cast("bigint").alias("n_inter"),
+        (F.size("a.g") + F.size("b.g") - n_inter).cast("bigint").alias("n_union"),
     )
 
 

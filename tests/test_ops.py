@@ -199,6 +199,76 @@ def test_minhash_verify_docs_source_equivalent(spark):
         dedup.minhash_pairs_df(repart, verify_docs=docs.select("doc_id"))
 
 
+def test_set_jaccard_edge_corpus_matches_oracles(spark, tmp_path):
+    """The set-based Jaccard counts of dedup_minhash_pairs and
+    ngram_jaccard equal their DuckDB oracles on a crafted corpus: a
+    shingle repeated inside one document, texts under 3 words and
+    under 3 characters, empty and NULL texts, an unpaired trailing even
+    doc_id, and a candidate pair (8, 9) whose Jaccard (5/11) fails the
+    ½ cut."""
+    import duckdb
+
+    import __spark_entry__
+
+    nato = "alpha bravo charlie delta echo foxtrot golf hotel india juliet".split()
+    texts = [
+        "the quick brown fox jumps over the lazy dog the quick brown fox",
+        "the quick brown fox jumps over the lazy dog today",
+        "hello world",
+        "hello world",
+        "ab",
+        "ab",
+        "",
+        "",
+        " ".join(nato),
+        " ".join(nato[:7] + ["x0", "x1", "x2"]),
+        None,
+        None,
+        "an unpaired trailing document",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    path = str(tmp_path / "edge_docs")
+    docs.write.parquet(f"{path}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/documents.parquet/*.parquet'")
+    oracle = __spark_entry__.oracle_sql()
+    counts = {}  # query -> {a_id: (n_inter, n_union)}
+    for name in ("dedup_minhash_pairs", "ngram_jaccard"):
+        got = sorted(map(tuple, getattr(dedup, name)(spark, path).collect()))
+        assert got == sorted(con.execute(oracle[name]).fetchall()), name
+        counts[name] = {r[0]: r[2:] for r in got}
+    pairs = counts["dedup_minhash_pairs"]
+    assert pairs[0] == (7, 10)  # doc 0 repeats two shingles: 9 distinct
+    assert {2, 4, 6} <= pairs.keys() and 8 not in pairs
+    sig = dedup.minhash_signatures(docs)
+    cand = {
+        (r.a, r.b)
+        for r in sig.alias("x")
+        .join(sig.alias("y"), ["band", "band_val"])
+        .where(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+        .collect()
+    }
+    assert (8, 9) in cand  # a candidate that the verify rejects
+    grams = counts["ngram_jaccard"]
+    assert 12 not in grams and grams[10] == (0, 2)
+
+
+def test_minhash_pairs_plan_reads_documents_once(spark):
+    """The verify joins candidate pairs to broadcast shingle sets: the
+    final plan scans the documents once (the second set broadcast is a
+    reused Exchange), caches nothing and has no sort-merge join."""
+    from test_scale import _plan_nodes
+
+    df = dedup.dedup_minhash_pairs(spark, SF_SMOKE)
+    df.collect()  # run it, so the adaptive plan is the final one
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    assert nodes.count("FileSourceScanExec") == 1, nodes
+    assert "ReusedExchangeExec" in nodes, nodes
+    assert "InMemoryTableScanExec" not in nodes, nodes
+    assert "SortMergeJoinExec" not in nodes, nodes
+
+
 def test_dedup_clusters_planted_group(spark, tmp_path):
     """Planted near-dup group + singleton: one cluster labeled by its
     min doc_id, every corpus doc present, singleton labels itself."""
