@@ -8,6 +8,9 @@ Deploy (north_rule):
 On a real cluster add --master yarn/k8s and executor sizing; the job
 is bucket-checkpointed (pdfspark.scale.run_checkpointed), so a killed
 run resumes from the lineage table without recomputing done buckets.
+The driver writes and reads that lineage and the config sidecar
+itself, so --out must be on the driver's filesystem (a path or a
+file: URI).
 """
 
 from __future__ import annotations
@@ -68,7 +71,7 @@ def main() -> None:
     )
     compute_wall = round(time.monotonic() - t0, 3)
     done = (
-        completed_buckets(spark, f"{args.out}/lineage")
+        completed_buckets(f"{args.out}/lineage")
         if args.sink == "parquet"
         else set()
     )

@@ -14,7 +14,8 @@ and the kill-and-rerun test). --out/spans holds the batch job's
 per-document table, (doc_id, status, error, spans[]) partitioned by
 batch_id, so a document that fails extraction is a status='error'
 row; --out/lineage has one row per batch (doc_count, rows_out,
-wall_ms). Re-running with the same --out resumes from the
+wall_ms), written by the driver, so --out must be on the driver's
+filesystem. Re-running with the same --out resumes from the
 checkpointed source offsets.
 """
 

@@ -171,9 +171,13 @@ def replicate_docs(docs: DataFrame, k: int) -> DataFrame:
 
 
 def spans_rows(spans_df: DataFrame) -> DataFrame:
-    """(doc_id, spans[]) → exploded comparison rows."""
+    """(doc_id, spans[]) → exploded comparison rows. It explodes
+    ``transform(spans, s -> s)``, not the bare column: Spark infers
+    ``size(spans) > 0`` ahead of an explode of an attribute and pushes
+    it below the projection, so over ``synth_spans_df`` the whole span
+    synthesis would run twice."""
     return spans_df.select(
-        "doc_id", F.explode("spans").alias("s")
+        "doc_id", F.explode(F.transform("spans", lambda s: s)).alias("s")
     ).select("doc_id", "s.offset", "s.kind", "s.text", "s.media_ref")
 
 

@@ -285,47 +285,6 @@ def minhash_pairs_df(
     )
 
 
-def _cc_propagate(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
-    """Iterative min-label propagation (the Pregel shape) — per round,
-    each node takes min(own label, neighbors' labels); converges in
-    component-DIAMETER rounds (fine for near-dup graphs: cliques and
-    short chains), checked by a changed-label count. Each round is ONE
-    shuffle on doc_id; labels are eagerly localCheckpoint-ed so lineage
-    doesn't snowball. Returns (labels(doc_id, lab), rounds)."""
-    edges = pairs.union(
-        pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
-    ).persist()
-    labels = docs.select("doc_id", F.col("doc_id").alias("lab"))
-    labels = labels.localCheckpoint(eager=True)
-    rounds = 0
-    while True:
-        rounds += 1
-        nbr = (
-            edges.join(labels, edges.a_id == labels.doc_id)
-            .groupBy("b_id")
-            .agg(F.min("lab").alias("nl"))
-        )
-        new_labels = (
-            labels.join(nbr, labels.doc_id == nbr.b_id, "left")
-            .select(
-                labels.doc_id,
-                F.least(F.col("lab"), F.coalesce("nl", "lab")).alias("lab"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.lab") != F.col("o.lab"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels, rounds
-
-
 def _cc_star(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -399,37 +358,21 @@ def _cc_star(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
     return labels, rounds
 
 
-def connected_components(
-    docs: DataFrame, pairs: DataFrame, algorithm: str = "propagate"
-) -> tuple[DataFrame, int]:
-    """Shared CC entry: (labels(doc_id, lab), rounds). `propagate` is
-    O(diameter) rounds with the cheapest per-round plan — right for
-    near-dup graphs; `star` is the O(log n)-round large/small-star
-    variant — right when components can be adversarially long chains."""
-    if algorithm == "star":
-        return _cc_star(docs, pairs)
-    return _cc_propagate(docs, pairs)
-
-
-def dedup_clusters(
-    spark: SparkSession, sf_dir: str, algorithm: str = "propagate"
-) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the verified
     MinHash pair graph, labels = min doc_id per component; every
     corpus document gets a row (singletons are their own cluster).
     This is the step that turns pairwise dedup into "keep one
     representative per group" at corpus scale.
 
-    ``algorithm`` picks the CC engine (see connected_components):
-    min-label propagation by default, large-star/small-star for
-    adversarial-diameter graphs — both produce the identical labeling
-    (same DuckDB oracle; pinned equal in tests/test_ops.py)."""
+    The components come from :func:`_cc_star`, which needs O(log n)
+    rounds even on long-chain graphs (tests/test_ops.py)."""
     docs = _docs(spark, sf_dir)
     pairs = minhash_pairs_df(
         _docs_parallel(spark, sf_dir),
         verify_docs=docs.select("doc_id", "text"),
     ).select("a_id", "b_id")
-    labels, _rounds = connected_components(docs, pairs, algorithm)
+    labels, _rounds = _cc_star(docs, pairs)
     return labels.select(
         "doc_id",
         F.col("lab").alias("cluster_id"),

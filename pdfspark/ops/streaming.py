@@ -406,20 +406,25 @@ def run_streaming_extraction_to_table(
     Each batch commits through ``scale.commit_observed``, the batch
     job's commit step, so its lineage row (``doc_count`` = every
     document, error ones included; ``rows_out`` = spans) is observed
-    during the write, with no read-back.
+    during the write, with no read-back. The driver writes that row
+    itself (no Spark job) as ``lineage/batch_id=<b>/part-0.parquet``,
+    so ``out_dir`` must be on the driver's filesystem: any scheme but
+    ``file:`` raises ``ValueError`` before the query starts.
 
     Exactly-once without an idempotent sink format: Spark's
     checkpointed file-source offsets guarantee a replayed micro-batch
-    carries the SAME batch_id, and `overwrite_partitions` makes BOTH
-    writes (span data AND the lineage row) idempotent per batch_id — a
-    batch that crashed anywhere between the data write and the offset
-    commit is simply rewritten on restart, replacing rather than
-    duplicating its lineage partition (same contract as
+    carries the SAME batch_id, and BOTH writes are idempotent per
+    batch_id — the span data through `overwrite_partitions`, the
+    lineage row as the one fixed file of its batch_id directory (any
+    other parquet file there, such as a row from an older writer, is
+    removed). A batch that crashed anywhere between the data write and
+    the offset commit is simply rewritten on restart, replacing rather
+    than duplicating its lineage row (same contract as
     scale.run_checkpointed, asserted by the kill-and-rerun streaming
-    test). Residual window: a crash after the lineage overwrite but
-    before the offset commit briefly leaves a lineage row for a batch
-    whose offsets are uncommitted; the replay overwrites it with the
-    identical row, so readers never see duplicates — at worst one
+    test). Residual window: a crash after the lineage write but before
+    the offset commit briefly leaves a lineage row for a batch whose
+    offsets are uncommitted; the replay replaces it with the identical
+    row, so readers never see duplicates — at worst one
     transiently-early row. ``fail_after_batches`` injects the crash
     for that test. Returns the number of batches committed in THIS
     run."""
@@ -427,8 +432,9 @@ def run_streaming_extraction_to_table(
     import time
 
     from ..engine import extract
-    from ..scale import _lineage_df, commit_observed, overwrite_partitions
+    from ..scale import _driver_path, _write_lineage, commit_observed
 
+    out_dir = _driver_path(out_dir)
     data_dir = os.path.join(out_dir, "spans")
     lineage_dir = os.path.join(out_dir, "lineage")
     ckpt = os.path.join(out_dir, "_checkpoint")
@@ -452,14 +458,16 @@ def run_streaming_extraction_to_table(
             # crash INSIDE the data-written/lineage-pending window
             raise RuntimeError(f"injected failure in batch {batch_id}")
         wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage = _lineage_df(
-            spark,
-            [(b, "done", docs, spans, wall_ms)],
-            "batch_id long, status string, doc_count long, rows_out long, wall_ms long",
+        # one fixed file per batch_id: a replayed batch REPLACES its
+        # lineage row instead of appending a duplicate
+        part_dir = os.path.join(lineage_dir, f"batch_id={b}")
+        _write_lineage(
+            part_dir, [("done", docs, spans, wall_ms)],
+            "status string, doc_count long, rows_out long, wall_ms long", name="part-0.parquet",
         )
-        # partition-overwrite on batch_id: a replayed batch REPLACES
-        # its lineage row instead of appending a duplicate
-        overwrite_partitions(lineage, spark, lineage_dir, "batch_id")
+        for f in os.listdir(part_dir):
+            if f.endswith(".parquet") and f != "part-0.parquet":
+                os.remove(os.path.join(part_dir, f))
         committed["n"] += 1
 
     q = (

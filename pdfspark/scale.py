@@ -15,7 +15,10 @@ AQE + Arrow + Catalyst; no custom rules):
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
    wall_ms, attempt). The counts are observed while the data is
    written (``commit_observed``, ``DataFrame.observe``); no job reads
-   the output back to compute them.
+   the output back to compute them. The rows are driver bookkeeping:
+   the driver writes and reads them as parquet files itself
+   (``pyarrow.parquet``, temp file + rename, like the job's config
+   sidecar), so lineage I/O runs no Spark job.
 3. ``run_checkpointed`` — bucket-granular commit + resume: an
    interrupted run reprocesses only buckets without a 'done' lineage
    row (resume = anti-join of pending vs completed; kill-and-rerun is
@@ -28,17 +31,21 @@ Iceberg jars on the classpath (import-gated below), so the warehouse
 falls back to directory-partitioned parquet with identical layout and
 commit granularity. On a real cluster set
 ``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog`` and
-``USE_ICEBERG=1`` — the write paths switch to ``writeTo(...).append()``.
+``USE_ICEBERG=1`` — the commit switches to
+``writeTo(...).overwritePartitions()``.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import tempfile
 import time
+import uuid
 from typing import Optional
+from urllib.parse import urlparse
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
@@ -49,17 +56,6 @@ def have_iceberg(spark: SparkSession) -> bool:
         return os.environ.get("USE_ICEBERG", "0") == "1"
     except Exception:
         return False
-
-
-def append_table(df: DataFrame, spark: SparkSession, target: str, partition_col: str) -> None:
-    """Sink dispatch: Iceberg `writeTo(...).append()` when the catalog
-    is on the classpath (real cluster), identical-layout partitioned
-    parquet otherwise (this sandbox). `target` is a table name in the
-    Iceberg case, a directory path in the parquet case."""
-    if have_iceberg(spark):
-        df.writeTo(target).append()
-    else:
-        df.write.mode("append").partitionBy(partition_col).parquet(target)
 
 
 def overwrite_partitions(
@@ -73,13 +69,11 @@ def overwrite_partitions(
     if have_iceberg(spark):
         df.writeTo(target).overwritePartitions()
     else:
-        sess = df.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(target)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # a writer option, not the session conf: no other write in the
+        # session sees the mode
+        df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_col).parquet(target)
 
 
 # ---------------------------------------------------------------------------
@@ -142,50 +136,83 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _has_lineage(lineage_dir: str) -> bool:
-    return os.path.isdir(lineage_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(lineage_dir)
-    )
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string()}
 
 
-def _lineage_df(
-    spark: SparkSession, rows: list[tuple], schema: str = LINEAGE_SCHEMA
-) -> DataFrame:
-    """A handful of lineage rows as a one-partition frame (one file per
-    write), built from pandas through Arrow: Spark turns it into a
-    JVM-local relation, so writing it runs no Python worker
-    (``createDataFrame`` over a list of tuples pickles the rows and
-    converts them in a Python-worker job)."""
-    names = [c.split()[0] for c in schema.split(",")]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema).coalesce(1)
+def _arrow_schema(ddl: str) -> pa.Schema:
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in ddl.split(","))])
 
 
-def _lineage_state(
-    spark: SparkSession, lineage_dir: str
-) -> tuple[set[int], dict[int, int]]:
-    """(buckets with a 'done' row, max attempt per bucket over any
-    status) from ONE lineage scan — the resume set and the retry
-    counter carried into the next run's lineage rows."""
-    if not _has_lineage(lineage_dir):
-        return set(), {}
-    rows = (
-        spark.read.parquet(lineage_dir)
-        .groupBy("bucket")
-        .agg(
-            F.max(F.col("status") == "done").alias("done"),
-            F.max("attempt").alias("a"),
+def _driver_path(out_dir: str) -> str:
+    """``out_dir`` as a path on the driver's filesystem: a plain path or
+    a ``file:`` URI. Lineage and the config sidecar are written and read
+    by the driver itself, so any other scheme (``s3a://``, ``hdfs://``)
+    is refused before anything runs or is created."""
+    u = urlparse(out_dir)
+    if u.scheme == "file":
+        return u.path
+    if u.scheme:
+        raise ValueError(
+            f"out_dir must be on the driver's filesystem (a path or a file: URI), got {out_dir!r}"
         )
-        .collect()
-    )
-    return {r.bucket for r in rows if r.done}, {r.bucket: r.a for r in rows}
+    return out_dir
 
 
-def completed_buckets(spark: SparkSession, lineage_dir: str) -> set[int]:
-    return _lineage_state(spark, lineage_dir)[0]
+def _write_atomic(path: str, data: bytes) -> None:
+    """``data`` to a '.'-prefixed temp file next to ``path``, renamed
+    into place: a crash mid-write leaves no truncated file under
+    ``path``, and pyarrow and Spark both skip names starting with '.'
+    or '_'."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
 
 
-def bucket_attempts(spark: SparkSession, lineage_dir: str) -> dict[int, int]:
-    return _lineage_state(spark, lineage_dir)[1]
+def _write_lineage(
+    lineage_dir: str, rows: list[tuple], schema: str = LINEAGE_SCHEMA,
+    name: Optional[str] = None,
+) -> None:
+    """Lineage rows as one parquet file, ``name`` or a fresh
+    ``part-<uuid>.parquet``, written by the driver (no Spark job).
+    Spark reads the file back with exactly the ``schema`` types."""
+    arrow = _arrow_schema(schema)
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], arrow), buf)
+    name = name or f"part-{uuid.uuid4().hex}.parquet"
+    _write_atomic(os.path.join(lineage_dir, name), buf.getvalue().to_pybytes())
+
+
+def _lineage_state(lineage_dir: str) -> tuple[set[int], dict[int, int]]:
+    """(buckets with a 'done' row, max attempt per bucket over any
+    status) from ONE read of the lineage files — the resume set and
+    the retry counter carried into the next run's lineage rows. Files
+    written by Spark's parquet writer (with ``_SUCCESS`` and ``.crc``
+    siblings) read the same way."""
+    lineage_dir = _driver_path(lineage_dir)
+    done: set[int] = set()
+    attempts: dict[int, int] = {}
+    if not os.path.isdir(lineage_dir):
+        return done, attempts
+    cols = pq.read_table(
+        lineage_dir, columns=["bucket", "status", "attempt"],
+        schema=_arrow_schema(LINEAGE_SCHEMA),
+    ).to_pydict()
+    for b, status, a in zip(cols["bucket"], cols["status"], cols["attempt"]):
+        attempts[b] = max(attempts.get(b, a), a)
+        if status == "done":
+            done.add(b)
+    return done, attempts
+
+
+def completed_buckets(lineage_dir: str) -> set[int]:
+    return _lineage_state(lineage_dir)[0]
+
+
+def bucket_attempts(lineage_dir: str) -> dict[int, int]:
+    return _lineage_state(lineage_dir)[1]
 
 
 def commit_observed(
@@ -281,8 +308,12 @@ def run_checkpointed(
     Exchange of text rows ahead of a pipelined generate → extract
     stage, and commits through :func:`commit_observed`: its lineage
     stats are observed during that one write, with no read-back.
-    Lineage rows are written from Arrow-built local frames
-    (:func:`_lineage_df`), and a resume reads the lineage once.
+    The driver writes the lineage rows and the ``_job_config.json``
+    sidecar itself (:func:`_write_lineage`, :func:`_write_atomic`), and
+    a resume reads the lineage once with pyarrow: lineage I/O runs no
+    Spark job. So ``out_dir`` must be on the driver's filesystem (a
+    path or a ``file:`` URI); any other scheme raises ``ValueError``
+    before anything runs or is created.
 
     ``sink="null"`` runs the IDENTICAL per-bucket-group loop (same
     corpus scans, bucket filters, salting, generation, extraction,
@@ -304,6 +335,7 @@ def run_checkpointed(
     data-written/lineage-pending window to exercise exactly that
     non-atomic gap.
     """
+    out_dir = _driver_path(out_dir)
     lineage_dir = os.path.join(out_dir, "lineage")
     data_dir = os.path.join(out_dir, "spans")
     # resume-config guard: a rerun with different corpus-shaping
@@ -319,12 +351,10 @@ def run_checkpointed(
            "sf_dir": os.path.realpath(sf_dir)}
     cfg_path = os.path.join(out_dir, "_job_config.json")
     if null_sink:
-        cfg_path = None  # compute-only: no resume state of any kind
+        pass  # compute-only: no resume state of any kind
     elif os.path.exists(cfg_path):
-        import json as _json
-
         with open(cfg_path) as f:
-            prev_cfg = _json.load(f)
+            prev_cfg = json.load(f)
         # pre-r6 sidecars lack sf_dir: compare only the keys they pinned
         chk = {k: v for k, v in cfg.items() if k in prev_cfg}
         if prev_cfg != chk:
@@ -334,37 +364,32 @@ def run_checkpointed(
                 f"--out or repeat the original parameters"
             )
     else:
-        import json as _json
-
-        os.makedirs(out_dir, exist_ok=True)
         # temp-file + rename: a crash mid-write must not leave a
         # truncated sidecar that poisons every future resume
-        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".jobcfg")
-        with os.fdopen(fd, "w") as f:
-            _json.dump(cfg, f)
-        os.replace(tmp, cfg_path)
-    done, attempts = (set(), {}) if null_sink else _lineage_state(spark, lineage_dir)
+        _write_atomic(cfg_path, json.dumps(cfg).encode())
+    done, attempts = (set(), {}) if null_sink else _lineage_state(lineage_dir)
     pending = [b for b in range(n_buckets) if b not in done]
     # record that this run is attempting the pending buckets BEFORE
     # doing the work: a crash mid-group leaves 'attempted' rows, so
     # the next run's lineage shows the true attempt count
     if pending and not null_sink:
         attempts |= {b: attempts.get(b, 0) + 1 for b in pending}
-        _lineage_df(
-            spark, [(b, "attempted", 0, 0, 0, 0, attempts[b]) for b in pending]
-        ).write.mode("append").parquet(lineage_dir)
+        _write_lineage(
+            lineage_dir, [(b, "attempted", 0, 0, 0, 0, attempts[b]) for b in pending]
+        )
     bucket = _bucket(n_buckets)
     sc = spark.sparkContext
     processed = 0
     for i in range(0, len(pending), buckets_per_commit):
         group = pending[i : i + buckets_per_commit]
         t0 = time.monotonic()
-        extracted, bytes_in = _group_frame(
-            spark, sf_dir, group, n_buckets, variant, replicate
-        )
-        # names the group's write jobs in the UI and the event log
+        # names the group's jobs (its corpus schema read and its
+        # write) in the UI and the event log
         sc.setJobDescription(f"extract_job buckets {group}")
         try:
+            extracted, bytes_in = _group_frame(
+                spark, sf_dir, group, n_buckets, variant, replicate
+            )
             if null_sink:
                 # compute-only twin: the SAME per-group plan (corpus
                 # scan, bucket filter, salt, generate, extract)
@@ -390,12 +415,12 @@ def run_checkpointed(
         wall_ms = int((time.monotonic() - t0) * 1000)
         b_in = bytes_in.get
         # empty buckets still need a done row so resume skips them
-        _lineage_df(
-            spark,
+        _write_lineage(
+            lineage_dir,
             [(b, "done", counts[b][0], b_in[f"b{b}"] or 0, counts[b][1], wall_ms,
               attempts.get(b, 1))
              for b in group],
-        ).write.mode("append").parquet(lineage_dir)
+        )
         processed += len(group)
         if fail_after is not None and processed >= fail_after:
             raise RuntimeError(f"injected failure after {processed} buckets")

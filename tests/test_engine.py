@@ -16,6 +16,7 @@ from pdfspark.engine import (
     metadata_rows,
     per_doc,
     roundtrip_rows,
+    spans_rows,
     status_rows,
     synth_spans_df,
 )
@@ -31,6 +32,19 @@ def test_synth_spans_lockstep(spark):
     }
     for row in docs.select("doc_id", "text").collect():
         assert got[row.doc_id] == synth_spans_py(str(row.doc_id), row.text)
+
+
+def test_spans_rows_synthesizes_once(spark):
+    """Exploding synthesized spans runs the synthesis once: the
+    optimized plan holds one ``regexp_extract_all``, and the rows equal
+    the pure-Python synthesis."""
+    docs = load_documents(spark, SF_SMOKE)
+    rows = spans_rows(synth_spans_df(docs))
+    plan = rows._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract_all") == 1, plan
+    expected = sum(len(synth_spans_py(str(r.doc_id), r.text))
+                   for r in docs.select("doc_id", "text").collect())
+    assert rows.count() == expected
 
 
 def test_roundtrip_pipeline_identity(spark):

@@ -395,31 +395,24 @@ def test_cc_star_chain_logarithmic_rounds(spark):
     edges = spark.createDataFrame(
         [(i, i + 2) for i in range(n - 2)], "a_id long, b_id long"
     )
-    labels, rounds = dedup.connected_components(docs, edges, algorithm="star")
+    labels, rounds = dedup._cc_star(docs, edges)
     got = {r.doc_id: r.lab for r in labels.collect()}
     assert got == {i: i % 2 for i in range(n)}
     assert rounds <= 2 * math.ceil(math.log2(n)) + 4, rounds
 
 
-def test_cc_star_matches_propagate(spark):
-    """Both CC engines produce the identical labeling on an assorted
-    graph (clique + chain + singletons)."""
+def test_cc_star_assorted_graph_labels(spark):
+    """The CC engine labels an assorted graph (chain + triangle + vee +
+    singletons) with each component's min doc_id."""
     docs = spark.range(30).withColumnRenamed("id", "doc_id")
     e = [(0, 1), (1, 2), (2, 3), (3, 4)]  # chain
     e += [(10, 11), (10, 12), (11, 12)]  # triangle
     e += [(20, 25), (25, 21)]  # vee
     edges = spark.createDataFrame(e, "a_id long, b_id long")
-    l1, _ = dedup.connected_components(docs, edges, algorithm="propagate")
-    l2, _ = dedup.connected_components(docs, edges, algorithm="star")
-    assert sorted(map(tuple, l1.collect())) == sorted(map(tuple, l2.collect()))
-
-
-def test_dedup_clusters_star_same_result(spark, tmp_path):
-    """dedup_clusters(algorithm='star') equals the default engine on a
-    real near-dup corpus (the driver-oracled query path)."""
-    a = dedup.dedup_clusters(spark, SF_SMOKE).collect()
-    b = dedup.dedup_clusters(spark, SF_SMOKE, algorithm="star").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    labels, _ = dedup._cc_star(docs, edges)
+    expect = {i: i for i in range(30)}
+    expect |= {i: 0 for i in range(5)} | {11: 10, 12: 10} | {21: 20, 25: 20}
+    assert {r.doc_id: r.lab for r in labels.collect()} == expect
 
 
 def test_skipped_bucket_accounting(spark, tmp_path):

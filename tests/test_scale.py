@@ -12,7 +12,7 @@ import pytest
 from conftest import SF_SMOKE
 from pdfspark.engine import ensure_parallelism, generate_payloads, load_documents
 from pdfspark.scale import (
-    LINEAGE_SCHEMA, _group_frame, _lineage_df, completed_buckets,
+    LINEAGE_SCHEMA, _group_frame, _write_lineage, completed_buckets,
     run_checkpointed, salt_docs_by_size,
 )
 
@@ -40,13 +40,13 @@ def test_checkpoint_resume_after_kill(spark, tmp_path):
         run_checkpointed(
             spark, SF_SMOKE, out, n_buckets=8, buckets_per_commit=2, fail_after=4
         )
-    done_first = completed_buckets(spark, os.path.join(out, "lineage"))
+    done_first = completed_buckets(os.path.join(out, "lineage"))
     assert len(done_first) == 4
 
     # rerun: only the remaining buckets are processed
     n2 = run_checkpointed(spark, SF_SMOKE, out, n_buckets=8, buckets_per_commit=2)
     assert n2 == 4
-    done = completed_buckets(spark, os.path.join(out, "lineage"))
+    done = completed_buckets(os.path.join(out, "lineage"))
     assert done == set(range(8))
 
     # third run: nothing left to do
@@ -103,7 +103,7 @@ def test_crash_between_data_write_and_lineage_commit(spark, tmp_path):
             fail_after=2, fail_before_commit=True,
         )
     # the crashed group's data IS on disk but its lineage row is not
-    done_first = completed_buckets(spark, os.path.join(out, "lineage"))
+    done_first = completed_buckets(os.path.join(out, "lineage"))
     assert len(done_first) == 0
     assert spark.read.parquet(os.path.join(out, "spans")).count() > 0
 
@@ -198,38 +198,50 @@ def test_ensure_parallelism_passes_frames_without_input_files(spark):
 
 
 def test_lineage_rows_keep_schema_and_old_lineage_resumes(spark, tmp_path):
-    """Lineage written from the Arrow-built frame has exactly the
-    LINEAGE_SCHEMA parquet types, and a lineage file written the old
-    way (createDataFrame over a list of tuples) still drives resume:
-    its done buckets are skipped, and both kinds of file read back
-    together."""
+    """Lineage written by the driver has exactly the LINEAGE_SCHEMA
+    parquet types, and Spark reads it back as LINEAGE_SCHEMA. A lineage
+    directory written by Spark's parquet writer (with its ``_SUCCESS``
+    and ``.crc`` files) still drives resume: its done buckets are
+    skipped, and both kinds of file read back together. A leftover
+    temp file from a crashed write is ignored by both readers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     new_dir = str(tmp_path / "new_lineage")
-    _lineage_df(spark, [(0, "done", 1, 2, 3, 4, 1)]).write.parquet(new_dir)
+    _write_lineage(new_dir, [(0, "done", 1, 2, 3, 4, 1)])
     written = pq.read_table(new_dir).schema
     assert {f.name: f.type for f in written} == {
         "bucket": pa.int32(), "status": pa.string(), "doc_count": pa.int64(),
         "bytes_in": pa.int64(), "spans_out": pa.int64(), "wall_ms": pa.int64(),
         "attempt": pa.int32(),
     }
+    assert spark.read.parquet(new_dir).schema.simpleString() == (
+        "struct<bucket:int,status:string,doc_count:bigint,bytes_in:bigint,"
+        "spans_out:bigint,wall_ms:bigint,attempt:int>"
+    )
 
     out = str(tmp_path / "old")
+    lineage = os.path.join(out, "lineage")
     spark.createDataFrame(
         [(0, "done", 0, 0, 0, 7, 1), (1, "done", 0, 0, 0, 7, 1)], LINEAGE_SCHEMA
-    ).coalesce(1).write.parquet(os.path.join(out, "lineage"))
+    ).coalesce(1).write.parquet(lineage)
+    assert "_SUCCESS" in os.listdir(lineage)
+    assert any(f.endswith(".crc") for f in os.listdir(lineage))
+    with open(os.path.join(lineage, ".part-crashed.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 truncated")
     assert run_checkpointed(spark, SF_SMOKE, out, n_buckets=4) == 2
-    assert completed_buckets(spark, os.path.join(out, "lineage")) == {0, 1, 2, 3}
+    assert completed_buckets(lineage) == {0, 1, 2, 3}
+    # 2 old done rows + 2 attempted + 2 done
+    assert spark.read.parquet(lineage).count() == 6
     spans = spark.read.parquet(os.path.join(out, "spans"))
     assert {r.bucket for r in spans.select("bucket").distinct().collect()} == {2, 3}
 
 
 def test_iceberg_dispatch_mocked(spark, monkeypatch):
     """Dress rehearsal for a jar-equipped cluster: with the catalog
-    'present', both sinks must route through DataFrameWriterV2
-    (writeTo().append() / overwritePartitions()) and never touch the
-    parquet fallback."""
+    'present', the commit must route through DataFrameWriterV2
+    (writeTo().overwritePartitions()) and never touch the parquet
+    fallback."""
     import pdfspark.scale as scale
 
     calls = []
@@ -237,9 +249,6 @@ def test_iceberg_dispatch_mocked(spark, monkeypatch):
     class FakeWriter:
         def __init__(self, target):
             self.target = target
-
-        def append(self):
-            calls.append(("append", self.target))
 
         def overwritePartitions(self):
             calls.append(("overwritePartitions", self.target))
@@ -249,12 +258,8 @@ def test_iceberg_dispatch_mocked(spark, monkeypatch):
     monkeypatch.setattr(
         type(df), "writeTo", lambda self, t: FakeWriter(t), raising=True
     )
-    scale.append_table(df, spark, "iceberg.db.spans", "bucket")
     scale.overwrite_partitions(df, spark, "iceberg.db.spans", "bucket")
-    assert calls == [
-        ("append", "iceberg.db.spans"),
-        ("overwritePartitions", "iceberg.db.spans"),
-    ]
+    assert calls == [("overwritePartitions", "iceberg.db.spans")]
 
 
 def test_lineage_attempt_counter(spark, tmp_path):
@@ -265,7 +270,7 @@ def test_lineage_attempt_counter(spark, tmp_path):
         run_checkpointed(spark, SF_SMOKE, out, n_buckets=4,
                          buckets_per_commit=2, fail_after=2)
     # crashed run: 2 buckets done (attempt 1), 2 left 'attempted'
-    att = bucket_attempts(spark, os.path.join(out, "lineage"))
+    att = bucket_attempts(os.path.join(out, "lineage"))
     assert set(att) == {0, 1, 2, 3} and set(att.values()) == {1}
     run_checkpointed(spark, SF_SMOKE, out, n_buckets=4)
     lin = spark.read.parquet(os.path.join(out, "lineage"))
@@ -407,5 +412,42 @@ def test_commit_group_writes_carry_job_description(spark, tmp_path):
     assert run_checkpointed(spark, SF_SMOKE, out, n_buckets=4, buckets_per_commit=2) == 4
     new = {d for j, d in descriptions().items() if j not in before}
     groups = {"extract_job buckets [0, 1]", "extract_job buckets [2, 3]"}
-    assert groups <= new <= groups | {None}  # lineage jobs carry none
+    assert new == groups  # lineage I/O runs no Spark job
     assert sc.getLocalProperty("spark.job.description") is None
+
+
+def _job_ids(spark) -> set[int]:
+    jvm_sc = spark.sparkContext._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    jobs = jvm_sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_resume_of_finished_out_dir_runs_no_spark_job(spark, tmp_path):
+    """Resuming a finished out_dir reads the sidecar and the lineage on
+    the driver and processes nothing: it starts no Spark job. The same
+    directory named as a ``file:`` URI resumes the same way."""
+    out = str(tmp_path / "finished")
+    assert run_checkpointed(spark, SF_SMOKE, out, n_buckets=2) == 2
+    before = _job_ids(spark)
+    assert run_checkpointed(spark, SF_SMOKE, out, n_buckets=2) == 0
+    assert run_checkpointed(spark, SF_SMOKE, f"file://{out}", n_buckets=2) == 0
+    assert completed_buckets(f"file://{out}/lineage") == {0, 1}
+    assert _job_ids(spark) == before
+
+
+def test_remote_out_dir_is_refused(spark, tmp_path, monkeypatch):
+    """Lineage and the config sidecar live on the driver's filesystem,
+    so an out_dir with any URI scheme but ``file:`` raises ValueError
+    before any Spark job runs and before any directory is created."""
+    from pdfspark.ops.streaming import run_streaming_extraction_to_table
+
+    monkeypatch.chdir(tmp_path)
+    before = _job_ids(spark)
+    for out in ("s3a://bucket/out", "hdfs://namenode/out"):
+        with pytest.raises(ValueError, match="driver's filesystem"):
+            run_checkpointed(spark, SF_SMOKE, out, n_buckets=2)
+        with pytest.raises(ValueError, match="driver's filesystem"):
+            run_streaming_extraction_to_table(spark, str(tmp_path / "landing"), out)
+    assert os.listdir(tmp_path) == []
+    assert _job_ids(spark) == before

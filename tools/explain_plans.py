@@ -112,13 +112,13 @@ COMMENTARY = {
         "tree, never a join."
     ),
     "dedup_clusters": (
-        "The iterative component labeling is driver-coordinated "
-        "(Pregel shape); the plan shown is the FINAL labels projection "
-        "— each converged round behind it was one hash Exchange on "
-        "doc_id plus an eager localCheckpoint, so the lineage shown "
-        "here is flat (scan of checkpointed RDD) instead of a "
-        "10-round join tree. Rounds = component diameter (2-4 on "
-        "near-dup graphs)."
+        "The component labeling is driver-coordinated: alternating "
+        "large-star/small-star rounds over the verified-pair edge "
+        "set, O(log n) rounds even on long chains, each round's edges "
+        "an eager localCheckpoint. The plan shown is the FINAL labels "
+        "projection — the corpus scan joined to the converged star "
+        "forest (a scan of the checkpointed edges), so the lineage "
+        "shown is flat instead of a multi-round join tree."
     ),
     "pdf_attachments": (
         "Name-tree extraction rides the flagship shape: pruned "
