@@ -30,9 +30,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r9 scan-parallelism floor (guide §6) — see ops/dedup.py
-    # _docs_parallel: the 5-gram explode otherwise runs in 1-2 scan
-    # tasks locally (no-op at real scale). Interleaved A/B: the floor
+    # r9 scan-parallelism floor (guide §6) — see
+    # engine.ensure_parallelism: the 5-gram explode otherwise runs in
+    # 1-2 scan tasks locally (no-op at real scale). Interleaved A/B: the floor
     # pays for benchmark_contamination (0.26× vs round start) but
     # HURTS corpus_curate (1.9× — already bound by its md5 window
     # shuffle), so only the contamination query uses it.

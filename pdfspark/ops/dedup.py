@@ -2,14 +2,16 @@
 the training-data-pipeline layer (task brief: exact, MinHash+LSH,
 SimHash, n-gram Jaccard; embedding near-dup lives in ops/ann.py).
 
-Every operator is pure DataFrame/SQL (JVM-side, no Python UDFs); each
-has a DuckDB oracle. Hashing is md5-based so both engines agree
-bit-for-bit. At 10^12 docs:
+Every operator is DataFrame/SQL except the MinHash signature, which
+is one per-document Python stage (engine.per_doc) over the shingle
+sets; each has a DuckDB oracle. Hashing is md5-based so both engines
+agree bit-for-bit. At 10^12 docs:
 - exact dedup is one hash-aggregate shuffle on the 16-byte digest
   (map-side partial aggregation; AQE coalesces the tail);
-- MinHash banding keeps the candidate join linear: docs shuffle on
-  (band, value) buckets instead of all-pairs — the only quadratic
-  step is within-bucket, bounded by bucket size;
+- MinHash signatures are a per-document map (no shuffle); banding
+  keeps the candidate join linear: docs shuffle on (band, value)
+  buckets instead of all-pairs — the only quadratic step is
+  within-bucket, bounded by bucket size;
 - exact set Jaccard (the MinHash verify and ngram_jaccard) is computed
   from each document's distinct shingle or trigram array: the counts
   are size(array_intersect(a, b)) and size(a) + size(b) - that, so no
@@ -20,10 +22,13 @@ bit-for-bit. At 10^12 docs:
 
 from __future__ import annotations
 
-from typing import Optional
+import hashlib
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+
+from ..engine import ensure_parallelism, per_doc
 
 N_HASHES = 64  # MinHash signature length (real-corpus scale, r2)
 N_BANDS = 16  # bands of r = 4 rows → s-curve threshold ≈ (1/16)^(1/4) = 0.5
@@ -49,25 +54,6 @@ def _minhash_seed(i: int) -> tuple[int, int]:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r9 scan-parallelism floor (guide §6), applied ONLY to the
-    # minhash family: its shingle explode + 64-column partial
-    # aggregation run in the SCAN stage, which on the sandbox's
-    # single-row-group parquet is 1-2 tasks regardless of cores.
-    # Repartitioning on doc_id fans that out AND pre-clusters rows by
-    # the signature aggregation's grouping key, so the partial agg
-    # output stays one row per doc (no map-task × group inflation) —
-    # measured bands stage 10.7s → 2.2s at sf1.0. The cheap operators
-    # (exact/simhash/ngram/boilerplate) measurably LOSE from the extra
-    # full-width shuffle, so they stay on the raw scan.
-    # ensure_parallelism is a no-op at real scale (many splits).
-    from ..engine import ensure_parallelism
-
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -146,69 +132,55 @@ def _hex_prefix_to_int(expr: str, n: int = 15) -> str:
     return "(" + " + ".join(digits) + ")"
 
 
+_SEEDS = np.array([_minhash_seed(i) for i in range(N_HASHES)], dtype=np.int64)
+
+
+def _signature_bands(did, sh) -> list:
+    if sh is None:  # NULL text
+        return []
+    # 8 hex digits (32 bits) is plenty of entropy for a minhash seed
+    # value; the DuckDB oracle computes the same h0 with the portable
+    # _hex_prefix_to_int chain
+    h0 = np.array(
+        [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % P_MINHASH for s in sh],
+        dtype=np.int64,
+    )
+    sig = ((_SEEDS[:, :1] * h0 + _SEEDS[:, 1:]) % P_MINHASH).min(axis=1)
+    return [
+        (did, b, hashlib.md5("#".join(map(str, vals)).encode()).hexdigest())
+        for b, vals in enumerate(sig.reshape(N_BANDS, -1))
+    ]
+
+
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, band, band_val): universal-hash minhash — h0 =
     md5-prefix int per shingle, hᵢ = min (aᵢ·h0 + bᵢ) mod P; bands of
-    r = N_HASHES/N_BANDS values hashed together. Aggregation is
-    map-side combinable (min) → one shuffle by doc_id."""
-    # hash the set, then explode the hashes. Ahead of an explode of the
-    # bare `sh` column Spark infers `size(sh) > 0` and pushes it below
-    # the projection with `w` inlined, re-shingling every document in
-    # O(words²) (measured 8× slower on the shingle stage).
-    # 8 hex digits (32 bits) is plenty of entropy for a minhash seed
-    # value. conv(hex, 16, 10) == the digit-weighted _hex_prefix_to_int
-    # sum (the DuckDB oracle keeps the portable chain; Spark-side conv
-    # is ~35% cheaper per shingle — r9)
-    h0 = shingle_sets(docs).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sh, s -> CAST(conv(substr(md5(s), 1, 8), 16, 10)"
-                f" AS BIGINT) % {P_MINHASH})"
-            )
-        ).alias("h0"),
+    r = N_HASHES/N_BANDS values hashed together. One per-document stage
+    over :func:`shingle_sets`, so the shingling rule keeps its one
+    Spark definition; no shuffle of its own.
+
+    The input gets the scan-parallelism floor (r9, guide §6): the
+    Python stage would otherwise run in the scan stage, which on a
+    single-row-group parquet is 1-2 tasks regardless of cores. The
+    cheap operators (exact/simhash/ngram/boilerplate) measurably LOSE
+    from the extra full-width shuffle, so they stay on the raw scan.
+    ensure_parallelism is a no-op at real scale (many splits)."""
+    sets = shingle_sets(ensure_parallelism(docs.select("doc_id", "text")))
+    return per_doc(
+        sets, _signature_bands, "doc_id bigint, band int, band_val string", ("doc_id", "sh")
     )
-    aggs = []
-    for i in range(N_HASHES):
-        a, b = _minhash_seed(i)
-        aggs.append(F.expr(f"min(({a} * h0 + {b}) % {P_MINHASH})").alias(f"h{i}"))
-    sig = h0.groupBy("doc_id").agg(*aggs)
-    bands = []
-    r = N_HASHES // N_BANDS
-    for b in range(N_BANDS):
-        cols = [F.col(f"h{b * r + j}").cast("string") for j in range(r)]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("#", *cols)).alias("band_val"),
-            )
-        )
-    return sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bv")
-    ).select("doc_id", "bv.band", "bv.band_val")
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # verify_docs: the RAW scan — the verify pass broadcast-filters to
-    # candidate docs only, so routing it through _docs_parallel's
-    # repartition would re-Exchange the full corpus text for nothing
-    # (the signature pass is the one that needs the parallelism floor)
-    return minhash_pairs_df(
-        _docs_parallel(spark, sf_dir),
-        verify_docs=_docs(spark, sf_dir).select("doc_id", "text"),
-    )
+    return minhash_pairs_df(_docs(spark, sf_dir))
 
 
-def minhash_pairs_df(
-    docs: DataFrame,
-    bucket_cap: int = BUCKET_CAP,
-    verify_docs: Optional[DataFrame] = None,
-) -> DataFrame:
+def minhash_pairs_df(docs: DataFrame) -> DataFrame:
     """LSH candidate pairs (same band bucket) verified with exact
     shingle-set Jaccard ≥ 0.5. Counts (not float division) are emitted
     so the oracle comparison is integer-exact.
 
-    Buckets holding more than ``bucket_cap`` docs are SKIPPED before
+    Buckets holding more than ``BUCKET_CAP`` docs are SKIPPED before
     pair expansion: one degenerate key (empty/boilerplate text) would
     otherwise put O(bucket²) pairs in a single task.
 
@@ -225,24 +197,16 @@ def minhash_pairs_df(
     broadcast here is bounded by the candidate budget Σ_buckets cap²,
     orders of magnitude below the corpus; the sets broadcast also
     carries each candidate document's shingle strings, so its size is
-    that id count times the candidates' shingle-set bytes.
-
-    ``verify_docs`` (optional) must hold the SAME (doc_id, text) rows as
-    ``docs`` — only its partitioning may differ. The verify pass
-    inner-joins candidate pairs against it, so a candidate doc missing
-    from it silently loses its pairs and a doc with different text
-    gets a wrong Jaccard count."""
-    if verify_docs is not None:
-        missing = {"doc_id", "text"} - set(verify_docs.columns)
-        if missing:
-            raise ValueError(f"verify_docs lacks columns {sorted(missing)}")
+    that id count times the candidates' shingle-set bytes. The verify
+    reads ``docs`` as given: only the signature pass needs the
+    parallelism floor, so no full-corpus repartition feeds the verify."""
     # one Exchange on (band, band_val): bucket membership, cap, and
     # i<j pair expansion all inside the aggregation's partitioning
     cand = (
         minhash_signatures(docs)
         .groupBy("band", "band_val")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= bucket_cap))
+        .where((F.size("ids") >= 2) & (F.size("ids") <= BUCKET_CAP))
         .select(
             F.explode(
                 F.expr(
@@ -259,16 +223,15 @@ def minhash_pairs_df(
         .distinct()
         # tiny (bounded by Σ cap²/bucket); materialize eagerly so the
         # id set and the verify don't each re-run the whole signature
-        # aggregation lineage
+        # and bucket lineage
         .localCheckpoint(eager=True)
     )
-    vdocs = verify_docs if verify_docs is not None else docs
     cand_ids = (
         cand.select(F.col("a_id").alias("doc_id"))
         .union(cand.select(F.col("b_id").alias("doc_id")))
         .distinct()
     )
-    sets = F.broadcast(shingle_sets(vdocs.join(F.broadcast(cand_ids), "doc_id")))
+    sets = F.broadcast(shingle_sets(docs.join(F.broadcast(cand_ids), "doc_id")))
     sa, sb = sets.alias("sa"), sets.alias("sb")
     n_inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
     n_union = F.size("sa.sh") + F.size("sb.sh") - n_inter
@@ -368,10 +331,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The components come from :func:`_cc_star`, which needs O(log n)
     rounds even on long-chain graphs (tests/test_ops.py)."""
     docs = _docs(spark, sf_dir)
-    pairs = minhash_pairs_df(
-        _docs_parallel(spark, sf_dir),
-        verify_docs=docs.select("doc_id", "text"),
-    ).select("a_id", "b_id")
+    pairs = minhash_pairs_df(docs).select("a_id", "b_id")
     labels, _rounds = _cc_star(docs, pairs)
     return labels.select(
         "doc_id",
@@ -478,9 +438,8 @@ def dedup_skipped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows those buckets held — the denominator for 'how much of the
     corpus was never pair-checked in this band'. Same single shuffle
     key as the pair join; tiny output (N_BANDS rows)."""
-    docs = _docs_parallel(spark, sf_dir)
     bstat = (
-        minhash_signatures(docs)
+        minhash_signatures(_docs(spark, sf_dir))
         .groupBy("band", "band_val")
         .agg(F.count("*").alias("n"))
     )
@@ -536,8 +495,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).groupBy("doc_id", "w").agg(F.count("*").alias("c"))
-    # conv == the digit-weighted chain (r9, see minhash_signatures);
-    # the DuckDB oracle keeps the portable _hex4_to_int text
+    # conv(hex, 16, 10) == the digit-weighted chain and is cheaper per
+    # word (r9); the DuckDB oracle keeps the portable _hex4_to_int text
     h = F.expr("CAST(conv(substr(md5(w), 1, 4), 16, 10) AS INT)").alias("h")
     words = words.select("doc_id", "c", h)
     bit_sums = [

@@ -160,7 +160,7 @@ def test_streaming_sink_exactly_once_after_kill(spark, tmp_path):
     assert lin.count() == lin.select("batch_id").distinct().count()
 
 
-def test_minhash_degenerate_bucket_capped(spark):
+def test_minhash_degenerate_bucket_capped(spark, monkeypatch):
     """One degenerate LSH bucket (200 identical empty-ish docs) must
     NOT go quadratic: the bucket-frequency cap drops it before the
     self-join, while genuinely near-dup pairs in small buckets
@@ -169,39 +169,36 @@ def test_minhash_degenerate_bucket_capped(spark):
     real = [(1000, "alpha beta gamma delta epsilon"),
             (1001, "alpha beta gamma delta epsilon zeta")]
     docs = spark.createDataFrame(degenerate + real, "doc_id long, text string")
-    pairs = dedup.minhash_pairs_df(docs, bucket_cap=32).collect()
+    pairs = dedup.minhash_pairs_df(docs).collect()
     got = {(r.a_id, r.b_id) for r in pairs}
     assert (1000, 1001) in got  # real near-dup found
     # no pair from the capped-out degenerate bucket: 200 docs > cap
     assert all(a >= 1000 for a, _ in got), got
     # and without the cap the quadratic pair set WOULD be there
-    uncapped = dedup.minhash_pairs_df(docs, bucket_cap=10**9).collect()
+    monkeypatch.setattr(dedup, "BUCKET_CAP", 10**9)
+    uncapped = dedup.minhash_pairs_df(docs).collect()
     assert len(uncapped) >= 200 * 199 // 2
 
 
-def test_minhash_verify_docs_source_equivalent(spark):
-    """The Jaccard-verify pass may read from a differently-partitioned
-    source than the signature pass (r9: callers route the raw scan
-    around the parallelism repartition) — the verified pair rows must
-    be identical either way."""
+def test_minhash_pairs_partition_independent(spark):
+    """The verified pair rows do not depend on how the documents are
+    partitioned: the signature stage and the verify both read the one
+    docs frame, and a repartitioned copy gives the same pairs."""
     base = "alpha beta gamma delta epsilon zeta eta theta " * 3
     rows = [(i, base + f" tail{i % 3}") for i in range(24)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    repart = docs.repartition(8, "doc_id")
-    one = {tuple(r) for r in dedup.minhash_pairs_df(repart).collect()}
+    one = {tuple(r) for r in dedup.minhash_pairs_df(docs).collect()}
     two = {
         tuple(r)
-        for r in dedup.minhash_pairs_df(repart, verify_docs=docs).collect()
+        for r in dedup.minhash_pairs_df(docs.repartition(8, "doc_id")).collect()
     }
     assert one == two and len(one) > 0
-    # a verify source without text cannot be the same rows: refused
-    with pytest.raises(ValueError, match="text"):
-        dedup.minhash_pairs_df(repart, verify_docs=docs.select("doc_id"))
 
 
 def test_set_jaccard_edge_corpus_matches_oracles(spark, tmp_path):
     """The set-based Jaccard counts of dedup_minhash_pairs and
-    ngram_jaccard equal their DuckDB oracles on a crafted corpus: a
+    ngram_jaccard, and the MinHash band rows themselves, equal their
+    DuckDB oracles on a crafted corpus: a
     shingle repeated inside one document, texts under 3 words and
     under 3 characters, empty and NULL texts, an unpaired trailing even
     doc_id, and a candidate pair (8, 9) whose Jaccard (5/11) fails the
@@ -241,6 +238,11 @@ def test_set_jaccard_edge_corpus_matches_oracles(spark, tmp_path):
     assert pairs[0] == (7, 10)  # doc 0 repeats two shingles: 9 distinct
     assert {2, 4, 6} <= pairs.keys() and 8 not in pairs
     sig = dedup.minhash_signatures(docs)
+    sig_oracle = con.execute(
+        f"{dedup._bands_cte_sql()} SELECT doc_id, band, band_val FROM bands"
+    ).fetchall()
+    assert sorted(map(tuple, sig.collect())) == sorted(sig_oracle)
+    assert len(sig_oracle) == 11 * dedup.N_BANDS  # no rows for NULL texts
     cand = {
         (r.a, r.b)
         for r in sig.alias("x")
@@ -267,6 +269,21 @@ def test_minhash_pairs_plan_reads_documents_once(spark):
     assert "ReusedExchangeExec" in nodes, nodes
     assert "InMemoryTableScanExec" not in nodes, nodes
     assert "SortMergeJoinExec" not in nodes, nodes
+
+
+def test_minhash_signatures_plan_is_one_python_stage(spark):
+    """The signature is one per-document Python stage over the shingle
+    sets: no explode, no per-hash aggregate, and one Exchange, the
+    scan-parallelism floor in front of the stage."""
+    from test_scale import _plan_nodes
+
+    df = dedup.minhash_signatures(dedup._docs(spark, SF_SMOKE))
+    df.collect()  # run it, so the adaptive plan is the final one
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    assert nodes.count("MapInPandasExec") == 1, nodes
+    assert "GenerateExec" not in nodes, nodes
+    assert "HashAggregateExec" not in nodes, nodes
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
 
 
 def test_dedup_clusters_planted_group(spark, tmp_path):

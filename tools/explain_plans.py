@@ -104,7 +104,10 @@ COMMENTARY = {
         "extra shuffle."
     ),
     "dedup_skipped_buckets": (
-        "Two map-side-combinable aggregations back to back: "
+        "The signatures are one per-document MapInPandas stage "
+        "(emitting the 16 band keys) behind the scan-parallelism "
+        "Exchange; no explode, no per-hash aggregate. Then two "
+        "map-side-combinable aggregations back to back: "
         "(band, band_val) counts then per-band rollup — the first "
         "Exchange is the SAME (band, band_val) key the LSH pair join "
         "shuffles on, the second carries n_bands×buckets rows, and "
@@ -168,7 +171,8 @@ COMMENTARY = {
         "broadcasts the tiny side, no shuffle of the scan."
     ),
     "dedup_minhash_pairs": (
-        "The signature pass and ONE groupBy(band, band_val) (the "
+        "The signature pass (one per-document MapInPandas stage over "
+        "the shingle sets) and ONE groupBy(band, band_val) (the "
         "≤cap filter is a size() check on each bucket's sorted member "
         "list; a<b pairs expand in-array) run before this plan: their "
         "distinct candidate pairs are checkpointed (Scan ExistingRDD "
