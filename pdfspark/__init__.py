@@ -14,7 +14,6 @@ Layout:
     scale.py  skew salting + lineage/checkpoint + resumable runs
     ops/      dedup / ann / textstats / multimodal / relational /
               streaming operators over the corpus tables
-    oracle.py pure-Python single-doc oracle used by pytest
 """
 
 import os

@@ -68,7 +68,6 @@ SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 SPANS_SCHEMA = f"array<{SPAN_STRUCT}>"
 PAYLOAD_SCHEMA = "doc_id bigint, payload binary, size_class int"
 EXTRACT_SCHEMA = f"doc_id bigint, status string, error string, spans {SPANS_SCHEMA}"
-ROWS_SCHEMA = "doc_id bigint, offset int, kind string, text string, media_ref string"
 
 CHUNK = 80  # must match codec.synth_spans_py and the oracle SQL
 
@@ -185,69 +184,6 @@ def spans_rows(spans_df: DataFrame) -> DataFrame:
 # Stage 2 — payload generation (mapInPandas; the reference's produce()
 # path S3 run as a vectorized batch stage)
 # ---------------------------------------------------------------------------
-
-
-def _parse_byte_size(v: str) -> int:
-    """Spark size strings: plain bytes or <n><k|m|g>[b] suffix."""
-    s = str(v).strip().lower().rstrip("b")
-    mult = 1
-    if s and s[-1] in "kmg":
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}[s[-1]]
-        s = s[:-1]
-    return int(float(s) * mult)
-
-
-def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Estimate how many partitions a FILE SCAN frame will produce,
-    mirroring Spark's own split math (FilePartition.maxSplitBytes:
-    min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))) — raw
-    file COUNT does not bound partition count, because many small
-    files are bin-packed into one split. Local (file:) paths are
-    statted; for remote schemes (s3/hdfs — can't stat cheaply from the
-    driver) fall back to file count as an optimistic upper bound, so
-    the caller treats the whole estimate as a heuristic."""
-    import math
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = df.inputFiles()
-    if not files:
-        return 0
-    conf = df.sparkSession.conf
-    max_pb = _parse_byte_size(conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    open_cost = _parse_byte_size(conf.get("spark.sql.files.openCostInBytes", "4m"))
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return len(files)
-        try:
-            total += os.path.getsize(unquote(u.path)) + open_cost
-        except OSError:
-            return len(files)
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    split = min(max_pb, max(open_cost, total // max(cores, 1)))
-    return max(1, math.ceil(total / max(split, 1)))
-
-
-def ensure_parallelism(df: DataFrame, factor: int = 3) -> DataFrame:
-    """Scan-parallelism floor, for callers that run a Python stage or
-    a heavy explode straight over a file scan: a single small parquet
-    file scans as ONE partition, which would serialize that stage. If
-    the scan is under-partitioned relative to the cluster,
-    hash-repartition on doc_id (at 10^12-doc scale the source is
-    already thousands of multi-split files and this is a no-op).
-
-    The decision uses `inputFiles()` metadata + Spark's split-packing
-    formula (_estimated_scan_partitions) — NOT
-    `df.rdd.getNumPartitions()`, which under AQE would materialize
-    every upstream shuffle stage eagerly (the work then runs twice).
-    A frame with no input files (in-memory or already repartitioned
-    by its builder) passes through unchanged."""
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if 0 < _estimated_scan_partitions(df) < target:
-        return df.repartition(target, "doc_id")
-    return df
 
 
 def _build_payloads(

@@ -252,13 +252,6 @@ _NAME_RUN_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 # cos/COSName.java:33,127-128); bounded to stay batch-safe
 _NAME_CACHE: dict = {}
 _NAME_CACHE_MAX = 4096
-_NUMBER_RE = re.compile(rb"[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)")
-# one-pass "ref or number" for the digit-led dispatch in parse_object
-_NUMREF_RE = re.compile(
-    rb"(?P<id>[0-9]{1,9})[\x00\t\n\x0c\r ]+(?P<gen>[0-9]{1,5})"
-    rb"[\x00\t\n\x0c\r ]+(?P<kw>R|obj)"
-    rb"|(?P<num>[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+))"
-)
 _IDGEN_RE = re.compile(rb"([0-9]+)[\x00\t\n\x0c\r ]+([0-9]+)[\x00\t\n\x0c\r ]+(R|obj)")
 _LITERAL_SPECIAL_RE = re.compile(rb"[\\()\r]")
 
@@ -295,27 +288,6 @@ def parse_name(r: Raw) -> Name:
             out.append(b)
             i += 1
     return Name(out.decode("latin-1"))
-
-
-def parse_number(r: Raw) -> Union[int, float]:
-    """T3 — int or fixed-point real; sign only leading; one '.'; no
-    exponent (cos/COSNumber.java:130-213; semantics pinned by
-    TestCOSNumber.java:152-274 — "-0000"→0, "+1234567890/"→int then
-    delimiter terminates, "-.002", "4.")."""
-    d, n = r.data, r.length
-    start = r.pos
-    m = _NUMBER_RE.match(d, start)
-    if m is None:
-        raise EParseError(f"malformed number at {start}")
-    p = m.end()
-    # terminator must be WS / delimiter / EOF (PDF has no exponent form)
-    if p < n and not (is_ws(d[p]) or is_delim(d[p])):
-        raise EParseError(f"malformed number at {start}: bad terminator {d[p]:#x}")
-    r.pos = p
-    text = m.group()
-    if b"." in text:
-        return float(text)
-    return int(text)
 
 
 def try_read_id(r: Raw) -> Optional[tuple[int, int, bytes]]:
@@ -542,27 +514,6 @@ def _stream_followup(
         raise EParseError("stream /Length missing or non-integer")
     body = r.read_stream_body(length)
     return CStream(out, body)
-
-
-def parse_dict_or_stream(r: Raw, resolver: Optional[Resolver]) -> Union[CDict, CStream]:
-    """T6 + T8 — ``<<...>>`` dictionary (possibly a stream). Entry
-    validation then the shared scanner."""
-    if not r.data.startswith(b"<<", r.pos):
-        raise EParseError(f"dict expected at {r.pos}")
-    v = parse_object(r, resolver)
-    if not isinstance(v, (CDict, CStream)):  # unreachable by grammar
-        raise EParseError(f"dict expected at {r.pos}")
-    return v
-
-
-def parse_array(r: Raw, resolver: Optional[Resolver]) -> list:
-    """T7 — ``[...]`` (cos/COSArray.java:43-57)."""
-    if r.pos >= r.length or r.data[r.pos] != 0x5B:
-        raise EParseError(f"array expected at {r.pos}")
-    v = parse_object(r, resolver)
-    if not isinstance(v, list):  # unreachable by grammar
-        raise EParseError(f"array expected at {r.pos}")
-    return v
 
 
 def parse_object(r: Raw, resolver: Optional[Resolver] = None) -> COSValue:

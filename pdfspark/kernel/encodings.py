@@ -65,14 +65,6 @@ def decode_pdfdoc(raw: bytes) -> str:
     return "".join(t[b] for b in raw)
 
 
-def decode_winansi(raw: bytes) -> str:
-    """C2: WinAnsi table decode (COSString.java:479-509)."""
-    if raw[:2] == b"\xfe\xff":
-        return raw[2:].decode("utf-16-be", errors="replace")
-    t = WINANSI_BYTE_TO_CHAR
-    return "".join(t[b] for b in raw)
-
-
 def encode_pdfdoc(text: str) -> bytes:
     """Generator-path encode: BMP chars that fit PDFDocEncoding →
     single bytes; else UTF-16BE with BOM (the reference's live encode

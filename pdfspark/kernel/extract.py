@@ -25,9 +25,6 @@ from .filters import decode_stream
 from .textops import Span, interpret_content
 from .xref import Parser
 
-SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
-
-
 def parse_document(payload: bytes, settings: Optional[ParserSettings] = None) -> Document:
     """bytes → structural parse → assembled Document (X1-X10 + M1)."""
     p = Parser(payload, settings)

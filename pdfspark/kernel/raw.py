@@ -22,7 +22,6 @@ _WS_RE = re.compile(rb"[\x00\t\n\x0c\r ]+")
 # reference's skipWS uses {SP,TAB,LF,CR,NUL} — PDFRawData.java:54-63 —
 # we add FF per spec, a documented divergence in an untested path).
 WHITESPACE = b"\x00\t\n\x0c\r "
-DELIMITERS = b"()<>[]{}/%"
 
 
 def is_ws(b: int) -> bool:

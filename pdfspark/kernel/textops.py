@@ -947,11 +947,6 @@ _DEFAULT_FONT = Font(CDict(), None)
 # `id gen R` backtracking probe of the generic tokenizer. Strings,
 # hex strings, dicts and arrays fall out of the match (delim group)
 # and are delegated to parse_object at that offset.
-_CT_TOKEN_RE = _re.compile(
-    rb"(?P<num>[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+))(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
-    rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%0-9+\-.][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-)
-
 _CT_MASTER_RE = _re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:(?P<num>[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+))"
@@ -965,29 +960,6 @@ _CT_MASTER_RE = _re.compile(
 # interned content-stream names (F1, Im0… repeat massively per doc)
 _CT_NAME_CACHE: dict[bytes, Name] = {}
 _CT_NAME_CACHE_MAX = 4096
-
-
-def _next_token(r: Raw):
-    """Yield either a COS value or an operator keyword (bytes)."""
-    r.skip_ws_and_comments()
-    d, n = r.data, r.length
-    p = r.pos
-    if p >= n:
-        return None
-    m = _CT_TOKEN_RE.match(d, p)
-    if m is not None:
-        r.pos = m.end()
-        num = m.group("num")
-        if num is not None:
-            return float(num) if b"." in num else int(num)
-        return m.group("op")
-    b = d[p]
-    if b in (0x2F, 0x28, 0x3C, 0x5B):
-        return parse_object(r, None)
-    # stray delimiter or malformed byte: consume one byte as an opaque
-    # operator so the PERMISSIVE skip loop advances
-    r.pos = p + 1
-    return d[p : p + 1]
 
 
 def _lex_content_py(data: bytes):

@@ -18,6 +18,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..engine import load_documents
+from ..scale import salt_docs_by_size
 from .textstats import LANG_MARKERS
 
 MIN_TOKENS = 10
@@ -25,26 +27,8 @@ MIN_DIVERSITY_X1000 = 150
 KEEP_LANG = "en"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r9 scan-parallelism floor (guide §6) — see
-    # engine.ensure_parallelism: the 5-gram explode otherwise runs in
-    # 1-2 scan tasks locally (no-op at real scale). Interleaved A/B: the floor
-    # pays for benchmark_contamination (0.26× vs round start) but
-    # HURTS corpus_curate (1.9× — already bound by its md5 window
-    # shuffle), so only the contamination query uses it.
-    from ..engine import ensure_parallelism
-
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    )
-
-
 def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
+    docs = load_documents(spark, sf_dir).select(
         "doc_id", "text", F.split("text", " ").alias("w")
     )
     structs = []
@@ -144,12 +128,14 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval stand-in: doc_id % {BENCH_MOD} == 0). Flag when overlap ≥ 10%
     (integer-exact: hits·10 ≥ grams).
 
-    Plan at corpus scale: benchmark grams are a BROADCAST (eval sets
-    are small by construction), so the only shuffle is the per-doc
-    groupBy count — training grams never co-shuffle with each other."""
-    docs = _docs_parallel(spark, sf_dir).select(
-        "doc_id", "text", F.split("text", " ").alias("w")
-    )
+    Plan at corpus scale: the gram explode reads salted text rows
+    (scale.salt_docs_by_size), and benchmark grams are a BROADCAST
+    (eval sets are small by construction), so the only other shuffle
+    is the per-doc groupBy count — training grams never co-shuffle
+    with each other."""
+    docs = salt_docs_by_size(
+        load_documents(spark, sf_dir).select("doc_id", "text")
+    ).select("doc_id", "text", F.split("text", " ").alias("w"))
     grams = docs.select(
         "doc_id",
         F.explode(F.array_distinct(F.expr(_GRAMS_SPARK))).alias("g"),

@@ -28,14 +28,14 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..engine import ensure_parallelism, per_doc
+from ..engine import load_documents, per_doc
+from ..scale import salt_docs_by_size
 
 N_HASHES = 64  # MinHash signature length (real-corpus scale, r2)
 N_BANDS = 16  # bands of r = 4 rows → s-curve threshold ≈ (1/16)^(1/4) = 0.5
 BUCKET_CAP = 32  # LSH buckets larger than this are skipped (degenerate
 # keys — empty/boilerplate docs — would otherwise go quadratic in ONE
 # task; cap² bounds the worst per-bucket pair count)
-JACCARD_MIN = 0.5
 SIM_BITS = 16
 
 # universal-hash MinHash: ONE md5 per shingle → 60-bit int h0, then
@@ -52,10 +52,6 @@ def _minhash_seed(i: int) -> tuple[int, int]:
     return a, b
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 # ---------------------------------------------------------------------------
 # 1. Exact dedup: hash-groupBy on content fingerprint
 # ---------------------------------------------------------------------------
@@ -64,7 +60,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cluster_id = min doc_id sharing md5(text); is_dup marks
     non-representatives. One shuffle on the digest."""
-    docs = _docs(spark, sf_dir).select("doc_id", F.md5("text").alias("fp"))
+    docs = load_documents(spark, sf_dir).select("doc_id", F.md5("text").alias("fp"))
     w = Window.partitionBy("fp")
     return docs.select(
         "doc_id",
@@ -157,22 +153,21 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     md5-prefix int per shingle, hᵢ = min (aᵢ·h0 + bᵢ) mod P; bands of
     r = N_HASHES/N_BANDS values hashed together. One per-document stage
     over :func:`shingle_sets`, so the shingling rule keeps its one
-    Spark definition; no shuffle of its own.
+    Spark definition.
 
-    The input gets the scan-parallelism floor (r9, guide §6): the
-    Python stage would otherwise run in the scan stage, which on a
-    single-row-group parquet is 1-2 tasks regardless of cores. The
-    cheap operators (exact/simhash/ngram/boilerplate) measurably LOSE
-    from the extra full-width shuffle, so they stay on the raw scan.
-    ensure_parallelism is a no-op at real scale (many splits)."""
-    sets = shingle_sets(ensure_parallelism(docs.select("doc_id", "text")))
+    The stage reads salted text rows (scale.salt_docs_by_size, the
+    policy for every per-document stage): its one Exchange spreads the
+    documents by estimated size, so the Python stage neither runs in
+    the 1-2 tasks of a single-split scan nor puts the large documents
+    in one task."""
+    sets = shingle_sets(salt_docs_by_size(docs.select("doc_id", "text")))
     return per_doc(
         sets, _signature_bands, "doc_id bigint, band int, band_val string", ("doc_id", "sh")
     )
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_pairs_df(_docs(spark, sf_dir))
+    return minhash_pairs_df(load_documents(spark, sf_dir))
 
 
 def minhash_pairs_df(docs: DataFrame) -> DataFrame:
@@ -198,8 +193,8 @@ def minhash_pairs_df(docs: DataFrame) -> DataFrame:
     orders of magnitude below the corpus; the sets broadcast also
     carries each candidate document's shingle strings, so its size is
     that id count times the candidates' shingle-set bytes. The verify
-    reads ``docs`` as given: only the signature pass needs the
-    parallelism floor, so no full-corpus repartition feeds the verify."""
+    reads ``docs`` as given: only the signature stage salts its input,
+    so no full-corpus repartition feeds the verify."""
     # one Exchange on (band, band_val): bucket membership, cap, and
     # i<j pair expansion all inside the aggregation's partitioning
     cand = (
@@ -330,7 +325,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The components come from :func:`_cc_star`, which needs O(log n)
     rounds even on long-chain graphs (tests/test_ops.py)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     pairs = minhash_pairs_df(docs).select("a_id", "b_id")
     labels, _rounds = _cc_star(docs, pairs)
     return labels.select(
@@ -439,7 +434,7 @@ def dedup_skipped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus was never pair-checked in this band'. Same single shuffle
     key as the pair join; tiny output (N_BANDS rows)."""
     bstat = (
-        minhash_signatures(_docs(spark, sf_dir))
+        minhash_signatures(load_documents(spark, sf_dir))
         .groupBy("band", "band_val")
         .agg(F.count("*").alias("n"))
     )
@@ -491,7 +486,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over word frequencies: bit j is the sign of
     Σ_w count(w) · (±1 per bit j of h(w)). One explode + one groupBy
     (map-side combinable sums) — no joins, no Python."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).groupBy("doc_id", "w").agg(F.count("*").alias("c"))
@@ -547,7 +542,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplies candidate pairs at scale). Each document's distinct
     trigrams are one array, and both counts come from the pair's two
     arrays, as in the MinHash verify."""
-    grams = _docs(spark, sf_dir).select(
+    grams = load_documents(spark, sf_dir).select(
         "doc_id",
         F.array_distinct(
             F.expr(
@@ -615,7 +610,7 @@ def chunk_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boiler-key set ever outgrew the broadcast threshold, the
     fallback is the shuffle join + AQE skew split; the plan-shape
     pytest pins BroadcastHashJoin / zero SortMergeJoin."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     chunks = docs.select(
         "doc_id",
         F.explode(
@@ -689,7 +684,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is a slim (fp) table a real pipeline would bucket by fp or
     broadcast-threshold; the join key is uniform by construction (md5).
     Emits (doc_id, fp16, is_known) for the full new crawl."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
     fps = docs.select(
         "doc_id", F.substring(F.md5(norm), 1, 16).alias("fp16")
@@ -758,7 +753,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc rollup. Catching duplication WITHIN a doc is rep_signals'
     job; this op is the cross-corpus signal, so fingerprints are
     distinct per doc before counting."""
-    docs = _docs(spark, sf_dir).select(
+    docs = load_documents(spark, sf_dir).select(
         "doc_id", "text", F.split("text", " ").alias("w")
     )
     pairs = docs.select(

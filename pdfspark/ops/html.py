@@ -7,18 +7,19 @@ link-heavy aside, an <article> of 80-char <p> chunks, short footer),
 then `kernel.htmlops.strip_boilerplate` must recover exactly the
 article text ON MERIT — the DuckDB oracle reconstructs the expected
 main text from the documents table, so a misclassified block breaks
-the hash. Generation and stripping run in ONE mapInPandas stage: no
-shuffle anywhere in the query (scan → UDF → result).
+the hash. Generation and stripping run in ONE mapInPandas stage over
+salted text rows: the salt (scale.salt_docs_by_size) is the query's
+only shuffle (scan → salt → UDF → result).
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..engine import ensure_parallelism, per_doc
+from ..engine import load_documents, per_doc
 from ..kernel.htmlops import MIN_BLOCK_CHARS, main_content_blocks, strip_boilerplate
 from ..kernel.htmlops import MAX_LINK_DENSITY  # r7: html_links oracle
+from ..scale import salt_docs_by_size
 
 CHUNK = 80  # article paragraph size — matches the PDF span chunking
 
@@ -58,15 +59,11 @@ N_TEMPLATE_BOILER_BLOCKS = 6
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r9 scan-parallelism floor (guide §6): these queries are one
-    # mapInPandas over the scan with no shuffle anywhere — correct at
-    # 10^12 docs (thousands of splits) but SERIAL on the sandbox's
-    # single-row-group parquet. ensure_parallelism conditionally
-    # repartitions on doc_id so the Python stage fans out; row-wise
-    # computation, so results are partition-invariant.
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    )
+    # one mapInPandas per query over salted text rows
+    # (scale.salt_docs_by_size): the Python stage fans out even over a
+    # single-split scan; row-wise computation, so results are
+    # partition-invariant
+    return salt_docs_by_size(load_documents(spark, sf_dir).select("doc_id", "text"))
 
 
 def html_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,7 +218,7 @@ def html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     classify boilerplate, article citations classify in_main unless
     their paragraph fails the density/length gate (short final chunks
     flip to boilerplate ON MERIT; the oracle re-derives that edge).
-    One mapInPandas stage, zero shuffles."""
+    One mapInPandas stage behind the salt."""
     from ..kernel.htmlops import link_rows as _lr
 
     def one(d, t):

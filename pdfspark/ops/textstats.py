@@ -4,13 +4,19 @@ shuffle except the final agg-free scan), JVM-side only.
 
 At 10^12 docs these are the cheapest pipeline stages: pure map
 operators that fuse into the parquet scan under whole-stage codegen,
-with column pruning keeping the scan at (doc_id, text).
+with column pruning keeping the scan at (doc_id, text). They read the
+raw scan, not salted rows (scale.salt_docs_by_size): a repartition
+after the 1-2 split scan was measured in r9 and reverted — each query
+is either already shuffle-bound or too cheap for the extra full-width
+Exchange to pay (gopher 0.27→0.68 s, bm25 flat; OPTIMIZATION_r09.md).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+
+from ..engine import load_documents
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
 
@@ -26,20 +32,11 @@ LANG_MARKERS = {
 }
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r9 note: a scan-parallelism floor (repartition after the 1-2
-    # split sandbox scan) was MEASURED here and reverted — every
-    # textstats query is either already shuffle-bound or too cheap
-    # for the extra full-width exchange to pay (gopher 0.27→0.68s,
-    # bm25 flat). See OPTIMIZATION_r09.md.
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + BPE-ish subword count (4-char pieces,
     ceil(len/4) per token — a deterministic stand-in for a tokenizer's
     piece count that stays SQL-exact)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     w = F.split("text", " ")
     return docs.select(
         "doc_id",
@@ -66,7 +63,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword hits, distinct-token ratio ×1000 (integer-exact). Ratios
     are emitted as integer-scaled values so the oracle comparison
     never depends on float formatting."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     w = F.split("text", " ")
     n = F.size(w)
     stop_hits = F.size(
@@ -101,7 +98,7 @@ FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """argmax over per-language marker-word hit counts; deterministic
     lexicographic tie-break."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     score_cols = []
     for lang, marks in sorted(LANG_MARKERS.items()):
         inlist = ",".join(f"'{m}'" for m in marks)
@@ -148,7 +145,7 @@ SELECT doc_id, b[2] AS lang_pred, CAST(b[1] AS BIGINT) AS score FROM best
 def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized content fingerprint: lowercase, collapse whitespace,
     md5 → 16-hex prefix (the rolling-hash analog as one digest)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
     return docs.select(
         "doc_id", F.substring(F.md5(norm), 1, 16).alias("fp16")
@@ -177,7 +174,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     is appended per doc first — the scrub must remove exactly it
     (oracle reconstructs the expectation). Pure codegen projection:
     zero shuffles, fuses into the scan."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     dirty = F.concat(
         F.col("text"),
         F.lit(" Contact user"), F.col("doc_id").cast("string"),
@@ -233,7 +230,7 @@ def rep_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side: one regexp chunking pass + explode, one bigram
     transform + explode; shuffles key on doc_id / (doc_id, value) —
     high-cardinality, even at 10^12 docs."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     chunks = docs.select(
         "doc_id",
         F.explode(
@@ -331,7 +328,7 @@ def unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (high-cardinality, even), and a per-doc agg — at 10^12 docs the
     frequency table is the classic shared side a real pipeline would
     bucket or broadcast-threshold."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
@@ -387,7 +384,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     never global).  Emits per-(shard, bin) docs/tokens/fill."""
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = docs.select(
         "doc_id",
         (F.col("doc_id") % PACK_SHARDS).alias("shard"),
@@ -459,7 +456,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus stats are TINY aggregates broadcast back (≤|terms| rows and
     1 row), so the only real shuffle is the tf groupBy; final top-k is
     a global sort of |matching docs| scored rows. All JVM-side."""
-    docs = _docs(spark, sf_dir).select(
+    docs = load_documents(spark, sf_dir).select(
         "doc_id", F.split("text", " ").alias("ws")
     ).select("doc_id", "ws", F.size("ws").alias("dl"))
     # r9 (guide §2.4): term frequencies as per-document array counts —
@@ -564,7 +561,7 @@ def corpus_sample(
     in expectation). Plan: ONE shuffle on lang; both window functions
     (count + row_number) share the partitioning. At corpus scale the
     stratum key generalizes to any low-cardinality column."""
-    docs = _docs(spark, sf_dir).select(
+    docs = load_documents(spark, sf_dir).select(
         "doc_id", "lang", F.md5(F.col("doc_id").cast("string")).alias("h")
     )
     w = Window.partitionBy("lang")
@@ -610,7 +607,7 @@ def text_windows(
     covered; all integer math (bit-identical across engines). ZERO
     shuffles: project → explode → project, embarrassingly parallel at
     any corpus size."""
-    docs = _docs(spark, sf_dir).select(
+    docs = load_documents(spark, sf_dir).select(
         "doc_id", F.split("text", " ").alias("w")
     )
     nwin = (
@@ -670,7 +667,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥80% of words containing an alphabetic char. `keep` is the AND of
     all passes — the composite filter a curation pipeline applies
     before dedup. Every rule is a codegen projection; zero shuffles."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     w = F.split("text", " ")
     n = F.size(w)
     # sum of token lengths = len(text) - (n-1) separators
@@ -771,7 +768,7 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first 8 fingerprint hex digits: reproducible across engines
     and runs, no RNG anywhere.  Pure projection — zero shuffles; at
     100 TB this is a free column on the curation pass."""
-    docs = _docs(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     b = (
         F.conv(F.substring(F.md5("text"), 1, 8), 16, 10)
         .cast("bigint") % SPLIT_DEN
@@ -821,7 +818,7 @@ def corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the only real shuffle is the per-source row_number —
     same stratum-rank posture (and the same low-cardinality-stratum
     caveat) as corpus_sample above."""
-    docs = _docs(spark, sf_dir).select(
+    docs = load_documents(spark, sf_dir).select(
         "doc_id",
         "source",
         F.md5(F.col("doc_id").cast("string")).alias("h"),
@@ -928,7 +925,7 @@ def bpe_pair_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row crossJoin — the driver never sees the pair table.
     The corpus scan runs once per round, exactly like the production
     trainer's per-round pass over the (re-encoded) symbol stream."""
-    docs = _docs(spark, sf_dir).select("text", F.split("text", " ").alias("w"))
+    docs = load_documents(spark, sf_dir).select("text", F.split("text", " ").alias("w"))
     r1 = (
         _pairs_of(docs, "w")
         .groupBy("pair")
@@ -1005,7 +1002,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     total, no nested-aggregate recompute blowup. At 100 TB you'd
     persist the re-encoded corpus between rounds; at bench SF the
     chained-replace recompute is cheaper than the materialization."""
-    docs = _docs(spark, sf_dir).select("text")
+    docs = load_documents(spark, sf_dir).select("text")
     rows = []
     cur = docs
     for rnd in range(1, BPE_ROUNDS + 1):

@@ -4,13 +4,15 @@ resumable bucketed execution (SURVEY.md §4.2, north_rule).
 Three thin app-level pieces ride on built-in Spark (everything else is
 AQE + Arrow + Catalyst; no custom rules):
 
-1. ``salt_docs_by_size`` — AQE skew handling does NOT cover UDF
-   stages, so large-PDF skew in the mapInPandas stages is handled with
-   an explicit (size_class, salt) repartition of the cheap text rows
-   BEFORE generation: a handful of 100 MB docs must not serialize one
-   task (SURVEY §4.2(a)), and generation and extraction then pipeline
-   in one stage behind that single Exchange. Generation
-   (``engine._build_payloads``) applies it to its own input.
+1. ``salt_docs_by_size`` — the one step that partitions the corpus
+   in front of a per-document stage. AQE skew handling does NOT cover
+   UDF stages, so large-document skew in the mapInPandas stages is
+   handled with an explicit (size_class, salt) repartition of the
+   cheap (doc_id, text) rows (SURVEY §4.2(a)). Every per-document
+   Python stage over the corpus reads salted rows: generation
+   (``engine._build_payloads``), the HTML stages, the MinHash
+   signature stage, and the contamination gram explode. The cheap
+   JVM operators stay on the raw scan (see the function's docstring).
 2. ``lineage`` table — per-bucket checkpoint/metrics rows
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
    wall_ms, attempt). The counts are observed while the data is
@@ -81,10 +83,11 @@ def overwrite_partitions(
 # ---------------------------------------------------------------------------
 
 
+SALT_BUCKETS = 4096  # salt values per size class
+
+
 def salt_docs_by_size(
-    docs_df: DataFrame,
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 4096,
+    docs_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """Skew-salt the (doc_id, text) rows BEFORE the expensive UDF
     stages. Shuffling here moves the small text rows — not the
@@ -92,6 +95,18 @@ def salt_docs_by_size(
     run pipelined in ONE stage with no further exchange (measured
     2.3× faster than salting the payload stream between them). Other
     columns (synth_spans_df's ``spans``) ride along unchanged.
+
+    Policy: this is the only step that partitions the corpus in front
+    of a per-document stage. Generation, the HTML stages
+    (ops/html.py), the MinHash signature stage
+    (dedup.minhash_signatures) and the contamination gram explode
+    (curate.benchmark_contamination) read salted rows, so a scan of
+    few splits still fans out and a few huge documents do not share
+    one task. The cheap JVM operators — exact, simhash, n-gram and
+    boilerplate dedup, textstats and corpus_curate — stay on the raw
+    scan: measured (r9), they lose more to the extra shuffle than
+    they gain from the spread. The salt is always one Exchange, also
+    over a source that is already split many ways.
 
     size_class = log4 bucket of the estimated payload size; salt
     spreads same-class docs. The span synthesis is deterministic in
@@ -117,7 +132,7 @@ def salt_docs_by_size(
     salted = docs_df.withColumn(
         "size_class",
         F.floor(F.log2(F.greatest(est, F.lit(2))) / 2).cast("int"),
-    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
+    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)))
     return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
 
 

@@ -274,10 +274,11 @@ def test_minhash_pairs_plan_reads_documents_once(spark):
 def test_minhash_signatures_plan_is_one_python_stage(spark):
     """The signature is one per-document Python stage over the shingle
     sets: no explode, no per-hash aggregate, and one Exchange, the
-    scan-parallelism floor in front of the stage."""
+    size-class salt of the text rows in front of the stage."""
+    from pdfspark.engine import load_documents
     from test_scale import _plan_nodes
 
-    df = dedup.minhash_signatures(dedup._docs(spark, SF_SMOKE))
+    df = dedup.minhash_signatures(load_documents(spark, SF_SMOKE))
     df.collect()  # run it, so the adaptive plan is the final one
     nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
     assert nodes.count("MapInPandasExec") == 1, nodes

@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from conftest import SF_SMOKE
-from pdfspark.engine import ensure_parallelism, generate_payloads, load_documents
+from pdfspark.engine import generate_payloads, load_documents
 from pdfspark.scale import (
     LINEAGE_SCHEMA, _group_frame, _write_lineage, completed_buckets,
     run_checkpointed, salt_docs_by_size,
@@ -181,20 +181,25 @@ def test_group_frame_plan_has_one_exchange_below_generate(spark):
     assert nodes.index("MapInPandasExec") < nodes.index("ShuffleExchangeExec"), nodes
 
 
-def test_ensure_parallelism_passes_frames_without_input_files(spark):
-    """A derived frame with no input files (here one its builder
-    already repartitioned) passes through: it keeps its 5 partitions
-    and gains no Exchange. An under-split file scan still gets the
-    floor (defaultParallelism × 3 partitions)."""
-    df = spark.range(40).withColumnRenamed("id", "doc_id").repartition(5, "doc_id")
-    out = ensure_parallelism(df)
-    assert out.rdd.getNumPartitions() == 5
-    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
-    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+def test_per_document_stages_read_salted_rows(spark):
+    """One partitioning step in front of every per-document stage over
+    the corpus: the HTML stage, the MinHash signature stage and the
+    contamination gram explode all read the (size_class, salt)
+    repartition of the text rows that generation reads. The first two
+    have no other Exchange."""
+    from pdfspark.ops import curate, dedup, html
 
-    scan = load_documents(spark, SF_SMOKE)
-    floor = spark.sparkContext.defaultParallelism * 3
-    assert ensure_parallelism(scan).rdd.getNumPartitions() == floor
+    for df, one_exchange in (
+        (html.html_main_text(spark, SF_SMOKE), True),
+        (dedup.minhash_signatures(load_documents(spark, SF_SMOKE)), True),
+        (curate.benchmark_contamination(spark, SF_SMOKE), False),
+    ):
+        df.collect()  # run it, so the adaptive plan is the final one
+        plan = df._jdf.queryExecution().executedPlan()
+        assert "hashpartitioning(size_class" in plan.toString(), plan.toString()
+        if one_exchange:
+            nodes = _plan_nodes(plan)
+            assert nodes.count("ShuffleExchangeExec") == 1, nodes
 
 
 def test_lineage_rows_keep_schema_and_old_lineage_resumes(spark, tmp_path):

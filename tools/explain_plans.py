@@ -72,12 +72,13 @@ COMMENTARY = {
         "doubles) — no new plan nodes."
     ),
     "html_main_text": (
-        "Parquet scan pruned to (doc_id, text) feeds one MapInPandas "
-        "(wrap + strip fused in a single Arrow batch pass). r9 adds a "
-        "CONDITIONAL scan-parallelism floor (ensure_parallelism): on "
-        "an under-split source the one Exchange fans the Python stage "
-        "out to the cluster; at 10^12 docs the source has thousands "
-        "of splits and the plan is exchange-free again."
+        "Parquet scan pruned to (doc_id, text), then the ONE Exchange: "
+        "the (size_class, salt) repartition of the text rows "
+        "(salt_docs_by_size), the same salt generation uses. It fans "
+        "the Python stage out on an under-split source and keeps "
+        "large documents from sharing a task (AQE cannot skew-split a "
+        "UDF stage). One MapInPandas follows (wrap + strip fused in a "
+        "single Arrow batch pass)."
     ),
     "bm25_topk": (
         "r9: term frequencies are per-document array counts "
@@ -105,7 +106,7 @@ COMMENTARY = {
     ),
     "dedup_skipped_buckets": (
         "The signatures are one per-document MapInPandas stage "
-        "(emitting the 16 band keys) behind the scan-parallelism "
+        "(emitting the 16 band keys) behind the size-class salt "
         "Exchange; no explode, no per-hash aggregate. Then two "
         "map-side-combinable aggregations back to back: "
         "(band, band_val) counts then per-band rollup — the first "
@@ -214,16 +215,16 @@ COMMENTARY = {
         "cell size and the per-cell kernel is unchanged."
     ),
     "html_links": (
-        "Scan prunes to (doc_id, text); wrap + walk run in ONE "
-        "mapInPandas stage — zero shuffles, and the outlink rows are "
-        "the only thing that materializes. At 10^12 docs this is "
-        "embarrassingly parallel; the downstream link-graph groupBy "
-        "(not part of this query) would be the first shuffle."
+        "Scan prunes to (doc_id, text); the size-class salt of the "
+        "text rows is the one Exchange, and wrap + walk run in ONE "
+        "mapInPandas stage behind it — the outlink rows are the only "
+        "thing that materializes. The downstream link-graph groupBy "
+        "(not part of this query) would be the next shuffle."
     ),
     "html_outline": (
-        "Same zero-shuffle single-stage shape as html_links: the "
-        "heading walk emits (ord, level, title) rows straight out of "
-        "the Arrow batch."
+        "Same shape as html_links (one salt Exchange, one Python "
+        "stage): the heading walk emits (ord, level, title) rows "
+        "straight out of the Arrow batch."
     ),
     "pdf_page_labels": (
         "Scan prunes to (doc_id, text); the ONE Exchange is the "
