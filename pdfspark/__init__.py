@@ -11,7 +11,7 @@ Layout:
     kernel/   pure-Python per-document parse kernel (no Spark imports)
     codec.py  deterministic spans→PDF generator (all layout variants)
     engine.py Spark pipeline stages (synthesis → generate → extract)
-    scale.py  skew salting + lineage/checkpoint + resumable runs
+    scale.py  doc_id spread + lineage/checkpoint + resumable runs
     ops/      dedup / ann / textstats / multimodal / relational /
               streaming operators over the corpus tables
 """

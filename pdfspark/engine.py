@@ -5,17 +5,17 @@ Dataflow (all vectorized — the ONLY Python surfaces are mapInPandas
 stages over Arrow batches; no row-wise udf() anywhere, per input_hint):
 
     documents(doc_id, text, ...)                      [driver parquet]
-      → generate_payloads   salt_docs_by_size (scale.py): explicit skew
+      → generate_payloads   spread_docs (scale.py): explicit doc_id
                             repartition of the (doc_id, text) rows — the
                             pipeline's ONLY Exchange — then mapInPandas
-                            → (doc_id, payload, size_class); spans
-                            synthesize in-worker from text
+                            → (doc_id, payload); spans synthesize
+                            in-worker from text
       → extract             mapInPandas → (doc_id, status, error, spans[])
       → explode to rows for comparison / sinks
 
-Generation salts its own input, so every caller passes the raw
+Generation spreads its own input, so every caller passes the raw
 documents frame and generate → extract pipeline in one stage behind
-the salt. The interleaved table (doc_id, spans[]) of the input_hint
+the spread. The interleaved table (doc_id, spans[]) of the input_hint
 shape is synth_spans_df — pure Spark SQL expressions (JVM, codegen) —
 for the consumers that read spans directly.
 
@@ -58,7 +58,7 @@ from .kernel import (
 )
 from .kernel.cos import CDict, CString, Name
 from .kernel.errors import ParserSettings
-from .scale import salt_docs_by_size  # no cycle: scale's engine uses are lazy
+from .scale import spread_docs  # no cycle: scale's engine uses are lazy
 
 # ---------------------------------------------------------------------------
 # Schemas
@@ -66,7 +66,7 @@ from .scale import salt_docs_by_size  # no cycle: scale's engine uses are lazy
 
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 SPANS_SCHEMA = f"array<{SPAN_STRUCT}>"
-PAYLOAD_SCHEMA = "doc_id bigint, payload binary, size_class int"
+PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 EXTRACT_SCHEMA = f"doc_id bigint, status string, error string, spans {SPANS_SCHEMA}"
 
 CHUNK = 80  # must match codec.synth_spans_py and the oracle SQL
@@ -148,11 +148,10 @@ def synth_spans_df(docs: DataFrame) -> DataFrame:
 
     The source ``text`` column rides along (r9): spans are a pure
     function of text (lockstep-pinned against codec.synth_spans_py),
-    so downstream stages that only need text — the salt's closed-form
-    size estimate, generate_payloads' in-worker synthesis — let
-    Catalyst prune the struct array out of the plan entirely, while
-    consumers of ``spans`` (spans_rows, the doc_spans SQL view) are
-    unaffected."""
+    so downstream stages that only need text — generate_payloads'
+    in-worker synthesis — let Catalyst prune the struct array out of
+    the plan entirely, while consumers of ``spans`` (spans_rows, the
+    doc_spans SQL view) are unaffected."""
     return docs.select("doc_id", "text", F.expr(_SPANS_EXPR).alias("spans"))
 
 
@@ -192,22 +191,20 @@ def _build_payloads(
     cols: Sequence[str] = ("doc_id", "text"),
     ensure: bool = True,
 ) -> DataFrame:
-    """(doc_id, text, …) → (doc_id, payload, size_class): the one
-    generation builder. ``build(did, *rest)`` makes one document's PDF
-    bytes from the values of ``cols``; size_class = log4 bucket of
-    payload length.
+    """(doc_id, text, …) → (doc_id, payload): the one generation
+    builder. ``build(did, *rest)`` makes one document's PDF bytes from
+    the values of ``cols``.
 
-    The rows are cut to ``cols`` and skew-salted first
-    (scale.salt_docs_by_size): the plan's one Exchange moves the cheap
-    text rows, and generation pipelines into extraction behind it.
-    ``ensure=False`` means the caller already salted."""
+    The rows are cut to ``cols`` and spread by doc_id first
+    (scale.spread_docs): the plan's one Exchange moves the cheap text
+    rows, and generation pipelines into extraction behind it.
+    ``ensure=False`` means the caller already spread them."""
     docs = docs.select(*cols)
     if ensure:
-        docs = salt_docs_by_size(docs)
+        docs = spread_docs(docs)
 
     def one(did, *rest):
-        p = build(int(did), *rest)
-        return [(did, p, max(len(p), 1).bit_length() // 2)]
+        return [(did, build(int(did), *rest))]
 
     return per_doc(docs, one, PAYLOAD_SCHEMA, cols)
 
@@ -215,10 +212,10 @@ def _build_payloads(
 def generate_payloads(
     docs: DataFrame, variant: str = "mixed", ensure: bool = True
 ) -> DataFrame:
-    """(doc_id, text) → (doc_id, payload, size_class), salted by
+    """(doc_id, text) → (doc_id, payload), spread by doc_id by
     default (see _build_payloads); ``ensure=False`` means the caller
-    already salted (or deliberately runs unsalted) and adds no
-    Exchange.
+    already spread the rows (or deliberately runs on the scan's
+    partitions) and adds no Exchange.
 
     Text is the only input (r9, guide §4 — pass only the columns the
     function needs): spans are synthesized in-Python per document
@@ -341,7 +338,7 @@ def roundtrip_rows(
     reading_order: bool = False,
     infer_spaces: bool = False,
 ) -> DataFrame:
-    """Flagship pipeline: salt → generate → extract → exploded span
+    """Flagship pipeline: spread → generate → extract → exploded span
     rows. Correct iff output == synth_spans rows (the round-trip
     identity; oracle = the same synthesis in DuckDB SQL).
 

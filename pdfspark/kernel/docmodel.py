@@ -18,7 +18,7 @@ from typing import Optional
 
 from .cos import CDict, COS_NULL, CStream, CString, Name, Ref
 from .cos import _CTOK as _COS_CTOK
-from .errors import EParseError, ParserSettings
+from .errors import EParseError
 from .xref import Parser
 
 # r7 C page-tree walk (docmodel.pages twin; falls back to the Python

@@ -33,11 +33,10 @@ from .cos import (
     CString,
     CStream,
     Name,
-    Ref,
     Resolver,
     parse_object,
 )
-from .encodings import WINANSI_BYTE_TO_CHAR, decode_pdfdoc
+from .encodings import WINANSI_BYTE_TO_CHAR
 from .errors import EParseError
 from .filters import decode_stream
 from .raw import Raw, is_delim, is_ws

@@ -27,7 +27,6 @@ from .cos import (
     COSValue,
     CStream,
     CString,
-    Name,
     Ref,
     parse_object,
     try_read_id,

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..engine import load_documents
-from ..scale import salt_docs_by_size
+from ..scale import spread_docs
 from .textstats import LANG_MARKERS
 
 MIN_TOKENS = 10
@@ -128,12 +128,14 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval stand-in: doc_id % {BENCH_MOD} == 0). Flag when overlap ≥ 10%
     (integer-exact: hits·10 ≥ grams).
 
-    Plan at corpus scale: the gram explode reads salted text rows
-    (scale.salt_docs_by_size), and benchmark grams are a BROADCAST
-    (eval sets are small by construction), so the only other shuffle
-    is the per-doc groupBy count — training grams never co-shuffle
-    with each other."""
-    docs = salt_docs_by_size(
+    Plan at corpus scale: the gram explode reads text rows spread by
+    doc_id (scale.spread_docs), and benchmark grams are a BROADCAST
+    (eval sets are small by construction). The doc_id filters of the
+    two sides push below the spread, so each side reads its own
+    spread; the per-doc groupBy count rides the doc_id partitioning,
+    and the only other shuffle is the distinct benchmark grams —
+    training grams never co-shuffle with each other."""
+    docs = spread_docs(
         load_documents(spark, sf_dir).select("doc_id", "text")
     ).select("doc_id", "text", F.split("text", " ").alias("w"))
     grams = docs.select(

@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..engine import load_documents, per_doc
-from ..scale import salt_docs_by_size
+from ..scale import spread_docs
 
 N_HASHES = 64  # MinHash signature length (real-corpus scale, r2)
 N_BANDS = 16  # bands of r = 4 rows → s-curve threshold ≈ (1/16)^(1/4) = 0.5
@@ -155,12 +155,12 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     over :func:`shingle_sets`, so the shingling rule keeps its one
     Spark definition.
 
-    The stage reads salted text rows (scale.salt_docs_by_size, the
-    policy for every per-document stage): its one Exchange spreads the
-    documents by estimated size, so the Python stage neither runs in
-    the 1-2 tasks of a single-split scan nor puts the large documents
-    in one task."""
-    sets = shingle_sets(salt_docs_by_size(docs.select("doc_id", "text")))
+    The stage reads text rows spread by doc_id (scale.spread_docs, the
+    policy for every per-document stage): its one Exchange fans the
+    documents out pseudo-randomly, so the Python stage does not run in
+    the 1-2 tasks of a single-split scan. Nothing keeps two large
+    documents apart."""
+    sets = shingle_sets(spread_docs(docs.select("doc_id", "text")))
     return per_doc(
         sets, _signature_bands, "doc_id bigint, band int, band_val string", ("doc_id", "sh")
     )
@@ -193,7 +193,7 @@ def minhash_pairs_df(docs: DataFrame) -> DataFrame:
     orders of magnitude below the corpus; the sets broadcast also
     carries each candidate document's shingle strings, so its size is
     that id count times the candidates' shingle-set bytes. The verify
-    reads ``docs`` as given: only the signature stage salts its input,
+    reads ``docs`` as given: only the signature stage spreads its input,
     so no full-corpus repartition feeds the verify."""
     # one Exchange on (band, band_val): bucket membership, cap, and
     # i<j pair expansion all inside the aggregation's partitioning
@@ -257,10 +257,11 @@ def _cc_star(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
         m = min(smaller neighbors ∪ {u}); emit (v, m) for each smaller
         neighbor and (u, m).
     Fixed point: a star forest where every non-root points at its
-    component min. Convergence check: the canonical edge set stops
-    changing (two-sided exceptAll — exact, and cheap once stars form).
-    Each half-round is one groupBy shuffle + one join; edge frames are
-    eagerly localCheckpoint-ed per round. Returns (labels, rounds)."""
+    component min. Convergence check: the canonical edges (u > v, v
+    the parent) already form that forest — no child has two parents
+    and no parent is itself a child — so the round that builds the
+    forest is the last one. Each half-round is one groupBy shuffle +
+    one join; edge frames are eagerly localCheckpoint-ed per round. Returns (labels, rounds)."""
 
     def canon(e: DataFrame) -> DataFrame:
         return (
@@ -301,12 +302,12 @@ def _cc_star(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
         rounds += 1
         if rounds > 64:  # provably O(log n) — 64 means a logic bug,
             raise RuntimeError("cc_star failed to converge")  # not data
-        nxt = canon(small_star(large_star(edges))).localCheckpoint(eager=True)
-        stable = (
-            nxt.exceptAll(edges).isEmpty() and edges.exceptAll(nxt).isEmpty()
+        edges = canon(small_star(large_star(edges))).localCheckpoint(eager=True)
+        two_parents = edges.groupBy("u").count().where("count > 1").select("u")
+        parent_is_child = edges.select(F.col("v").alias("p")).join(
+            edges, F.col("p") == F.col("u"), "left_semi"
         )
-        edges = nxt
-        if stable:
+        if two_parents.union(parent_is_child).isEmpty():
             break
     # star forest: non-roots point at the component min
     parent = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("p"))

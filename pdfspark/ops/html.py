@@ -8,8 +8,8 @@ then `kernel.htmlops.strip_boilerplate` must recover exactly the
 article text ON MERIT — the DuckDB oracle reconstructs the expected
 main text from the documents table, so a misclassified block breaks
 the hash. Generation and stripping run in ONE mapInPandas stage over
-salted text rows: the salt (scale.salt_docs_by_size) is the query's
-only shuffle (scan → salt → UDF → result).
+text rows spread by doc_id: the spread (scale.spread_docs) is the
+query's only shuffle (scan → spread → UDF → result).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..engine import load_documents, per_doc
 from ..kernel.htmlops import MIN_BLOCK_CHARS, main_content_blocks, strip_boilerplate
 from ..kernel.htmlops import MAX_LINK_DENSITY  # r7: html_links oracle
-from ..scale import salt_docs_by_size
+from ..scale import spread_docs
 
 CHUNK = 80  # article paragraph size — matches the PDF span chunking
 
@@ -59,11 +59,11 @@ N_TEMPLATE_BOILER_BLOCKS = 6
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one mapInPandas per query over salted text rows
-    # (scale.salt_docs_by_size): the Python stage fans out even over a
+    # one mapInPandas per query over text rows spread by doc_id
+    # (scale.spread_docs): the Python stage fans out even over a
     # single-split scan; row-wise computation, so results are
     # partition-invariant
-    return salt_docs_by_size(load_documents(spark, sf_dir).select("doc_id", "text"))
+    return spread_docs(load_documents(spark, sf_dir).select("doc_id", "text"))
 
 
 def html_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,7 +218,7 @@ def html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     classify boilerplate, article citations classify in_main unless
     their paragraph fails the density/length gate (short final chunks
     flip to boilerplate ON MERIT; the oracle re-derives that edge).
-    One mapInPandas stage behind the salt."""
+    One mapInPandas stage behind the spread."""
     from ..kernel.htmlops import link_rows as _lr
 
     def one(d, t):

@@ -141,7 +141,7 @@ def stream_extract_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     final spans table, exploded, must equal the batch round-trip, so
     the SAME spans-identity SQL oracle gates it. Upgrades streaming
     from pytest-only to a driver-oracled surface. The landing files
-    are the salted generation's partitions (one Exchange, of text
+    are the spread generation's partitions (one Exchange, of text
     rows)."""
     import atexit
     import functools
@@ -159,7 +159,7 @@ def stream_extract_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(base, "landing")
     out = os.path.join(base, "out")
     payloads.write.parquet(landing)
-    # two micro-batches, whatever the salt's partition (file) count
+    # two micro-batches, whatever the spread's partition (file) count
     n_files = sum(f.endswith(".parquet") for f in os.listdir(landing))
     run_streaming_extraction_to_table(
         spark, landing, out, max_files_per_trigger=max(1, -(-n_files // 2))
@@ -441,7 +441,7 @@ def run_streaming_extraction_to_table(
     committed = {"n": 0}
 
     payloads = (
-        spark.readStream.schema("doc_id bigint, payload binary, size_class int")
+        spark.readStream.schema("doc_id bigint, payload binary")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(landing_dir)
     )

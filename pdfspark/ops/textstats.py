@@ -5,7 +5,7 @@ shuffle except the final agg-free scan), JVM-side only.
 At 10^12 docs these are the cheapest pipeline stages: pure map
 operators that fuse into the parquet scan under whole-stage codegen,
 with column pruning keeping the scan at (doc_id, text). They read the
-raw scan, not salted rows (scale.salt_docs_by_size): a repartition
+raw scan, not spread rows (scale.spread_docs): a repartition
 after the 1-2 split scan was measured in r9 and reverted — each query
 is either already shuffle-bound or too cheap for the extra full-width
 Exchange to pay (gopher 0.27→0.68 s, bm25 flat; OPTIMIZATION_r09.md).

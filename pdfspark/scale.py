@@ -1,18 +1,20 @@
-"""Scale mechanics: explicit skew salting, checkpoint/lineage tables,
-resumable bucketed execution (SURVEY.md §4.2, north_rule).
+"""Scale mechanics: the doc_id spread in front of per-document stages,
+checkpoint/lineage tables, resumable bucketed execution (SURVEY.md
+§4.2, north_rule).
 
 Three thin app-level pieces ride on built-in Spark (everything else is
 AQE + Arrow + Catalyst; no custom rules):
 
-1. ``salt_docs_by_size`` — the one step that partitions the corpus
-   in front of a per-document stage. AQE skew handling does NOT cover
-   UDF stages, so large-document skew in the mapInPandas stages is
-   handled with an explicit (size_class, salt) repartition of the
-   cheap (doc_id, text) rows (SURVEY §4.2(a)). Every per-document
-   Python stage over the corpus reads salted rows: generation
-   (``engine._build_payloads``), the HTML stages, the MinHash
-   signature stage, and the contamination gram explode. The cheap
-   JVM operators stay on the raw scan (see the function's docstring).
+1. ``spread_docs`` — the one step that partitions the corpus in
+   front of a per-document stage. AQE skew handling does NOT cover
+   UDF stages (SURVEY §4.2(a)), so every per-document Python stage
+   over the corpus reads an explicit, pseudo-random spread by doc_id
+   that fans out an under-split scan and moves only the cheap
+   (doc_id, text) rows: generation (``engine._build_payloads``), the
+   HTML stages, the MinHash signature stage, and the contamination
+   gram explode. Nothing keeps two large documents apart. The cheap
+   JVM operators stay on the raw scan (see the function's
+   docstring).
 2. ``lineage`` table — per-bucket checkpoint/metrics rows
    (FIXTURES.md §5): (bucket, status, doc_count, bytes_in, spans_out,
    wall_ms, attempt). The counts are observed while the data is
@@ -79,66 +81,42 @@ def overwrite_partitions(
 
 
 # ---------------------------------------------------------------------------
-# 1. Skew salting
+# 1. The spread in front of every per-document stage
 # ---------------------------------------------------------------------------
 
 
-SALT_BUCKETS = 4096  # salt values per size class
-
-
-def salt_docs_by_size(
-    docs_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """Skew-salt the (doc_id, text) rows BEFORE the expensive UDF
-    stages. Shuffling here moves the small text rows — not the
-    generated payload bytes — and both generation and extraction then
-    run pipelined in ONE stage with no further exchange (measured
-    2.3× faster than salting the payload stream between them). Other
-    columns (synth_spans_df's ``spans``) ride along unchanged.
+def spread_docs(docs_df: DataFrame) -> DataFrame:
+    """Repartition the (doc_id, text) rows by ``doc_id`` BEFORE the
+    expensive UDF stages. Shuffling here moves the small text rows —
+    not the generated payload bytes — and both generation and
+    extraction then run pipelined in ONE stage with no further
+    exchange (measured 2.3× faster than repartitioning the payload
+    stream between them). Other columns (synth_spans_df's ``spans``)
+    ride along unchanged.
 
     Policy: this is the only step that partitions the corpus in front
     of a per-document stage. Generation, the HTML stages
     (ops/html.py), the MinHash signature stage
     (dedup.minhash_signatures) and the contamination gram explode
-    (curate.benchmark_contamination) read salted rows, so a scan of
-    few splits still fans out and a few huge documents do not share
-    one task. The cheap JVM operators — exact, simhash, n-gram and
-    boilerplate dedup, textstats and corpus_curate — stay on the raw
-    scan: measured (r9), they lose more to the extra shuffle than
-    they gain from the spread. The salt is always one Exchange, also
-    over a source that is already split many ways.
+    (curate.benchmark_contamination) read these rows, so a scan of
+    few splits still fans out. The spread is pseudo-random: the hash
+    of ``doc_id`` places each document, and nothing keeps two large
+    documents apart. The cheap JVM operators — exact, simhash, n-gram
+    and boilerplate dedup, textstats and corpus_curate — stay on the
+    raw scan: measured (r9), they lose more to the extra shuffle than
+    they gain from the spread. The spread is always one Exchange,
+    also over a source that is already split many ways.
 
-    size_class = log4 bucket of the estimated payload size; salt
-    spreads same-class docs. The span synthesis is deterministic in
-    ``text`` (engine._SPANS_EXPR == codec.synth_spans_py), so the
-    estimate is CLOSED-FORM in the text length:
-
-        k       = ceil(len/CHUNK)            text chunks
-        n_media = k div 3                    media spans (i%3==2)
-        est     = len + 64·k + (32+64)·n_media
-
-    which is exactly aggregate(spans, acc + coalesce(length(text),32)
-    + 64) over the synthesized spans (pinned by
-    tests/test_engine.py), without materializing the struct array.
-
-    Partition count: ``num_partitions`` when given, else
-    ``max(defaultParallelism, 8)`` — one wave at local[8] and wider,
-    8 tasks in 2 waves on a 4-core host. It does not grow with the
-    input size."""
-    sc = docs_df.sparkSession.sparkContext
-    n = num_partitions or max(sc.defaultParallelism, 8)
-    k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
-    est = F.expr(f"length(text) + 64L * {k} + 96L * ({k} DIV 3)")
-    salted = docs_df.withColumn(
-        "size_class",
-        F.floor(F.log2(F.greatest(est, F.lit(2))) / 2).cast("int"),
-    ).withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)))
-    return salted.repartition(n, "size_class", "salt").drop("salt", "size_class")
+    Partition count: ``max(defaultParallelism, 8)`` — one wave at
+    local[8] and wider, 8 tasks in 2 waves on a 4-core host. It does
+    not grow with the input size."""
+    n = max(docs_df.sparkSession.sparkContext.defaultParallelism, 8)
+    return docs_df.repartition(n, "doc_id")
 
 
-# the frozen bench.py and tools/{ab,scaling,skew}_bench.py compose this
-# name over synth_spans_df output, which carries ``text``
-salt_spans_by_size = salt_docs_by_size
+# the frozen bench.py, and tools/ab_bench.py's runner (which also runs
+# older trees), import this name
+salt_spans_by_size = spread_docs
 
 
 # ---------------------------------------------------------------------------
@@ -281,8 +259,8 @@ def _group_frame(
 ) -> tuple[DataFrame, Observation]:
     """One commit group's plan — the flagship shape of
     engine.roundtrip_rows: bucket-filtered (doc_id, text) →
-    generate_payloads (which salts first) → extract. The salt is the
-    plan's only Exchange and moves text rows, not payload bytes;
+    generate_payloads (which spreads first) → extract. The spread is
+    the plan's only Exchange and moves text rows, not payload bytes;
     generation and extraction pipeline in one stage behind it.
 
     The Observation carries each bucket's ``bytes_in`` (alias
@@ -331,7 +309,7 @@ def run_checkpointed(
     before anything runs or is created.
 
     ``sink="null"`` runs the IDENTICAL per-bucket-group loop (same
-    corpus scans, bucket filters, salting, generation, extraction,
+    corpus scans, bucket filters, spread, generation, extraction,
     same group scheduling) but discards each group's result through
     Spark's noop datasource — no span parquet, no lineage, no resume
     state. This is the compute-only twin used to split compute wall
@@ -407,7 +385,7 @@ def run_checkpointed(
             )
             if null_sink:
                 # compute-only twin: the SAME per-group plan (corpus
-                # scan, bucket filter, salt, generate, extract)
+                # scan, bucket filter, spread, generate, extract)
                 # discarded through the noop datasource — no data, no
                 # lineage
                 extracted.withColumn("bucket", bucket).write.format(

@@ -15,18 +15,17 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# docs per Arrow batch handed to a per-document Python stage:
+# batch_bytes ≈ ARROW_BATCH × avg_doc_size must fit the Python worker
+# (SURVEY §4.2 'Vectorized execution')
+ARROW_BATCH = 512
+
 
 def get_spark(
     master: str | None = None,
     app_name: str = "pdfspark",
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 512,
 ) -> SparkSession:
-    """``arrow_batch`` bounds docs per Arrow batch handed to the
-    extraction kernel — batch_bytes ≈ arrow_batch × avg_doc_size must
-    fit the Python worker (SURVEY §4.2 'Vectorized execution'); large-
-    doc skew is handled upstream by size-class salting (scale.py), not
-    by shrinking this knob."""
     master = master or f"local[{DEFAULT_CPUS}]"
     ncores = DEFAULT_CPUS if master.startswith("local") else 200
     shuffle_partitions = shuffle_partitions or ncores
@@ -38,7 +37,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

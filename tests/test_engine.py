@@ -75,24 +75,6 @@ def test_roundtrip_rows_matches_synthesis(spark):
     assert {(r.doc_id, r.offset, r.kind, r.text, r.media_ref) for r in rows} == expected
 
 
-def test_generate_payloads_struct_and_text_paths_identical(spark):
-    """Text is the only input to generation, so the salt's size
-    estimate must be a closed form of the text: pin that it equals the
-    spans aggregate over the synthesized structs for every doc."""
-    docs = load_documents(spark, SF_SMOKE).limit(40)
-    both = synth_spans_df(docs)  # (doc_id, text, spans)
-
-    k = "CAST(ceil(length(text) / 80.0) AS BIGINT)"
-    est_text = F.expr(f"length(text) + 64L * {k} + 96L * ({k} DIV 3)")
-    est_spans = F.expr(
-        "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 32L) + 64L)"
-    )
-    diff = both.select(
-        est_text.alias("a"), est_spans.alias("b")
-    ).where("a <> b").count()
-    assert diff == 0
-
-
 def _per_doc_frame(spark):
     return spark.createDataFrame(
         [(i, f"t{i}") for i in range(6)], "doc_id bigint, payload string"

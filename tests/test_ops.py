@@ -274,7 +274,7 @@ def test_minhash_pairs_plan_reads_documents_once(spark):
 def test_minhash_signatures_plan_is_one_python_stage(spark):
     """The signature is one per-document Python stage over the shingle
     sets: no explode, no per-hash aggregate, and one Exchange, the
-    size-class salt of the text rows in front of the stage."""
+    doc_id spread of the text rows in front of the stage."""
     from pdfspark.engine import load_documents
     from test_scale import _plan_nodes
 
@@ -321,7 +321,7 @@ def test_streaming_extraction_equals_batch(spark, tmp_path):
     generate_payloads(synth_spans_df(docs), "classic").write.parquet(landing)
     noise_id = 10**9
     spark.createDataFrame(
-        [(noise_id, build_pdf(str(noise_id), [], "malformed:noise"), 0)], PAYLOAD_SCHEMA
+        [(noise_id, build_pdf(str(noise_id), [], "malformed:noise"))], PAYLOAD_SCHEMA
     ).write.mode("append").parquet(landing)
     run_streaming_extraction_to_table(spark, landing, out)
     table = spark.read.parquet(f"{out}/spans")
@@ -431,6 +431,16 @@ def test_cc_star_assorted_graph_labels(spark):
     expect = {i: i for i in range(30)}
     expect |= {i: 0 for i in range(5)} | {11: 10, 12: 10} | {21: 20, 25: 20}
     assert {r.doc_id: r.lab for r in labels.collect()} == expect
+
+
+def test_cc_star_stops_at_star_forest(spark):
+    """The path 0-1-2 is a star rooted at 0 after one round, so the
+    loop stops after that round."""
+    docs = spark.range(3).withColumnRenamed("id", "doc_id")
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "a_id long, b_id long")
+    labels, rounds = dedup._cc_star(docs, edges)
+    assert {r.doc_id: r.lab for r in labels.collect()} == {0: 0, 1: 0, 2: 0}
+    assert rounds == 1
 
 
 def test_skipped_bucket_accounting(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Scale mechanics: salting plan shape + checkpoint/lineage resume
+"""Scale mechanics: spread plan shape + checkpoint/lineage resume
 (kill-and-rerun must not recompute completed buckets) — north_rule
 'resumable from checkpoint with per-partition lineage + metrics'."""
 
@@ -13,18 +13,16 @@ from conftest import SF_SMOKE
 from pdfspark.engine import generate_payloads, load_documents
 from pdfspark.scale import (
     LINEAGE_SCHEMA, _group_frame, _write_lineage, completed_buckets,
-    run_checkpointed, salt_docs_by_size,
+    run_checkpointed, spread_docs,
 )
 
 
-def test_salt_docs_by_size_spreads_partitions(spark):
+def test_spread_docs_spreads_partitions(spark):
     docs = load_documents(spark, SF_SMOKE).limit(64).select("doc_id", "text")
-    salted = generate_payloads(
-        salt_docs_by_size(docs, num_partitions=8), "classic", ensure=False
-    )
-    assert salted.rdd.getNumPartitions() == 8
+    spread = generate_payloads(spread_docs(docs), "classic", ensure=False)
+    assert spread.rdd.getNumPartitions() == 8
     sizes = (
-        salted.withColumn("pid", F.spark_partition_id())
+        spread.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .count()
         .collect()
@@ -118,11 +116,11 @@ def test_crash_between_data_write_and_lineage_commit(spark, tmp_path):
 
 def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
     """skew_large family (FIXTURES §3): 0.1%-style oversized docs must
-    not concentrate: after salt_docs_by_size (and the generation it
+    not concentrate: after spread_docs (and the generation it
     pipelines into), no partition should carry more than ~2 of the 8
-    planted giants (they differ in salt, so they spread), and the
-    byte-heaviest partition must hold well under the giants' combined
-    weight."""
+    planted giants (their doc_ids hash to different partitions), and
+    the byte-heaviest partition must hold well under the giants'
+    combined weight."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(40)
     giants = (
         docs.limit(8)
@@ -130,11 +128,9 @@ def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
         .withColumn("text", F.expr("repeat(text, 120)"))  # ~100-200× spans
     )
     both = docs.unionByName(giants).select("doc_id", "text")
-    salted = generate_payloads(
-        salt_docs_by_size(both, num_partitions=8), "classic", ensure=False
-    )
+    spread = generate_payloads(spread_docs(both), "classic", ensure=False)
     per_part = (
-        salted.withColumn("pid", F.spark_partition_id())
+        spread.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .agg(
             F.sum(F.length("payload")).alias("bytes"),
@@ -143,7 +139,7 @@ def test_skew_large_docs_spread_across_partitions(spark, tmp_path):
         .collect()
     )
     assert sum(r.giants for r in per_part) == 8
-    assert max(r.giants for r in per_part) <= 3  # salted spread
+    assert max(r.giants for r in per_part) <= 3  # hashed spread
     total = sum(r.bytes for r in per_part)
     assert max(r.bytes for r in per_part) < 0.55 * total
 
@@ -165,7 +161,7 @@ def test_group_frame_plan_has_one_exchange_below_generate(spark):
     exactly one shuffle (of text rows) below the generate stage, and
     generate → extract pipelined with no Exchange between them. Plain
     generate_payloads at its default has the same one shuffle below
-    it: generation salts its own input."""
+    it: generation spreads its own input."""
     df, _ = _group_frame(spark, SF_SMOKE, [0, 1], 4, "mixed", 1)
     df.collect()  # run it, so the adaptive plan is the final one
     nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
@@ -181,25 +177,25 @@ def test_group_frame_plan_has_one_exchange_below_generate(spark):
     assert nodes.index("MapInPandasExec") < nodes.index("ShuffleExchangeExec"), nodes
 
 
-def test_per_document_stages_read_salted_rows(spark):
+def test_per_document_stages_read_doc_id_spread(spark):
     """One partitioning step in front of every per-document stage over
     the corpus: the HTML stage, the MinHash signature stage and the
-    contamination gram explode all read the (size_class, salt)
-    repartition of the text rows that generation reads. The first two
-    have no other Exchange."""
+    contamination gram explode all read the doc_id repartition of the
+    text rows that generation reads. The first two have no other
+    Exchange; the contamination count per document rides the doc_id
+    partitioning with no Exchange of its own."""
     from pdfspark.ops import curate, dedup, html
 
-    for df, one_exchange in (
-        (html.html_main_text(spark, SF_SMOKE), True),
-        (dedup.minhash_signatures(load_documents(spark, SF_SMOKE)), True),
-        (curate.benchmark_contamination(spark, SF_SMOKE), False),
+    for df, exchanges in (
+        (html.html_main_text(spark, SF_SMOKE), 1),
+        (dedup.minhash_signatures(load_documents(spark, SF_SMOKE)), 1),
+        (curate.benchmark_contamination(spark, SF_SMOKE), 3),
     ):
         df.collect()  # run it, so the adaptive plan is the final one
         plan = df._jdf.queryExecution().executedPlan()
-        assert "hashpartitioning(size_class" in plan.toString(), plan.toString()
-        if one_exchange:
-            nodes = _plan_nodes(plan)
-            assert nodes.count("ShuffleExchangeExec") == 1, nodes
+        assert "hashpartitioning(doc_id" in plan.toString(), plan.toString()
+        nodes = _plan_nodes(plan)
+        assert nodes.count("ShuffleExchangeExec") == exchanges, nodes
 
 
 def test_lineage_rows_keep_schema_and_old_lineage_resumes(spark, tmp_path):

@@ -1,6 +1,8 @@
 """Regenerate PLANS.md: formatted physical plans for the headline
 queries with the scale-relevant fragments annotated (pushdown, column
-pruning, broadcast choice, exchange placement).
+pruning, broadcast choice, exchange placement). Each query runs first,
+so the plan shown is the final adaptive plan, reused Exchanges
+included.
 
 Usage: python tools/explain_plans.py
 
@@ -21,10 +23,10 @@ COMMENTARY = {
     "pdf_roundtrip_interleaved": (
         "Scan reads ONLY (doc_id, text) — column pruning through the "
         "synthesis expression. Exactly ONE Exchange, and it is "
-        "deliberate: the size-class salt of the lightweight spans rows "
+        "deliberate: the doc_id spread of the lightweight text rows "
         "BEFORE the Python stages (AQE cannot skew-split UDF stages, "
-        "so the salt is explicit, and salting pre-generation means "
-        "payload bytes are never shuffled). The two MapInPandas "
+        "so the repartition is explicit, and spreading pre-generation "
+        "means payload bytes are never shuffled). The two MapInPandas "
         "operators (generate, extract) sit back-to-back in one stage "
         "— a single pipelined pass per partition."
     ),
@@ -60,24 +62,24 @@ COMMENTARY = {
     ),
     "pdf_roundtrip_encrypted": (
         "Decryption changes NOTHING in the plan — same pruned "
-        "(doc_id, text) scan, same single pre-generation salt "
+        "(doc_id, text) scan, same single pre-generation spread "
         "Exchange, same back-to-back MapInPandas pair. RC4/AES key "
         "derivation is per-document Python inside the extract stage, "
         "so ciphertext never costs an extra shuffle or scan column."
     ),
     "pdf_span_geometry": (
         "The geometry-widened extractor keeps the flagship shape: "
-        "one Exchange (spans salt), generate+extract pipelined in a "
+        "one Exchange (the doc_id spread), generate+extract pipelined in a "
         "single stage; only the UDF output schema widens (x, y, w, h "
         "doubles) — no new plan nodes."
     ),
     "html_main_text": (
         "Parquet scan pruned to (doc_id, text), then the ONE Exchange: "
-        "the (size_class, salt) repartition of the text rows "
-        "(salt_docs_by_size), the same salt generation uses. It fans "
-        "the Python stage out on an under-split source and keeps "
-        "large documents from sharing a task (AQE cannot skew-split a "
-        "UDF stage). One MapInPandas follows (wrap + strip fused in a "
+        "the doc_id repartition of the text rows (spread_docs), the "
+        "same spread generation uses. It fans the Python stage out on "
+        "an under-split source (AQE cannot skew-split a UDF stage); "
+        "the placement is pseudo-random, and nothing keeps two large "
+        "documents apart. One MapInPandas follows (wrap + strip fused in a "
         "single Arrow batch pass)."
     ),
     "bm25_topk": (
@@ -99,14 +101,14 @@ COMMENTARY = {
     "pdf_roundtrip_cjk_embedded": (
         "Embedded-CMap decoding is invisible to the plan — identical "
         "to the flagship: pruned (doc_id, text) scan, ONE pre-"
-        "generation salt Exchange, generate+extract MapInPandas "
+        "generation spread Exchange, generate+extract MapInPandas "
         "pipelined in one stage. The per-document CMap build/parse is "
         "Python inside the existing UDF pair; no extra column, no "
         "extra shuffle."
     ),
     "dedup_skipped_buckets": (
         "The signatures are one per-document MapInPandas stage "
-        "(emitting the 16 band keys) behind the size-class salt "
+        "(emitting the 16 band keys) behind the doc_id spread "
         "Exchange; no explode, no per-hash aggregate. Then two "
         "map-side-combinable aggregations back to back: "
         "(band, band_val) counts then per-band rollup — the first "
@@ -122,7 +124,10 @@ COMMENTARY = {
         "an eager localCheckpoint. The plan shown is the FINAL labels "
         "projection — the corpus scan joined to the converged star "
         "forest (a scan of the checkpointed edges), so the lineage "
-        "shown is flat instead of a multi-round join tree."
+        "shown is flat instead of a multi-round join tree. Running "
+        "the query first does not change that: the rounds, the MinHash "
+        "pairs and their Exchanges run before the eager checkpoints, "
+        "and only what follows them shows here."
     ),
     "pdf_attachments": (
         "Name-tree extraction rides the flagship shape: pruned "
@@ -181,10 +186,9 @@ COMMENTARY = {
         "documents ONCE: the scan is semi-join-pruned by the "
         "broadcast candidate id set, each candidate's distinct "
         "shingles become one array, and that set frame is broadcast "
-        "to both pair endpoints. This pre-execution plan lists both "
-        "broadcast subtrees; they are the same Exchange, and the "
-        "executed plan runs the second as a ReusedExchange (pinned "
-        "by test_minhash_pairs_plan_reads_documents_once). "
+        "to both pair endpoints: the executed plan builds the set "
+        "broadcast once and runs the second as a ReusedExchange "
+        "(pinned by test_minhash_pairs_plan_reads_documents_once). "
         "n_inter = size(array_intersect) and n_union = the two sizes "
         "minus n_inter — no shingle explode, no cache, no shuffle "
         "join. Scale-safe at 100 TB: candidates are bounded by the "
@@ -215,14 +219,14 @@ COMMENTARY = {
         "cell size and the per-cell kernel is unchanged."
     ),
     "html_links": (
-        "Scan prunes to (doc_id, text); the size-class salt of the "
+        "Scan prunes to (doc_id, text); the doc_id spread of the "
         "text rows is the one Exchange, and wrap + walk run in ONE "
         "mapInPandas stage behind it — the outlink rows are the only "
         "thing that materializes. The downstream link-graph groupBy "
         "(not part of this query) would be the next shuffle."
     ),
     "html_outline": (
-        "Same shape as html_links (one salt Exchange, one Python "
+        "Same shape as html_links (one spread Exchange, one Python "
         "stage): the heading walk emits (ord, level, title) rows "
         "straight out of the Arrow batch."
     ),
@@ -237,7 +241,7 @@ COMMENTARY = {
     ),
     "pdf_reading_order": (
         "r8: same shape as the flagship — scan pruned to (doc_id, "
-        "text), ONE deliberate size-salt Exchange ahead of the Python "
+        "text), ONE deliberate doc_id spread Exchange ahead of the Python "
         "stages, generate (scrambled tagged pages) + extract "
         "(structure-tree re-sequencing) pipelined back-to-back in a "
         "single MapInPandas stage pair. The §14.8 tree walk is "
@@ -246,7 +250,7 @@ COMMENTARY = {
         "extra Exchanges at any corpus size."
     ),
     "pdf_roundtrip_nospace": (
-        "r8: identical plan skeleton again (one salt Exchange, "
+        "r8: identical plan skeleton again (one spread Exchange, "
         "pipelined generate+extract); the word-boundary inference "
         "runs on the documented pure-Python interpreter path, a "
         "per-row kernel flag — the PLAN is indistinguishable from "
@@ -280,8 +284,9 @@ def main() -> None:
     out = [
         "# PLANS — physical-plan evidence for the headline queries\n",
         "Regenerate with `python tools/explain_plans.py`. Each plan is the\n"
-        "`explain('formatted')` output at sf0.001; the commentary calls out\n"
-        "the property that matters at 100 TB.\n",
+        "`explain('formatted')` output of the executed query at sf0.001 (the\n"
+        "final adaptive plan); the commentary calls out the property that\n"
+        "matters at 100 TB.\n",
     ]
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(path) as f:
@@ -295,13 +300,18 @@ def main() -> None:
             print(f"{name}: input missing, section kept")
             out.append(kept[name])
             continue
+        df.collect()  # run it, so the adaptive plan is the final one
         plan = df._jdf.queryExecution().explainString(mode)
-        # keep the operator tree + scan details; drop the verbose middle
+        # keep the final operator tree + scan details; drop the initial
+        # plan and the verbose middle
         lines = plan.splitlines()
         keep = []
-        prev_was_header = False
+        prev_was_header = in_initial = False
         for ln in lines:
             s = ln.strip()
+            in_initial = (in_initial or s.endswith("== Initial Plan ==")) and s != ""
+            if in_initial:
+                continue
             if (
                 s.startswith(("*", "+", ":", "AdaptiveSparkPlan", "=="))
                 or prev_was_header  # the root operator of a non-AQE plan

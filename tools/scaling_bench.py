@@ -24,7 +24,7 @@ sys.path.insert(0, {repo!r})
 from pdfspark.session import get_spark
 from pdfspark.engine import (extract_flat, generate_payloads, load_documents,
                              replicate_docs, synth_spans_df)
-from pdfspark.scale import salt_spans_by_size
+from pdfspark.scale import spread_docs
 
 cpus = int(os.environ["CPUS"])
 sf_dir = os.environ["SF_DIR"]
@@ -32,7 +32,7 @@ K = int(os.environ.get("REPLICATE", "16"))
 
 def pipeline(sdir, k):
     docs = replicate_docs(load_documents(spark, sdir), k)
-    spans = salt_spans_by_size(synth_spans_df(docs))
+    spans = spread_docs(synth_spans_df(docs))
     return extract_flat(generate_payloads(spans, "mixed", ensure=False))
 spark = get_spark(master=f"local[{{cpus}}]", shuffle_partitions=cpus * 2,
                   app_name=f"scaling-{{cpus}}")
@@ -118,11 +118,11 @@ reachable, so that window carries the evidence; the engine's job is to
 stay close to the hardware's own curve, which the number above shows.
 
 Notes for a real 1000-executor deployment: the job has exactly ONE
-shuffle — the size-class salt of the (lightweight) spans rows ahead of
+shuffle — the doc_id spread of the (lightweight) spans rows ahead of
 the generate+extract stage, which then pipelines both UDFs in a single
-stage; partition count is data-driven (≈ bytes/128 MB at scale). The Python kernel
-cost dominates wall-clock, which is exactly the component that scales
-linearly with executors. Measured {stamp}.
+stage; its partition count is max(defaultParallelism, 8). The Python
+kernel cost dominates wall-clock, which is exactly the component that
+scales linearly with executors. Measured {stamp}.
 """
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:

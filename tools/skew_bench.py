@@ -1,11 +1,12 @@
 """Skew-handling evidence: wall-clock of the extraction pipeline over
 a corpus with clustered giant documents, WITH vs WITHOUT the explicit
-size-class salt.
+doc_id spread.
 
 The failure mode at 100 TB: large documents arrive clustered (crawls
 group by site; dumps sort by size), so input splits inherit the skew
-and AQE cannot rebalance a UDF stage. The salt is the fix this engine
-carries (scale.salt_spans_by_size). This tool plants clustered giants
+and AQE cannot rebalance a UDF stage. The fix this engine carries is a
+doc_id repartition in front of the UDF stages (scale.spread_docs): it
+breaks up the cluster pseudo-randomly. This tool plants clustered giants
 (~500× the span count) CLUSTERED at the head of the input order and
 measures both paths. Appends the result to BENCH/BASELINE.md.
 
@@ -35,17 +36,15 @@ def build_skewed_docs(spark, sf_dir: str):
     return giants.unionByName(docs).coalesce(8)
 
 
-def run(spark, docs, salted: bool) -> float:
+def run(spark, docs, spread: bool) -> float:
     from pdfspark.engine import extract_flat, generate_payloads
     from pdfspark.engine import synth_spans_df
-    from pdfspark.scale import salt_spans_by_size
+    from pdfspark.scale import spread_docs
 
     spans = synth_spans_df(docs)
-    if salted:
-        spans = salt_spans_by_size(spans, num_partitions=32)
-        payloads = generate_payloads(spans, "classic", ensure=False)
-    else:
-        payloads = generate_payloads(spans, "classic", ensure=False)
+    if spread:
+        spans = spread_docs(spans)
+    payloads = generate_payloads(spans, "classic", ensure=False)
     t0 = time.monotonic()
     extract_flat(payloads).count()
     return time.monotonic() - t0
@@ -60,24 +59,25 @@ def main() -> None:
     n = docs.count()
     # warm
     run(spark, docs.limit(50), True)
-    unsalted = min(run(spark, docs, False) for _ in range(2))
-    salted = min(run(spark, docs, True) for _ in range(2))
-    speedup = unsalted / salted
+    as_is = min(run(spark, docs, False) for _ in range(2))
+    spread = min(run(spark, docs, True) for _ in range(2))
+    speedup = as_is / spread
     md = f"""
 ### Skew evidence (clustered giants)
 
 Corpus: `{sf_dir}` ({n} docs) + 20 giants (500× span count) CLUSTERED
 at the head of the input order — the size-sorted-dump failure mode.
-Identical pipeline, with vs without the explicit size-class salt
-(`scale.salt_spans_by_size`; AQE cannot rebalance UDF stages):
+Identical pipeline, with vs without the explicit doc_id spread
+(`scale.spread_docs`; AQE cannot rebalance UDF stages):
 
 | path | wall (s) |
 |---|---|
-| input partitioning as-is (skew-blind) | {unsalted:.2f} |
-| size-class salted | {salted:.2f} |
+| input partitioning as-is (skew-blind) | {as_is:.2f} |
+| spread by doc_id | {spread:.2f} |
 
-Salting speedup on the skewed corpus: **{speedup:.2f}×** (giants fan
-out across tasks instead of serializing the straggler partition).
+Spread speedup on the skewed corpus: **{speedup:.2f}×** (the hash of
+doc_id scatters the clustered giants across tasks instead of leaving
+them in the straggler partition; it does not keep two giants apart).
 """
     print(md)
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "BASELINE.md"), "a") as f:
