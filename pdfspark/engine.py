@@ -27,9 +27,11 @@ Arrow batch loop and the fault policy of the reference (one document,
 one outcome — SURVEY §2.8, ``exception/EParseError.java``). A kernel
 ``EParseError`` aborts only its own document (zero rows); any other
 exception fails the task, so a kernel bug is a failed query, never a
-silently missing row. Wrappers whose contract reports a broken
-document as a row (``extract``'s status='error') catch inside the
-per-document function.
+silently missing row. The stages whose rows carry a status
+(``extract``, ``extract_metadata``) call the kernel's status
+wrappers, which turn that same ``EParseError`` — and nothing else —
+into a status='error' row; the stages without a status call the
+raising kernel directly.
 
 The per-document kernel state (xref maps, object caches) lives inside
 one call per document and never crosses an executor boundary
@@ -53,7 +55,7 @@ from .kernel import (
     extract_meta,
     extract_meta_doc,
     extract_spans,
-    extract_spans_geo,
+    extract_spans_doc,
     parse_document,
 )
 from .kernel.cos import CDict, CString, Name
@@ -86,10 +88,11 @@ def per_doc(
     row of ``frame`` (the values of ``cols``, in order) and returns a
     list of output tuples in ``schema`` column order.
 
-    Fault policy: a kernel ``EParseError`` gives zero rows for that
-    document; any other exception fails the task. ``fn`` must return a
-    list, not a generator, so an ``EParseError`` is raised before any
-    of the document's rows are kept."""
+    Fault policy, the one place it is decided: a kernel
+    ``EParseError`` is a broken document and gives zero rows for it;
+    any other exception is a bug and fails the task. ``fn`` must
+    return a list, not a generator, so an ``EParseError`` is raised
+    before any of the document's rows are kept."""
     names = [f.name for f in StructType.fromDDL(schema).fields]
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -241,8 +244,9 @@ def generate_payloads(
 def extract(payloads: DataFrame) -> DataFrame:
     """(doc_id, payload) → (doc_id, status, error, spans[]).
 
-    PERMISSIVE per-document fault policy (§2.8): malformed payloads
-    yield status='error' and never spans, never a failed stage."""
+    Per-document fault policy (§2.8): a malformed payload (an
+    ``EParseError``) yields status='error' and no spans; any other
+    exception fails the stage."""
     return per_doc(payloads, _spans_row, EXTRACT_SCHEMA)
 
 
@@ -284,8 +288,8 @@ def extract_flat(
     settings = ParserSettings(allow_reconstruction=True) if lenient else None
 
     def one(did, payload):
-        # an error document's spans are [] — it contributes no rows
-        _status, _err, spans = extract_spans(
+        # a broken document raises EParseError: per_doc drops it
+        spans = extract_spans_doc(
             bytes(payload), settings, reading_order=reading_order,
             infer_spaces=infer_spaces,
         )
@@ -375,8 +379,8 @@ def extract_geometry(payloads: DataFrame, tj_kerning: bool = False) -> DataFrame
     counts TJ kern displacements toward span width (§9.4.3)."""
 
     def one(did, payload):
-        _status, _err, spans = extract_spans_geo(
-            bytes(payload), tj_kerning=tj_kerning
+        spans = extract_spans_doc(
+            bytes(payload), geometry=True, tj_kerning=tj_kerning
         )
         return [
             (did, o, k, x, y, w, h) for (k, _t, _m, o, x, y, w, h) in spans
@@ -522,7 +526,7 @@ def reference_golden_rows(spark, sf_dir: str) -> DataFrame:
         data = bytes(content)
         try:  # §2.8 per-file fault policy for the meta pass: a row, not a drop
             meta = extract_meta_doc(data)
-        except Exception:
+        except EParseError:
             meta = {"title": "", "author": "", "page_count": 0, "page_mode": ""}
         status, _err, spans = extract_spans(data)
         h = hashlib.md5()

@@ -15,9 +15,10 @@ pinned per-mutant outcome manifest that doubles as the DuckDB oracle
 Outcome vocabulary (kernel/extract.py::extract_spans_fuzz):
 ``ok`` (clean entry-point parse), ``salvaged`` (a recovery path ran —
 §C.2 reconstruction or the stale-startxref rescan — and extraction
-still succeeded), ``error`` (typed failure; the exception class is
-part of the pinned row).  Zero batch kills is the contract: any
-mutant that segfaults or hangs the worker is a kernel bug.
+still succeeded), ``error`` (the typed ``EParseError``; the exception
+class is part of the pinned row).  Zero batch kills is the contract:
+any other exception fails the task, and any mutant that segfaults or
+hangs the worker is a kernel bug.
 """
 
 from __future__ import annotations

@@ -11,7 +11,6 @@ from .extract import (  # noqa: F401
     extract_meta_doc,
     extract_spans,
     extract_spans_doc,
-    extract_spans_geo,
     parse_document,
 )
 from .xref import Parser  # noqa: F401

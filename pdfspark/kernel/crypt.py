@@ -268,6 +268,8 @@ class StandardSecurityHandler:
         hf = hash_2b if self.r == 6 else hash_r5
         if len(self.u) >= 48 and hf(pwd, self.u[32:40], b"") == self.u[:32]:
             ik = hf(pwd, self.u[40:48], b"")
+            if len(self.ue) < 32:  # ISO 32000-2 Table 21: 32 bytes
+                raise EParseError("/UE shorter than 32 bytes")
             self.key = _aes_cbc(ik, b"\x00" * 16, self.ue[:32], decrypt=True)
             return True
         if (
@@ -276,6 +278,8 @@ class StandardSecurityHandler:
             and hf(pwd, self.o[32:40], self.u[:48]) == self.o[:32]
         ):
             ik = hf(pwd, self.o[40:48], self.u[:48])
+            if len(self.oe) < 32:
+                raise EParseError("/OE shorter than 32 bytes")
             self.key = _aes_cbc(ik, b"\x00" * 16, self.oe[:32], decrypt=True)
             return True
         return False

@@ -8,13 +8,14 @@ Re-expresses the reference's fault model (SURVEY.md §2.8):
   ``parser/Diagnostics.java:20-42`` dispatch): a failed soft assert
   either logs-and-continues or raises, per flag.
 
-At Spark scale every stage runs through ``engine.per_doc``: an
-``EParseError`` there gives zero rows for its document, and any other
-exception fails the task, so a kernel bug is never a silently missing
-row. The extraction wrappers (``extract.extract_spans*``,
-``extract.extract_meta``) instead catch every failure of one document
-and report it as ``(status='error', error=msg)`` — PERMISSIVE-mode
-semantics; a malformed doc never fails a stage there.
+One policy for a failed document: an ``EParseError`` means a broken
+document, and any other exception is a bug. At Spark scale every
+stage runs through ``engine.per_doc``, which gives zero rows for an
+``EParseError`` and fails the task on anything else, so a kernel bug
+is never a silently missing row. The status wrappers
+(``extract.extract_spans``, ``extract_spans_fuzz``, ``extract_meta``)
+report the same ``EParseError`` as ``(status='error', error=msg)``
+and let every other exception through.
 """
 
 from __future__ import annotations

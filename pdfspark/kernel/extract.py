@@ -7,9 +7,12 @@ column pruning is real — computing metadata never touches content
 streams, mirroring the reference's lazy page materialization,
 PDFDocCatalog.java:59-67 / SURVEY §4.1).
 
-Both are PERMISSIVE: any hard failure (EParseError, RecursionError,
-ValueError...) becomes status='error' for that document only — the
-§2.8 fault-policy mapping. The malformed-file contract
+The status wrappers (``extract_spans``, ``extract_spans_fuzz``,
+``extract_meta``) report an ``EParseError`` — the reference's one
+typed error that aborts one document (§2.8) — as status='error' for
+that document only. Any other exception is a kernel bug and
+propagates, so ``engine.per_doc`` fails the task instead of dropping
+a row. The malformed-file contract
 (FileHandlingTest.java:32-56: noise / header-only / header+EOF /
 zero-length must never produce spans) holds: those payloads fail the
 entry-point resolve (X1) and land in the error bucket.
@@ -139,7 +142,8 @@ def extract_spans(
     reading_order: bool = False,
     infer_spaces: bool = False,
 ) -> tuple[str, Optional[str], list[tuple]]:
-    """PERMISSIVE wrapper → (status, error, spans)."""
+    """Status wrapper → (status, error, spans); an EParseError is
+    status='error'."""
     try:
         return (
             "ok",
@@ -149,7 +153,7 @@ def extract_spans(
                 infer_spaces=infer_spaces,
             ),
         )
-    except Exception as e:  # per-row fault policy (§2.8)
+    except EParseError as e:  # per-document fault policy (§2.8)
         return ("error", f"{type(e).__name__}: {e}", [])
 
 
@@ -162,42 +166,19 @@ def extract_spans_fuzz(
     - ``ok``        clean entry-point parse, spans extracted
     - ``salvaged``  a recovery path ran (reconstruction or the
                     stale-startxref rescan) and extraction succeeded
-    - ``error``     extraction failed; err_class = exception type
+    - ``error``     extraction raised EParseError (err_class)
 
     Mirrors the reference's must-not-crash contract
     (FileHandlingTest.java:45-55) under seeded mutations of its own
     sample corpus — the web-crawl failure modes."""
-    from .errors import EParseError, ParserSettings  # noqa: F401
-
     settings = ParserSettings(allow_reconstruction=True)
     try:
         doc_spans = extract_spans_doc(payload, settings, _want_doc=True)
         doc, spans = doc_spans
         status = "salvaged" if doc.parser.salvaged else "ok"
         return (status, "", spans)
-    except Exception as e:
+    except EParseError as e:
         return ("error", type(e).__name__, [])
-
-
-def extract_spans_geo(
-    payload: bytes,
-    settings: Optional[ParserSettings] = None,
-    tj_kerning: bool = False,
-) -> tuple[str, Optional[str], list[tuple]]:
-    """PERMISSIVE wrapper, geometry-widened spans (…, x, y, w, h).
-    ``tj_kerning=True`` counts TJ kern displacements toward span
-    width (§9.4.3 tx = (−t/1000·Tfs)·Th; off by default — the
-    documented simple-extraction width semantics)."""
-    try:
-        return (
-            "ok",
-            None,
-            extract_spans_doc(
-                payload, settings, geometry=True, tj_kerning=tj_kerning
-            ),
-        )
-    except Exception as e:
-        return ("error", f"{type(e).__name__}: {e}", [])
 
 
 def extract_meta_doc(payload: bytes, settings: Optional[ParserSettings] = None) -> dict:
@@ -227,7 +208,9 @@ def extract_meta_doc(payload: bytes, settings: Optional[ParserSettings] = None) 
 def extract_meta(
     payload: bytes, settings: Optional[ParserSettings] = None
 ) -> tuple[str, Optional[str], Optional[dict]]:
+    """Status wrapper → (status, error, meta); an EParseError is
+    status='error'."""
     try:
         return ("ok", None, extract_meta_doc(payload, settings))
-    except Exception as e:
+    except EParseError as e:
         return ("error", f"{type(e).__name__}: {e}", None)

@@ -309,8 +309,13 @@ def _cc_star(docs: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
         )
         if two_parents.union(parent_is_child).isEmpty():
             break
-    # star forest: non-roots point at the component min
-    parent = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("p"))
+    # star forest: non-roots point at the component min. It has at
+    # most one row per candidate document, the bound the verify's
+    # broadcasts rely on, so the labels join broadcasts it and never
+    # shuffles the corpus scan
+    parent = F.broadcast(
+        edges.select(F.col("u").alias("doc_id"), F.col("v").alias("p"))
+    )
     labels = docs.select("doc_id").join(parent, "doc_id", "left").select(
         "doc_id", F.coalesce("p", F.col("doc_id")).alias("lab")
     )

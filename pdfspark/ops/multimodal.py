@@ -182,13 +182,15 @@ def decode_image_real(payload: bytes) -> dict:
 def _png_decode(payload: bytes) -> dict:
     """REAL PNG decode — zlib is stdlib, so inflate + scanline
     unfiltering need no codec library. 8-bit depth, no interlace;
-    gray/RGB (±alpha) color types; all five filter types (None/Up/Sub
-    vectorized; Average/Paeth per-pixel — they carry an intra-line
-    dependency). Alpha is excluded from the channel means."""
+    gray/RGB (±alpha) color types; all five filter types, unfiltered
+    by the kernel's PNG predictor. Alpha is excluded from the channel
+    means."""
     import struct
     import zlib
 
     import numpy as np
+
+    from ..kernel.filters import predictor_decode
 
     i = 8
     ihdr = None
@@ -213,43 +215,16 @@ def _png_decode(payload: bytes) -> dict:
         )
     ch = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
     raw = zlib.decompress(b"".join(idat))
-    stride = w * ch
-    if len(raw) < h * (stride + 1):
+    row = w * ch + 1  # filter-type byte + scanline
+    if len(raw) < h * row:
         raise NotImplementedError("PNG data shorter than geometry")
-    img = np.empty((h, stride), dtype=np.int64)
-    prev = np.zeros(stride, dtype=np.int64)
-    pos = 0
-    for y in range(h):
-        ft = raw[pos]
-        line = np.frombuffer(raw, np.uint8, stride, pos + 1).astype(np.int64)
-        pos += 1 + stride
-        if ft == 0:
-            cur = line
-        elif ft == 2:  # Up
-            cur = (line + prev) % 256
-        elif ft == 1:  # Sub = per-channel prefix sum mod 256
-            cur = line.copy()
-            for c0 in range(ch):
-                cur[c0::ch] = np.cumsum(line[c0::ch]) % 256
-        elif ft == 3:  # Average (left is intra-line sequential)
-            cur = line.copy()
-            for x in range(stride):
-                left = cur[x - ch] if x >= ch else 0
-                cur[x] = (cur[x] + (left + prev[x]) // 2) % 256
-        elif ft == 4:  # Paeth
-            cur = line.copy()
-            for x in range(stride):
-                a = cur[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                cur[x] = (cur[x] + pr) % 256
-        else:
-            raise NotImplementedError(f"PNG filter type {ft}")
-        img[y] = cur
-        prev = cur
+    raw = raw[: h * row]
+    ft = max(raw[::row], default=0)
+    if ft > 4:  # not EParseError: per_doc would drop the document's row
+        raise NotImplementedError(f"PNG filter type {ft}")
+    # PNG's five filter types are PDF's Predictor >= 10 set
+    # (ISO 32000-1 §7.4.4.4): the kernel's unfilter decodes them
+    img = np.frombuffer(predictor_decode(raw, 15, w, ch, 8), np.uint8)
     n = w * h
     px = img.reshape(h, w, ch)
     color_ch = 1 if ctype in (0, 4) else 3

@@ -401,8 +401,9 @@ def run_streaming_extraction_to_table(
 
     The table has the batch job's per-document shape, ``(doc_id,
     status, error, spans[])`` partitioned by ``batch_id`` (read span
-    rows through ``engine.spans_rows``): a document that fails
-    extraction lands as a ``status='error'`` row instead of vanishing.
+    rows through ``engine.spans_rows``): a broken document (an
+    ``EParseError``) lands as a ``status='error'`` row instead of
+    vanishing.
     Each batch commits through ``scale.commit_observed``, the batch
     job's commit step, so its lineage row (``doc_count`` = every
     document, error ones included; ``rows_out`` = spans) is observed

@@ -196,14 +196,13 @@ def test_generator_f3_w_matches_simple_font():
     geometry for ASCII text — the /W [0 127 500] + /DW font reproduces
     the simple font's closed-form widths (the pdf_span_geometry_cid
     oracle contract)."""
-    from pdfspark.kernel import extract_spans_geo
+    from pdfspark.kernel import extract_spans_doc
 
     text = ("word gap " * 60)[: 80 * 4]
     spans = synth_spans_py("wgeo", text)
-    a = extract_spans_geo(build_pdf("wgeo", spans, "classic"))
-    b = extract_spans_geo(build_pdf("wgeo", spans, "cjk:embedded"))
-    assert a[0] == b[0] == "ok"
-    assert a[2] == b[2]
+    a = extract_spans_doc(build_pdf("wgeo", spans, "classic"), geometry=True)
+    b = extract_spans_doc(build_pdf("wgeo", spans, "cjk:embedded"), geometry=True)
+    assert a == b
 
 
 def test_usecmap_base_fallback():
@@ -301,7 +300,7 @@ def test_type3_font_roundtrip_and_matrix_widths():
     /Widths+/FontMatrix reports no metrics (w null)."""
     from pdfspark.codec import build_pdf, synth_spans_py
     from pdfspark.kernel.cos import CDict, Name
-    from pdfspark.kernel.extract import extract_spans, extract_spans_geo
+    from pdfspark.kernel.extract import extract_spans, extract_spans_doc
     from pdfspark.kernel.textops import Font as _Font
 
     text = "The quick brown fox, jumps over 12 lazy dogs! " * 4
@@ -311,10 +310,9 @@ def test_type3_font_roundtrip_and_matrix_widths():
     st, err, got = extract_spans(payload)
     assert st == "ok", err
     assert got == spans
-    st, err, geo = extract_spans_geo(payload)
-    assert st == "ok"
-    st, err, geo_classic = extract_spans_geo(
-        build_pdf("t3pin", spans, "classic")
+    geo = extract_spans_doc(payload, geometry=True)
+    geo_classic = extract_spans_doc(
+        build_pdf("t3pin", spans, "classic"), geometry=True
     )
     assert geo == geo_classic  # incl. bit-exact widths
     bare = CDict()

@@ -178,6 +178,41 @@ def test_tampered_u_rejected():
     assert p.unlock(b"") is False
 
 
+@pytest.mark.parametrize("n", [0, 10, 20, 31, 32])
+def test_short_ue_is_a_typed_error(n):
+    """ISO 32000-2 Table 21 fixes /UE at 32 bytes. A shorter string is
+    a broken document (EParseError), never a ValueError from the AES
+    primitive. The cut hex is padded with spaces so no offset moves."""
+    import re
+
+    payload = build_pdf("1", _spans("1"), "encrypted")
+    m = re.search(rb"/UE\s*<([0-9A-Fa-f]{64})>", payload)
+    assert m is not None and b"/R 6" in payload
+    cut = m.group(1)[: 2 * n].ljust(64, b" ")
+    payload = payload[: m.start(1)] + cut + payload[m.end(1):]
+    status, err, spans = extract_spans(payload)
+    st, merr, _meta = extract_meta(payload)
+    if n == 32:
+        assert (status, st) == ("ok", "ok"), (err, merr)
+        assert spans == _expected("1")
+    else:
+        assert (status, err) == ("error", "EParseError: /UE shorter than 32 bytes")
+        assert (st, merr) == ("error", "EParseError: /UE shorter than 32 bytes")
+
+
+def test_short_oe_is_a_typed_error():
+    from pdfspark.kernel.crypt import build_handler_v5
+    from pdfspark.kernel.errors import EParseError
+
+    h = build_handler_v5(owner_pwd=b"own", user_pwd=b"", p=-44, seed=b"s1")
+    h2 = StandardSecurityHandler(
+        v=5, r=6, o=h.o, u=h.u, p=-44, file_id0=b"", length_bits=256,
+        stm_cfm="AESV3", str_cfm="AESV3", oe=h.oe[:20], ue=h.ue,
+    )
+    with pytest.raises(EParseError, match="/OE shorter than 32 bytes"):
+        h2.authenticate(b"own")
+
+
 def test_aes256_r5_roundtrip_and_reject():
     """R5 (the withdrawn AES-256 interim revision, single SHA-256
     hash): empty-password docs decrypt transparently in both layouts;

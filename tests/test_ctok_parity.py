@@ -428,7 +428,7 @@ def test_interpreter_parity_whole_documents():
     helpers at once)."""
     from pdfspark.codec import build_pdf, synth_spans_py, variant_for
     from pdfspark.kernel import textops
-    from pdfspark.kernel.extract import extract_spans_geo
+    from pdfspark.kernel.extract import extract_spans_doc
 
     if textops._CTOK_INTERP is None:
         pytest.skip("C interpreter not available")
@@ -445,11 +445,10 @@ def test_interpreter_parity_whole_documents():
             variant_for(i, mode) if mode in ("mixed", "filters_rotate") else mode
         )
         payload = build_pdf(doc_id, synth_spans_py(doc_id, text), variant)
-        c = extract_spans_geo(payload)
+        c = extract_spans_doc(payload, geometry=True)
         with _force_python():
-            py = extract_spans_geo(payload)
-        assert c[0] == py[0] == "ok", (variant, c[1], py[1])
-        assert _spans_bits(c[2]) == _spans_bits(py[2]), variant
+            py = extract_spans_doc(payload, geometry=True)
+        assert _spans_bits(c) == _spans_bits(py), variant
 
 
 def _interp_both(payload: bytes, tj_kerning: bool = False):

@@ -1,7 +1,9 @@
 """Corruption-robustness tests: at 10^12 documents every corruption
-WILL occur; the PERMISSIVE contract (§2.8) is that extract_spans
-always returns (status, error, spans) — it may reject, it must never
-raise or hang. Seeded mutations + hypothesis-driven token fuzz."""
+WILL occur; the contract (§2.8) is that a corrupt document fails only
+as the typed EParseError, which extract_spans returns as
+(status='error', error, []) — it may reject, it must never raise or
+hang. Any other exception is a kernel bug, escapes the wrapper and
+fails the test. Seeded mutations + hypothesis-driven token fuzz."""
 
 from __future__ import annotations
 
@@ -64,7 +66,8 @@ def test_mutation_never_raises(base):
 
 def test_nested_depth_bomb_rejected():
     # deeply nested arrays inside an object must not blow the stack
-    # into a hard crash — RecursionError is caught by the wrapper
+    # into a hard crash — the COS parser is iterative, so the bomb
+    # parses or fails as EParseError; a RecursionError would escape
     bomb = BASE.replace(b"/Keywords", b"/K " + b"[" * 4000 + b"]" * 4000 + b" /Keywords", 1)
     status, err, spans = extract_spans(bomb)
     assert status in ("ok", "error")
@@ -126,13 +129,41 @@ def test_r4_variant_mutations_never_raise(variant):
         "fz" + variant, synth_spans_py("fz" + variant, "fuzz seed " * 25),
         variant,
     )
-    rng = random.Random(hash(variant) & 0xFFFF)
+    rng = random.Random(zlib.crc32(variant.encode()) & 0xFFFF)
     for _ in range(150):
         mutated = _mutate(rng, base)
         status, err, spans = extract_spans(mutated)
         assert status in ("ok", "error")
         if status == "error":
             assert spans == [] and err
+
+
+@pytest.mark.parametrize(
+    "variant, method",
+    [
+        ("attachments", "embedded_files"),
+        ("navigation", "outlines"),
+        ("navigation", "link_uris"),
+        ("acroform", "form_fields"),
+    ],
+)
+def test_document_walk_mutations_fail_typed(variant, method):
+    """The per_doc stages that walk the document model directly (no
+    status wrapper) must fail a corrupt document only with
+    EParseError, which per_doc turns into zero rows; anything else
+    would fail the task."""
+    from pdfspark.kernel import parse_document
+
+    base = build_pdf(
+        "fw" + variant, synth_spans_py("fw" + variant, "walk seed " * 25),
+        variant,
+    )
+    rng = random.Random(zlib.crc32(method.encode()))
+    for _ in range(150):
+        try:
+            getattr(parse_document(_mutate(rng, base)), method)()
+        except EParseError:
+            pass
 
 
 @pytest.mark.parametrize("variant", ("classic", "objstream", "encrypted"))
@@ -149,7 +180,7 @@ def test_lenient_reconstruction_mutations_never_raise(variant):
         variant,
     )
     cut = base[: base.rfind(b"startxref")] + b"%%EOF\n"
-    rng = random.Random(0xF00D + hash(variant) % 997)
+    rng = random.Random(0xF00D + zlib.crc32(variant.encode()) % 997)
     for seed_doc in (base, cut):
         for _ in range(120):
             mutated = _mutate(rng, seed_doc)
@@ -221,3 +252,23 @@ def test_salvaged_flag_discriminates_recovery_paths():
     broken = clean[: clean.rfind(b"startxref")] + b"%%EOF\n"
     status2, err2, spans2 = extract_spans_fuzz(broken)
     assert (status2, err2) == ("salvaged", "") and spans2 == spans
+
+
+def test_status_wrappers_let_kernel_bugs_through(monkeypatch):
+    """Only EParseError is a broken document. Any other exception in
+    the kernel is a bug: the status wrappers must let it through, so
+    engine.per_doc fails the task instead of writing an error row."""
+    from pdfspark.kernel import extract as X
+    from pdfspark.kernel.docmodel import Document
+
+    def bug(*_a, **_k):
+        raise TypeError("injected")
+
+    monkeypatch.setattr(X, "interpret_content", bug)
+    monkeypatch.setattr(Document, "info_fields", bug)
+    with pytest.raises(TypeError, match="injected"):
+        extract_spans(BASE)
+    with pytest.raises(TypeError, match="injected"):
+        X.extract_spans_fuzz(BASE)
+    with pytest.raises(TypeError, match="injected"):
+        extract_meta(BASE)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from conftest import ref_bytes
 from pdfspark.codec import build_pdf, synth_spans_py
-from pdfspark.kernel import extract_spans_geo
+from pdfspark.kernel import extract_spans_doc
 
 
 def _expected_geo(n_spans: int, tlens=None, nsps=None):
@@ -54,8 +54,7 @@ def test_generator_layout_geometry_exact():
     text = "y" * (80 * 11)  # 11 chunks -> 11 + 3 = 14 spans, 3 pages
     spans = synth_spans_py("geo1", text)
     payload = build_pdf("geo1", spans, "classic")
-    st, err, got = extract_spans_geo(payload)
-    assert st == "ok", err
+    got = extract_spans_doc(payload, geometry=True)
     assert [(g[0], g[3], g[4], g[5], g[6], g[7]) for g in got] == _expected_geo(
         len(spans), _tlens(spans)
     )
@@ -69,9 +68,8 @@ def test_tj_kerning_flag_widens_form1_spans():
     text = "abcd efgh " * 24  # 3 chunks, all forms exercised
     spans = synth_spans_py("kern1", text)
     payload = build_pdf("kern1", spans, "classic")
-    st0, e0, plain = extract_spans_geo(payload)
-    st1, e1, kerned = extract_spans_geo(payload, tj_kerning=True)
-    assert st0 == st1 == "ok", (e0, e1)
+    plain = extract_spans_doc(payload, geometry=True)
+    kerned = extract_spans_doc(payload, geometry=True, tj_kerning=True)
     assert len(plain) == len(kerned)
     tlens = _tlens(spans)
     saw_kern = 0
@@ -93,8 +91,7 @@ def test_word_spacing_applies_to_spaces():
     text = ("word gap " * 100)[: 80 * 6]  # spaces in every chunk
     spans = synth_spans_py("geo3", text)
     payload = build_pdf("geo3", spans, "classic")
-    st, err, got = extract_spans_geo(payload)
-    assert st == "ok", err
+    got = extract_spans_doc(payload, geometry=True)
     assert [(g[0], g[3], g[4], g[5], g[6], g[7]) for g in got] == _expected_geo(
         len(spans), _tlens(spans), _nsps(spans)
     )
@@ -105,15 +102,13 @@ def test_geometry_through_encryption_and_filters():
     spans = synth_spans_py("geo2", text)
     exp = _expected_geo(len(spans), _tlens(spans))
     for variant in ("encrypted", "filters:a85+flate", "objstream", "incremental"):
-        st, err, got = extract_spans_geo(build_pdf("geo2", spans, variant))
-        assert st == "ok", (variant, err)
+        got = extract_spans_doc(build_pdf("geo2", spans, variant), geometry=True)
         assert [(g[0], g[3], g[4], g[5], g[6], g[7]) for g in got] == exp, variant
 
 
 def test_real_pdfs_have_finite_positions():
     for fname in ("loremipsum2.pdf", "vrml.pdf", "24c16.pdf"):
-        st, err, got = extract_spans_geo(ref_bytes(fname))
-        assert st == "ok", (fname, err)
+        got = extract_spans_doc(ref_bytes(fname), geometry=True)
         placed = [g for g in got if g[4] is not None and g[5] is not None]
         # every span that showed text must have a projected origin
         assert placed, fname

@@ -399,6 +399,19 @@ def test_corpus_curate_reasons(spark, tmp_path):
                    4: "too_short", 5: "low_diversity"}
 
 
+def test_dedup_clusters_final_join_broadcasts_the_forest(spark):
+    """The labels join broadcasts the star forest (at most one row per
+    candidate document): the final plan shuffles neither the corpus
+    scan nor the forest."""
+    from test_scale import _plan_nodes
+
+    df = dedup.dedup_clusters(spark, SF_SMOKE)
+    df.collect()  # run it, so the adaptive plan is the final one
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    assert "BroadcastHashJoinExec" in nodes, nodes
+    assert "ShuffleExchangeExec" not in nodes, nodes
+
+
 def test_cc_star_chain_logarithmic_rounds(spark):
     """Adversarial-diameter CC (r3): a 1000-node PATH graph needs
     O(diameter)=999 propagation rounds but the large-star/small-star
@@ -970,6 +983,15 @@ def test_png_decode_all_filters_and_generator():
     exp = tuple(int(img.reshape(ht, w, ch)[:, :, k].sum() // n) for k in range(3))
     assert (m["mean_r"], m["mean_g"], m["mean_b"]) == exp
     assert (m["width"], m["height"]) == (w, ht)
+
+    # an unknown filter byte is an unsupported image, never the kernel's
+    # EParseError (per_doc would drop the document's row)
+    bad = bytearray(scan)
+    bad[(w * ch + 1) * 2] = 7
+    png = png.replace(chunk(b"IDAT", zlib.compress(bytes(scan))),
+                      chunk(b"IDAT", zlib.compress(bytes(bad))))
+    with pytest.raises(NotImplementedError, match="PNG filter type 7"):
+        multimodal._png_decode(png)
 
 
 def test_media_wav_generator_decodes_exactly():

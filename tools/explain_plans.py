@@ -13,6 +13,7 @@ has it, and the tool names it on stdout.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -124,7 +125,10 @@ COMMENTARY = {
         "an eager localCheckpoint. The plan shown is the FINAL labels "
         "projection — the corpus scan joined to the converged star "
         "forest (a scan of the checkpointed edges), so the lineage "
-        "shown is flat instead of a multi-round join tree. Running "
+        "shown is flat instead of a multi-round join tree. The forest "
+        "has at most one row per candidate document and is broadcast: "
+        "the final plan has no Exchange, and the corpus scan is never "
+        "shuffled for the labels join. Running "
         "the query first does not change that: the rounds, the MinHash "
         "pairs and their Exchanges run before the eager checkpoints, "
         "and only what follows them shows here."
@@ -315,15 +319,8 @@ def main() -> None:
             if (
                 s.startswith(("*", "+", ":", "AdaptiveSparkPlan", "=="))
                 or prev_was_header  # the root operator of a non-AQE plan
-                or any(
-                    k in s
-                    for k in (
-                        "ReadSchema",
-                        "PushedFilters",
-                        "Location",
-                        "(1) Scan",
-                    )
-                )
+                or re.match(r"\(\d+\) Scan ", s)  # every scan's header
+                or any(k in s for k in ("ReadSchema", "PushedFilters", "Location"))
             ):
                 keep.append(ln)
             prev_was_header = s == "== Physical Plan =="

@@ -2,7 +2,8 @@
 
 Builds the mixed-variant profile corpus (300 docs, 50-550 chars —
 the same shape BENCH/BASELINE.md's kernel table quotes), then times
-`extract_spans` end-to-end and prints a cProfile breakdown. No Spark:
+`extract_spans_doc` end-to-end (``--geo``: geometry-widened spans; a
+broken document raises) and prints a cProfile breakdown. No Spark:
 this isolates docs/s/core, the quantity that scales linearly with
 executors at 100 TB.
 
@@ -17,11 +18,12 @@ import hashlib
 import pstats
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, ".")
 
 from pdfspark.codec import build_pdf, synth_spans_py, variant_for  # noqa: E402
-from pdfspark.kernel.extract import extract_spans, extract_spans_geo  # noqa: E402
+from pdfspark.kernel.extract import extract_spans_doc  # noqa: E402
 
 
 def corpus(n_docs: int) -> list[bytes]:
@@ -49,16 +51,10 @@ def main() -> None:
     args = ap.parse_args()
 
     docs = corpus(args.docs)
-    fn = extract_spans_geo if args.geo else extract_spans
-    n_spans = 0
+    fn = partial(extract_spans_doc, geometry=args.geo)
 
     def run() -> int:
-        total = 0
-        for d in docs:
-            status, err, spans = fn(d)
-            assert status == "ok", err
-            total += len(spans)
-        return total
+        return sum(len(fn(d)) for d in docs)
 
     n_spans = run()  # warm (font caches are per-call, but C ext loads)
     best = min(
