@@ -124,6 +124,48 @@ name_token(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos)
     }
 }
 
+/* One number token d[s:p] → int or float. An integer beyond the
+ * signed 64-bit range is a malformed document (EParseError), as a real
+ * beyond the double range is (PyOS_string_to_double): the kernel reads
+ * integers as C long long / Py_ssize_t and converts them to double. */
+static PyObject *
+number_value_c(const unsigned char *d, Py_ssize_t s, Py_ssize_t p,
+               int isfloat)
+{
+    char buf[64];
+    char *heap = NULL, *dst = buf;
+    Py_ssize_t len = p - s;
+    PyObject *v;
+    if (!isfloat && len <= 18) /* fits a long long incl. sign */
+        return PyLong_FromLongLong(strtoll((const char *)d + s, NULL, 10));
+    if (len >= (Py_ssize_t)sizeof(buf)) {
+        heap = (char *)PyMem_Malloc(len + 1);
+        if (heap == NULL)
+            return PyErr_NoMemory();
+        dst = heap;
+    }
+    memcpy(dst, d + s, len);
+    dst[len] = 0;
+    if (isfloat) {
+        double dv = PyOS_string_to_double(dst, NULL, S.eparse);
+        v = (dv == -1.0 && PyErr_Occurred()) ? NULL : PyFloat_FromDouble(dv);
+    } else {
+        v = PyLong_FromString(dst, NULL, 10);
+        if (v != NULL) {
+            int ovf;
+            PyLong_AsLongLongAndOverflow(v, &ovf);
+            if (ovf) {
+                Py_DECREF(v);
+                v = NULL;
+                PyErr_Format(S.eparse, "integer out of range: '%.200s'", dst);
+            }
+        }
+    }
+    if (heap)
+        PyMem_Free(heap);
+    return v;
+}
+
 /* number with the terminator rule (cos._TOK_RE number alternative /
  * TestCOSNumber.java:152-274 semantics) */
 static PyObject *
@@ -166,51 +208,7 @@ number_token(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos)
         return NULL;
     }
     *pos = p;
-    if (!isfloat) {
-        if (p - s <= 18) { /* fits a long long incl. sign */
-            long long v = strtoll((const char *)d + s, NULL, 10);
-            return PyLong_FromLongLong(v);
-        } else {
-            char buf[64];
-            char *heap = NULL;
-            const char *src = (const char *)d + s;
-            Py_ssize_t len = p - s;
-            PyObject *out;
-            char *dst = buf;
-            if (len >= (Py_ssize_t)sizeof(buf)) {
-                heap = (char *)PyMem_Malloc(len + 1);
-                if (heap == NULL)
-                    return PyErr_NoMemory();
-                dst = heap;
-            }
-            memcpy(dst, src, len);
-            dst[len] = 0;
-            out = PyLong_FromString(dst, NULL, 10);
-            if (heap)
-                PyMem_Free(heap);
-            return out;
-        }
-    } else {
-        char buf[64];
-        char *heap = NULL;
-        Py_ssize_t len = p - s;
-        char *dst = buf;
-        double val;
-        if (len >= (Py_ssize_t)sizeof(buf)) {
-            heap = (char *)PyMem_Malloc(len + 1);
-            if (heap == NULL)
-                return PyErr_NoMemory();
-            dst = heap;
-        }
-        memcpy(dst, (const char *)d + s, len);
-        dst[len] = 0;
-        val = PyOS_string_to_double(dst, NULL, S.eparse);
-        if (heap)
-            PyMem_Free(heap);
-        if (val == -1.0 && PyErr_Occurred())
-            return NULL;
-        return PyFloat_FromDouble(val);
-    }
+    return number_value_c(d, s, p, isfloat);
 }
 
 /* digit-led dispatch: speculative `id gen R` (T9 fast path, mirrors
@@ -557,7 +555,7 @@ stream_followup(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos,
         Py_DECREF(length);
         if (lv == -1 && PyErr_Occurred())
             return NULL;
-        if (lv < 0 || p + lv > n) {
+        if (lv < 0 || lv > n - p) {
             PyErr_SetString(S.eparse, "stream body beyond end of data");
             return NULL;
         }
@@ -940,34 +938,7 @@ ctok_lex_content(PyObject *self, PyObject *args)
                         isfloat = 1;
                         break;
                     }
-                if (!isfloat && p - s <= 18) {
-                    v = PyLong_FromLongLong(
-                        strtoll((const char *)d + s, NULL, 10));
-                } else {
-                    char buf[64];
-                    char *heap = NULL, *dst = buf;
-                    Py_ssize_t len = p - s;
-                    if (len >= (Py_ssize_t)sizeof(buf)) {
-                        heap = (char *)PyMem_Malloc(len + 1);
-                        if (heap == NULL) {
-                            PyErr_NoMemory();
-                            goto fail;
-                        }
-                        dst = heap;
-                    }
-                    memcpy(dst, d + s, len);
-                    dst[len] = 0;
-                    if (isfloat) {
-                        double dv =
-                            PyOS_string_to_double(dst, NULL, S.eparse);
-                        v = (dv == -1.0 && PyErr_Occurred())
-                                ? NULL
-                                : PyFloat_FromDouble(dv);
-                    } else
-                        v = PyLong_FromString(dst, NULL, 10);
-                    if (heap)
-                        PyMem_Free(heap);
-                }
+                v = number_value_c(d, s, p, isfloat);
                 if (v == NULL)
                     goto fail;
                 if (PyList_Append(operands, v) < 0) {
@@ -1569,8 +1540,8 @@ ctok_produce(PyObject *self, PyObject *args)
  * (offset, len) views into the OUTPUT buffer: each new entry is
  * prev ‖ first-byte-of-current, which is exactly the contiguous byte
  * run starting at prev's last emission offset. A code referencing a
- * missing entry with no prev raises IndexError exactly like the
- * Python list lookup. */
+ * missing entry with no prev raises the same EParseError as the
+ * Python twin. */
 static PyObject *
 ctok_lzw_decode(PyObject *self, PyObject *args)
 {
@@ -1635,7 +1606,7 @@ ctok_lzw_decode(PyObject *self, PyObject *args)
             if (prev_off < 0 && prev_len == 0 && code >= 256) {
                 /* prev is None and code isn't a literal: the Python
                  * path indexes table[code] — 256/257 are the empty
-                 * placeholders, beyond is an IndexError */
+                 * placeholders, beyond is a broken stream */
                 if (code < table_len) {
                     if (code < 258) { /* b"" placeholder: emits nothing */
                         prev_off = out_len;
@@ -1645,8 +1616,7 @@ ctok_lzw_decode(PyObject *self, PyObject *args)
                     /* unreachable: table_len>258 implies prev set */
                 }
                 PyMem_Free(out);
-                PyErr_SetString(PyExc_IndexError,
-                                "list index out of range");
+                PyErr_Format(S.eparse, "LZW code %ld not in table", code);
                 return NULL;
             }
             if (prev_off < 0 && prev_len == 0 && table_len == 258 &&
@@ -2213,7 +2183,7 @@ xresolver_call(PyObject *selfo, PyObject *args, PyObject *kw)
     cont = PyLong_AsLongLong(a);
     Py_DECREF(a);
     if (cont == -1 && PyErr_Occurred())
-        goto fail_cx;
+        goto long_cx;
     if (cont >= 0) /* compressed member -> object-stream path */
         goto slow_cx;
     a = PyObject_GetAttr(e, S.str_gen);
@@ -2222,10 +2192,10 @@ xresolver_call(PyObject *selfo, PyObject *args, PyObject *kw)
     egen = PyLong_AsLongLong(a);
     Py_DECREF(a);
     if (egen == -1 && PyErr_Occurred())
-        goto fail_cx;
+        goto long_cx;
     rgen = PyLong_AsLongLong(gen_o);
     if (rgen == -1 && PyErr_Occurred())
-        goto fail_cx;
+        goto long_cx;
     if (egen != rgen) /* gen mismatch -> soft assert in Python */
         goto slow_cx;
     a = PyObject_GetAttr(e, S.str_offset);
@@ -2234,10 +2204,10 @@ xresolver_call(PyObject *selfo, PyObject *args, PyObject *kw)
     off = PyLong_AsLongLong(a);
     Py_DECREF(a);
     if (off == -1 && PyErr_Occurred())
-        goto fail_cx;
+        goto long_cx;
     numll = PyLong_AsLongLong(num_o);
     if (numll == -1 && PyErr_Occurred())
-        goto fail_cx;
+        goto long_cx;
     v = parse_indirect_core(
         (const unsigned char *)PyBytes_AS_STRING(self->data),
         PyBytes_GET_SIZE(self->data), (Py_ssize_t)off, numll, selfo,
@@ -2255,6 +2225,10 @@ xresolver_call(PyObject *selfo, PyObject *args, PyObject *kw)
     Py_DECREF(cache);
     Py_DECREF(xref);
     return v;
+long_cx: /* an entry field beyond long long: the Python path decides */
+    if (!PyErr_ExceptionMatches(PyExc_OverflowError))
+        goto fail_cx;
+    PyErr_Clear();
 slow_cx:
     Py_DECREF(cache);
     Py_DECREF(xref);
@@ -3259,34 +3233,7 @@ ctok_interpret_content(PyObject *self, PyObject *args)
                         isfloat = 1;
                         break;
                     }
-                if (!isfloat && p - s <= 18) {
-                    v2 = PyLong_FromLongLong(
-                        strtoll((const char *)d + s, NULL, 10));
-                } else {
-                    char buf[64];
-                    char *heap = NULL, *dst = buf;
-                    Py_ssize_t len = p - s;
-                    if (len >= (Py_ssize_t)sizeof(buf)) {
-                        heap = (char *)PyMem_Malloc(len + 1);
-                        if (heap == NULL) {
-                            PyErr_NoMemory();
-                            goto fail;
-                        }
-                        dst = heap;
-                    }
-                    memcpy(dst, d + s, len);
-                    dst[len] = 0;
-                    if (isfloat) {
-                        double dv =
-                            PyOS_string_to_double(dst, NULL, S.eparse);
-                        v2 = (dv == -1.0 && PyErr_Occurred())
-                                 ? NULL
-                                 : PyFloat_FromDouble(dv);
-                    } else
-                        v2 = PyLong_FromString(dst, NULL, 10);
-                    if (heap)
-                        PyMem_Free(heap);
-                }
+                v2 = number_value_c(d, s, p, isfloat);
                 if (v2 == NULL)
                     goto fail;
                 if (PyList_Append(operands, v2) < 0) {

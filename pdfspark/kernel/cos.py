@@ -177,7 +177,8 @@ class CDict(dict):
         if isinstance(v, int):
             return v
         if isinstance(v, float):
-            return int(v)
+            # a real beyond int64 is no usable integer either
+            return int(v) if -_I64 <= v < _I64 else default
         return default
 
     def get_str(self, key, default="", resolver=None):
@@ -455,6 +456,29 @@ _TOK_RE = re.compile(
 )
 
 
+def wide_number(num: bytes) -> Union[int, float]:
+    """A number token longer than 18 bytes → int or float (the short
+    ones cannot leave range). An integer beyond the signed 64-bit range
+    or a real beyond the double range is a malformed document: the
+    kernel reads integers as C long long / Py_ssize_t and converts them
+    to double (twin of _ctok's number_value_c)."""
+    if b"." in num:
+        v = float(num)
+        if v in (_INF, -_INF):
+            raise EParseError(
+                "value too large to convert to float: '%.200s'" % num.decode()
+            )
+        return v
+    v = int(num)
+    if not -_I64 <= v < _I64:
+        raise EParseError("integer out of range: '%.200s'" % num.decode())
+    return v
+
+
+_INF = float("inf")
+_I64 = 1 << 63
+
+
 def _name_from_run(run: bytes) -> Name:
     """name-run bytes (sans '/') → interned Name, #xx escapes decoded
     (same semantics as parse_name; split out for the scanner)."""
@@ -575,7 +599,10 @@ def parse_object(r: Raw, resolver: Optional[Resolver] = None) -> COSValue:
             # value position — branches ordered by token frequency
             if tok == 8:  # number
                 num = m.group(8)
-                v = float(num) if b"." in num else int(num)
+                if len(num) > 18:
+                    v = wide_number(num)
+                else:
+                    v = float(num) if b"." in num else int(num)
                 pos = tend
             elif tok == 5:  # name
                 run = m.group(5)

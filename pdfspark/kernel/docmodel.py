@@ -120,22 +120,22 @@ def parse_pdf_date(s: str) -> Optional[datetime]:
     m = _PDF_DATE.match(raw) if raw.startswith(b"D:") else _PDF_DATE.fullmatch(raw)
     if m and m.group("Y"):
         g = lambda k, d: int(m.group(k)) if m.group(k) else d
+        tz = timezone.utc  # Z, z or no zone
         try:
             dt = datetime(
                 g("Y", 1970), g("M", 1), g("D", 1), g("h", 0), g("m", 0), g("s", 0)
             )
-        except ValueError:
-            dt = None
-        if dt is not None:
             tzc = m.group("tz")
             if tzc in (b"+", b"-"):
                 off = timedelta(hours=g("th", 0), minutes=g("tm", 0))
-                if tzc == b"-":
-                    off = -off
-                return dt.replace(tzinfo=timezone(off))
-            if tzc in (b"Z", b"z"):
-                return dt.replace(tzinfo=timezone.utc)
-            return dt.replace(tzinfo=timezone.utc)
+                tz = timezone(-off if tzc == b"-" else off)
+            dt = dt.replace(tzinfo=tz)
+            # an offset of 24 h or more, or one that shifts the UTC
+            # instant out of years 1..9999, is no date either
+            dt.astimezone(timezone.utc)
+            return dt
+        except (ValueError, OverflowError):
+            pass
     for fmt in _FALLBACK_FORMATS:
         try:
             return datetime.strptime(s.strip(), fmt).replace(tzinfo=timezone.utc)

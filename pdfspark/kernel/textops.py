@@ -34,7 +34,9 @@ from .cos import (
     CStream,
     Name,
     Resolver,
+    _I64,
     parse_object,
+    wide_number,
 )
 from .encodings import WINANSI_BYTE_TO_CHAR
 from .errors import EParseError
@@ -445,7 +447,7 @@ class Font:
                     for x in ws:
                         v = fdict.deref(x, resolver)
                         if isinstance(v, (int, float)) and not isinstance(v, bool):
-                            vals.append(int(v))
+                            vals.append(_width(v))
                     if vals:
                         self.widths = vals
                         self.first_char = fdict.get_int("FirstChar", 0, resolver)
@@ -457,7 +459,7 @@ class Font:
                 for x in ws:
                     v = fdict.deref(x, resolver)
                     if isinstance(v, (int, float)) and not isinstance(v, bool):
-                        vals.append(int(v))
+                        vals.append(_width(v))
                 if vals:
                     self.widths = vals
                     self.first_char = fdict.get_int("FirstChar", 0, resolver)
@@ -881,6 +883,15 @@ class Font:
         return w * t3 if t3 is not None else w
 
 
+def _width(v) -> int:
+    """One /Widths entry as an int. The per-byte width tables are
+    int64 arrays, so a width beyond that range is a broken font."""
+    w = int(v)
+    if not -_I64 <= w < _I64:
+        raise EParseError(f"font width out of range: {v!r}")
+    return w
+
+
 _FAST_SPEC_MEMO: dict = {}
 
 
@@ -995,7 +1006,10 @@ def _lex_content_py(data: bytes):
         pos = mend
         if lg == "num":
             num = m.group("num")
-            operands.append(float(num) if b"." in num else int(num))
+            if len(num) > 18:
+                operands.append(wide_number(num))
+            else:
+                operands.append(float(num) if b"." in num else int(num))
             continue
         if lg == "name":
             nm = m.group("name")

@@ -727,6 +727,8 @@ class Parser:
         to the same salvage scan the Python path uses."""
         r = self.raw
         d = r.data
+        if not 0 <= e.offset <= len(d):  # beyond the file: stale
+            return self._parse_indirect_salvage(e)
         if _CTOK_PARSE_INDIRECT is not None and d.__class__ is bytes:
             st = r.settings
             v = _CTOK_PARSE_INDIRECT(
@@ -840,6 +842,10 @@ class Parser:
                 f"index {e.index_in_container} out of range in objstm {e.container}"
             )
         oid, off = pairs[e.index_in_container]
+        if not 0 <= off <= len(decoded):
+            raise EParseError(
+                f"member offset {off} beyond objstm {e.container}"
+            )
         sub = Raw(decoded, self.settings)
         sub.pos = off
         return parse_object(sub, self._resolve)

@@ -17,6 +17,32 @@ def ref_bytes(name: str) -> bytes:
         return f.read()
 
 
+def one_page_pdf(content: bytes, filters: bytes = b"") -> bytes:
+    """A classic one-page PDF whose only content stream is ``content``
+    (already encoded for ``filters``), with exact xref offsets."""
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
+        b" /Contents 4 0 R >>",
+        b"<< /Length %d %s>>\nstream\n%s\nendstream"
+        % (len(content), filters, content),
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(objs, 1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n%s\nendobj\n" % (num, body)
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    for off in offsets:
+        out += b"%010d 00000 n \n" % off
+    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, xref,
+    )
+    return bytes(out)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pdfspark.session import get_spark

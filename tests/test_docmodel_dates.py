@@ -34,6 +34,10 @@ from pdfspark.kernel.docmodel import Rect, format_pdf_date, parse_pdf_date
         ("04/15/2005 10:30:00", datetime(2005, 4, 15, 10, 30, 0, tzinfo=timezone.utc)),
         ("garbage", None),
         ("", None),
+        # a zone of 24 h or more, or one that moves the UTC instant
+        # before year 1, is no date
+        ("D:20240108042833+99'00'", None),
+        ("D:00010101000000+05'00'", None),
     ],
 )
 def test_parse_pdf_date(src, expected):

@@ -6,11 +6,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, one_page_pdf
 from pdfspark.codec import synth_spans_py
 from pdfspark.engine import (
     EXTRACT_SCHEMA,
     extract,
+    extract_flat,
+    extract_geometry,
     generate_payloads,
     load_documents,
     metadata_rows,
@@ -110,6 +112,26 @@ def test_per_doc_other_exception_fails_the_task(spark):
 
     with pytest.raises(Exception, match="TypeError"):
         per_doc(_per_doc_frame(spark), fn, "doc_id bigint, s string").collect()
+
+
+def test_flat_stages_drop_malformed_numbers_as_broken_documents(spark):
+    """extract_flat and extract_geometry call the raising kernel
+    directly: an ASCII85 group above 2^32-1 or an operand beyond the
+    64-bit range must give that document zero rows (EParseError), not
+    a failed task, while the good document keeps its span."""
+    from pdfspark.kernel.filters import a85_encode
+
+    a85 = b"/Filter /ASCII85Decode "
+    docs = [
+        (1, one_page_pdf(a85_encode(b"BT (fine) Tj ET") + b"~>", a85)),
+        (2, one_page_pdf(b"uuuuu~>", a85)),
+        (3, one_page_pdf(b"BT " + b"9" * 400 + b" 0 Td (m) Tj ET")),
+    ]
+    frame = spark.createDataFrame(docs, "doc_id bigint, payload binary")
+    assert [(r.doc_id, r.text) for r in extract_flat(frame).collect()] == [
+        (1, "fine")
+    ]
+    assert [r.doc_id for r in extract_geometry(frame).collect()] == [1]
 
 
 def test_per_doc_column_names_from_nested_schema(spark):

@@ -8,12 +8,14 @@ fails the test. Seeded mutations + hypothesis-driven token fuzz."""
 from __future__ import annotations
 
 import random
+import re
 import zlib
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import one_page_pdf
 from pdfspark.codec import build_pdf, synth_spans_py
 from pdfspark.kernel import extract_meta, extract_spans
 from pdfspark.kernel.cos import parse_object
@@ -100,12 +102,21 @@ def test_zlib_garbage_stream():
 @settings(max_examples=300, deadline=None, derandomize=True)
 def test_parse_object_total(data):
     """The tokenizer is total: any byte string either parses to a
-    value or raises EParseError/RecursionError — no other exception
-    type escapes (hypothesis sweep)."""
+    value or raises EParseError — no other exception type escapes
+    (hypothesis sweep; the parser keeps an explicit stack, so deep
+    nesting is no RecursionError either)."""
     try:
         parse_object(Raw(data))
-    except (EParseError, RecursionError):
+    except EParseError:
         pass
+
+
+def test_parse_object_deep_nesting_is_not_recursion():
+    for bomb in (b"[" * 100_000, b"<< /A " * 50_000):
+        try:
+            parse_object(Raw(bomb))
+        except EParseError:
+            pass
 
 
 @given(st.binary(max_size=2048))
@@ -272,3 +283,73 @@ def test_status_wrappers_let_kernel_bugs_through(monkeypatch):
         X.extract_spans_fuzz(BASE)
     with pytest.raises(TypeError, match="injected"):
         extract_meta(BASE)
+
+
+def test_a85_group_overflow_is_a_broken_document():
+    """An ASCII85 group above 2^32-1 (``uuuuu``) is malformed input:
+    EParseError, so extract_spans reports the document as an error
+    row instead of letting an OverflowError fail the task."""
+    from pdfspark.kernel.filters import a85_encode
+
+    a85 = b"/Filter /ASCII85Decode "
+    good = one_page_pdf(a85_encode(b"BT (ok) Tj ET") + b"~>", a85)
+    status, err, spans = extract_spans(good)
+    assert status == "ok" and [s[1] for s in spans] == ["ok"]
+    for body in (b"uuuuu~>", b"uu~>", b"!!!!!uuuuu~>"):
+        status, err, spans = extract_spans(one_page_pdf(body, a85))
+        assert (status, err, spans) == (
+            "error", "EParseError: ascii85 group overflow", []
+        ), body
+
+
+@pytest.mark.parametrize(
+    "content",
+    [
+        b"BT " + b"9" * 400 + b" 0 Td (m) Tj ET",  # int beyond double
+        b"BT 9223372036854775808 0 Td (m) Tj ET",  # int beyond int64
+        b"BT " + b"9" * 400 + b".5 0 Td (m) Tj ET",  # real beyond double
+        b"q " + b"9" * 30 + b" 0 0 1 0 0 cm BT (m) Tj ET Q",
+    ],
+)
+def test_out_of_range_operand_is_a_broken_document(content):
+    status, err, spans = extract_spans(one_page_pdf(content))
+    assert status == "error" and err.startswith("EParseError:") and spans == []
+
+
+_NUMBER_TOKEN = re.compile(rb"(?<![\w.#/])-?\d+(?:\.\d*)?(?![\w.])")
+_OUT_OF_RANGE = (
+    b"9" * 400, b"-" + b"9" * 400, b"9" * 400 + b".5", b"1" + b"0" * 300 + b".0",
+    b"99999999999999999999", b"9223372036854775807", b"-9223372036854775808",
+)
+
+
+@pytest.mark.parametrize(
+    "variant", ("classic", "objstream", "filters:none", "cjk:embedded", "navigation")
+)
+def test_out_of_range_numbers_fail_typed(variant):
+    """Seeded sweep: one number token of a generated document (in a
+    dictionary, an xref row, a /Widths array, a content stream…) is
+    replaced by an integer or real no 64-bit reader holds. Every status
+    wrapper and document walk must still fail only as EParseError."""
+    from pdfspark.kernel import parse_document
+    from pdfspark.kernel.extract import extract_spans_doc, extract_spans_fuzz
+
+    base = build_pdf(
+        "nr" + variant, synth_spans_py("nr" + variant, "range seed " * 20), variant
+    )
+    rng = random.Random(zlib.crc32(variant.encode()))
+    tokens = [m.span() for m in _NUMBER_TOKEN.finditer(base)]
+    for i, j in rng.sample(tokens, min(len(tokens), 40)):
+        doc = base[:i] + rng.choice(_OUT_OF_RANGE) + base[j:]
+        assert extract_spans(doc)[0] in ("ok", "error")
+        assert extract_meta(doc)[0] in ("ok", "error")
+        assert extract_spans_fuzz(doc)[0] in ("ok", "salvaged", "error")
+        for walk in (
+            lambda: extract_spans_doc(doc, geometry=True, tj_kerning=True),
+            lambda: parse_document(doc).outlines(),
+            lambda: parse_document(doc).link_uris(),
+        ):
+            try:
+                walk()
+            except EParseError:
+                pass
