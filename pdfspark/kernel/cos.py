@@ -689,10 +689,8 @@ def _load_ctok():
 _CTOK = _load_ctok()
 
 # C serializer hook (produce() reads this at call time)
-_CTOK_PRODUCE = getattr(_CTOK, "produce", None) if _CTOK is not None else None
-_CTOK_SERIALIZE_OBJS = (
-    getattr(_CTOK, "serialize_objs", None) if _CTOK is not None else None
-)
+_CTOK_PRODUCE = getattr(_CTOK, "produce", None)
+_CTOK_SERIALIZE_OBJS = getattr(_CTOK, "serialize_objs", None)
 
 if _CTOK is not None:
     _ctok_parse = _CTOK.parse_object

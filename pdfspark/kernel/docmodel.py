@@ -16,16 +16,13 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 from typing import Optional
 
-from .cos import CDict, COS_NULL, CStream, CString, Name, Ref
-from .cos import _CTOK as _COS_CTOK
+from .cos import CDict, COS_NULL, CStream, CString, Name, Ref, _CTOK
 from .errors import EParseError
 from .xref import Parser
 
 # r7 C page-tree walk (docmodel.pages twin; falls back to the Python
 # DFS below — the semantic authority — when the extension is absent)
-_CTOK_WALK = (
-    getattr(_COS_CTOK, "walk_pages", None) if _COS_CTOK is not None else None
-)
+_CTOK_WALK = getattr(_CTOK, "walk_pages", None)
 
 
 # ---------------------------------------------------------------------------

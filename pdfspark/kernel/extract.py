@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from typing import Optional
 
+from .cos import CDict
 from .docmodel import Document
 from .errors import EParseError, ParserSettings
 from .filters import decode_stream
@@ -61,11 +62,16 @@ def extract_spans_doc(
     ``reading_order=True`` (r8): when the document is TAGGED
     (/StructTreeRoot present), spans are ordered by structure-tree
     traversal instead of raw content order — the §14.8 logical
-    reading order a multi-column page needs. Content is split into
-    marked-content sections (textops.split_marked_sections), each
-    interpreted independently, then sequenced by the (page, MCID)
-    walk; marked content the tree never references follows in
-    (page, MCID) order, and untagged content comes last in content
+    reading order a multi-column page needs. Each page is interpreted
+    once (text state carries across its marked content, §9.3.1) and
+    its span list is cut at the top-level BDC/BMC/EMC edges the
+    interpreter reports (``mark``): a span belongs to the section
+    open when it is emitted (a text span at its ET), nested marked
+    content stays in its outer section, a stray top-level EMC is
+    ignored and an unterminated section runs to the end of the page.
+    The pieces are grouped by (page, MCID) and sequenced by the
+    structure walk; marked content the tree never references follows
+    in (page, MCID) order, and untagged spans come last in content
     order. Untagged documents fall back to content order unchanged.
     """
     doc = parse_document(payload, settings)
@@ -78,53 +84,57 @@ def extract_spans_doc(
     resolver = doc.parser._resolve
     order = doc.struct_order() if reading_order else None
     font_cache: dict = {}
-    if order is not None:
-        from .textops import split_marked_sections
-
-        tagged: dict[tuple, list] = {}
-        untagged: list = []
-        for pidx, page in enumerate(doc.pages()):
-            if not page.contents:
-                continue
-            data = b"\n".join(
-                decode_stream(c.data, c.dict, resolver) for c in page.contents
-            )
-            for mcid, seg in split_marked_sections(data):
-                sps = interpret_content(
-                    seg, page.resources, resolver, doc_font_cache=font_cache,
-                    tj_kerning=tj_kerning, infer_spaces=infer_spaces,
-                )
-                if mcid is None:
-                    untagged.extend(sps)
-                else:
-                    tagged.setdefault((pidx, mcid), []).extend(sps)
-        ordered: list = []
-        emitted: set = set()
-        for key in order:  # the logical sequence (first ref wins)
-            if key in tagged and key not in emitted:
-                ordered.extend(tagged[key])
-                emitted.add(key)
-        for key in sorted(tagged):  # unreferenced marked content
-            if key not in emitted:
-                ordered.extend(tagged[key])
-        ordered.extend(untagged)
-        spans_seq = ordered
-    else:
-        spans_seq = []
-        for page in doc.pages():
-            if not page.contents:
-                continue
-            # §7.8.2: division between streams is only ever at a
-            # lexical token boundary → join with a newline
-            data = b"\n".join(
-                decode_stream(c.data, c.dict, resolver) for c in page.contents
-            )
+    spans_seq: list = []  # content order, or the untagged spans
+    tagged: dict[tuple, list] = {}  # (page, MCID) → spans
+    for pidx, page in enumerate(doc.pages()):
+        if not page.contents:
+            continue
+        # §7.8.2: division between streams is only ever at a
+        # lexical token boundary → join with a newline
+        data = b"\n".join(
+            decode_stream(c.data, c.dict, resolver) for c in page.contents
+        )
+        if order is None:
             spans_seq.extend(
                 interpret_content(
                     data, page.resources, resolver, doc_font_cache=font_cache,
                     tj_kerning=tj_kerning, infer_spaces=infer_spaces,
                 )
             )
+            continue
+        cuts = [(0, None)]  # (span index, MCID of the piece starting there)
+        depth = 0
+
+        def mark(op, props, n):
+            nonlocal depth
+            if op == b"EMC":
+                if depth:
+                    depth -= 1
+                    if not depth:
+                        cuts.append((n, None))
+                return
+            if not depth:
+                mcid = props.get("MCID") if isinstance(props, CDict) else None
+                cuts.append((n, mcid if type(mcid) is int else None))
+            depth += 1
+
+        sps = interpret_content(
+            data, page.resources, resolver, doc_font_cache=font_cache,
+            tj_kerning=tj_kerning, infer_spaces=infer_spaces, mark=mark,
+        )
+        cuts.append((len(sps), None))
+        for (a, mcid), (b, _) in zip(cuts, cuts[1:]):
+            if mcid is None:
+                spans_seq.extend(sps[a:b])
+            else:
+                tagged.setdefault((pidx, mcid), []).extend(sps[a:b])
+    if order is not None:
+        ordered: list = []
+        # the logical sequence (first ref wins), then unreferenced
+        # marked content
+        for key in dict.fromkeys([*order, *sorted(tagged)]):
+            ordered.extend(tagged.get(key, ()))
+        spans_seq = ordered + spans_seq
     out: list[tuple] = []
     for ordinal, sp in enumerate(spans_seq):
         if geometry:

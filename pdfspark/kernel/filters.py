@@ -20,7 +20,7 @@ import zlib
 
 import numpy as np
 
-from .cos import CDict, COS_NULL, Name, Resolver
+from .cos import CDict, COS_NULL, Name, Resolver, _CTOK
 from .errors import EParseError
 
 # ---------------------------------------------------------------------------
@@ -170,19 +170,8 @@ def predictor_encode_up(data: bytes, columns: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def _load_ctok_lzw(name: str):
-    try:
-        from .cos import _CTOK
-
-        if _CTOK is not None:
-            return getattr(_CTOK, name, None)
-    except Exception:  # pragma: no cover - env without gcc
-        pass
-    return None
-
-
-_CTOK_LZW = _load_ctok_lzw("lzw_decode")
-_CTOK_LZW_ENC = _load_ctok_lzw("lzw_encode")
+_CTOK_LZW = getattr(_CTOK, "lzw_decode", None)
+_CTOK_LZW_ENC = getattr(_CTOK, "lzw_encode", None)
 
 
 def lzw_decode(data: bytes) -> bytes:

@@ -34,6 +34,7 @@ from .cos import (
     CStream,
     Name,
     Resolver,
+    _CTOK,
     _I64,
     parse_object,
     wide_number,
@@ -1068,175 +1069,15 @@ def _lex_content_py(data: bytes):
         operands = []
 
 
-def _load_ct_lexer():
-    try:
-        from .cos import _CTOK
-
-        if _CTOK is not None and hasattr(_CTOK, "lex_content"):
-            return _CTOK.lex_content
-    except Exception:  # pragma: no cover - env without gcc
-        pass
-    return None
-
-
-_CTOK_LEX = _load_ct_lexer()
-
-
-def _load_ctok_attr(name: str):
-    try:
-        from .cos import _CTOK
-
-        if _CTOK is not None:
-            return getattr(_CTOK, name, None)
-    except Exception:  # pragma: no cover - env without gcc
-        pass
-    return None
-
-
 # fused C content-stream INTERPRETER (r4): lexing + the text-state
 # machine + all matrix/advance float math run in C; Python is entered
-# once per show string (Font.show_info) and once per Do (the XObject
-# resolution/recursion closure). Identical semantics to
+# once per show string (Font.show_info) and once per Tf/Do (the
+# _resource_callbacks closures). Identical semantics to
 # _interpret_content_py — differential parity in test_ctok_parity.py.
-_CTOK_INTERP = _load_ctok_attr("interpret_content")
-_CTOK_CMAP_CODES = _load_ctok_attr("cmap_codes_w")
-_CTOK_TADV = _load_ctok_attr("table_advance")
-
-
-# opaque stand-in for num/name operand values in split_marked_sections
-# (only "is the last operand a CDict" is ever asked of them)
-_NOT_DICT = object()
-
-
-def split_marked_sections(data: bytes) -> list:
-    """Split one decoded content stream into [(mcid_or_None, bytes)]
-    runs at the TOP marked-content level (ISO 32000-1 §14.6): a
-    top-level ``/Tag <props> BDC``/``BMC`` opens a section closed by
-    its depth-matched ``EMC``; the /MCID integer is read from an
-    inline BDC property dict. Bytes outside any section come back
-    with mcid=None in content order. Nested marked content stays
-    INSIDE its outer section (the per-section interpreter sees it as
-    ordinary skippable operators). Tokenization uses the real COS
-    token rules — an 'EMC' inside a string/hex literal never splits —
-    and the lexer's BI..EI rule (binary image data may contain 'EMC'
-    bytes). PERMISSIVE: an unterminated section runs to EOF; a stray
-    EMC at depth 0 is ignored.
-
-    Used by the reading-order extraction path (extract.py): each
-    section is interpreted independently, so sections must be
-    text-state self-contained — exactly what the tagged generator
-    emits (every block sets Tf/Tc/Tw/Tz explicitly) and what
-    producers that emit tagged output in practice do per ISO
-    14289-1 conformance; a cross-section Tf dependency would fall
-    back to default-font decoding (documented)."""
-    # r9: one _CT_MASTER_RE match per token (the content lexer's
-    # scanner — whitespace/comments consumed by the leading group, no
-    # per-token skip_ws calls, names matched inline instead of via
-    # parse_object). Operand VALUES are only ever inspected as "is the
-    # last one a BDC property dict", so instead of materializing an
-    # operand list only (operands_start, last_operand) are tracked —
-    # last_operand holds the real value for delegated tokens and an
-    # opaque sentinel for num/name (whose bytes were never read);
-    # (, <, [ still delegate to parse_object so strings/dicts/arrays
-    # are skipped by the real COS rules (an 'EMC' inside a literal
-    # never splits) and an inline BDC property dict comes back as the
-    # CDict the MCID read needs.
-    end = len(data)
-    r = Raw(data)
-    master = _CT_MASTER_RE.match
-    segs: list = []
-    last_operand = None  # value of the most recent operand in the run
-    operands_start: Optional[int] = None  # None ⇔ operand run is empty
-    depth = 0
-    sec: Optional[tuple] = None  # (mcid, content_start) at depth entry
-    gap_start = 0
-    pos = 0
-    while pos < end:
-        m = master(data, pos)
-        if m is None:  # cannot happen (alternation is total) — safety
-            pos += 1
-            operands_start = None
-            continue
-        mend = m.end()
-        lg = m.lastgroup
-        if lg is None:
-            if mend == pos:
-                # stray byte (e.g. lone '+'): the generic tokenizer
-                # consumes it as an opaque operator — clears operands
-                pos += 1
-                operands_start = None
-                continue
-            pos = mend  # trailing whitespace/comment run
-            continue
-        if lg == "num" or lg == "name":  # a COS operand
-            if operands_start is None:
-                operands_start = m.start(lg)
-            last_operand = _NOT_DICT
-            pos = mend
-            continue
-        if lg == "delim":
-            dstart = m.start("delim")
-            b = data[dstart]
-            if b in (0x28, 0x3C, 0x5B):  # ( < [ → real COS value
-                r.pos = dstart
-                last_operand = parse_object(r, None)
-                if operands_start is None:
-                    operands_start = dstart
-                pos = r.pos
-                continue
-            # stray ) > { } ]: opaque operator — clears operands
-            pos = dstart + 1
-            operands_start = None
-            continue
-        # lg == "op": an operator keyword
-        tok = m.group("op")
-        tok_start = m.start("op")
-        pos = mend
-        if tok == b"BI":
-            # inline image: skip to the token-boundary EI (the
-            # content lexer's rule — bare 'EI' bytes inside binary
-            # data must not terminate)
-            idx = pos
-            pos = end
-            while True:
-                idx = data.find(b"EI", idx)
-                if idx < 0:
-                    break
-                if (idx == 0 or is_ws(data[idx - 1])) and (
-                    idx + 2 >= end
-                    or is_ws(data[idx + 2])
-                    or is_delim(data[idx + 2])
-                ):
-                    pos = idx + 2
-                    break
-                idx += 1
-        elif tok in (b"BDC", b"BMC"):
-            if depth == 0:
-                gap_end = operands_start if operands_start is not None else tok_start
-                if data[gap_start:gap_end].strip():
-                    segs.append((None, data[gap_start:gap_end]))
-                mcid = None
-                if tok == b"BDC" and operands_start is not None:
-                    props = last_operand
-                    if isinstance(props, CDict):
-                        v = props.get("MCID")
-                        if isinstance(v, int) and not isinstance(v, bool):
-                            mcid = v
-                sec = (mcid, pos)
-            depth += 1
-        elif tok == b"EMC":
-            if depth > 0:
-                depth -= 1
-                if depth == 0 and sec is not None:
-                    segs.append((sec[0], data[sec[1] : tok_start]))
-                    sec = None
-                    gap_start = pos
-        operands_start = None
-    if sec is not None:  # unterminated section — PERMISSIVE tail
-        segs.append((sec[0], data[sec[1] :]))
-    elif data[gap_start:].strip():
-        segs.append((None, data[gap_start:]))
-    return segs
+_CTOK_LEX = getattr(_CTOK, "lex_content", None)
+_CTOK_INTERP = getattr(_CTOK, "interpret_content", None)
+_CTOK_CMAP_CODES = getattr(_CTOK, "cmap_codes_w", None)
+_CTOK_TADV = getattr(_CTOK, "table_advance", None)
 
 
 class Span(tuple):
@@ -1304,6 +1145,7 @@ def _interpret_content_py(
     _ctm: tuple = _MAT_ID,
     tj_kerning: bool = False,
     infer_spaces: bool = False,
+    mark=None,
 ) -> list[Span]:
     """Interpret one (decoded) content stream → ordered spans — the
     pure-Python interpreter; `_ctok.interpret_content` is the fused
@@ -1334,11 +1176,13 @@ def _interpret_content_py(
     Tc/Tw/Tz/Ts (state, no-op for content), q/Q/cm (CTM stack,
     §8.4.4), Do (XObject: Image → media span positioned by the CTM,
     Form → recurse with /Matrix composed), BI..EI inline images
-    (skipped as one media span). Unknown operators are skipped with
-    their operands — the PERMISSIVE posture of §2.8.
+    (skipped as one media span), BDC/BMC/EMC (marked content, §14.6:
+    reported to ``mark`` when given, else skipped). Unknown operators
+    are skipped with their operands — the PERMISSIVE posture of §2.8.
     """
-    if _depth > 16:
-        raise EParseError("XObject recursion too deep")
+    get_font, do_xobject = _resource_callbacks(
+        resources, resolver, _depth, doc_font_cache, tj_kerning, infer_spaces
+    )
     spans: list[Span] = []
     in_text = False
     cur_font = _DEFAULT_FONT
@@ -1356,34 +1200,7 @@ def _interpret_content_py(
     span_h: Optional[float] = None
     span_adv = 0.0  # accumulated device-space glyph advance (width)
     span_w_known = True  # False once any show op lacks font metrics
-    # fonts are shared across pages via the resources dict — cache at
-    # document scope (keyed by the font dict's identity) so ToUnicode
-    # CMaps and encoding tables are built once per document, not per page
-    font_cache: dict = doc_font_cache if doc_font_cache is not None else {}
     text_parts: list[str] = []
-
-    def font_res() -> Optional[CDict]:
-        if resources is None:
-            return None
-        return resources.get_dict("Font", None, resolver)
-
-    def xobj_res() -> Optional[CDict]:
-        if resources is None:
-            return None
-        return resources.get_dict("XObject", None, resolver)
-
-    def get_font(name: str) -> Font:
-        fr = font_res()
-        fd = fr.get_dict(name, None, resolver) if fr is not None else None
-        if fd is None:
-            return _DEFAULT_FONT
-        key = id(fd)
-        f = font_cache.get(key)
-        if f is None:
-            f = Font(fd, resolver)
-            font_cache[key] = f
-        return f
-
     trm_c: Optional[tuple] = None  # lazily computed tm×ctm (show ops)
     # infer_spaces tracking: text-space advance since tm was last set
     # by a positioning op (the expected pen x relative to tm), valid
@@ -1512,7 +1329,7 @@ def _interpret_content_py(
             in_text = False
         elif op == b"Tf":
             if operands and isinstance(operands[0], Name):
-                cur_font = get_font(str(operands[0]))
+                cur_font = get_font(operands[0])
             sz = _nums(operands, 1)
             if sz is not None:
                 cur_size = sz[0]
@@ -1577,63 +1394,31 @@ def _interpret_content_py(
                 show(operands[-1])
         elif op == b"Do":
             if operands and isinstance(operands[-1], Name):
-                xr = xobj_res()
-                xo = (
-                    xr.get_stream(str(operands[-1]), None, resolver)
-                    if xr is not None
-                    else None
-                )
-                if xo is not None:
-                    sub = xo.dict.get_name("Subtype", None, resolver)
-                    if sub == "Image":
-                        mref = xo.dict.get_name("Name", None, resolver)
-                        spans.append(
-                            Span(
-                                "media",
-                                None,
-                                str(mref) if mref else str(operands[-1]),
-                                ctm[4],
-                                ctm[5],
-                                ctm[0],
-                                ctm[3],
-                            )
-                        )
-                    elif sub == "Form":
-                        sub_res = xo.dict.get_dict("Resources", None, resolver) or resources
-                        decoded = decode_stream(xo.data, xo.dict, resolver)
-                        sub_ctm = ctm
-                        fm = xo.dict.get_array("Matrix", None, resolver)
-                        fv = _nums(list(fm), 6) if fm else None
-                        if fv is not None:
-                            sub_ctm = _matmul(tuple(fv), ctm)
-                        spans.extend(
-                            interpret_content(
-                                decoded, sub_res, resolver, _depth + 1, font_cache,
-                                _ctm=sub_ctm, tj_kerning=tj_kerning,
-                                infer_spaces=infer_spaces,
-                            )
-                        )
+                sub = do_xobject(operands[-1], ctm)
+                if sub is not None:
+                    spans.extend(sub)
         elif op == b"BI":
             # inline image (BI..EI skipped by the LEXER) → one media span
             spans.append(
                 Span("media", None, "inline", ctm[4], ctm[5], ctm[0], ctm[3])
             )
+        elif mark is not None and (op == b"BDC" or op == b"BMC" or op == b"EMC"):
+            mark(op, operands[-1] if operands else None, len(spans))
     return spans
 
 
-def _interpret_content_c(
-    data: bytes,
+def _resource_callbacks(
     resources: Optional[CDict],
     resolver: Optional[Resolver],
     _depth: int,
     doc_font_cache: Optional[dict],
-    _ctm: tuple,
     tj_kerning: bool,
-) -> list[Span]:
-    """Drive the fused C interpreter: Python supplies the two
-    callbacks the state machine can't own — font resolution (resources
-    lookup + document-scope Font cache) and Do/XObject handling (image
-    media spans; Form recursion re-enters this wrapper)."""
+    infer_spaces: bool,
+):
+    """The two callbacks both interpreters take from Python: font
+    resolution (resources lookup + document-scope Font cache) → a Font,
+    and ``Do`` → its spans (an image XObject's one media span at the
+    CTM; a Form recursed with /Matrix composed) or None."""
     if _depth > 16:
         raise EParseError("XObject recursion too deep")
     font_cache: dict = doc_font_cache if doc_font_cache is not None else {}
@@ -1649,7 +1434,7 @@ def _interpret_content_c(
     local_fonts: dict = font_cache.setdefault(("fonts", res_key), {})
     local_xobjs: dict = font_cache.setdefault(("xobjs", res_key), {})
 
-    def get_font_cb(name) -> Font:
+    def get_font(name) -> Font:
         f = local_fonts.get(name)
         if f is not None:
             return f
@@ -1670,7 +1455,7 @@ def _interpret_content_c(
         local_fonts[name] = f
         return f
 
-    def do_cb(name, ctm: tuple) -> Optional[list]:
+    def do_xobject(name, ctm: tuple) -> Optional[list]:
         xo = local_xobjs.get(name, False)
         if xo is False:
             xr = (
@@ -1716,11 +1501,29 @@ def _interpret_content_c(
                 font_cache,
                 _ctm=sub_ctm,
                 tj_kerning=tj_kerning,
+                infer_spaces=infer_spaces,
             )
         return None
 
+    return get_font, do_xobject
+
+
+def _interpret_content_c(
+    data: bytes,
+    resources: Optional[CDict],
+    resolver: Optional[Resolver],
+    _depth: int,
+    doc_font_cache: Optional[dict],
+    _ctm: tuple,
+    tj_kerning: bool,
+) -> list[Span]:
+    """Drive the fused C interpreter with the Python callbacks the
+    state machine can't own (_resource_callbacks)."""
+    get_font, do_xobject = _resource_callbacks(
+        resources, resolver, _depth, doc_font_cache, tj_kerning, False
+    )
     return _CTOK_INTERP(
-        data, get_font_cb, do_cb, Span, _DEFAULT_FONT, _ctm,
+        data, get_font, do_xobject, Span, _DEFAULT_FONT, _ctm,
         1 if tj_kerning else 0,
     )
 
@@ -1734,23 +1537,31 @@ def interpret_content(
     _ctm: tuple = _MAT_ID,
     tj_kerning: bool = False,
     infer_spaces: bool = False,
+    mark=None,
 ) -> list[Span]:
     """Interpret one (decoded) content stream → ordered spans (see
     _interpret_content_py for the operator contract). Dispatches to
     the fused C interpreter when the extension is available
     (PDFSPARK_NO_CTOK=1 or any compile failure falls back to the
     authoritative pure-Python implementation). infer_spaces (the
-    §9.10 word-boundary heuristic) runs on the Python interpreter —
-    it's an opt-in per-query path, not the default hot path."""
+    §9.10 word-boundary heuristic) and ``mark`` run on the Python
+    interpreter — opt-in per-query paths, not the default hot path.
+
+    ``mark(op, last_operand, n)`` is called at each BDC/BMC/EMC
+    operator of THIS stream (Form XObjects do not report theirs), n =
+    the number of spans emitted before it; last_operand is None when
+    the operator has none. A text span is emitted at its ET, so it
+    belongs to the marked content open there."""
     if (
         _CTOK_INTERP is not None
         and data.__class__ is bytes
         and not infer_spaces
+        and mark is None
     ):
         return _interpret_content_c(
             data, resources, resolver, _depth, doc_font_cache, _ctm, tj_kerning
         )
     return _interpret_content_py(
         data, resources, resolver, _depth, doc_font_cache, _ctm, tj_kerning,
-        infer_spaces=infer_spaces,
+        infer_spaces=infer_spaces, mark=mark,
     )

@@ -28,10 +28,10 @@ from .cos import (
     CStream,
     CString,
     Ref,
+    _CTOK,
     parse_object,
     try_read_id,
 )
-from .cos import _CTOK as _COS_CTOK
 from .errors import DEFAULT_SETTINGS, EParseError, ParserSettings
 from .filters import decode_stream
 from .raw import Raw
@@ -70,20 +70,14 @@ def _objstm_hdr_re(count: int) -> re.Pattern:
     return pat
 
 # fused C seek+verify+parse for indirect objects (optional fast path)
-_CTOK_PARSE_INDIRECT = (
-    getattr(_COS_CTOK, "parse_indirect", None) if _COS_CTOK is not None else None
-)
+_CTOK_PARSE_INDIRECT = getattr(_CTOK, "parse_indirect", None)
 # one-pass C classic-table parse (all-or-nothing; anomalies → Python)
-_CTOK_PARSE_XREF = (
-    getattr(_COS_CTOK, "parse_xref_table", None) if _COS_CTOK is not None else None
-)
+_CTOK_PARSE_XREF = getattr(_CTOK, "parse_xref_table", None)
 # fused C resolver (r7): cache probe → entries lookup → header verify →
 # parse → cache store in one call; off-path cases (compressed, gen
 # mismatch, active security handler, stale offset) fall back to
 # Parser.get_object below — the semantic authority
-_CTOK_XRESOLVER = (
-    getattr(_COS_CTOK, "XResolver", None) if _COS_CTOK is not None else None
-)
+_CTOK_XRESOLVER = getattr(_CTOK, "XResolver", None)
 
 
 @dataclass(slots=True)

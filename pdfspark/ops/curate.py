@@ -128,26 +128,25 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval stand-in: doc_id % {BENCH_MOD} == 0). Flag when overlap ≥ 10%
     (integer-exact: hits·10 ≥ grams).
 
-    Plan at corpus scale: the gram explode reads text rows spread by
-    doc_id (scale.spread_docs), and benchmark grams are a BROADCAST
-    (eval sets are small by construction). The doc_id filters of the
-    two sides push below the spread, so each side reads its own
-    spread; the per-doc groupBy count rides the doc_id partitioning,
-    and the only other shuffle is the distinct benchmark grams —
-    training grams never co-shuffle with each other."""
-    docs = spread_docs(
-        load_documents(spark, sf_dir).select("doc_id", "text")
-    ).select("doc_id", "text", F.split("text", " ").alias("w"))
-    grams = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.expr(_GRAMS_SPARK))).alias("g"),
-    )
+    Plan at corpus scale: the training gram explode reads text rows
+    spread by doc_id (scale.spread_docs), and benchmark grams are a
+    BROADCAST (eval sets are small by construction). The benchmark
+    side explodes the raw scan — it is 1/{BENCH_MOD} of the documents
+    and its distinct shuffles anyway — so the only shuffles are the
+    training spread and the distinct benchmark grams; the per-doc
+    groupBy count rides the doc_id partitioning."""
+    docs = load_documents(spark, sf_dir).select("doc_id", "text")
+
+    def grams(d: DataFrame) -> DataFrame:
+        return d.select("doc_id", "text", F.split("text", " ").alias("w")).select(
+            "doc_id",
+            F.explode(F.array_distinct(F.expr(_GRAMS_SPARK))).alias("g"),
+        )
+
     bench = (
-        grams.where(F.col("doc_id") % BENCH_MOD == 0)
-        .select("g")
-        .distinct()
+        grams(docs.where(F.col("doc_id") % BENCH_MOD == 0)).select("g").distinct()
     )
-    train = grams.where(F.col("doc_id") % BENCH_MOD != 0)
+    train = grams(spread_docs(docs.where(F.col("doc_id") % BENCH_MOD != 0)))
     hits = (
         train.join(F.broadcast(bench).withColumn("hit", F.lit(1)), "g", "left")
         .groupBy("doc_id")

@@ -8,10 +8,17 @@ forms (integer MCID under an ancestor /Pg; explicit /MCR dict)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from pdfspark import codec as C
 from pdfspark.codec import build_pdf, synth_spans_py
 from pdfspark.kernel.cos import CDict, Name, Ref
 from pdfspark.kernel.extract import extract_spans_doc, parse_document
-from pdfspark.kernel.textops import split_marked_sections
 
 TEXT = "lorem ipsum dolor sit amet " * 40  # 14 chunks → 2+ pages
 
@@ -73,33 +80,119 @@ def test_struct_order_none_when_untagged():
     assert doc.struct_order() is None
 
 
-def test_split_marked_sections_rules():
-    """String/hex literals never split; nesting stays inside the
-    outer section; gaps come back as mcid=None; a stray EMC at depth
-    0 is ignored; an unterminated section runs to EOF."""
-    data = (
-        b"BT (EMC not an op) Tj ET\n"
-        b"/P <</MCID 4>> BDC BT (a) Tj ET "
-        b"/Span BMC BT (nested) Tj ET EMC BT (b) Tj ET EMC\n"
-        b"EMC\n"
-        b"/Figure <</MCID 7>> BDC BT (tail) Tj ET"
+def _one_page(did: str, body: bytes) -> bytes:
+    """A tagged document whose one page paints ``body``: the structure
+    tree references MCIDs 0 then 1 on that page; /F1 is its font."""
+    spans = synth_spans_py(did, "lorem ipsum dolor sit amet " * 4)
+    g, cat, info = C.build_object_graph(did, spans, tagged=True)
+    assert len(g.content_nums) == 1
+    g.objs[g.content_nums[0]] = C._encode_content(body, [])
+    return C._assemble_classic(g, cat, info, did)
+
+
+def _texts(payload: bytes) -> list:
+    return [s[1] for s in extract_spans_doc(payload, reading_order=True)]
+
+
+def test_text_state_carries_across_sections():
+    """Section MCID 1 shows text with the font section MCID 0 set
+    (§9.3.1: text state belongs to the page, not to marked content),
+    so its span has the /F1 size and width."""
+    pdf = _one_page(
+        "tagstate",
+        b"/P <</MCID 0>> BDC BT /F1 12 Tf 10 700 Td (shared) Tj ET EMC\n"
+        b"/P <</MCID 1>> BDC BT 10 680 Td (shared) Tj ET EMC",
     )
-    segs = split_marked_sections(data)
-    # the stray depth-0 EMC surfaces as an untagged gap holding only
-    # the bare operator — zero spans once interpreted, never a split
-    assert [m for m, _ in segs] == [None, 4, None, 7]
-    assert b"EMC not an op" in segs[0][1]
-    assert b"nested" in segs[1][1] and b"(b)" in segs[1][1]
-    assert segs[2][1].strip() == b"EMC"
-    assert segs[3][1].endswith(b"BT (tail) Tj ET")
+    got = extract_spans_doc(pdf, reading_order=True, geometry=True)
+    assert [s[1] for s in got] == ["shared", "shared"]
+    assert got[1][6:] == got[0][6:] == (36.0, 12.0)
+
+
+def test_marked_content_inside_text_object():
+    """Marked content opened inside BT … ET: the one text span is
+    emitted at ET, where no section is open — it is untagged."""
+    pdf = _one_page(
+        "tagbt",
+        b"BT /F1 12 Tf /P <</MCID 1>> BDC (a) Tj EMC "
+        b"/P <</MCID 0>> BDC (b) Tj EMC ET",
+    )
+    want = [("text", "ab", None, 0)]
+    assert extract_spans_doc(pdf, reading_order=True) == want
+    assert extract_spans_doc(pdf) == want
+
+
+_SECTION_RULES = {
+    # an 'EMC' inside a string literal is text, never an operator
+    "emc_in_string": (
+        b"/P <</MCID 1>> BDC BT /F1 12 Tf (x EMC y) Tj ET EMC "
+        b"/P <</MCID 0>> BDC BT /F1 12 Tf (z) Tj ET EMC",
+        ["z", "x EMC y"],
+    ),
+    # nested marked content stays inside its outer section
+    "nested": (
+        b"/P <</MCID 1>> BDC BT /F1 12 Tf (a) Tj ET "
+        b"/Span BMC BT (n) Tj ET EMC BT (b) Tj ET EMC "
+        b"/P <</MCID 0>> BDC BT (c) Tj ET EMC",
+        ["c", "a", "n", "b"],
+    ),
+    # a stray top-level EMC closes nothing; untagged spans come last
+    "stray_emc": (
+        b"EMC /P <</MCID 1>> BDC BT /F1 12 Tf (a) Tj ET EMC EMC "
+        b"BT (u) Tj ET /P <</MCID 0>> BDC BT (b) Tj ET EMC",
+        ["b", "a", "u"],
+    ),
+    # an unterminated section runs to the end of the page
+    "unterminated": (
+        b"BT /F1 12 Tf (u) Tj ET /P <</MCID 0>> BDC BT (b) Tj ET EMC "
+        b"/P <</MCID 1>> BDC BT (a) Tj ET BT (t) Tj ET",
+        ["b", "a", "t", "u"],
+    ),
+}
+
+
+@pytest.mark.parametrize("rule", sorted(_SECTION_RULES))
+def test_marked_section_rules(rule):
+    body, want = _SECTION_RULES[rule]
+    assert _texts(_one_page(f"tag_{rule}", body)) == want
+
+
+def _parity_payloads() -> list:
+    docs = []
+    for i in range(4):
+        did = f"tagpar{i}"
+        text = "lorem ipsum " * 90 * (i + 1)
+        docs.append(build_pdf(did, synth_spans_py(did, text), "tagged"))
+    for rule, (body, _want) in sorted(_SECTION_RULES.items()):
+        docs.append(_one_page(f"tag_{rule}", body))
+    return docs
+
+
+def test_reading_order_same_without_c_extension():
+    """The Python lexer and the C lexer feed the interpreter the same
+    marked-content edges: identical reading-order output (geometry
+    included) with PDFSPARK_NO_CTOK=1."""
+    code = (
+        "from pdfspark.kernel.extract import extract_spans_doc\n"
+        "from tests.test_reading_order import _parity_payloads\n"
+        "for pdf in _parity_payloads():\n"
+        "    print(extract_spans_doc(pdf, reading_order=True, geometry=True))\n"
+    )
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=Path(__file__).resolve().parents[1],
+            env={**os.environ, "PDFSPARK_NO_CTOK": flag},
+            capture_output=True, text=True, check=True,
+        ).stdout
+        for flag in ("0", "1")
+    ]
+    assert outs[0].count("\n") == len(_parity_payloads()) and outs[0] == outs[1]
 
 
 def test_unreferenced_and_dangling_mcids_are_permissive():
     """Marked content the tree never references still comes out
     (after the referenced sequence); tree leaves pointing at MCIDs
     that don't exist in content are skipped."""
-    from pdfspark import codec as C
-
     did = "tagdangle"
     spans = synth_spans_py(did, TEXT)
     g, cat, info = C.build_object_graph(did, spans, tagged=True)

@@ -180,16 +180,18 @@ def test_group_frame_plan_has_one_exchange_below_generate(spark):
 def test_per_document_stages_read_doc_id_spread(spark):
     """One partitioning step in front of every per-document stage over
     the corpus: the HTML stage, the MinHash signature stage and the
-    contamination gram explode all read the doc_id repartition of the
-    text rows that generation reads. The first two have no other
-    Exchange; the contamination count per document rides the doc_id
-    partitioning with no Exchange of its own."""
+    contamination training-gram explode all read the doc_id
+    repartition of the text rows that generation reads. The first two
+    have no other Exchange; the contamination benchmark grams explode
+    the raw scan and shuffle only in their distinct, and the count per
+    training document rides the doc_id partitioning with no Exchange
+    of its own."""
     from pdfspark.ops import curate, dedup, html
 
     for df, exchanges in (
         (html.html_main_text(spark, SF_SMOKE), 1),
         (dedup.minhash_signatures(load_documents(spark, SF_SMOKE)), 1),
-        (curate.benchmark_contamination(spark, SF_SMOKE), 3),
+        (curate.benchmark_contamination(spark, SF_SMOKE), 2),
     ):
         df.collect()  # run it, so the adaptive plan is the final one
         plan = df._jdf.queryExecution().executedPlan()
