@@ -18,7 +18,6 @@
 #define _GNU_SOURCE /* memmem */
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
-#include <structmember.h> /* T_OBJECT/READONLY for XResolver.__self__ */
 #include <string.h>
 #include <stdlib.h>
 
@@ -37,9 +36,7 @@ typedef struct {
     /* interned constants for the fused interpreter (set at init) */
     PyObject *str_raw, *str_show_info, *str_fast_spec;
     PyObject *u_text, *u_media, *u_inline, *u_empty;
-    /* interned attribute/key names for the r7 structural tier */
-    PyObject *str_xref, *str_cache, *str_entries, *str_security;
-    PyObject *str_get_object, *str_container, *str_gen, *str_offset;
+    /* interned key names for the page-tree walk */
     PyObject *u_Type, *u_Kids, *u_Contents, *u_Resources;
     PyObject *u_MediaBox, *u_CropBox, *u_Rotate;
     int configured;
@@ -1942,10 +1939,9 @@ ctok_parse_xref_table(PyObject *self, PyObject *args)
  * of range) — the Python caller runs the §C.2 salvage scan then.
  * Parse errors AFTER a verified header raise, exactly like the
  * Python path. */
-/* Core of the fused seek+verify+parse (shared by the Python-visible
- * parse_indirect and the XResolver fast path below). Returns the
- * parsed value, Py_None (new ref) on ANY header mismatch — the caller
- * runs the salvage scan — or NULL with an exception set. */
+/* Core of the fused seek+verify+parse behind parse_indirect. Returns
+ * the parsed value, Py_None (new ref) on ANY header mismatch — the
+ * caller runs the salvage scan — or NULL with an exception set. */
 static PyObject *
 parse_indirect_core(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
                     long long expected, PyObject *resolver,
@@ -2012,253 +2008,6 @@ ctok_parse_indirect(PyObject *self, PyObject *args)
         PyBytes_GET_SIZE(data), pos, expected, resolver, settings,
         allow_recon, max_scan);
 }
-
-/* ---- XResolver: fused object resolver (xref._resolve twin) ---------
- * Callable twin of Parser._resolve / Parser.get_object for the
- * overwhelmingly common case: uncompressed entry, matching gen, no
- * security handler. One C call covers cache probe -> entries lookup ->
- * `id gen obj` header verify -> value parse -> cache store, replacing
- * four Python frames per resolved object (xref.py:641-707). Anything
- * off the fast path (compressed member, gen mismatch -> the soft
- * assert, active security handler -> decrypt hook, stale offset ->
- * salvage scan, missing entry semantics beyond COS_NULL) falls back to
- * parser.get_object, which is the semantic authority. The parser's
- * `xref` attribute is re-fetched per call on purpose: reconstruction
- * (xref.py:195) swaps in a fresh XRef mid-parse. */
-typedef struct {
-    PyObject_HEAD
-    PyObject *parser;   /* owning Parser (cycle; GC-tracked) */
-    PyObject *data;     /* bytes payload */
-    PyObject *settings; /* ParserSettings */
-    int allow_recon;
-    long max_scan;
-} XResolverObject;
-
-static int
-xresolver_traverse(XResolverObject *self, visitproc visit, void *arg)
-{
-    Py_VISIT(self->parser);
-    Py_VISIT(self->data);
-    Py_VISIT(self->settings);
-    return 0;
-}
-
-static int
-xresolver_clear(XResolverObject *self)
-{
-    Py_CLEAR(self->parser);
-    Py_CLEAR(self->data);
-    Py_CLEAR(self->settings);
-    return 0;
-}
-
-static void
-xresolver_dealloc(XResolverObject *self)
-{
-    PyObject_GC_UnTrack(self);
-    xresolver_clear(self);
-    Py_TYPE(self)->tp_free((PyObject *)self);
-}
-
-static PyObject *
-xresolver_new(PyTypeObject *type, PyObject *args, PyObject *kw)
-{
-    XResolverObject *self;
-    PyObject *parser, *data, *settings;
-    int allow_recon;
-    long max_scan;
-
-    if (kw != NULL && PyDict_GET_SIZE(kw) != 0) {
-        PyErr_SetString(PyExc_TypeError, "XResolver takes no kwargs");
-        return NULL;
-    }
-    if (!PyArg_ParseTuple(args, "OSOpl", &parser, &data, &settings,
-                          &allow_recon, &max_scan))
-        return NULL;
-    self = (XResolverObject *)type->tp_alloc(type, 0);
-    if (self == NULL)
-        return NULL;
-    Py_INCREF(parser);
-    Py_INCREF(data);
-    Py_INCREF(settings);
-    self->parser = parser;
-    self->data = data;
-    self->settings = settings;
-    self->allow_recon = allow_recon;
-    self->max_scan = max_scan;
-    return (PyObject *)self;
-}
-
-/* slow-path escape: exactly parser.get_object(num, gen) */
-static PyObject *
-xresolver_fallback(XResolverObject *self, PyObject *num_o, PyObject *gen_o)
-{
-    PyObject *go, *r;
-    go = PyObject_GetAttr(self->parser, S.str_get_object);
-    if (go == NULL)
-        return NULL;
-    r = PyObject_CallFunctionObjArgs(go, num_o, gen_o, NULL);
-    Py_DECREF(go);
-    return r;
-}
-
-static PyObject *
-xresolver_call(PyObject *selfo, PyObject *args, PyObject *kw)
-{
-    XResolverObject *self = (XResolverObject *)selfo;
-    PyObject *ref, *xref, *cache, *v, *sec, *entries, *e, *a;
-    PyObject *num_o, *gen_o;
-    long long egen, rgen, off, numll;
-    long long cont;
-
-    if (kw != NULL && PyDict_GET_SIZE(kw) != 0) {
-        PyErr_SetString(PyExc_TypeError, "resolver takes no kwargs");
-        return NULL;
-    }
-    if (PyTuple_GET_SIZE(args) != 1) {
-        PyErr_SetString(PyExc_TypeError, "resolver takes exactly one ref");
-        return NULL;
-    }
-    ref = PyTuple_GET_ITEM(args, 0);
-    if (!PyTuple_Check(ref) || PyTuple_GET_SIZE(ref) != 2) {
-        /* not a Ref: surface the same AttributeError Python's
-         * `ref.num` would raise */
-        num_o = PyObject_GetAttrString(ref, "num");
-        if (num_o == NULL)
-            return NULL;
-        gen_o = PyObject_GetAttrString(ref, "gen");
-        if (gen_o == NULL) {
-            Py_DECREF(num_o);
-            return NULL;
-        }
-        v = xresolver_fallback(self, num_o, gen_o);
-        Py_DECREF(num_o);
-        Py_DECREF(gen_o);
-        return v;
-    }
-    num_o = PyTuple_GET_ITEM(ref, 0); /* borrowed */
-    gen_o = PyTuple_GET_ITEM(ref, 1);
-    xref = PyObject_GetAttr(self->parser, S.str_xref);
-    if (xref == NULL)
-        return NULL;
-    cache = PyObject_GetAttr(xref, S.str_cache);
-    if (cache == NULL) {
-        Py_DECREF(xref);
-        return NULL;
-    }
-    v = PyDict_GetItemWithError(cache, num_o);
-    if (v != NULL) { /* hit */
-        Py_INCREF(v);
-        Py_DECREF(cache);
-        Py_DECREF(xref);
-        return v;
-    }
-    if (PyErr_Occurred())
-        goto fail_cx;
-    sec = PyObject_GetAttr(self->parser, S.str_security);
-    if (sec == NULL)
-        goto fail_cx;
-    if (sec != Py_None) { /* security handler active -> decrypt hook */
-        Py_DECREF(sec);
-        goto slow_cx;
-    }
-    Py_DECREF(sec);
-    entries = PyObject_GetAttr(xref, S.str_entries);
-    if (entries == NULL)
-        goto fail_cx;
-    e = PyDict_GetItemWithError(entries, num_o); /* borrowed */
-    Py_DECREF(entries);
-    if (e == NULL) {
-        if (PyErr_Occurred())
-            goto fail_cx;
-        /* X6: missing id -> COS_NULL, uncached (xref.py:656-658) */
-        Py_DECREF(cache);
-        Py_DECREF(xref);
-        Py_INCREF(S.cos_null);
-        return S.cos_null;
-    }
-    a = PyObject_GetAttr(e, S.str_container);
-    if (a == NULL)
-        goto fail_cx;
-    cont = PyLong_AsLongLong(a);
-    Py_DECREF(a);
-    if (cont == -1 && PyErr_Occurred())
-        goto long_cx;
-    if (cont >= 0) /* compressed member -> object-stream path */
-        goto slow_cx;
-    a = PyObject_GetAttr(e, S.str_gen);
-    if (a == NULL)
-        goto fail_cx;
-    egen = PyLong_AsLongLong(a);
-    Py_DECREF(a);
-    if (egen == -1 && PyErr_Occurred())
-        goto long_cx;
-    rgen = PyLong_AsLongLong(gen_o);
-    if (rgen == -1 && PyErr_Occurred())
-        goto long_cx;
-    if (egen != rgen) /* gen mismatch -> soft assert in Python */
-        goto slow_cx;
-    a = PyObject_GetAttr(e, S.str_offset);
-    if (a == NULL)
-        goto fail_cx;
-    off = PyLong_AsLongLong(a);
-    Py_DECREF(a);
-    if (off == -1 && PyErr_Occurred())
-        goto long_cx;
-    numll = PyLong_AsLongLong(num_o);
-    if (numll == -1 && PyErr_Occurred())
-        goto long_cx;
-    v = parse_indirect_core(
-        (const unsigned char *)PyBytes_AS_STRING(self->data),
-        PyBytes_GET_SIZE(self->data), (Py_ssize_t)off, numll, selfo,
-        self->settings, self->allow_recon, self->max_scan);
-    if (v == NULL)
-        goto fail_cx;
-    if (v == Py_None) { /* header mismatch -> salvage via Python */
-        Py_DECREF(v);
-        goto slow_cx;
-    }
-    if (PyDict_SetItem(cache, num_o, v) < 0) {
-        Py_DECREF(v);
-        goto fail_cx;
-    }
-    Py_DECREF(cache);
-    Py_DECREF(xref);
-    return v;
-long_cx: /* an entry field beyond long long: the Python path decides */
-    if (!PyErr_ExceptionMatches(PyExc_OverflowError))
-        goto fail_cx;
-    PyErr_Clear();
-slow_cx:
-    Py_DECREF(cache);
-    Py_DECREF(xref);
-    return xresolver_fallback(self, num_o, gen_o);
-fail_cx:
-    Py_DECREF(cache);
-    Py_DECREF(xref);
-    return NULL;
-}
-
-static PyMemberDef xresolver_members[] = {
-    /* CDict.deref discovers the deref-depth limit through
-     * resolver.__self__.deref_limit (cos.py:134-137) */
-    {"__self__", T_OBJECT, offsetof(XResolverObject, parser), READONLY,
-     "owning Parser"},
-    {NULL, 0, 0, 0, NULL}};
-
-static PyTypeObject XResolver_Type = {
-    PyVarObject_HEAD_INIT(NULL, 0)
-    .tp_name = "_ctok.XResolver",
-    .tp_basicsize = sizeof(XResolverObject),
-    .tp_dealloc = (destructor)xresolver_dealloc,
-    .tp_call = xresolver_call,
-    .tp_flags = Py_TPFLAGS_DEFAULT | Py_TPFLAGS_HAVE_GC,
-    .tp_doc = "fused Parser._resolve fast path",
-    .tp_traverse = (traverseproc)xresolver_traverse,
-    .tp_clear = (inquiry)xresolver_clear,
-    .tp_members = xresolver_members,
-    .tp_new = xresolver_new,
-};
 
 /* ---- page-tree DFS (docmodel.Document.pages twin) ------------------
  * Mirrors docmodel.py walk() exactly: in-order /Kids DFS, copy-on-
@@ -2515,40 +2264,6 @@ ctok_walk_pages(PyObject *self, PyObject *args)
         return NULL;
     }
     return out;
-}
-
-/* ---- simple-font advance (Font.advance_1000 twin) ------------------
- * Sum a 256-entry per-byte width table over a show string. The table
- * arrives as any int64 buffer (array('q', ...) precomputed once per
- * Font: ws[b-fc] inside [FirstChar, FirstChar+len(ws)), default
- * elsewhere). Exact integer math — same value as the Python loop. */
-static PyObject *
-ctok_table_advance(PyObject *self, PyObject *args)
-{
-    PyObject *data, *table;
-    Py_buffer buf;
-    const unsigned char *d;
-    const long long *w;
-    Py_ssize_t n, i;
-    long long total = 0;
-
-    (void)self;
-    if (!PyArg_ParseTuple(args, "SO", &data, &table))
-        return NULL;
-    if (PyObject_GetBuffer(table, &buf, PyBUF_SIMPLE) < 0)
-        return NULL;
-    if (buf.len != 256 * (Py_ssize_t)sizeof(long long)) {
-        PyBuffer_Release(&buf);
-        PyErr_SetString(PyExc_ValueError, "width table must be 256 int64");
-        return NULL;
-    }
-    d = (const unsigned char *)PyBytes_AS_STRING(data);
-    n = PyBytes_GET_SIZE(data);
-    w = (const long long *)buf.buf;
-    for (i = 0; i < n; i++)
-        total += w[d[i]];
-    PyBuffer_Release(&buf);
-    return PyLong_FromLongLong(total);
 }
 
 /* ---- fused content-stream INTERPRETER (textops._interpret_content_py
@@ -3818,8 +3533,6 @@ static PyMethodDef ctok_methods[] = {
      "lex_content(data) -> [(op_bytes, operands_tuple), ...]"},
     {"cmap_codes_w", ctok_cmap_codes_w, METH_VARARGS,
      "cmap_codes_w(raw, ranges) -> [(code, byte_width), ...]"},
-    {"table_advance", ctok_table_advance, METH_VARARGS,
-     "table_advance(raw, int64_table_256) -> advance sum"},
     {"produce", ctok_produce, METH_VARARGS,
      "produce(value, name_fn[, name_cache]) -> serialized bytes"},
     {"serialize_objs", ctok_serialize_objs, METH_VARARGS,
@@ -3852,7 +3565,6 @@ static struct PyModuleDef ctok_module = {
 PyMODINIT_FUNC
 PyInit__ctok(void)
 {
-    PyObject *mod;
     S.str_raw = PyUnicode_InternFromString("raw");
     S.str_show_info = PyUnicode_InternFromString("show_info");
     S.str_fast_spec = PyUnicode_InternFromString("_fast_spec");
@@ -3860,14 +3572,6 @@ PyInit__ctok(void)
     S.u_media = PyUnicode_InternFromString("media");
     S.u_inline = PyUnicode_InternFromString("inline");
     S.u_empty = PyUnicode_InternFromString("");
-    S.str_xref = PyUnicode_InternFromString("xref");
-    S.str_cache = PyUnicode_InternFromString("cache");
-    S.str_entries = PyUnicode_InternFromString("entries");
-    S.str_security = PyUnicode_InternFromString("security");
-    S.str_get_object = PyUnicode_InternFromString("get_object");
-    S.str_container = PyUnicode_InternFromString("container");
-    S.str_gen = PyUnicode_InternFromString("gen");
-    S.str_offset = PyUnicode_InternFromString("offset");
     S.u_Type = PyUnicode_InternFromString("Type");
     S.u_Kids = PyUnicode_InternFromString("Kids");
     S.u_Contents = PyUnicode_InternFromString("Contents");
@@ -3878,24 +3582,9 @@ PyInit__ctok(void)
     if (S.str_raw == NULL || S.str_show_info == NULL ||
         S.str_fast_spec == NULL || S.u_text == NULL ||
         S.u_media == NULL || S.u_inline == NULL || S.u_empty == NULL ||
-        S.str_xref == NULL || S.str_cache == NULL || S.str_entries == NULL ||
-        S.str_security == NULL || S.str_get_object == NULL ||
-        S.str_container == NULL || S.str_gen == NULL ||
-        S.str_offset == NULL || S.u_Type == NULL || S.u_Kids == NULL ||
+        S.u_Type == NULL || S.u_Kids == NULL ||
         S.u_Contents == NULL || S.u_Resources == NULL ||
         S.u_MediaBox == NULL || S.u_CropBox == NULL || S.u_Rotate == NULL)
         return NULL;
-    if (PyType_Ready(&XResolver_Type) < 0)
-        return NULL;
-    mod = PyModule_Create(&ctok_module);
-    if (mod == NULL)
-        return NULL;
-    Py_INCREF(&XResolver_Type);
-    if (PyModule_AddObject(mod, "XResolver",
-                           (PyObject *)&XResolver_Type) < 0) {
-        Py_DECREF(&XResolver_Type);
-        Py_DECREF(mod);
-        return NULL;
-    }
-    return mod;
+    return PyModule_Create(&ctok_module);
 }

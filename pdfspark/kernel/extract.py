@@ -149,20 +149,11 @@ def extract_spans_doc(
 def extract_spans(
     payload: bytes,
     settings: Optional[ParserSettings] = None,
-    reading_order: bool = False,
-    infer_spaces: bool = False,
 ) -> tuple[str, Optional[str], list[tuple]]:
     """Status wrapper → (status, error, spans); an EParseError is
     status='error'."""
     try:
-        return (
-            "ok",
-            None,
-            extract_spans_doc(
-                payload, settings, reading_order=reading_order,
-                infer_spaces=infer_spaces,
-            ),
-        )
+        return ("ok", None, extract_spans_doc(payload, settings))
     except EParseError as e:  # per-document fault policy (§2.8)
         return ("error", f"{type(e).__name__}: {e}", [])
 

@@ -378,7 +378,7 @@ class Font:
     __slots__ = (
         "two_byte", "tounicode", "table", "codec", "trans", "cmap",
         "widths", "first_char", "default_width",
-        "cid_widths", "cid_wranges", "_code_memo", "_w_table", "t3_scale",
+        "cid_widths", "cid_wranges", "_code_memo", "t3_scale",
         "_fast_spec", "_space_width_memo",
     )
 
@@ -411,7 +411,6 @@ class Font:
         self.cid_widths: Optional[dict[int, int]] = None
         self.cid_wranges: list[tuple[int, int, int]] = []
         self._code_memo: dict = {}  # (code, bw) → (char, width)
-        self._w_table = None  # lazy 256×int64 per-byte width table
         self._space_width_memo = False  # r9: space_width() cache flag
         # Type3: glyph-space widths scale by FontMatrix[0]·1000 into
         # the 1000-em contract (None for every other font class)
@@ -867,17 +866,6 @@ class Font:
             return base * t3 if t3 is not None else base
         fc = self.first_char
         hi = fc + len(ws)
-        if _CTOK_TADV is not None:
-            # one C pass over a per-byte width table (built once per
-            # font) instead of a per-byte Python loop — exact ints
-            t = self._w_table
-            if t is None:
-                t = self._w_table = _array(
-                    "q",
-                    [ws[b - fc] if fc <= b < hi else dflt for b in range(256)],
-                )
-            base = _CTOK_TADV(raw, t)
-            return base * t3 if t3 is not None else base
         w = 0
         for b in raw:
             w += ws[b - fc] if fc <= b < hi else dflt
@@ -1077,7 +1065,6 @@ def _lex_content_py(data: bytes):
 _CTOK_LEX = getattr(_CTOK, "lex_content", None)
 _CTOK_INTERP = getattr(_CTOK, "interpret_content", None)
 _CTOK_CMAP_CODES = getattr(_CTOK, "cmap_codes_w", None)
-_CTOK_TADV = getattr(_CTOK, "table_advance", None)
 
 
 class Span(tuple):

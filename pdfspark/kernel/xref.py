@@ -73,11 +73,14 @@ def _objstm_hdr_re(count: int) -> re.Pattern:
 _CTOK_PARSE_INDIRECT = getattr(_CTOK, "parse_indirect", None)
 # one-pass C classic-table parse (all-or-nothing; anomalies → Python)
 _CTOK_PARSE_XREF = getattr(_CTOK, "parse_xref_table", None)
-# fused C resolver (r7): cache probe → entries lookup → header verify →
-# parse → cache store in one call; off-path cases (compressed, gen
-# mismatch, active security handler, stale offset) fall back to
-# Parser.get_object below — the semantic authority
-_CTOK_XRESOLVER = getattr(_CTOK, "XResolver", None)
+
+
+def _xref_stream_int(v) -> int:
+    """One /W or /Index entry as an int; a non-number is a broken
+    xref stream."""
+    if isinstance(v, bool) or not isinstance(v, (int, float)):
+        raise EParseError(f"xref stream: non-numeric /W or /Index entry {v!r}")
+    return int(v)
 
 
 @dataclass(slots=True)
@@ -145,16 +148,6 @@ class Parser:
         # stale-startxref rescan.  Surfaces in the fuzz driver row as
         # status='salvaged' (vs 'ok' for a clean entry-point parse).
         self.salvaged = False
-        # r7: instance-level `_resolve` shadows the bound method with
-        # the fused C resolver when available (same call contract; the
-        # C object re-reads self.xref per call, so the reconstruction
-        # path's XRef swap is safe). Pure-Python fallback keeps the
-        # method below.
-        if _CTOK_XRESOLVER is not None and data.__class__ is bytes:
-            st = self.settings
-            self._resolve = _CTOK_XRESOLVER(
-                self, data, st, st.allow_reconstruction, st.max_scan_range
-            )
 
     # ---- X1: entry-point resolve (PDFParser.parse, :62-119) ----------
     def parse(self) -> None:
@@ -604,7 +597,7 @@ class Parser:
         w = sd.get_array("W")
         if not w or len(w) < 3:
             raise EParseError("xref stream missing /W")
-        w1, w2, w3 = (int(x) for x in w[:3])
+        w1, w2, w3 = (_xref_stream_int(x) for x in w[:3])
         size = sd.get_int("Size", 0)
         index = sd.get_array("Index") or [0, size]
         data = decode_stream(obj.data, sd, self._resolve)
@@ -651,7 +644,7 @@ class Parser:
         ri = 0
         it = iter(index)
         for start, count in zip(it, it):
-            start, count = int(start), int(count)
+            start, count = _xref_stream_int(start), _xref_stream_int(count)
             for i in range(count):
                 if ri >= nrows_avail:
                     self.settings.soft_structure(False, "xref stream short data")

@@ -391,38 +391,26 @@ def _spans_bits(spans):
 
 
 class _force_python:
-    """Temporarily disable every C kernel hook the r4 fused paths use,
-    so the same process can run the authoritative pure-Python side."""
+    """Temporarily clear every `_CTOK_*` hook of the codec and kernel
+    modules (not the `_ctok` module itself, `codec._CTOK_MOD`), so the
+    same process can run the authoritative pure-Python side."""
 
     def __enter__(self):
-        from pdfspark.kernel import docmodel, textops, xref
+        from pdfspark import codec
+        from pdfspark.kernel import docmodel, filters, textops, xref
 
-        self._saved = (
-            textops._CTOK_INTERP,
-            textops._CTOK_CMAP_CODES,
-            textops._CTOK_TADV,
-            xref._CTOK_PARSE_INDIRECT,
-            xref._CTOK_XRESOLVER,
-            docmodel._CTOK_WALK,
-        )
-        textops._CTOK_INTERP = None
-        textops._CTOK_CMAP_CODES = None
-        textops._CTOK_TADV = None
-        xref._CTOK_PARSE_INDIRECT = None
-        xref._CTOK_XRESOLVER = None
-        docmodel._CTOK_WALK = None
+        self._saved = [
+            (m, k, v)
+            for m in (codec, cos, docmodel, filters, textops, xref)
+            for k, v in vars(m).items()
+            if k.startswith("_CTOK_") and k != "_CTOK_MOD"
+        ]
+        for m, k, _ in self._saved:
+            setattr(m, k, None)
 
     def __exit__(self, *exc):
-        from pdfspark.kernel import docmodel, textops, xref
-
-        (
-            textops._CTOK_INTERP,
-            textops._CTOK_CMAP_CODES,
-            textops._CTOK_TADV,
-            xref._CTOK_PARSE_INDIRECT,
-            xref._CTOK_XRESOLVER,
-            docmodel._CTOK_WALK,
-        ) = self._saved
+        for m, k, v in self._saved:
+            setattr(m, k, v)
 
 
 def test_interpreter_parity_whole_documents():
@@ -537,29 +525,6 @@ def test_cmap_codes_w_parity():
         c = textops._CTOK_CMAP_CODES(raw, cm.ranges)
         with _force_python():
             py = cm.codes_w(raw)
-        assert c == py, raw
-
-
-def test_table_advance_parity():
-    """C per-byte width-table sum vs the Python loop, exact ints."""
-    from pdfspark.codec import build_pdf, synth_spans_py
-    from pdfspark.kernel import textops
-    from pdfspark.kernel.cos import CDict, Name
-
-    if textops._CTOK_TADV is None:
-        pytest.skip("C table_advance not available")
-    fd = CDict()
-    fd["Subtype"] = Name("Type1")
-    fd["FirstChar"] = 60
-    fd["Widths"] = [100 + 7 * k for k in range(40)]
-    font = textops.Font(fd, None)
-    rng = random.Random(0x7AD)
-    for _ in range(100):
-        raw = bytes(rng.randrange(256) for _ in range(rng.randrange(0, 64)))
-        c = font.advance_1000(raw)
-        with _force_python():
-            f2 = textops.Font(fd, None)  # fresh font: no cached table
-            py = f2.advance_1000(raw)
         assert c == py, raw
 
 
@@ -847,20 +812,19 @@ def test_generation_payload_parity_c_vs_python():
             assert p1 == p2, (did, v)
 
 
-def test_xresolver_structural_parity_whole_documents():
-    """r7 structural tier: the fused C resolver (xref.XResolver) and C
-    page-tree walk ON vs OFF must agree on spans, metadata, and every
-    PageInfo field across all structural variants — including the
-    off-fast-path ones (objstream → compressed members, incremental →
-    gen precedence, encrypted → active security handler)."""
+def test_walk_pages_structural_parity_whole_documents():
+    """The C page-tree walk (and every other C hook) ON vs OFF must
+    agree on spans, metadata, and every PageInfo field across all
+    structural variants — objstream → compressed members, incremental
+    → gen precedence, encrypted → active security handler."""
     from pdfspark.codec import build_pdf, synth_spans_py, variant_for
-    from pdfspark.kernel import xref
+    from pdfspark.kernel import docmodel
     from pdfspark.kernel.extract import (
         extract_meta, extract_spans, parse_document,
     )
 
-    if xref._CTOK_XRESOLVER is None:
-        pytest.skip("C extension not available")
+    if docmodel._CTOK_WALK is None:
+        pytest.skip("C page walk not available")
     modes = (
         "mixed", "filters_rotate", "encrypted", "cjk", "forms",
         "cjk:embedded", "objstream", "incremental", "type3",
@@ -899,21 +863,17 @@ def test_xresolver_structural_parity_whole_documents():
         assert c_pages == py_pages, variant
 
 
-def test_xresolver_edge_semantics():
-    """The C resolver's off-path contract: missing object → COS_NULL
-    (uncached), junk argument → the same AttributeError the Python
-    path raises, resolution identical pre- and post-reconstruction."""
+def test_resolve_edge_semantics():
+    """Parser._resolve's contract: missing object → COS_NULL
+    (uncached), junk argument → AttributeError (the `ref.num` access),
+    every object identical with and without the C hooks."""
     from pdfspark.codec import build_pdf, synth_spans_py
-    from pdfspark.kernel import xref
     from pdfspark.kernel.cos import COS_NULL, Ref
     from pdfspark.kernel.xref import Parser
 
-    if xref._CTOK_XRESOLVER is None:
-        pytest.skip("C extension not available")
     payload = build_pdf("xre0", synth_spans_py("xre0", "edge text"), "classic")
     p = Parser(payload)
     p.parse()
-    assert type(p._resolve).__name__ == "XResolver"
     # missing id → COS_NULL, and it must NOT be cached
     assert p._resolve(Ref(999999, 0)) is COS_NULL
     assert 999999 not in p.xref.cache

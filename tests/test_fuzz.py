@@ -316,10 +316,31 @@ def test_out_of_range_operand_is_a_broken_document(content):
     assert status == "error" and err.startswith("EParseError:") and spans == []
 
 
+@pytest.mark.parametrize(
+    "old, new",
+    [
+        (b"/W [1 ", b"/W [/ "),
+        (b"/W [1 ", b"/W [() "),
+        (b"/W [1 ", b"/W [true "),
+        (b"/Index [0 ", b"/Index [/a "),
+        (b"/Index [0 ", b"/Index [() "),
+    ],
+    ids=["W-name", "W-string", "W-bool", "Index-name", "Index-string"],
+)
+def test_non_numeric_xref_stream_entry_is_a_broken_document(old, new):
+    """An xref stream /W or /Index entry that is no number is malformed
+    input: EParseError, not the ValueError/TypeError of int()."""
+    assert BASE_OBJ.count(old) == 1
+    doc = BASE_OBJ.replace(old, new)
+    assert extract_spans(doc)[0] == "error"
+    assert extract_meta(doc)[0] == "error"
+
+
 _NUMBER_TOKEN = re.compile(rb"(?<![\w.#/])-?\d+(?:\.\d*)?(?![\w.])")
-_OUT_OF_RANGE = (
+_BAD_NUMBERS = (
     b"9" * 400, b"-" + b"9" * 400, b"9" * 400 + b".5", b"1" + b"0" * 300 + b".0",
     b"99999999999999999999", b"9223372036854775807", b"-9223372036854775808",
+    b"/", b"()",
 )
 
 
@@ -329,8 +350,10 @@ _OUT_OF_RANGE = (
 def test_out_of_range_numbers_fail_typed(variant):
     """Seeded sweep: one number token of a generated document (in a
     dictionary, an xref row, a /Widths array, a content stream…) is
-    replaced by an integer or real no 64-bit reader holds. Every status
-    wrapper and document walk must still fail only as EParseError."""
+    replaced by an integer or real no 64-bit reader holds, or by a
+    token that is no number at all (an empty name or string). Every
+    status wrapper and document walk must still fail only as
+    EParseError."""
     from pdfspark.kernel import parse_document
     from pdfspark.kernel.extract import extract_spans_doc, extract_spans_fuzz
 
@@ -340,7 +363,7 @@ def test_out_of_range_numbers_fail_typed(variant):
     rng = random.Random(zlib.crc32(variant.encode()))
     tokens = [m.span() for m in _NUMBER_TOKEN.finditer(base)]
     for i, j in rng.sample(tokens, min(len(tokens), 40)):
-        doc = base[:i] + rng.choice(_OUT_OF_RANGE) + base[j:]
+        doc = base[:i] + rng.choice(_BAD_NUMBERS) + base[j:]
         assert extract_spans(doc)[0] in ("ok", "error")
         assert extract_meta(doc)[0] in ("ok", "error")
         assert extract_spans_fuzz(doc)[0] in ("ok", "salvaged", "error")

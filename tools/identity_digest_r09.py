@@ -13,7 +13,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, ".")
 from pdfspark.codec import build_pdf, synth_spans_py, variant_for  # noqa: E402
-from pdfspark.kernel import extract_spans  # noqa: E402
+from pdfspark.kernel import EParseError, extract_spans_doc  # noqa: E402
 
 VARIANTS = [
     "mixed", "classic", "objstream", "incremental", "hybrid",
@@ -43,10 +43,13 @@ def main() -> None:
                 print(f"{variant}: SKIP (unknown)")
                 break
             hp.update(p)
-            status, err, spans = extract_spans(
-                p, None, reading_order=ro, infer_spaces=isp
-            )
-            hs.update(repr((status, err, spans)).encode())
+            try:
+                row = ("ok", None, extract_spans_doc(
+                    p, reading_order=ro, infer_spaces=isp
+                ))
+            except EParseError as e:
+                row = ("error", f"{type(e).__name__}: {e}", [])
+            hs.update(repr(row).encode())
         else:
             print(f"{variant}: payload={hp.hexdigest()[:16]} "
                   f"spans={hs.hexdigest()[:16]}")
