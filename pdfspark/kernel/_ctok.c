@@ -39,6 +39,8 @@ typedef struct {
     /* interned key names for the page-tree walk */
     PyObject *u_Type, *u_Kids, *u_Contents, *u_Resources;
     PyObject *u_MediaBox, *u_CropBox, *u_Rotate;
+    /* errors.MAX_SCAN_RANGE / errors.MAX_DEREF_DEPTH */
+    long max_scan, max_deref;
     int configured;
 } ctok_state_t;
 
@@ -460,7 +462,7 @@ hex_string_token(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos)
 static PyObject *
 stream_followup(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos,
                 PyObject *dict, PyObject *resolver, PyObject *settings,
-                int allow_recon, long max_scan)
+                int allow_recon)
 {
     Py_ssize_t save = *pos, p = *pos;
     PyObject *length, *body = NULL, *res;
@@ -562,7 +564,7 @@ stream_followup(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos,
         p += (Py_ssize_t)lv;
         /* bounded forward scan for endstream (B9) */
         {
-            Py_ssize_t lim = p + max_scan + 9;
+            Py_ssize_t lim = p + S.max_scan + 9;
             Py_ssize_t avail;
             const unsigned char *hit;
             if (lim > n)
@@ -601,8 +603,7 @@ typedef struct {
 /* main scanner: one COS value from pos; mirrors cos.parse_object */
 static PyObject *
 parse_value(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos_io,
-            PyObject *resolver, PyObject *settings, int allow_recon,
-            long max_scan)
+            PyObject *resolver, PyObject *settings, int allow_recon)
 {
     Py_ssize_t pos = *pos_io;
     frame_t *stack = NULL;
@@ -641,7 +642,7 @@ parse_value(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos_io,
             if (b == '>' && pos + 1 < n && d[pos + 1] == '>') {
                 pos += 2;
                 v = stream_followup(d, n, &pos, cur, resolver, settings,
-                                    allow_recon, max_scan);
+                                    allow_recon);
                 if (v == NULL)
                     FAIL();
                 Py_DECREF(cur); /* ownership moved into v (or v==cur+1ref) */
@@ -990,7 +991,7 @@ ctok_lex_content(PyObject *self, PyObject *args)
                               ? literal_string_token(d, n, &pos)
                               : ((pos + 1 < n && d[pos + 1] == '<')
                                      ? parse_value(d, n, &pos, Py_None,
-                                                   Py_None, 0, 100)
+                                                   Py_None, 0)
                                      : hex_string_token(d, n, &pos));
             if (v == NULL)
                 goto fail;
@@ -1945,7 +1946,7 @@ ctok_parse_xref_table(PyObject *self, PyObject *args)
 static PyObject *
 parse_indirect_core(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
                     long long expected, PyObject *resolver,
-                    PyObject *settings, int allow_recon, long max_scan)
+                    PyObject *settings, int allow_recon)
 {
     PyObject *v;
     Py_ssize_t s;
@@ -1983,7 +1984,7 @@ parse_indirect_core(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
     pos += 3;
     if (idv != expected)
         Py_RETURN_NONE;
-    v = parse_value(d, n, &pos, resolver, settings, allow_recon, max_scan);
+    v = parse_value(d, n, &pos, resolver, settings, allow_recon);
     return v; /* NULL propagates the parse error */
 }
 
@@ -1992,7 +1993,7 @@ ctok_parse_indirect(PyObject *self, PyObject *args)
 {
     PyObject *data, *resolver, *settings;
     Py_ssize_t pos;
-    long expected, max_scan;
+    long expected;
     int allow_recon;
 
     (void)self;
@@ -2000,26 +2001,27 @@ ctok_parse_indirect(PyObject *self, PyObject *args)
         PyErr_SetString(PyExc_RuntimeError, "_ctok not configured");
         return NULL;
     }
-    if (!PyArg_ParseTuple(args, "SnlOOpl", &data, &pos, &expected, &resolver,
-                          &settings, &allow_recon, &max_scan))
+    if (!PyArg_ParseTuple(args, "SnlOOp", &data, &pos, &expected, &resolver,
+                          &settings, &allow_recon))
         return NULL;
     return parse_indirect_core(
         (const unsigned char *)PyBytes_AS_STRING(data),
         PyBytes_GET_SIZE(data), pos, expected, resolver, settings,
-        allow_recon, max_scan);
+        allow_recon);
 }
 
 /* ---- page-tree DFS (docmodel.Document.pages twin) ------------------
  * Mirrors docmodel.py walk() exactly: in-order /Kids DFS, copy-on-
  * write inheritance of Resources/MediaBox/CropBox/Rotate (held as
  * four C locals down the recursion), /Type-less nodes with /Kids
- * treated as /Pages, kids must be references, depth cap 64. Emits
+ * treated as /Pages, kids must be references, each node (root
+ * included) visited once, depth cap 64. Emits
  * one (node_num, mediabox, cropbox, resources, contents, rotate)
  * tuple per leaf; the Python caller builds PageInfo + Rect (with the
  * per-walk rect memo). Box/Resources values are returned RAW —
  * exactly what the Python walk stores into `inh`. */
 static PyObject *
-deref_chain(PyObject *v, PyObject *resolver, long limit)
+deref_chain(PyObject *v, PyObject *resolver)
 {
     /* returns a NEW reference; mirrors CDict.deref (cos.py:127-145).
      * Exact-type Ref check: Ref is a closed NamedTuple (no
@@ -2029,7 +2031,7 @@ deref_chain(PyObject *v, PyObject *resolver, long limit)
     Py_INCREF(v);
     while ((PyObject *)Py_TYPE(v) == S.Ref) {
         PyObject *nv;
-        if (depth >= limit) {
+        if (depth >= S.max_deref) {
             Py_DECREF(v);
             PyErr_SetString(S.eparse,
                             "Infinite or too deep loop of references");
@@ -2048,7 +2050,8 @@ deref_chain(PyObject *v, PyObject *resolver, long limit)
 /* inh slot order: 0=Resources 1=MediaBox 2=CropBox 3=Rotate */
 static int
 walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
-          PyObject *resolver, PyObject *soft_cb, long limit, PyObject *out)
+          PyObject *resolver, PyObject *soft_cb, PyObject *visited,
+          PyObject *out)
 {
     PyObject *local[4];
     int own[4] = {0, 0, 0, 0};
@@ -2073,7 +2076,7 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
                 goto done;
             continue;
         }
-        raw = deref_chain(raw, resolver, limit);
+        raw = deref_chain(raw, resolver);
         if (raw == NULL)
             goto done;
         local[i] = raw;
@@ -2090,7 +2093,7 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
     if (kids_raw == NULL && PyErr_Occurred())
         goto done;
     if (kids_raw != NULL) {
-        kids = deref_chain(kids_raw, resolver, limit);
+        kids = deref_chain(kids_raw, resolver);
         if (kids == NULL)
             goto done;
         if (!PyList_Check(kids))
@@ -2114,12 +2117,25 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
         for (k = 0; k < nk; k++) {
             PyObject *kid = PyList_GET_ITEM(kids, k); /* borrowed */
             PyObject *knode;
-            int kr, isdict;
+            int kr, isdict, seen;
             if ((PyObject *)Py_TYPE(kid) != S.Ref) {
                 PyErr_SetString(S.eparse,
                                 "page-tree kid is not a reference");
                 goto done;
             }
+            /* kid num stays a PyObject — object numbers are
+             * unbounded Python ints in corrupt files and the Python
+             * walk handles them; converting to long long here could
+             * overflow with an ignored error (C-API violation) */
+            seen = PySet_Contains(visited, PyTuple_GET_ITEM(kid, 0));
+            if (seen < 0)
+                goto done;
+            if (seen) {
+                PyErr_SetString(S.eparse, "page tree node visited twice");
+                goto done;
+            }
+            if (PySet_Add(visited, PyTuple_GET_ITEM(kid, 0)) < 0)
+                goto done;
             knode = PyObject_CallFunctionObjArgs(resolver, kid, NULL);
             if (knode == NULL)
                 goto done;
@@ -2133,13 +2149,9 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
                 Py_DECREF(knode);
                 goto done;
             }
-            /* kid num stays a PyObject — object numbers are
-             * unbounded Python ints in corrupt files and the Python
-             * walk handles them; converting to long long here could
-             * overflow with an ignored error (C-API violation) */
             kr = walk_node(
                 knode, PyTuple_GET_ITEM(kid, 0),
-                local, depth + 1, resolver, soft_cb, limit, out);
+                local, depth + 1, resolver, soft_cb, visited, out);
             Py_DECREF(knode);
             if (kr < 0)
                 goto done;
@@ -2157,7 +2169,7 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
             goto done;
         }
         if (cv != NULL) {
-            cv = deref_chain(cv, resolver, limit);
+            cv = deref_chain(cv, resolver);
             if (cv == NULL) {
                 Py_DECREF(contents);
                 goto done;
@@ -2172,7 +2184,7 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
                 Py_ssize_t c, nc = PyList_GET_SIZE(cv);
                 for (c = 0; c < nc; c++) {
                     PyObject *cd = deref_chain(
-                        PyList_GET_ITEM(cv, c), resolver, limit);
+                        PyList_GET_ITEM(cv, c), resolver);
                     if (cd == NULL) {
                         Py_DECREF(cv);
                         Py_DECREF(contents);
@@ -2243,23 +2255,33 @@ done:
 static PyObject *
 ctok_walk_pages(PyObject *self, PyObject *args)
 {
-    PyObject *pages, *resolver, *soft_cb, *out, *root_num;
+    PyObject *pages, *resolver, *soft_cb, *out, *root_num, *visited;
     PyObject *inh[4] = {NULL, NULL, NULL, NULL};
-    long limit;
+    int rc;
 
     (void)self;
     if (!S.configured) {
         PyErr_SetString(PyExc_RuntimeError, "_ctok not configured");
         return NULL;
     }
-    if (!PyArg_ParseTuple(args, "O!OOOl", &PyDict_Type, &pages, &root_num,
-                          &resolver, &soft_cb, &limit))
+    if (!PyArg_ParseTuple(args, "O!OOO", &PyDict_Type, &pages, &root_num,
+                          &resolver, &soft_cb))
         return NULL;
+    visited = PySet_New(NULL);
+    if (visited == NULL)
+        return NULL;
+    if (PySet_Add(visited, root_num) < 0) {
+        Py_DECREF(visited);
+        return NULL;
+    }
     out = PyList_New(0);
-    if (out == NULL)
+    if (out == NULL) {
+        Py_DECREF(visited);
         return NULL;
-    if (walk_node(pages, root_num, inh, 0, resolver, soft_cb, limit, out) <
-        0) {
+    }
+    rc = walk_node(pages, root_num, inh, 0, resolver, soft_cb, visited, out);
+    Py_DECREF(visited);
+    if (rc < 0) {
         Py_DECREF(out);
         return NULL;
     }
@@ -3003,7 +3025,7 @@ ctok_interpret_content(PyObject *self, PyObject *args)
                                ? literal_string_token(d, n, &pos)
                                : ((pos + 1 < n && d[pos + 1] == '<')
                                       ? parse_value(d, n, &pos, Py_None,
-                                                    Py_None, 0, 100)
+                                                    Py_None, 0)
                                       : hex_string_token(d, n, &pos));
             if (v2 == NULL)
                 goto fail;
@@ -3062,7 +3084,6 @@ ctok_parse_object(PyObject *self, PyObject *args)
     PyObject *data, *resolver, *settings;
     Py_ssize_t pos;
     int allow_recon;
-    long max_scan;
     const unsigned char *d;
     Py_ssize_t n;
     PyObject *v;
@@ -3072,8 +3093,8 @@ ctok_parse_object(PyObject *self, PyObject *args)
         PyErr_SetString(PyExc_RuntimeError, "_ctok not configured");
         return NULL;
     }
-    if (!PyArg_ParseTuple(args, "SnOOpl", &data, &pos, &resolver, &settings,
-                          &allow_recon, &max_scan))
+    if (!PyArg_ParseTuple(args, "SnOOp", &data, &pos, &resolver, &settings,
+                          &allow_recon))
         return NULL;
     d = (const unsigned char *)PyBytes_AS_STRING(data);
     n = PyBytes_GET_SIZE(data);
@@ -3081,7 +3102,7 @@ ctok_parse_object(PyObject *self, PyObject *args)
         PyErr_SetString(S.eparse, "unexpected EOF at value position");
         return NULL;
     }
-    v = parse_value(d, n, &pos, resolver, settings, allow_recon, max_scan);
+    v = parse_value(d, n, &pos, resolver, settings, allow_recon);
     if (v == NULL)
         return NULL;
     return Py_BuildValue("(Nn)", v, pos);
@@ -3092,10 +3113,11 @@ ctok_configure(PyObject *self, PyObject *args)
 {
     PyObject *cdict, *cstring, *name, *ref, *cstream, *cos_null;
     PyObject *name_cache, *name_from_run, *eparse;
+    long max_scan, max_deref;
     (void)self;
-    if (!PyArg_ParseTuple(args, "OOOOOOOOO", &cdict, &cstring, &name, &ref,
+    if (!PyArg_ParseTuple(args, "OOOOOOOOOll", &cdict, &cstring, &name, &ref,
                           &cstream, &cos_null, &name_cache, &name_from_run,
-                          &eparse))
+                          &eparse, &max_scan, &max_deref))
         return NULL;
     Py_XDECREF(S.CDict);
     Py_XDECREF(S.CString);
@@ -3125,6 +3147,8 @@ ctok_configure(PyObject *self, PyObject *args)
     S.name_cache = name_cache;
     S.name_from_run = name_from_run;
     S.eparse = eparse;
+    S.max_scan = max_scan;
+    S.max_deref = max_deref;
     S.length_name = PyObject_CallFunction(name, "s", "Length");
     if (S.length_name == NULL)
         return NULL;
@@ -3525,10 +3549,10 @@ static PyMethodDef ctok_methods[] = {
      "emit_xref_table([(num, off, gen)...], eol, row_eol) -> bytes"},
     {"configure", ctok_configure, METH_VARARGS,
      "configure(CDict, CString, Name, Ref, CStream, COS_NULL, name_cache, "
-     "name_from_run, EParseError)"},
+     "name_from_run, EParseError, MAX_SCAN_RANGE, MAX_DEREF_DEPTH)"},
     {"parse_object", ctok_parse_object, METH_VARARGS,
-     "parse_object(data, pos, resolver, settings, allow_reconstruction, "
-     "max_scan_range) -> (value, new_pos)"},
+     "parse_object(data, pos, resolver, settings, allow_reconstruction) "
+     "-> (value, new_pos)"},
     {"lex_content", ctok_lex_content, METH_VARARGS,
      "lex_content(data) -> [(op_bytes, operands_tuple), ...]"},
     {"cmap_codes_w", ctok_cmap_codes_w, METH_VARARGS,
@@ -3547,10 +3571,10 @@ static PyMethodDef ctok_methods[] = {
      "| None(anomaly -> Python path)"},
     {"parse_indirect", ctok_parse_indirect, METH_VARARGS,
      "parse_indirect(data, offset, expected_num, resolver, settings, "
-     "allow_reconstruction, max_scan_range) -> value | None(mismatch)"},
+     "allow_reconstruction) -> value | None(mismatch)"},
     {"walk_pages", ctok_walk_pages, METH_VARARGS,
-     "walk_pages(pages_dict, root_num, resolver, soft_structure, "
-     "deref_limit) -> [(num, mediabox, cropbox, resources, contents, "
+     "walk_pages(pages_dict, root_num, resolver, soft_structure) "
+     "-> [(num, mediabox, cropbox, resources, contents, "
      "rotate), ...]"},
     {"interpret_content", ctok_interpret_content, METH_VARARGS,
      "interpret_content(data, get_font, do_handler, span_cls, "

@@ -30,7 +30,7 @@ import re
 from typing import Callable, NamedTuple, Optional, Union
 
 from .encodings import decode_pdfdoc, encode_pdfdoc
-from .errors import EParseError
+from .errors import MAX_DEREF_DEPTH, MAX_SCAN_RANGE, EParseError
 from .raw import Raw, is_delim, is_ws
 
 # ---------------------------------------------------------------------------
@@ -122,29 +122,15 @@ class CDict(dict):
     Reference chains are followed ≤5 hops (dereference depth guard,
     COSDictionary.java:102-110)."""
 
-    MAX_DEREF_DEPTH = 5
-
     def deref(self, v: COSValue, resolver: Optional[Resolver]) -> COSValue:
         if not isinstance(v, Ref):
             return v
         if resolver is None:
             return COS_NULL
-        # single-hop fast path (r9): almost every real chain is one Ref
-        # deep, so resolve once before paying the two-getattr limit
-        # lookup below — only multi-hop chains (and only they can loop)
-        # fetch ParserSettings.max_deref_depth through the bound
-        # resolver's owner (Parser sets .deref_limit from settings).
-        # NB with any sane limit (≥1) behavior is identical to checking
-        # the limit up front.
         v = resolver(v)
-        if not isinstance(v, Ref):
-            return v
-        limit = getattr(
-            getattr(resolver, "__self__", None), "deref_limit", self.MAX_DEREF_DEPTH
-        )
         depth = 1
         while isinstance(v, Ref):
-            if depth >= limit:
+            if depth >= MAX_DEREF_DEPTH:
                 raise EParseError("Infinite or too deep loop of references")
             v = resolver(v)
             depth += 1
@@ -680,6 +666,7 @@ def _load_ctok():
         mod.configure(
             CDict, CString, Name, Ref, CStream, COS_NULL,
             _NAME_CACHE, _name_from_run, EParseError,
+            MAX_SCAN_RANGE, MAX_DEREF_DEPTH,
         )
         return mod
     except Exception:  # pragma: no cover - env without gcc/headers
@@ -700,9 +687,7 @@ if _CTOK is not None:
         if data.__class__ is not bytes:  # memoryview etc. → Python path
             return _parse_object_py(r, resolver)
         st = r.settings
-        v, r.pos = _ctok_parse(
-            data, r.pos, resolver, st, st.allow_reconstruction, st.max_scan_range
-        )
+        v, r.pos = _ctok_parse(data, r.pos, resolver, st, st.allow_reconstruction)
         return v
 
     parse_object.__doc__ = _parse_object_py.__doc__

@@ -222,7 +222,10 @@ class Document:
         /Kids → soft-assert, zero pages. Inheritable attributes
         (Resources/MediaBox/CropBox/Rotate) accumulate down the walk —
         the reference skips inheritance (PDFPage.java:84-86 admits it);
-        spec-correct here (ISO 32000-1 §7.7.3.4)."""
+        spec-correct here (ISO 32000-1 §7.7.3.4). Each node, the root
+        included, is visited once: a node reached a second time (a
+        cycle, or kids shared between nodes) is an EParseError, as
+        pdf.js and MuPDF reject page-tree cycles."""
         res = self.parser._resolve
         st = self.parser.settings
         pages_dict = self.catalog.get_dict("Pages", None, res)
@@ -258,15 +261,8 @@ class Document:
         root_num = self.parser.root_ref.num if self.parser.root_ref else -1
         if _CTOK_WALK is not None:
             # fused C DFS — same traversal, inheritance, and error
-            # contract as the Python walk below (parity-tested); the
-            # deref-depth limit is resolved once, exactly as
-            # CDict.deref would per hop
-            limit = getattr(
-                getattr(res, "__self__", None),
-                "deref_limit",
-                CDict.MAX_DEREF_DEPTH,
-            )
-            rows = _CTOK_WALK(pages_dict, root_num, res, st.soft_structure, limit)
+            # contract as the Python walk below (parity-tested)
+            rows = _CTOK_WALK(pages_dict, root_num, res, st.soft_structure)
             for num, mb, cb, rsc, cts, rot in rows:
                 out.append(
                     PageInfo(
@@ -279,6 +275,7 @@ class Document:
                     )
                 )
             return out
+        visited = {root_num}
 
         def walk(node: CDict, node_num: int, inherited: dict, depth: int) -> None:
             if depth > 64:
@@ -301,6 +298,9 @@ class Document:
                 for kid in kids:
                     if not isinstance(kid, Ref):
                         raise EParseError("page-tree kid is not a reference")
+                    if kid.num in visited:
+                        raise EParseError("page tree node visited twice")
+                    visited.add(kid.num)
                     knode = res(kid)
                     if not isinstance(knode, CDict):
                         raise EParseError(f"kid {kid} is not a dictionary")
@@ -334,7 +334,7 @@ class Document:
                     )
                 )
 
-        walk(pages_dict, self.parser.root_ref.num if self.parser.root_ref else -1, {}, 0)
+        walk(pages_dict, root_num, {}, 0)
         return out
 
     # ---- M7: info projection (model/PDFDocInfo.java:47-278) ----------
@@ -355,32 +355,44 @@ class Document:
             "trapped": str(trapped) if trapped is not None else "",
         }
 
-    # ---- name trees + file attachments (EXTENSION, r4 — the
-    # reference reads no name trees at all; built from ISO 32000-1
-    # §7.9.6 name trees + §7.11.3/§7.11.4 file specifications) -------
-    def _walk_name_tree(self, node: CDict, depth: int = 0):
-        """In-order (name, value) pairs of a name tree: leaf /Names
-        arrays are [key1 val1 key2 val2 ...]; intermediate nodes
-        recurse through /Kids (the /Limits bounds are advisory for
-        lookup — a full scan ignores them). PERMISSIVE: malformed
-        entries are skipped, depth is guarded."""
-        if depth > 32:
-            raise EParseError("name tree too deep")
+    # ---- name and number trees (EXTENSION — the reference reads
+    # neither; ISO 32000-1 §7.9.6 name trees, §7.9.7 number trees) ----
+    def _walk_tree(self, root: CDict, leaf_key: str):
+        """In-order (key, value) pairs of a name tree (``leaf_key``
+        "Names", string keys) or a number tree ("Nums", integer keys):
+        leaf arrays are [k1 v1 k2 v2 ...]; intermediate nodes recurse
+        through /Kids (the /Limits bounds are advisory for lookup — a
+        full scan ignores them). PERMISSIVE: malformed entries are
+        skipped and a subtree reached a second time is read once;
+        depth is guarded."""
         res = self.parser._resolve
-        names = node.get_array("Names", None, res)
-        if names:
-            for i in range(0, len(names) - 1, 2):
-                nm = node.deref(names[i], res)
-                val = node.deref(names[i + 1], res)
-                if isinstance(nm, CString):
-                    yield nm, val
-        kids = node.get_array("Kids", None, res)
-        if kids:
-            for kid in kids:
-                k = node.deref(kid, res)
-                if isinstance(k, CDict):
-                    yield from self._walk_name_tree(k, depth + 1)
+        kind, key_type = ("name", CString) if leaf_key == "Names" else ("number", int)
+        seen: set[int] = set()
 
+        def walk(node: CDict, depth: int):
+            if depth > 32:
+                raise EParseError(f"{kind} tree too deep")
+            if id(node) in seen:
+                return
+            seen.add(id(node))
+            items = node.get_array(leaf_key, None, res)
+            if items:
+                for i in range(0, len(items) - 1, 2):
+                    k = node.deref(items[i], res)
+                    val = node.deref(items[i + 1], res)
+                    if isinstance(k, key_type) and not isinstance(k, bool):
+                        yield k, val
+            kids = node.get_array("Kids", None, res)
+            if kids:
+                for kid in kids:
+                    kd = node.deref(kid, res)
+                    if isinstance(kd, CDict):
+                        yield from walk(kd, depth + 1)
+
+        return walk(root, 0)
+
+    # ---- file attachments (EXTENSION, r4; §7.11.3/§7.11.4 file
+    # specifications) --------------------------------------------------
     def embedded_files(self) -> list[dict]:
         """Catalog /Names → /EmbeddedFiles name tree → one row per
         attachment: tree key, /UF-or-/F filename, decoded size, md5 of
@@ -398,7 +410,7 @@ class Document:
         if ef_root is None:
             return []
         out = []
-        for nm, fs in self._walk_name_tree(ef_root):
+        for nm, fs in self._walk_tree(ef_root, "Names"):
             if not isinstance(fs, CDict):
                 continue
             fname = fs.get_str("UF", "", res) or fs.get_str("F", "", res)
@@ -422,29 +434,6 @@ class Document:
     # ---- /PageLabels number tree (EXTENSION, r7 — the reference
     # reads no number trees; ISO 32000-1 §7.9.7 number trees +
     # §12.4.2 page-label ranges) --------------------------------
-    def _walk_number_tree(self, node: CDict, depth: int = 0):
-        """In-order (integer key, value) pairs of a number tree: leaf
-        /Nums arrays are [k1 v1 k2 v2 ...]; intermediate nodes recurse
-        through /Kids (/Limits are advisory for a full scan, §7.9.7).
-        PERMISSIVE: malformed entries are skipped, depth is guarded."""
-        if depth > 32:
-            raise EParseError("number tree too deep")
-        res = self.parser._resolve
-        nums = node.get_array("Nums", None, res)
-        if nums:
-            for i in range(0, len(nums) - 1, 2):
-                k = node.deref(nums[i], res)
-                val = node.deref(nums[i + 1], res)
-                if isinstance(k, int) and not isinstance(k, bool):
-                    yield k, val
-        kids = node.get_array("Kids", None, res)
-        if kids:
-            for kid in kids:
-                kd = node.deref(kid, res)
-                if isinstance(kd, CDict):
-                    yield from self._walk_number_tree(kd, depth + 1)
-
-
     def page_labels(self) -> list:
         """One display label per page, in page order (§12.4.2): each
         number-tree entry (start_page -> label dict) opens a range; a
@@ -460,7 +449,7 @@ class Document:
         ranges = sorted(
             (
                 (k, v)
-                for k, v in self._walk_number_tree(root)
+                for k, v in self._walk_tree(root, "Nums")
                 if isinstance(v, CDict) and 0 <= k
             ),
             key=lambda kv: kv[0],

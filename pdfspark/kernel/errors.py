@@ -30,17 +30,23 @@ class EParseError(Exception):
     """Hard parse failure — aborts the current document only."""
 
 
+# Bounded-scan constants of reference ``parser/ParserSettings.java``;
+# no caller sets them, so they are not settings here.
+EOF_LOOKUP_RANGE = 1024  # eofLookupRange, "Same as Acrobat" (:16)
+HEADER_LOOKUP_RANGE = 100  # headerLookupRange (:14-15)
+STARTXREF_LOOKUP_RANGE = 100  # startxref reverse scan (PDFParser.java:97)
+MAX_SCAN_RANGE = 100  # MAX_SCAN_RANGE (:6)
+# dereference depth guard (COSDictionary.java:102-110)
+MAX_DEREF_DEPTH = 5
+
+
 @dataclass
 class ParserSettings:
     """Mirrors reference ``parser/ParserSettings.java`` defaults.
 
     - ignore syntax / structure / non-supported errors = True
     - ignore data-integrity errors = False
-    Bounded-scan constants: eofLookupRange=1024 ("Same as Acrobat",
-    ``ParserSettings.java:16``), headerLookupRange=100
-    (``ParserSettings.java:14-15``), MAX_SCAN_RANGE=100
-    (``ParserSettings.java:6``), startxref reverse-scan 100
-    (``PDFParser.java:97``).
+    The bounded-scan constants are the module constants above.
     """
 
     ignore_syntax_errors: bool = True
@@ -48,12 +54,6 @@ class ParserSettings:
     ignore_data_integrity_errors: bool = False
     ignore_unsupported_features: bool = True
 
-    eof_lookup_range: int = 1024
-    header_lookup_range: int = 100
-    startxref_lookup_range: int = 100
-    max_scan_range: int = 100
-    # reference COSDictionary.dereference() depth guard (COSDictionary.java:102-110)
-    max_deref_depth: int = 5
     # opt-in ISO 32000-1 §C.2 table reconstruction for files whose
     # startxref/xref chain is broken or absent. Default False: the
     # reference REQUIRES startxref (PDFParser.java:97-98), and the

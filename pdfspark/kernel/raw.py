@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import re
 
-from .errors import DEFAULT_SETTINGS, EParseError, ParserSettings
+from .errors import DEFAULT_SETTINGS, MAX_SCAN_RANGE, EParseError, ParserSettings
 
 _WS_COMMENTS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
 _WS_RE = re.compile(rb"[\x00\t\n\x0c\r ]+")
@@ -169,7 +169,7 @@ class Raw:
         body = self.data[p : p + length]
         self.pos = p + length
         # bounded forward scan for endstream
-        limit = self.pos + self.settings.max_scan_range
+        limit = self.pos + MAX_SCAN_RANGE
         idx = self.data.find(b"endstream", self.pos, limit + 9)
         if idx < 0:
             self.settings.soft_structure(False, "endstream not found within scan range")

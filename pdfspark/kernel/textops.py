@@ -69,6 +69,21 @@ for _c in "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz":
     _AGL[_c] = _c
 
 
+def _read_tokens_until(r: Raw, end_kw: bytes) -> list:
+    """The COS tokens of one CMap section, from ``r.pos`` up to and
+    past the keyword ``end_kw`` that closes it."""
+    d = r.data
+    n = len(d)
+    toks = []
+    while r.pos < n:
+        r.skip_ws_and_comments()
+        if d.startswith(end_kw, r.pos):
+            r.pos += len(end_kw)
+            return toks
+        toks.append(parse_object(r, None))
+    raise EParseError(f"CMap: missing {end_kw.decode()}")
+
+
 def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
     """Parse a /ToUnicode CMap: beginbfchar/endbfchar and
     beginbfrange/endbfrange sections (ISO 32000-1 §9.10.3)."""
@@ -76,17 +91,6 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
     r = Raw(data)
     d = data
     n = len(d)
-
-    def read_tokens_until(end_kw: bytes) -> list:
-        toks = []
-        while r.pos < n:
-            r.skip_ws_and_comments()
-            if d.startswith(end_kw, r.pos):
-                r.pos += len(end_kw)
-                return toks
-            toks.append(parse_object(r, None))
-        raise EParseError(f"CMap: missing {end_kw.decode()}")
-
     while r.pos < n:
         i1 = d.find(b"beginbfchar", r.pos)
         i2 = d.find(b"beginbfrange", r.pos)
@@ -94,7 +98,7 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
             break
         if i2 < 0 or (0 <= i1 < i2):
             r.pos = i1 + len(b"beginbfchar")
-            toks = read_tokens_until(b"endbfchar")
+            toks = _read_tokens_until(r, b"endbfchar")
             for k in range(0, len(toks) - 1, 2):
                 src, dst = toks[k], toks[k + 1]
                 if isinstance(src, CString) and isinstance(dst, CString):
@@ -102,7 +106,7 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
                     out[code] = dst.raw.decode("utf-16-be", errors="surrogatepass")
         else:
             r.pos = i2 + len(b"beginbfrange")
-            toks = read_tokens_until(b"endbfrange")
+            toks = _read_tokens_until(r, b"endbfrange")
             for k in range(0, len(toks) - 2, 3):
                 lo, hi, dst = toks[k], toks[k + 1], toks[k + 2]
                 if not (isinstance(lo, CString) and isinstance(hi, CString)):
@@ -112,7 +116,10 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
                 if isinstance(dst, CString):
                     base = int.from_bytes(dst.raw, "big")
                     width = len(dst.raw)
-                    for c in range(lo_i, hi_i + 1):
+                    # a destination that outgrows its byte width is
+                    # malformed: those codes are skipped (PERMISSIVE)
+                    last = min(hi_i, lo_i + (1 << 8 * width) - 1 - base)
+                    for c in range(lo_i, last + 1):
                         out[c] = (base + c - lo_i).to_bytes(width, "big").decode(
                             "utf-16-be", errors="surrogatepass"
                         )
@@ -158,7 +165,8 @@ class EmbeddedCMap:
         # embedded→embedded chaining (ISO 32000-1 Table 120 /UseCMap:
         # "a stream containing a CMap"): unmapped codes fall through
         # to the imported embedded CMap; code spaces are inherited
-        # (merged into `ranges` at link time, Font._load_embedded_cmap)
+        # (merged into `ranges` at link time,
+        # Font._load_embedded_cmap_keyed)
         self.base: Optional["EmbeddedCMap"] = None
 
     def link_base(self, base: "EmbeddedCMap") -> None:
@@ -180,16 +188,12 @@ class EmbeddedCMap:
             return self.base.bf(code)
         return s
 
-    def codes(self, raw: bytes) -> list[int]:
-        """Tokenize show-string bytes into codes by code-space match
-        (byte-wise interval per the CMap spec); an unmatched byte is
-        consumed alone (permissive)."""
-        return [c for c, _w in self.codes_w(raw)]
-
     def codes_w(self, raw: bytes) -> list[tuple[int, int]]:
-        """codes() plus each code's BYTE WIDTH — word spacing applies
-        to the single-byte code 32 only (§9.3.3), so consumers must be
-        able to tell a 1-byte 32 from a 2-byte <0020>."""
+        """Tokenize show-string bytes into (code, byte width) pairs by
+        code-space match (byte-wise interval per the CMap spec); an
+        unmatched byte is consumed alone (permissive). The width is
+        kept because word spacing applies to the single-byte code 32
+        only (§9.3.3): a 1-byte 32 is not a 2-byte <0020>."""
         if _CTOK_CMAP_CODES is not None:
             return _CTOK_CMAP_CODES(raw, self.ranges)
         out = []
@@ -236,8 +240,8 @@ def parse_embedded_cmap(data: bytes) -> EmbeddedCMap:
     parser. `/Name usecmap` imports resolve when the base is a
     PREDEFINED CMap (Table 118): unmapped codes then decode through
     the base's byte encoding. Embedded→embedded imports resolve via
-    the stream dict's /UseCMap entry (Font._load_embedded_cmap → the
-    spec's Table 120 mechanism; content-level `usecmap` of a non-
+    the stream dict's /UseCMap entry (Font._load_embedded_cmap_keyed →
+    the spec's Table 120 mechanism; content-level `usecmap` of a non-
     predefined name alone carries no stream reference to follow)."""
     cm = EmbeddedCMap()
     cm.bf_map = parse_tounicode_cmap(data)
@@ -254,18 +258,6 @@ def parse_embedded_cmap(data: bytes) -> EmbeddedCMap:
         )
     r = Raw(data)
     d = data
-    n = len(d)
-
-    def read_tokens_until(end_kw: bytes) -> list:
-        toks = []
-        while r.pos < n:
-            r.skip_ws_and_comments()
-            if d.startswith(end_kw, r.pos):
-                r.pos += len(end_kw)
-                return toks
-            toks.append(parse_object(r, None))
-        raise EParseError(f"CMap: missing {end_kw.decode()}")
-
     sections = (
         (b"begincodespacerange", b"endcodespacerange"),
         (b"begincidchar", b"endcidchar"),
@@ -279,7 +271,7 @@ def parse_embedded_cmap(data: bytes) -> EmbeddedCMap:
             break
         i, b_kw, e_kw = min(hits)
         r.pos = i + len(b_kw)
-        toks = read_tokens_until(e_kw)
+        toks = _read_tokens_until(r, e_kw)
         pos = r.pos
         if b_kw == b"begincodespacerange":
             for k in range(0, len(toks) - 1, 2):
@@ -407,7 +399,7 @@ class Font:
                 # embedded CMap stream: custom code spaces + cid/bf
                 # sections carried in the file itself (§9.7.5.3);
                 # /UseCMap chains to another embedded stream (r4)
-                self.cmap = self._load_embedded_cmap(enc_v, resolver, 0)
+                self.cmap = self._load_embedded_cmap_keyed(enc_v, resolver, 0)[0]
         self.cid_widths: Optional[dict[int, int]] = None
         self.cid_wranges: list[tuple[int, int, int]] = []
         self._code_memo: dict = {}  # (code, bw) → (char, width)
@@ -509,23 +501,18 @@ class Font:
         )  # noqa: E501 — always set (two-byte fonts carry None)
 
     @staticmethod
-    def _load_embedded_cmap(
-        stream: CStream, resolver: Optional[Resolver], depth: int
-    ) -> EmbeddedCMap:
-        """Parse an embedded /Encoding CMap stream and follow its
-        /UseCMap chain (ISO 32000-1 Table 120: a stream containing a
-        CMap, or a predefined CMap name). Embedded→embedded imports
-        resolve recursively (depth-guarded); the child inherits the
-        base's code spaces and falls through to its cid/bf sections
-        for unmapped codes (§9.7.5.2 usecmap semantics)."""
-        return Font._load_embedded_cmap_keyed(stream, resolver, depth)[0]
-
-    @staticmethod
     def _load_embedded_cmap_keyed(
         stream: CStream, resolver: Optional[Resolver], depth: int
     ) -> tuple[EmbeddedCMap, tuple]:
-        """Memoized loader (r7): a linked EmbeddedCMap is a pure
-        function of (this stream's decoded bytes, the resolved
+        """(cmap, memo key) for an embedded /Encoding CMap stream, its
+        /UseCMap chain followed (ISO 32000-1 Table 120: a stream
+        containing a CMap, or a predefined CMap name). Embedded→embedded
+        imports resolve recursively (depth-guarded); the child inherits
+        the base's code spaces and falls through to its cid/bf sections
+        for unmapped codes (§9.7.5.2 usecmap semantics).
+
+        Memoized (r7): a linked EmbeddedCMap is a pure function of
+        (this stream's decoded bytes, the resolved
         /UseCMap base — itself keyed recursively — and whether the
         depth guard still follows bases), and it is never mutated
         after load (link_base runs pre-insert; bf/cid/codes_w are
@@ -611,9 +598,9 @@ class Font:
 
     def _code_entry(self, code: int, w: int) -> tuple[str, int]:
         """(decoded char(s), glyph width) for ONE embedded-CMap code —
-        the decode() lookup chain (ToUnicode > bf sections >
-        CID-as-Unicode > usecmap base codec) plus the /W width; cached
-        per (code, byte-width) by show_info."""
+        the lookup chain (ToUnicode > bf sections > CID-as-Unicode >
+        usecmap base codec) plus the /W width; cached per (code,
+        byte-width) by show_info."""
         cm = self.cmap
         tu = self.tounicode
         if tu is not None and code in tu:
@@ -657,81 +644,6 @@ class Font:
             return _MACROMAN_TABLE
         return _LATIN1_TABLE
 
-    def decode(self, raw: bytes) -> str:
-        if self.two_byte:
-            if self.codec is not None:
-                # predefined CMap: raw code bytes ARE this encoding
-                # (variable 1-2-byte widths handled by the codec)
-                return raw.decode(self.codec, errors="replace")
-            if self.cmap is not None:
-                # embedded CMap: code-space tokenization, then per code
-                # ToUnicode > bf sections > CID-as-Unicode (the same
-                # Identity fallback documented below) > usecmap base
-                # codec over the code's own bytes
-                cm = self.cmap
-                tu = self.tounicode
-                out = []
-                for code, w in cm.codes_w(raw):
-                    if tu is not None and code in tu:
-                        out.append(tu[code])
-                        continue
-                    s = cm.bf(code)
-                    if s is not None:
-                        out.append(s)
-                        continue
-                    cid = cm.cid(code)
-                    if cid is not None and cm.coll is not None and (
-                        cid in cm.coll
-                    ):
-                        # registered character collection (§9.7.3):
-                        # CID → Unicode via the ordering table
-                        out.append(cm.coll[cid])
-                    elif cid is not None and 0 <= cid <= 0x10FFFF:
-                        out.append(chr(cid))
-                    elif cm.base_codec is not None:
-                        out.append(
-                            code.to_bytes(w, "big").decode(
-                                cm.base_codec, errors="replace"
-                            )
-                        )
-                    else:
-                        out.append("�")
-                return (
-                    "".join(out)
-                    .encode("utf-16", "surrogatepass")
-                    .decode("utf-16", "replace")
-                )
-            codes = [
-                int.from_bytes(raw[i : i + 2], "big") for i in range(0, len(raw) - 1, 2)
-            ]
-            if self.tounicode is not None:
-                s = "".join(self.tounicode.get(c, "�") for c in codes)
-                # BMP-only CMaps emit astral chars as surrogate halves;
-                # recombine pairs (lone halves degrade to U+FFFD)
-                return s.encode("utf-16", "surrogatepass").decode(
-                    "utf-16", "replace"
-                )
-            # Identity fallback: code == Unicode scalar (UTF-16BE)
-            return raw.decode("utf-16-be", errors="replace")
-        if self.tounicode is not None:
-            return "".join(self.tounicode.get(b, "�") for b in raw)
-        # one C-level translate instead of a per-byte Python genexpr
-        # (simple-font show strings are the hottest decode path)
-        tr = self.trans
-        if tr is None:
-            t = self.table
-            if t is None or t is _LATIN1_TABLE:
-                tr = _IDENTITY_TRANS
-            elif t is _WINANSI_TABLE:
-                tr = _WINANSI_TRANS
-            elif t is _MACROMAN_TABLE:
-                tr = _MACROMAN_TRANS
-            else:
-                tr = {i: t[i] for i in range(256)}
-            self.trans = tr
-        s = raw.decode("latin-1")
-        return s if tr is _IDENTITY_TRANS else s.translate(tr)
-
     def space_width(self) -> Optional[float]:
         """Width (1000-em units) of the word-space glyph — the
         single-byte code 32 (§9.3.3) — used as the yardstick by the
@@ -759,16 +671,19 @@ class Font:
         return sw
 
     def show_info(self, raw: bytes) -> tuple:
-        """The per-show-string font work, consolidated into ONE call:
-        (decoded_text, advance_1000 | None, nglyphs, nsp).
+        """The per-show-string font work in ONE call, the only place a
+        font decodes a show string: (decoded_text, advance | None,
+        nglyphs, nsp).
 
-        Semantics are exactly decode(raw) + advance_1000(raw) + the
-        §9.4.4 glyph/space counts the interpreter needs — but embedded
-        CMaps tokenize the code bytes ONCE (decode and advance each
-        used to run codes_w separately), and the C interpreter calls
-        this single method per show op. nsp counts word-spacing
-        positions (§9.3.3: the SINGLE-BYTE code 32 only) and is always
-        computed — tw·nsp is exactly 0.0 when tw is 0.0 either way."""
+        advance is the glyph-advance sum in 1000-em units, an exact
+        INTEGER for every font but Type3 (so width math is
+        bit-identical across engines), or None when the font carries
+        no metrics. Embedded CMaps tokenize the code bytes once. The C
+        interpreter calls this method per show op, except for plain
+        simple fonts, whose _fast_spec tables carry the same rules
+        into C. nsp counts word-spacing positions (§9.3.3:
+        the SINGLE-BYTE code 32 only) and is always computed — tw·nsp
+        is exactly 0.0 when tw is 0.0 either way."""
         if self.two_byte:
             if self.codec is not None:
                 text = raw.decode(self.codec, errors="replace")
@@ -813,6 +728,8 @@ class Font:
             if self.tounicode is not None:
                 g = self.tounicode.get
                 s = "".join([g(c, "�") for c in codes])
+                # BMP-only CMaps emit astral chars as surrogate halves;
+                # recombine pairs (lone halves degrade to U+FFFD)
                 text = s.encode("utf-16", "surrogatepass").decode(
                     "utf-16", "replace"
                 )
@@ -828,48 +745,41 @@ class Font:
             else:
                 adv = n * self.default_width
             return text, adv, n, 0
-        return self.decode(raw), self.advance_1000(raw), len(raw), raw.count(32)
-
-    def advance_1000(self, raw: bytes) -> Optional[int]:
-        """Glyph-advance sum for one show string in 1000-em units, as
-        an exact INTEGER (so width math is bit-identical across
-        engines), or None when this font carries no metrics."""
-        if self.two_byte:
-            if self.codec is not None:
-                # variable-width codes: advance per DECODED char
-                n = len(raw.decode(self.codec, errors="replace"))
-            elif self.cmap is not None:
-                if self.cid_widths is not None or self.cid_wranges:
-                    # per-CID /W widths (code → CID via the CMap)
-                    cm = self.cmap
-                    return sum(
-                        self._cid_width(cm.cid(c)) for c in cm.codes(raw)
-                    )
-                n = len(self.cmap.codes(raw))  # advance per CODE
-            else:
-                if self.cid_widths is not None or self.cid_wranges:
-                    # Identity encoding: CID == code
-                    return sum(
-                        self._cid_width(
-                            int.from_bytes(raw[i : i + 2], "big")
-                        )
-                        for i in range(0, len(raw) - 1, 2)
-                    )
-                n = len(raw) // 2
-            return n * self.default_width
-        if self.widths is None:
-            return None
-        ws, dflt = self.widths, self.default_width
-        t3 = self.t3_scale
+        # simple font: one byte per code
+        tu = self.tounicode
+        if tu is not None:
+            text = "".join([tu.get(b, "�") for b in raw])
+        else:
+            # one C-level translate instead of a per-byte Python lookup
+            tr = self.trans
+            if tr is None:
+                t = self.table
+                if t is None or t is _LATIN1_TABLE:
+                    tr = _IDENTITY_TRANS
+                elif t is _WINANSI_TABLE:
+                    tr = _WINANSI_TRANS
+                elif t is _MACROMAN_TABLE:
+                    tr = _MACROMAN_TRANS
+                else:
+                    tr = {i: t[i] for i in range(256)}
+                self.trans = tr
+            text = raw.decode("latin-1")
+            if tr is not _IDENTITY_TRANS:
+                text = text.translate(tr)
+        ws = self.widths
+        if ws is None:
+            return text, None, len(raw), raw.count(32)
+        dflt = self.default_width
         if not ws or (len(ws) == 1 and ws[0] == dflt):
-            base = len(raw) * dflt  # constant-width fast path
-            return base * t3 if t3 is not None else base
-        fc = self.first_char
-        hi = fc + len(ws)
-        w = 0
-        for b in raw:
-            w += ws[b - fc] if fc <= b < hi else dflt
-        return w * t3 if t3 is not None else w
+            adv = len(raw) * dflt  # constant-width fast path
+        else:
+            fc = self.first_char
+            hi = fc + len(ws)
+            adv = sum([ws[b - fc] if fc <= b < hi else dflt for b in raw])
+        t3 = self.t3_scale
+        if t3 is not None:
+            adv = adv * t3  # Type3: glyph space → 1000-em
+        return text, adv, len(raw), raw.count(32)
 
 
 def _width(v) -> int:
@@ -886,9 +796,9 @@ _FAST_SPEC_MEMO: dict = {}
 
 def _fast_show_spec(font: "Font"):
     """(uni_u32_bytes, widths_i64_bytes | None) for an eligible simple
-    font, or None.  uni maps byte → decoded code point (the latin-1 +
-    translate-table semantics of Font.decode); widths mirror
-    advance_1000's per-byte table.  Memoized on the table/metrics
+    font, or None.  uni maps byte → decoded code point and widths is
+    the per-byte advance table, both as Font.show_info's simple-font
+    branch reads them.  Memoized on the table/metrics
     identity so per-document Font rebuilds don't re-derive it."""
     t = font.table
     tkey = (

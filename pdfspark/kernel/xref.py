@@ -32,7 +32,14 @@ from .cos import (
     parse_object,
     try_read_id,
 )
-from .errors import DEFAULT_SETTINGS, EParseError, ParserSettings
+from .errors import (
+    DEFAULT_SETTINGS,
+    EOF_LOOKUP_RANGE,
+    HEADER_LOOKUP_RANGE,
+    STARTXREF_LOOKUP_RANGE,
+    EParseError,
+    ParserSettings,
+)
 from .filters import decode_stream
 from .raw import Raw
 
@@ -132,8 +139,6 @@ class Parser:
     def __init__(self, data: bytes, settings: Optional[ParserSettings] = None):
         self.raw = Raw(data, settings)
         self.settings = settings or DEFAULT_SETTINGS
-        # consumed by CDict.deref via the bound _resolve (settings knob)
-        self.deref_limit = self.settings.max_deref_depth
         self.security = None  # StandardSecurityHandler after unlock()
         self._encrypt_direct = None  # direct (non-ref) /Encrypt dict
         self.xref = XRef()
@@ -159,7 +164,7 @@ class Parser:
         hdr = 0
         if not (d.startswith(b"%PDF-") or d.startswith(b"%FDF-")):
             # B8 forward scan ≤100 bytes (PDFParser.java:71-81)
-            hdr = d.find(b"%PDF-", 0, st.header_lookup_range)
+            hdr = d.find(b"%PDF-", 0, HEADER_LOOKUP_RANGE)
             if hdr < 0:
                 raise EParseError("no %PDF- header found")
         self._parse_version(hdr)
@@ -177,12 +182,12 @@ class Parser:
         # %%EOF reverse scan within 1024 of end; missing marker is a
         # SOFT syntax event — fall back to EOF = file end
         # (PDFParser.java:91-95, ParserSettings.java:16)
-        eof = self.raw.reverse_scan(len(d), b"%%EOF", st.eof_lookup_range)
+        eof = self.raw.reverse_scan(len(d), b"%%EOF", EOF_LOOKUP_RANGE)
         if eof < 0:
             st.soft_syntax(False, "missing %%EOF marker")
             eof = len(d)
         # startxref reverse scan within 100 of %%EOF (PDFParser.java:97)
-        sx = self.raw.reverse_scan(eof, b"startxref", st.startxref_lookup_range)
+        sx = self.raw.reverse_scan(eof, b"startxref", STARTXREF_LOOKUP_RANGE)
         if sx < 0:
             raise EParseError("missing startxref")
         r = self.raw
@@ -719,8 +724,7 @@ class Parser:
         if _CTOK_PARSE_INDIRECT is not None and d.__class__ is bytes:
             st = r.settings
             v = _CTOK_PARSE_INDIRECT(
-                d, e.offset, e.num, self._resolve, st,
-                st.allow_reconstruction, st.max_scan_range,
+                d, e.offset, e.num, self._resolve, st, st.allow_reconstruction
             )
             if v is not None:
                 return v

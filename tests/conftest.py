@@ -20,14 +20,19 @@ def ref_bytes(name: str) -> bytes:
 def one_page_pdf(content: bytes, filters: bytes = b"") -> bytes:
     """A classic one-page PDF whose only content stream is ``content``
     (already encoded for ``filters``), with exact xref offsets."""
-    objs = [
+    return classic_pdf([
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
         b" /Contents 4 0 R >>",
         b"<< /Length %d %s>>\nstream\n%s\nendstream"
         % (len(content), filters, content),
-    ]
+    ])
+
+
+def classic_pdf(objs: list) -> bytes:
+    """A classic PDF of the object bodies ``objs`` (numbered from 1,
+    object 1 the catalog), with exact xref offsets."""
     out = bytearray(b"%PDF-1.4\n")
     offsets = []
     for num, body in enumerate(objs, 1):

@@ -61,7 +61,7 @@ def test_predefined_cmap_registry(cmap, codec, sample):
     fd[Name("Encoding")] = Name(cmap)
     f = Font(fd, None)
     assert f.codec == codec
-    assert f.decode(sample.encode(codec)) == sample
+    assert f.show_info(sample.encode(codec))[0] == sample
 
 
 def test_unknown_predefined_cmap_falls_back():
@@ -70,7 +70,7 @@ def test_unknown_predefined_cmap_falls_back():
     fd[Name("Encoding")] = Name("H")  # ISO-2022 family: unsupported
     f = Font(fd, None)
     assert f.codec is None  # identity UTF-16BE fallback, not a crash
-    assert isinstance(f.decode(b"\x00A\x00b"), str)
+    assert isinstance(f.show_info(b"\x00A\x00b")[0], str)
 
 
 # --- embedded CMap streams (r3: ISO 32000-1 §9.7.5.3) ------------------
@@ -101,7 +101,7 @@ def test_embedded_cmap_roundtrips(text):
 
 def test_embedded_cmap_sections_parsed_directly():
     """Unit pin: all five section kinds of the generator's CMap land in
-    the parsed EmbeddedCMap, and codes() honors mixed 1/2-byte spaces."""
+    the parsed EmbeddedCMap, and codes_w() honors mixed 1/2-byte spaces."""
     from pdfspark.codec import _build_embedded_cmap
     from pdfspark.kernel.textops import parse_embedded_cmap
 
@@ -118,7 +118,7 @@ def test_embedded_cmap_sections_parsed_directly():
     assert cm.bf_map[c2] == "嵌"  # bfrange (lo == hi)
     # mixed-width tokenization: 'A' (1 byte) then 中 (2 bytes)
     raw = b"A" + code_of["中"]
-    assert cm.codes(raw) == [ord("A"), c0]
+    assert [c for c, _ in cm.codes_w(raw)] == [ord("A"), c0]
 
 
 def test_embedded_cmap_tounicode_precedence():
@@ -128,13 +128,19 @@ def test_embedded_cmap_tounicode_precedence():
     from pdfspark.kernel.textops import Font, parse_embedded_cmap
 
     data, code_of = _build_embedded_cmap(["中"])
-    f = Font(CDict(), None)
-    f.two_byte = True
-    f.cmap = parse_embedded_cmap(data)
-    f.tounicode = {int.from_bytes(code_of["中"], "big"): "Z"}
-    assert f.decode(code_of["中"]) == "Z"
-    f.tounicode = None
-    assert f.decode(code_of["中"]) == "中"
+
+    def font(tounicode):
+        # show_info memoizes per code, so each lookup order gets a
+        # fresh Font (fonts are never mutated after __init__)
+        f = Font(CDict(), None)
+        f.two_byte = True
+        f.cmap = parse_embedded_cmap(data)
+        f.tounicode = tounicode
+        return f
+
+    code = int.from_bytes(code_of["中"], "big")
+    assert font({code: "Z"}).show_info(code_of["中"])[0] == "Z"
+    assert font(None).show_info(code_of["中"])[0] == "中"
 
 
 # --- Type0 /W per-CID widths (r3) --------------------------------------
@@ -175,7 +181,7 @@ def test_embedded_cmap_w_advance_multibyte():
     f.default_width = 1000
     f._parse_w_array([0, 127, 500])
     raw = b"A B" + code_of["中"]  # A, space, B (1-byte) + 中 (2-byte)
-    assert f.advance_1000(raw) == 500 * 3 + 1000
+    assert f.show_info(raw)[1] == 500 * 3 + 1000
     # byte-width discrimination for word spacing (§9.3.3)
     pairs = f.cmap.codes_w(b" " + code_of["中"])
     assert pairs == [(32, 1), (int.from_bytes(code_of["中"], "big"), 2)]
@@ -188,7 +194,7 @@ def test_identity_h_w_advance():
     f.default_width = 1000
     f._parse_w_array([65, [250], 0x4E00, 0x9FFF, 800])
     raw = (65).to_bytes(2, "big") + "中".encode("utf-16-be")
-    assert f.advance_1000(raw) == 250 + 800
+    assert f.show_info(raw)[1] == 250 + 800
 
 
 def test_generator_f3_w_matches_simple_font():
@@ -224,8 +230,8 @@ def test_usecmap_base_fallback():
     f = Font(CDict(), None)
     f.two_byte = True
     f.cmap = cm
-    assert f.decode(b"A" + gbk) == "A中"  # base codec covers the gap
-    assert f.decode(b"\x81\x41") == "X"  # local mapping wins
+    assert f.show_info(b"A" + gbk)[0] == "A中"  # base codec covers the gap
+    assert f.show_info(b"\x81\x41")[0] == "X"  # local mapping wins
     # unknown base name → no codec, unmapped stays U+FFFD
     cm2 = parse_embedded_cmap(cmap.replace(b"GBK-EUC-H", b"NoSuch-H"))
     assert cm2.base_codec is None
@@ -252,7 +258,7 @@ def test_usecmap_embedded_chain():
     child_d = CDict()
     child_d[Name("UseCMap")] = base_stream  # direct value: deref no-op
     child_stream = CStream(child_d, child_b)
-    cm = Font._load_embedded_cmap(child_stream, None, 0)
+    cm = Font._load_embedded_cmap_keyed(child_stream, None, 0)[0]
     assert cm.base is not None
     assert len(cm.ranges) == 2  # inherited code spaces
     # 1-byte space + cidrange come from the BASE
@@ -262,7 +268,7 @@ def test_usecmap_embedded_chain():
     f.two_byte = True
     f.cmap = cm
     raw = b"A" + code_of["中"] + code_of["文"] + code_of["字"]
-    assert f.decode(raw) == "A中文字"
+    assert f.show_info(raw)[0] == "A中文字"
     # and the whole-document path: chained doc_id ('5') roundtrips
     text = "mixed ascii 与中文内容 plus spaces"
     spans = synth_spans_py("5", text)
@@ -317,7 +323,7 @@ def test_type3_font_roundtrip_and_matrix_widths():
     assert geo == geo_classic  # incl. bit-exact widths
     bare = CDict()
     bare[Name("Subtype")] = Name("Type3")
-    assert _Font(bare, None).advance_1000(b"ab") is None
+    assert _Font(bare, None).show_info(b"ab")[1] is None
 
 
 def test_japan1_collection_decode():
@@ -480,3 +486,41 @@ def test_collection_roundtrips_real_cjk():
             t and any(cp0 <= ord(ch) < cp0 + 26 for ch in t)
             for (_k, t, _m, _o) in got
         )
+
+
+# --- malformed /ToUnicode bfrange -----------------------------------------
+
+
+def test_bfrange_destination_overflow_skipped():
+    """A bfrange destination that outgrows its byte width maps only the
+    codes that fit; the rest are skipped like other malformed entries."""
+    from pdfspark.kernel.textops import parse_tounicode_cmap
+
+    assert parse_tounicode_cmap(
+        b"1 beginbfrange <00> <FF> <FFFF> endbfrange"
+    ) == {0: "\uffff"}
+    assert parse_tounicode_cmap(
+        b"1 beginbfrange <10> <15> <FFFD> endbfrange"
+    ) == {0x10: "\ufffd", 0x11: "\ufffe", 0x12: "\uffff"}
+
+
+def test_bfrange_destination_overflow_document():
+    """The same CMap as a font's /ToUnicode: the document extracts,
+    its unmapped codes decode to U+FFFD."""
+    from conftest import classic_pdf
+
+    cmap = b"1 beginbfrange <00> <FF> <FFFF> endbfrange"
+    content = b"BT /F1 12 Tf (AB) Tj ET"
+    payload = classic_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
+        b" /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
+        b" /ToUnicode 6 0 R >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(cmap), cmap),
+    ])
+    st, err, got = extract_spans(payload)
+    assert st == "ok", err
+    assert [s[1] for s in got] == ["\ufffd\ufffd"]

@@ -559,7 +559,7 @@ def test_parse_indirect_parity():
         (b"7 0 obj<</K 1>>endobj", 0, 7),    # obj abuts <<
     ]
     for data, off, num in cases:
-        c = pi(data, off, num, None, DEFAULT_SETTINGS, False, 100)
+        c = pi(data, off, num, None, DEFAULT_SETTINGS, False)
         py = py_mirror(data, off, num)
         c_cmp = None if c is None else cos.produce(c)
         assert c_cmp == py, (data, c_cmp, py)
@@ -890,46 +890,52 @@ def test_resolve_edge_semantics():
 
 
 def test_walk_pages_error_contract():
-    """C walk twin of the Python DFS error paths: kid-not-a-reference
-    and page-tree-too-deep raise EParseError with the same messages;
-    a /Pages node without /Kids fires the soft-structure event."""
+    """C walk twin of the Python DFS error paths: kid-not-a-reference,
+    page-tree-too-deep and node-visited-twice raise EParseError with
+    the same messages; a /Pages node without /Kids fires the
+    soft-structure event."""
     from pdfspark.kernel import docmodel
     from pdfspark.kernel.cos import CDict, Name, Ref
 
     if docmodel._CTOK_WALK is None:
         pytest.skip("C extension not available")
 
-    def run_both(store, soft_events_c, soft_events_py):
-        def resolver(ref):
-            return store.get(ref.num, CDict())
-
-        root = store[1]
-        c = docmodel._CTOK_WALK(
-            root, 1, resolver, lambda ok, msg: soft_events_c.append(msg), 5
-        )
-        return c
+    def pages_node(*kids):
+        return CDict({Name("Type"): Name("Pages"),
+                      Name("Kids"): [Ref(k, 0) for k in kids]})
 
     # kid is not a reference
     bad = CDict({Name("Type"): Name("Pages"), Name("Kids"): [42]})
     with pytest.raises(EParseError, match="not a reference"):
-        docmodel._CTOK_WALK(bad, 1, lambda r: CDict(), lambda ok, m: None, 5)
+        docmodel._CTOK_WALK(bad, 1, lambda r: CDict(), lambda ok, m: None)
     # kid resolves to a non-dict
     bad2 = CDict({Name("Type"): Name("Pages"), Name("Kids"): [Ref(2, 0)]})
     with pytest.raises(EParseError, match="is not a dictionary"):
-        docmodel._CTOK_WALK(bad2, 1, lambda r: 7, lambda ok, m: None, 5)
-    # self-referential tree → depth cap
-    loop_store = {}
-    loop = CDict({Name("Type"): Name("Pages"), Name("Kids"): [Ref(1, 0)]})
-    loop_store[1] = loop
+        docmodel._CTOK_WALK(bad2, 1, lambda r: 7, lambda ok, m: None)
+    # a 70-level chain of distinct nodes → depth cap
+    chain = {k: pages_node(k + 1) for k in range(1, 71)}
+    chain[71] = CDict({Name("Type"): Name("Page")})
     with pytest.raises(EParseError, match="too deep"):
         docmodel._CTOK_WALK(
-            loop, 1, lambda r: loop_store[r.num], lambda ok, m: None, 5
+            chain[1], 1, lambda r: chain[r.num], lambda ok, m: None
+        )
+    # self-referential tree → the root is visited twice
+    loop = pages_node(1)
+    with pytest.raises(EParseError, match="visited twice"):
+        docmodel._CTOK_WALK(loop, 1, lambda r: loop, lambda ok, m: None)
+    # kids shared between levels (2^12 leaves if expanded) → the
+    # second visit of the first shared node raises
+    shared = {k: pages_node(k + 1, k + 1) for k in range(1, 13)}
+    shared[13] = CDict({Name("Type"): Name("Page")})
+    with pytest.raises(EParseError, match="visited twice"):
+        docmodel._CTOK_WALK(
+            shared[1], 1, lambda r: shared[r.num], lambda ok, m: None
         )
     # /Pages without /Kids → soft event, zero pages
     soft = []
     nk = CDict({Name("Type"): Name("Pages")})
     rows = docmodel._CTOK_WALK(
-        nk, 1, lambda r: CDict(), lambda ok, m: soft.append((ok, m)), 5
+        nk, 1, lambda r: CDict(), lambda ok, m: soft.append((ok, m))
     )
     assert rows == [] and soft == [(False, "/Pages node without /Kids")]
     # kid numbers beyond int64 (corrupt-file territory) must flow
@@ -941,7 +947,7 @@ def test_walk_pages_error_contract():
         big: CDict({Name("Type"): Name("Page")}),
     }
     rows = docmodel._CTOK_WALK(
-        big_store[1], 1, lambda r: big_store[r.num], lambda ok, m: None, 5
+        big_store[1], 1, lambda r: big_store[r.num], lambda ok, m: None
     )
     assert [r[0] for r in rows] == [big]
 
@@ -985,7 +991,7 @@ def test_walk_pages_inheritance_parity():
 
         return store.get(ref.num, COS_NULL)
 
-    rows = docmodel._CTOK_WALK(store[10], 10, resolver, lambda ok, m: None, 5)
+    rows = docmodel._CTOK_WALK(store[10], 10, resolver, lambda ok, m: None)
     assert [r[0] for r in rows] == [13, 12]  # DFS order
     n13, n12 = rows
     assert n13[1] is box_a and n13[3] is res_d and n13[5] == 90
