@@ -32,6 +32,7 @@ typedef struct {
     PyObject *name_cache;     /* cos._NAME_CACHE (shared interning) */
     PyObject *name_from_run;  /* cos._name_from_run (miss path)     */
     PyObject *eparse;         /* kernel.errors.EParseError          */
+    PyObject *soft;           /* kernel.errors.soft (log-only)      */
     PyObject *length_name;    /* Name("Length") for salvage rewrite */
     /* interned constants for the fused interpreter (set at init) */
     PyObject *str_raw, *str_show_info, *str_fast_spec;
@@ -456,13 +457,23 @@ hex_string_token(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos)
     return NULL;
 }
 
+/* a failed soft assert: errors.soft(tier, msg), a log-only diagnostic */
+static int
+soft_event(const char *tier, const char *msg)
+{
+    PyObject *r = PyObject_CallFunction(S.soft, "ss", tier, msg);
+    if (r == NULL)
+        return -1;
+    Py_DECREF(r);
+    return 0;
+}
+
 /* T8 stream follow-up after '>>' — port of cos._stream_followup.
  * Returns a NEW reference: the CStream, or the dict itself (incref'd)
  * when no stream keyword follows. NULL on error. */
 static PyObject *
 stream_followup(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos,
-                PyObject *dict, PyObject *resolver, PyObject *settings,
-                int allow_recon)
+                PyObject *dict, PyObject *resolver, int allow_recon)
 {
     Py_ssize_t save = *pos, p = *pos;
     PyObject *length, *body = NULL, *res;
@@ -479,14 +490,8 @@ stream_followup(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos,
         p++;
         if (p < n && d[p] == 0x0A)
             p++;
-        else if (settings != Py_None) { /* None ⇒ ignore-tier (lexer) */
-            PyObject *r = PyObject_CallMethod(
-                settings, "soft_syntax", "(Os)", Py_False,
-                "lone CR after 'stream' keyword");
-            if (r == NULL)
-                return NULL;
-            Py_DECREF(r);
-        }
+        else if (soft_event("syntax", "lone CR after 'stream' keyword") < 0)
+            return NULL;
     } else if (p < n && d[p] == 0x0A)
         p++;
 
@@ -574,15 +579,10 @@ stream_followup(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos,
                                                             "endstream", 9)
                             : NULL;
             if (hit == NULL) {
-                if (settings != Py_None) { /* None ⇒ ignore-tier */
-                    PyObject *r = PyObject_CallMethod(
-                        settings, "soft_structure", "(Os)", Py_False,
-                        "endstream not found within scan range");
-                    if (r == NULL) {
-                        Py_DECREF(body);
-                        return NULL;
-                    }
-                    Py_DECREF(r);
+                if (soft_event("structure",
+                               "endstream not found within scan range") < 0) {
+                    Py_DECREF(body);
+                    return NULL;
                 }
             } else
                 p = (hit - d) + 9;
@@ -603,7 +603,7 @@ typedef struct {
 /* main scanner: one COS value from pos; mirrors cos.parse_object */
 static PyObject *
 parse_value(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos_io,
-            PyObject *resolver, PyObject *settings, int allow_recon)
+            PyObject *resolver, int allow_recon)
 {
     Py_ssize_t pos = *pos_io;
     frame_t *stack = NULL;
@@ -641,8 +641,7 @@ parse_value(const unsigned char *d, Py_ssize_t n, Py_ssize_t *pos_io,
             }
             if (b == '>' && pos + 1 < n && d[pos + 1] == '>') {
                 pos += 2;
-                v = stream_followup(d, n, &pos, cur, resolver, settings,
-                                    allow_recon);
+                v = stream_followup(d, n, &pos, cur, resolver, allow_recon);
                 if (v == NULL)
                     FAIL();
                 Py_DECREF(cur); /* ownership moved into v (or v==cur+1ref) */
@@ -826,9 +825,8 @@ fail:
  * pure-Python generator produces (differential parity in
  * tests/test_ctok_parity.py): PERMISSIVE stray handling, inline TJ
  * arrays, '('/'<' through the generic value parser, BI..EI skipped at
- * the lexer. Soft parse events (lone CR, endstream scan) are treated
- * as ignored — identical observable behavior to the Python path's
- * DEFAULT_SETTINGS (ignore tiers log-only). Returns a list, eagerly
+ * the lexer. Soft parse events (lone CR, endstream scan) go to
+ * errors.soft, as on the Python path. Returns a list, eagerly
  * lexed: an EParseError mid-stream aborts the document either way. */
 
 static int
@@ -990,8 +988,7 @@ ctok_lex_content(PyObject *self, PyObject *args)
             PyObject *v = (b == '(')
                               ? literal_string_token(d, n, &pos)
                               : ((pos + 1 < n && d[pos + 1] == '<')
-                                     ? parse_value(d, n, &pos, Py_None,
-                                                   Py_None, 0)
+                                     ? parse_value(d, n, &pos, Py_None, 0)
                                      : hex_string_token(d, n, &pos));
             if (v == NULL)
                 goto fail;
@@ -1945,8 +1942,7 @@ ctok_parse_xref_table(PyObject *self, PyObject *args)
  * caller runs the salvage scan — or NULL with an exception set. */
 static PyObject *
 parse_indirect_core(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
-                    long long expected, PyObject *resolver,
-                    PyObject *settings, int allow_recon)
+                    long long expected, PyObject *resolver, int allow_recon)
 {
     PyObject *v;
     Py_ssize_t s;
@@ -1984,14 +1980,14 @@ parse_indirect_core(const unsigned char *d, Py_ssize_t n, Py_ssize_t pos,
     pos += 3;
     if (idv != expected)
         Py_RETURN_NONE;
-    v = parse_value(d, n, &pos, resolver, settings, allow_recon);
+    v = parse_value(d, n, &pos, resolver, allow_recon);
     return v; /* NULL propagates the parse error */
 }
 
 static PyObject *
 ctok_parse_indirect(PyObject *self, PyObject *args)
 {
-    PyObject *data, *resolver, *settings;
+    PyObject *data, *resolver;
     Py_ssize_t pos;
     long expected;
     int allow_recon;
@@ -2001,13 +1997,12 @@ ctok_parse_indirect(PyObject *self, PyObject *args)
         PyErr_SetString(PyExc_RuntimeError, "_ctok not configured");
         return NULL;
     }
-    if (!PyArg_ParseTuple(args, "SnlOOp", &data, &pos, &expected, &resolver,
-                          &settings, &allow_recon))
+    if (!PyArg_ParseTuple(args, "SnlOp", &data, &pos, &expected, &resolver,
+                          &allow_recon))
         return NULL;
     return parse_indirect_core(
         (const unsigned char *)PyBytes_AS_STRING(data),
-        PyBytes_GET_SIZE(data), pos, expected, resolver, settings,
-        allow_recon);
+        PyBytes_GET_SIZE(data), pos, expected, resolver, allow_recon);
 }
 
 /* ---- page-tree DFS (docmodel.Document.pages twin) ------------------
@@ -2050,8 +2045,7 @@ deref_chain(PyObject *v, PyObject *resolver)
 /* inh slot order: 0=Resources 1=MediaBox 2=CropBox 3=Rotate */
 static int
 walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
-          PyObject *resolver, PyObject *soft_cb, PyObject *visited,
-          PyObject *out)
+          PyObject *resolver, PyObject *visited, PyObject *out)
 {
     PyObject *local[4];
     int own[4] = {0, 0, 0, 0};
@@ -2105,12 +2099,8 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
     if (is_pages) {
         Py_ssize_t k, nk;
         if (kids == NULL) {
-            PyObject *r = PyObject_CallFunction(
-                soft_cb, "Os", Py_False, "/Pages node without /Kids");
-            if (r == NULL)
-                goto done;
-            Py_DECREF(r);
-            rc = 0;
+            if (soft_event("structure", "/Pages node without /Kids") == 0)
+                rc = 0;
             goto done;
         }
         nk = PyList_GET_SIZE(kids);
@@ -2151,7 +2141,7 @@ walk_node(PyObject *node, PyObject *node_num, PyObject **inh, int depth,
             }
             kr = walk_node(
                 knode, PyTuple_GET_ITEM(kid, 0),
-                local, depth + 1, resolver, soft_cb, visited, out);
+                local, depth + 1, resolver, visited, out);
             Py_DECREF(knode);
             if (kr < 0)
                 goto done;
@@ -2255,7 +2245,7 @@ done:
 static PyObject *
 ctok_walk_pages(PyObject *self, PyObject *args)
 {
-    PyObject *pages, *resolver, *soft_cb, *out, *root_num, *visited;
+    PyObject *pages, *resolver, *out, *root_num, *visited;
     PyObject *inh[4] = {NULL, NULL, NULL, NULL};
     int rc;
 
@@ -2264,8 +2254,8 @@ ctok_walk_pages(PyObject *self, PyObject *args)
         PyErr_SetString(PyExc_RuntimeError, "_ctok not configured");
         return NULL;
     }
-    if (!PyArg_ParseTuple(args, "O!OOO", &PyDict_Type, &pages, &root_num,
-                          &resolver, &soft_cb))
+    if (!PyArg_ParseTuple(args, "O!OO", &PyDict_Type, &pages, &root_num,
+                          &resolver))
         return NULL;
     visited = PySet_New(NULL);
     if (visited == NULL)
@@ -2279,7 +2269,7 @@ ctok_walk_pages(PyObject *self, PyObject *args)
         Py_DECREF(visited);
         return NULL;
     }
-    rc = walk_node(pages, root_num, inh, 0, resolver, soft_cb, visited, out);
+    rc = walk_node(pages, root_num, inh, 0, resolver, visited, out);
     Py_DECREF(visited);
     if (rc < 0) {
         Py_DECREF(out);
@@ -3024,8 +3014,7 @@ ctok_interpret_content(PyObject *self, PyObject *args)
             PyObject *v2 = (b == '(')
                                ? literal_string_token(d, n, &pos)
                                : ((pos + 1 < n && d[pos + 1] == '<')
-                                      ? parse_value(d, n, &pos, Py_None,
-                                                    Py_None, 0)
+                                      ? parse_value(d, n, &pos, Py_None, 0)
                                       : hex_string_token(d, n, &pos));
             if (v2 == NULL)
                 goto fail;
@@ -3081,7 +3070,7 @@ fail:
 static PyObject *
 ctok_parse_object(PyObject *self, PyObject *args)
 {
-    PyObject *data, *resolver, *settings;
+    PyObject *data, *resolver;
     Py_ssize_t pos;
     int allow_recon;
     const unsigned char *d;
@@ -3093,8 +3082,7 @@ ctok_parse_object(PyObject *self, PyObject *args)
         PyErr_SetString(PyExc_RuntimeError, "_ctok not configured");
         return NULL;
     }
-    if (!PyArg_ParseTuple(args, "SnOOp", &data, &pos, &resolver, &settings,
-                          &allow_recon))
+    if (!PyArg_ParseTuple(args, "SnOp", &data, &pos, &resolver, &allow_recon))
         return NULL;
     d = (const unsigned char *)PyBytes_AS_STRING(data);
     n = PyBytes_GET_SIZE(data);
@@ -3102,7 +3090,7 @@ ctok_parse_object(PyObject *self, PyObject *args)
         PyErr_SetString(S.eparse, "unexpected EOF at value position");
         return NULL;
     }
-    v = parse_value(d, n, &pos, resolver, settings, allow_recon);
+    v = parse_value(d, n, &pos, resolver, allow_recon);
     if (v == NULL)
         return NULL;
     return Py_BuildValue("(Nn)", v, pos);
@@ -3112,12 +3100,12 @@ static PyObject *
 ctok_configure(PyObject *self, PyObject *args)
 {
     PyObject *cdict, *cstring, *name, *ref, *cstream, *cos_null;
-    PyObject *name_cache, *name_from_run, *eparse;
+    PyObject *name_cache, *name_from_run, *eparse, *soft;
     long max_scan, max_deref;
     (void)self;
-    if (!PyArg_ParseTuple(args, "OOOOOOOOOll", &cdict, &cstring, &name, &ref,
+    if (!PyArg_ParseTuple(args, "OOOOOOOOOllO", &cdict, &cstring, &name, &ref,
                           &cstream, &cos_null, &name_cache, &name_from_run,
-                          &eparse, &max_scan, &max_deref))
+                          &eparse, &max_scan, &max_deref, &soft))
         return NULL;
     Py_XDECREF(S.CDict);
     Py_XDECREF(S.CString);
@@ -3128,6 +3116,7 @@ ctok_configure(PyObject *self, PyObject *args)
     Py_XDECREF(S.name_cache);
     Py_XDECREF(S.name_from_run);
     Py_XDECREF(S.eparse);
+    Py_XDECREF(S.soft);
     Py_XDECREF(S.length_name);
     Py_INCREF(cdict);
     Py_INCREF(cstring);
@@ -3138,6 +3127,7 @@ ctok_configure(PyObject *self, PyObject *args)
     Py_INCREF(name_cache);
     Py_INCREF(name_from_run);
     Py_INCREF(eparse);
+    Py_INCREF(soft);
     S.CDict = cdict;
     S.CString = cstring;
     S.NameType = name;
@@ -3147,6 +3137,7 @@ ctok_configure(PyObject *self, PyObject *args)
     S.name_cache = name_cache;
     S.name_from_run = name_from_run;
     S.eparse = eparse;
+    S.soft = soft;
     S.max_scan = max_scan;
     S.max_deref = max_deref;
     S.length_name = PyObject_CallFunction(name, "s", "Length");
@@ -3549,9 +3540,9 @@ static PyMethodDef ctok_methods[] = {
      "emit_xref_table([(num, off, gen)...], eol, row_eol) -> bytes"},
     {"configure", ctok_configure, METH_VARARGS,
      "configure(CDict, CString, Name, Ref, CStream, COS_NULL, name_cache, "
-     "name_from_run, EParseError, MAX_SCAN_RANGE, MAX_DEREF_DEPTH)"},
+     "name_from_run, EParseError, MAX_SCAN_RANGE, MAX_DEREF_DEPTH, soft)"},
     {"parse_object", ctok_parse_object, METH_VARARGS,
-     "parse_object(data, pos, resolver, settings, allow_reconstruction) "
+     "parse_object(data, pos, resolver, allow_reconstruction) "
      "-> (value, new_pos)"},
     {"lex_content", ctok_lex_content, METH_VARARGS,
      "lex_content(data) -> [(op_bytes, operands_tuple), ...]"},
@@ -3570,10 +3561,10 @@ static PyMethodDef ctok_methods[] = {
      "parse_xref_table(data, pos) -> ([(num, gen, off), ...], endpos) "
      "| None(anomaly -> Python path)"},
     {"parse_indirect", ctok_parse_indirect, METH_VARARGS,
-     "parse_indirect(data, offset, expected_num, resolver, settings, "
+     "parse_indirect(data, offset, expected_num, resolver, "
      "allow_reconstruction) -> value | None(mismatch)"},
     {"walk_pages", ctok_walk_pages, METH_VARARGS,
-     "walk_pages(pages_dict, root_num, resolver, soft_structure) "
+     "walk_pages(pages_dict, root_num, resolver) "
      "-> [(num, mediabox, cropbox, resources, contents, "
      "rotate), ...]"},
     {"interpret_content", ctok_interpret_content, METH_VARARGS,

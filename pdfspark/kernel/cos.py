@@ -30,7 +30,7 @@ import re
 from typing import Callable, NamedTuple, Optional, Union
 
 from .encodings import decode_pdfdoc, encode_pdfdoc
-from .errors import MAX_DEREF_DEPTH, MAX_SCAN_RANGE, EParseError
+from .errors import MAX_DEREF_DEPTH, MAX_SCAN_RANGE, EParseError, soft
 from .raw import Raw, is_delim, is_ws
 
 # ---------------------------------------------------------------------------
@@ -666,7 +666,7 @@ def _load_ctok():
         mod.configure(
             CDict, CString, Name, Ref, CStream, COS_NULL,
             _NAME_CACHE, _name_from_run, EParseError,
-            MAX_SCAN_RANGE, MAX_DEREF_DEPTH,
+            MAX_SCAN_RANGE, MAX_DEREF_DEPTH, soft,
         )
         return mod
     except Exception:  # pragma: no cover - env without gcc/headers
@@ -686,8 +686,7 @@ if _CTOK is not None:
         data = r.data
         if data.__class__ is not bytes:  # memoryview etc. → Python path
             return _parse_object_py(r, resolver)
-        st = r.settings
-        v, r.pos = _ctok_parse(data, r.pos, resolver, st, st.allow_reconstruction)
+        v, r.pos = _ctok_parse(data, r.pos, resolver, r.settings.allow_reconstruction)
         return v
 
     parse_object.__doc__ = _parse_object_py.__doc__

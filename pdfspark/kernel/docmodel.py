@@ -17,7 +17,7 @@ from datetime import datetime, timedelta, timezone
 from typing import Optional
 
 from .cos import CDict, COS_NULL, CStream, CString, Name, Ref, _CTOK
-from .errors import EParseError
+from .errors import EParseError, soft
 from .xref import Parser
 
 # r7 C page-tree walk (docmodel.pages twin; falls back to the Python
@@ -182,7 +182,6 @@ class Document:
 
     def __init__(self, parser: Parser):
         self.parser = parser
-        st = parser.settings
         if parser.root_ref is None:
             raise EParseError("no /Root")
         root = parser._resolve(parser.root_ref)
@@ -190,7 +189,8 @@ class Document:
             raise EParseError("/Root is not a dictionary")
         self.catalog = root
         # M2: /Type /Catalog soft-assert (PDFDocCatalog.java:39-47)
-        st.soft_structure(root.get_name("Type") == "Catalog", "/Type is not /Catalog")
+        if root.get_name("Type") != "Catalog":
+            soft("structure", "/Type is not /Catalog")
         self._info: Optional[CDict] = None  # lazy: span extraction
         # never touches /Info, so its object parse is deferred to
         # first access (the metadata pipeline reads it immediately)
@@ -227,11 +227,10 @@ class Document:
         cycle, or kids shared between nodes) is an EParseError, as
         pdf.js and MuPDF reject page-tree cycles."""
         res = self.parser._resolve
-        st = self.parser.settings
         pages_dict = self.catalog.get_dict("Pages", None, res)
         out: list[PageInfo] = []
         if pages_dict is None:
-            st.soft_structure(False, "catalog has no /Pages")
+            soft("structure", "catalog has no /Pages")
             return out
         rect_memo: dict = {}  # id(box list) → Rect | None (walk-scoped)
 
@@ -258,11 +257,13 @@ class Document:
             rect_memo[id(v)] = r
             return r
 
-        root_num = self.parser.root_ref.num if self.parser.root_ref else -1
+        # the tree root's own object number (-1 for a direct /Pages)
+        pages_ref = self.catalog.get("Pages")
+        root_num = pages_ref.num if pages_ref.__class__ is Ref else -1
         if _CTOK_WALK is not None:
             # fused C DFS — same traversal, inheritance, and error
             # contract as the Python walk below (parity-tested)
-            rows = _CTOK_WALK(pages_dict, root_num, res, st.soft_structure)
+            rows = _CTOK_WALK(pages_dict, root_num, res)
             for num, mb, cb, rsc, cts, rot in rows:
                 out.append(
                     PageInfo(
@@ -293,7 +294,7 @@ class Document:
             kids = node.get_array("Kids", None, res)
             if ntype == "Pages" or (ntype is None and kids is not None):
                 if kids is None:
-                    st.soft_structure(False, "/Pages node without /Kids")
+                    soft("structure", "/Pages node without /Kids")
                     return
                 for kid in kids:
                     if not isinstance(kid, Ref):
@@ -501,7 +502,7 @@ class Document:
         walk(root.get_dict("First", None, res), 0)
         return out
 
-    def struct_order(self) -> Optional[list]:
+    def struct_order(self, pages: list[PageInfo]) -> Optional[list]:
         """Logical reading order from the structure tree (ISO 32000-1
         §14.7, r8): depth-first walk over /StructTreeRoot → /K,
         emitting (page_idx, MCID) per marked-content leaf in
@@ -510,15 +511,16 @@ class Document:
         (multi-column pages). Both §14.7.4.2 leaf forms resolve: an
         integer MCID takes its page from the nearest ancestor's /Pg;
         an /MCR dict carries its own /Pg. /OBJR leaves (annotations)
-        carry no content and are skipped. Returns None when the
-        document is untagged (no /StructTreeRoot). Cycle-, depth- and
-        fanout-guarded like the outline walk; malformed nodes are
-        skipped (PERMISSIVE)."""
+        carry no content and are skipped. ``pages`` is the caller's
+        ``pages()`` list, so the page tree is walked once. Returns None
+        when the document is untagged (no /StructTreeRoot). Cycle-,
+        depth- and fanout-guarded like the outline walk; malformed
+        nodes are skipped (PERMISSIVE)."""
         res = self.parser._resolve
         root = self.catalog.get_dict("StructTreeRoot", None, res)
         if root is None:
             return None
-        page_of = {p.obj_num: i for i, p in enumerate(self.pages())}
+        page_of = {p.obj_num: i for i, p in enumerate(pages)}
         out: list = []
         seen: set[int] = set()
 

@@ -1,12 +1,15 @@
-"""Error taxonomy + four-tier soft-assert policy.
+"""Error taxonomy: one hard failure, and soft asserts as diagnostics.
 
 Re-expresses the reference's fault model (SURVEY.md §2.8):
 - ``EParseError`` — hard failure, aborts the document
   (reference: ``exception/EParseError.java``).
-- Four soft-assert tiers, each gated by a settings flag
-  (reference: ``parser/ParserSettings.java:8-12`` defaults,
-  ``parser/Diagnostics.java:20-42`` dispatch): a failed soft assert
-  either logs-and-continues or raises, per flag.
+- Soft asserts (reference: ``parser/Diagnostics.java:20-42`` dispatch,
+  gated by ``parser/ParserSettings.java:8-12``): here every soft
+  assert is a diagnostic. ``soft(tier, msg)`` logs ``"<tier>: <msg>"``
+  at DEBUG and never changes output; the tier labels in use are
+  ``syntax``, ``structure`` and ``unsupported``. The reference's
+  strict tiers have no counterpart: a strict flag would be a second
+  place deciding that a document failed.
 
 One policy for a failed document: an ``EParseError`` means a broken
 document, and any other exception is a bug. At Spark scale every
@@ -40,55 +43,24 @@ MAX_SCAN_RANGE = 100  # MAX_SCAN_RANGE (:6)
 MAX_DEREF_DEPTH = 5
 
 
+def soft(tier: str, msg: str) -> None:
+    """A failed soft assert: log it and carry on (the C scanner calls
+    this too, handed over once by ``_ctok.configure``)."""
+    log.debug("%s: %s", tier, msg)
+
+
 @dataclass
 class ParserSettings:
-    """Mirrors reference ``parser/ParserSettings.java`` defaults.
+    """The one parser option callers set.
 
-    - ignore syntax / structure / non-supported errors = True
-    - ignore data-integrity errors = False
-    The bounded-scan constants are the module constants above.
+    Opt-in ISO 32000-1 §C.2 table reconstruction for files whose
+    startxref/xref chain is broken or absent. Default False: the
+    reference REQUIRES startxref (PDFParser.java:97-98), and the
+    malformed-corpus contract (no-xref family must fail) depends on it.
+    The bounded-scan limits are the module constants above.
     """
 
-    ignore_syntax_errors: bool = True
-    ignore_structure_errors: bool = True
-    ignore_data_integrity_errors: bool = False
-    ignore_unsupported_features: bool = True
-
-    # opt-in ISO 32000-1 §C.2 table reconstruction for files whose
-    # startxref/xref chain is broken or absent. Default False: the
-    # reference REQUIRES startxref (PDFParser.java:97-98), and the
-    # malformed-corpus contract (no-xref family must fail) depends on it.
     allow_reconstruction: bool = False
-
-    # --- four-tier soft asserts (Diagnostics.java:20-42) -------------
-    def soft_syntax(self, cond: bool, msg: str) -> None:
-        if not cond:
-            if self.ignore_syntax_errors:
-                log.debug("syntax: %s", msg)
-            else:
-                raise EParseError(msg)
-
-    def soft_structure(self, cond: bool, msg: str) -> None:
-        if not cond:
-            if self.ignore_structure_errors:
-                log.debug("structure: %s", msg)
-            else:
-                raise EParseError(msg)
-
-    def soft_integrity(self, cond: bool, msg: str) -> None:
-        # NB: default ignore_data_integrity_errors=False → integrity
-        # failures RAISE by default (ParserSettings.java:11).
-        if not cond:
-            if not self.ignore_data_integrity_errors:
-                raise EParseError(msg)
-            log.debug("integrity: %s", msg)
-
-    def soft_supported(self, cond: bool, msg: str) -> None:
-        if not cond:
-            if self.ignore_unsupported_features:
-                log.debug("unsupported: %s", msg)
-            else:
-                raise EParseError(msg)
 
 
 DEFAULT_SETTINGS = ParserSettings()

@@ -82,11 +82,12 @@ def extract_spans_doc(
         # AES-128); passworded docs route to the error bucket
         raise EParseError("encrypted document: password required")
     resolver = doc.parser._resolve
-    order = doc.struct_order() if reading_order else None
+    pages = doc.pages()
+    order = doc.struct_order(pages) if reading_order else None
     font_cache: dict = {}
     spans_seq: list = []  # content order, or the untagged spans
     tagged: dict[tuple, list] = {}  # (page, MCID) → spans
-    for pidx, page in enumerate(doc.pages()):
+    for pidx, page in enumerate(pages):
         if not page.contents:
             continue
         # §7.8.2: division between streams is only ever at a

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import re
 
-from .errors import DEFAULT_SETTINGS, MAX_SCAN_RANGE, EParseError, ParserSettings
+from .errors import DEFAULT_SETTINGS, MAX_SCAN_RANGE, EParseError, ParserSettings, soft
 
 _WS_COMMENTS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
 _WS_RE = re.compile(rb"[\x00\t\n\x0c\r ]+")
@@ -112,7 +112,7 @@ class Raw:
                 p += 1
             # lone CR after `stream` is a syntax-compliance event
             else:
-                self.settings.soft_syntax(False, "lone CR after 'stream' keyword")
+                soft("syntax", "lone CR after 'stream' keyword")
         elif p < n and d[p] == 0x0A:
             p += 1
         self.pos = p
@@ -172,7 +172,7 @@ class Raw:
         limit = self.pos + MAX_SCAN_RANGE
         idx = self.data.find(b"endstream", self.pos, limit + 9)
         if idx < 0:
-            self.settings.soft_structure(False, "endstream not found within scan range")
+            soft("structure", "endstream not found within scan range")
         else:
             self.pos = idx + 9
         return body

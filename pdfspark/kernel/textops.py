@@ -26,6 +26,8 @@ from typing import Optional
 
 import re as _re
 from array import array as _array
+from bisect import bisect_right as _bisect_right
+from heapq import heappop as _heappop, heappush as _heappush
 
 from .cos import (
     CDict,
@@ -84,10 +86,59 @@ def _read_tokens_until(r: Raw, end_kw: bytes) -> list:
     raise EParseError(f"CMap: missing {end_kw.decode()}")
 
 
-def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
+class ToUnicode:
+    """A parsed /ToUnicode CMap (ISO 32000-1 §9.10.3): code → text.
+
+    Every mapping is a ``(lo, hi, base, width)`` row, code ``c`` in
+    ``[lo, hi]`` decoding as the UTF-16BE bytes of ``base + c - lo``
+    in ``width`` bytes; a bfchar entry is a one-code row. A code is
+    resolved at lookup, so a bfrange row costs O(1) memory however
+    many codes it spans. The rows are cut into disjoint pieces, each
+    code owned by the last row in file order that covers it: lookups
+    see what writing every code out in file order would leave."""
+
+    __slots__ = ("starts", "pieces")
+
+    def __init__(self, rows: list = ()):
+        bounds = sorted({b for lo, hi, _, _ in rows for b in (lo, hi + 1)})
+        by_lo = sorted(range(len(rows)), key=lambda i: rows[i][0])
+        live: list = []  # heap of -row index; expired rows leave lazily
+        pieces: list = []  # (first, last, row)
+        k = 0
+        for a, b in zip(bounds, bounds[1:]):
+            while k < len(by_lo) and rows[by_lo[k]][0] <= a:
+                _heappush(live, -by_lo[k])
+                k += 1
+            while live and rows[-live[0]][1] < a:
+                _heappop(live)
+            if live:
+                row = rows[-live[0]]
+                if pieces and pieces[-1][2] is row and pieces[-1][1] == a - 1:
+                    pieces[-1] = (pieces[-1][0], b - 1, row)
+                else:
+                    pieces.append((a, b - 1, row))
+        self.pieces = pieces
+        self.starts = [p[0] for p in pieces]
+
+    def get(self, code: int, default: Optional[str] = None) -> Optional[str]:
+        i = _bisect_right(self.starts, code) - 1
+        if i >= 0:
+            _first, last, (lo, _hi, base, width) = self.pieces[i]
+            if code <= last:
+                return (base + code - lo).to_bytes(width, "big").decode(
+                    "utf-16-be", errors="surrogatepass"
+                )
+        return default
+
+
+def parse_tounicode_cmap(data: bytes) -> ToUnicode:
     """Parse a /ToUnicode CMap: beginbfchar/endbfchar and
     beginbfrange/endbfrange sections (ISO 32000-1 §9.10.3)."""
-    out: dict[int, str] = {}
+    rows: list = []
+
+    def one(code: int, dst: CString) -> None:
+        rows.append((code, code, int.from_bytes(dst.raw, "big"), len(dst.raw)))
+
     r = Raw(data)
     d = data
     n = len(d)
@@ -102,8 +153,7 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
             for k in range(0, len(toks) - 1, 2):
                 src, dst = toks[k], toks[k + 1]
                 if isinstance(src, CString) and isinstance(dst, CString):
-                    code = int.from_bytes(src.raw, "big")
-                    out[code] = dst.raw.decode("utf-16-be", errors="surrogatepass")
+                    one(int.from_bytes(src.raw, "big"), dst)
         else:
             r.pos = i2 + len(b"beginbfrange")
             toks = _read_tokens_until(r, b"endbfrange")
@@ -119,17 +169,13 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
                     # a destination that outgrows its byte width is
                     # malformed: those codes are skipped (PERMISSIVE)
                     last = min(hi_i, lo_i + (1 << 8 * width) - 1 - base)
-                    for c in range(lo_i, last + 1):
-                        out[c] = (base + c - lo_i).to_bytes(width, "big").decode(
-                            "utf-16-be", errors="surrogatepass"
-                        )
+                    if last >= lo_i:
+                        rows.append((lo_i, last, base, width))
                 elif isinstance(dst, list):
                     for off, item in enumerate(dst):
                         if isinstance(item, CString):
-                            out[lo_i + off] = item.raw.decode(
-                                "utf-16-be", errors="surrogatepass"
-                            )
-    return out
+                            one(lo_i + off, item)
+    return ToUnicode(rows)
 
 
 class EmbeddedCMap:
@@ -153,7 +199,7 @@ class EmbeddedCMap:
         self.ranges: list[tuple[int, bytes, bytes]] = []
         self.cid_map: dict[int, int] = {}
         self.cid_ranges: list[tuple[int, int, int]] = []  # lo, hi, cid0
-        self.bf_map: dict[int, str] = {}
+        self.bf_map = ToUnicode()
         # /CIDSystemInfo /Ordering → registered character-collection
         # CID→Unicode table (kernel.cidcollections); None keeps the
         # CID-as-Unicode Identity fallback
@@ -376,7 +422,7 @@ class Font:
 
     def __init__(self, fdict: CDict, resolver: Optional[Resolver]):
         self.two_byte = False
-        self.tounicode: Optional[dict[int, str]] = None
+        self.tounicode: Optional[ToUnicode] = None
         self.table: Optional[list[str]] = None
         self.codec: Optional[str] = None
         self.cmap: Optional[EmbeddedCMap] = None  # embedded /Encoding CMap
@@ -603,9 +649,8 @@ class Font:
         byte-width) by show_info."""
         cm = self.cmap
         tu = self.tounicode
-        if tu is not None and code in tu:
-            ch = tu[code]
-        else:
+        ch = tu.get(code) if tu is not None else None
+        if ch is None:
             s = cm.bf(code)
             if s is not None:
                 ch = s

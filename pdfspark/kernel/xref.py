@@ -39,6 +39,7 @@ from .errors import (
     STARTXREF_LOOKUP_RANGE,
     EParseError,
     ParserSettings,
+    soft,
 )
 from .filters import decode_stream
 from .raw import Raw
@@ -178,13 +179,12 @@ class Parser:
 
     def _parse_entry(self) -> None:
         d = self.raw.data
-        st = self.settings
         # %%EOF reverse scan within 1024 of end; missing marker is a
         # SOFT syntax event — fall back to EOF = file end
         # (PDFParser.java:91-95, ParserSettings.java:16)
         eof = self.raw.reverse_scan(len(d), b"%%EOF", EOF_LOOKUP_RANGE)
         if eof < 0:
-            st.soft_syntax(False, "missing %%EOF marker")
+            soft("syntax", "missing %%EOF marker")
             eof = len(d)
         # startxref reverse scan within 100 of %%EOF (PDFParser.java:97)
         sx = self.raw.reverse_scan(eof, b"startxref", STARTXREF_LOOKUP_RANGE)
@@ -343,11 +343,11 @@ class Parser:
         p = hdr_pos + 5
         m = _VERSION_RE.match(d, p)
         if m is None:
-            self.settings.soft_syntax(False, "unparsable version header")
+            soft("syntax", "unparsable version header")
             return
         self.version = (int(m.group(1)), int(m.group(2)))
-        ok = self.version[0] == 1 and 0 <= self.version[1] <= 8
-        self.settings.soft_supported(ok, f"unsupported PDF version {self.version}")
+        if not (self.version[0] == 1 and 0 <= self.version[1] <= 8):
+            soft("unsupported", f"unsupported PDF version {self.version}")
 
     # ---- X2/X3/X4 dispatch + /Prev chain -----------------------------
     def _parse_xref_section(self, offset: int, _depth: int = 0) -> None:
@@ -462,17 +462,13 @@ class Parser:
                     for i in np.nonzero(messy)[0].tolist():
                         parts = block[i * 20 : (i + 1) * 20].split()
                         if len(parts) < 3:
-                            self.settings.soft_structure(
-                                False, "short xref row"
-                            )
+                            soft("structure", "short xref row")
                             continue
                         if parts[2][:1] == b"n":
                             if parts[0].isdigit() and parts[1].isdigit():
                                 add(start + i, int(parts[1]), int(parts[0]))
                             else:
-                                self.settings.soft_structure(
-                                    False, "non-numeric xref row"
-                                )
+                                soft("structure", "non-numeric xref row")
                 idx = np.nonzero(clean_n)[0]
                 if idx.size:
                     for i, g, o in zip(
@@ -503,9 +499,7 @@ class Parser:
                             if t0.isdigit() and t1.isdigit():
                                 add(start + i, int(t1), int(t0))
                             else:
-                                self.settings.soft_structure(
-                                    False, "non-numeric xref row"
-                                )
+                                soft("structure", "non-numeric xref row")
                     pos += 20 * count
                     continue
                 # strict geometry but ragged token count: per-row
@@ -514,15 +508,13 @@ class Parser:
                 for i in range(count):
                     parts = block[i * 20 : (i + 1) * 20].split()
                     if len(parts) < 3:
-                        self.settings.soft_structure(False, "short xref row")
+                        soft("structure", "short xref row")
                         continue
                     if parts[2][:1] == b"n":
                         if parts[0].isdigit() and parts[1].isdigit():
                             add(start + i, int(parts[1]), int(parts[0]))
                         else:
-                            self.settings.soft_structure(
-                                False, "non-numeric xref row"
-                            )
+                            soft("structure", "non-numeric xref row")
                 pos += 20 * count
                 continue
             r.pos = pos
@@ -597,8 +589,8 @@ class Parser:
         if not isinstance(obj, CStream):
             raise EParseError("xref stream object is not a stream")
         sd = obj.dict
-        tp = sd.get_name("Type")
-        self.settings.soft_structure(tp == "XRef", "/Type is not /XRef")
+        if sd.get_name("Type") != "XRef":
+            soft("structure", "/Type is not /XRef")
         w = sd.get_array("W")
         if not w or len(w) < 3:
             raise EParseError("xref stream missing /W")
@@ -652,7 +644,7 @@ class Parser:
             start, count = _xref_stream_int(start), _xref_stream_int(count)
             for i in range(count):
                 if ri >= nrows_avail:
-                    self.settings.soft_structure(False, "xref stream short data")
+                    soft("structure", "xref stream short data")
                     break
                 t, a, b = types[ri], f2[ri], f3[ri]
                 num = start + i
@@ -667,7 +659,7 @@ class Parser:
                         num, -1, container=a, index_in_container=b
                     )
                 elif t != 0:
-                    self.settings.soft_structure(False, f"unknown xref entry type {t}")
+                    soft("structure", f"unknown xref entry type {t}")
         return sd
 
     # ---- X6-X9: object lookup / dereference --------------------------
@@ -690,9 +682,7 @@ class Parser:
         if e is None:
             return COS_NULL
         if not e.compressed and e.gen != gen:
-            self.settings.soft_structure(
-                gen == e.gen, f"gen mismatch for obj {num}: want {gen} have {e.gen}"
-            )
+            soft("structure", f"gen mismatch for obj {num}: want {gen} have {e.gen}")
         if e.compressed:
             val = self._get_compressed(e)
         else:
@@ -722,9 +712,8 @@ class Parser:
         if not 0 <= e.offset <= len(d):  # beyond the file: stale
             return self._parse_indirect_salvage(e)
         if _CTOK_PARSE_INDIRECT is not None and d.__class__ is bytes:
-            st = r.settings
             v = _CTOK_PARSE_INDIRECT(
-                d, e.offset, e.num, self._resolve, st, st.allow_reconstruction
+                d, e.offset, e.num, self._resolve, r.settings.allow_reconstruction
             )
             if v is not None:
                 return v
@@ -750,9 +739,7 @@ class Parser:
                 raise EParseError(
                     f"no 'id gen obj' at offset {e.offset} for obj {e.num}"
                 )
-            self.settings.soft_structure(
-                False, f"stale xref offset for obj {e.num}; salvaged by scan"
-            )
+            soft("structure", f"stale xref offset for obj {e.num}; salvaged by scan")
             r.pos = alt
             r.skip_ws_and_comments()
             got = try_read_id(r)
@@ -796,9 +783,8 @@ class Parser:
             if not isinstance(cobj, CStream):
                 raise EParseError(f"container {e.container} is not a stream")
             sd = cobj.dict
-            self.settings.soft_structure(
-                sd.get_name("Type") == "ObjStm", "/Type is not /ObjStm"
-            )
+            if sd.get_name("Type") != "ObjStm":
+                soft("structure", "/Type is not /ObjStm")
             n = sd.get_int("N", 0, self._resolve)
             first = sd.get_int("First", 0, self._resolve)
             decoded = decode_stream(cobj.data, sd, self._resolve)

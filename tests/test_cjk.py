@@ -114,8 +114,8 @@ def test_embedded_cmap_sections_parsed_directly():
     c1 = int.from_bytes(code_of["文"], "big")
     c2 = int.from_bytes(code_of["嵌"], "big")
     assert cm.cid_map[c0] == ord("中")  # cidchar
-    assert cm.bf_map[c1] == "文"  # bfchar
-    assert cm.bf_map[c2] == "嵌"  # bfrange (lo == hi)
+    assert cm.bf_map.get(c1) == "文"  # bfchar
+    assert cm.bf_map.get(c2) == "嵌"  # bfrange (lo == hi)
     # mixed-width tokenization: 'A' (1 byte) then 中 (2 bytes)
     raw = b"A" + code_of["中"]
     assert [c for c, _ in cm.codes_w(raw)] == [ord("A"), c0]
@@ -491,17 +491,22 @@ def test_collection_roundtrips_real_cjk():
 # --- malformed /ToUnicode bfrange -----------------------------------------
 
 
+def _mapped(tu, n: int) -> dict:
+    """The codes below ``n`` that ``tu`` maps, with their text."""
+    return {c: tu.get(c) for c in range(n) if tu.get(c) is not None}
+
+
 def test_bfrange_destination_overflow_skipped():
     """A bfrange destination that outgrows its byte width maps only the
     codes that fit; the rest are skipped like other malformed entries."""
     from pdfspark.kernel.textops import parse_tounicode_cmap
 
-    assert parse_tounicode_cmap(
+    assert _mapped(parse_tounicode_cmap(
         b"1 beginbfrange <00> <FF> <FFFF> endbfrange"
-    ) == {0: "\uffff"}
-    assert parse_tounicode_cmap(
+    ), 256) == {0: "\uffff"}
+    assert _mapped(parse_tounicode_cmap(
         b"1 beginbfrange <10> <15> <FFFD> endbfrange"
-    ) == {0x10: "\ufffd", 0x11: "\ufffe", 0x12: "\uffff"}
+    ), 256) == {0x10: "\ufffd", 0x11: "\ufffe", 0x12: "\uffff"}
 
 
 def test_bfrange_destination_overflow_document():
@@ -524,3 +529,96 @@ def test_bfrange_destination_overflow_document():
     st, err, got = extract_spans(payload)
     assert st == "ok", err
     assert [s[1] for s in got] == ["\ufffd\ufffd"]
+
+
+def test_bfrange_row_held_per_row_not_per_code():
+    """A 4-byte bfrange row of 2^20 codes is one row, not 2^20
+    entries, and still decodes at lo, at hi and past the width limit."""
+    from pdfspark.kernel.textops import parse_tounicode_cmap
+
+    tu = parse_tounicode_cmap(
+        b"2 beginbfrange <00000000> <000FFFFF> <00000041>"
+        b" <00100000> <001FFFFF> <FFF0> endbfrange"
+    )
+    assert len(tu.pieces) == 2
+    assert tu.get(0) == "\x00A"
+    assert tu.get(0xFFFFF) == "\x10@"  # 0x41 + 0xFFFFF = <00100040>
+    # the 2-byte destination <FFF0> fits 16 codes of the second row
+    assert tu.get(0x100000) == "\ufff0"
+    assert tu.get(0x10000F) == "\uffff"
+    assert tu.get(0x100010) is None
+    assert tu.get(0x1FFFFF, "?") == "?"
+
+
+def _eager_tounicode(sections: list) -> dict:
+    """Reference expansion: every code written out in file order."""
+    out = {}
+    for kind, rows in sections:
+        for row in rows:
+            if kind == "char":
+                code, dst = row
+                out[code] = dst.decode("utf-16-be", "surrogatepass")
+            elif isinstance(row[2], list):
+                lo, _hi, dsts = row
+                for off, dst in enumerate(dsts):
+                    out[lo + off] = dst.decode("utf-16-be", "surrogatepass")
+            else:
+                lo, hi, dst = row
+                base, width = int.from_bytes(dst, "big"), len(dst)
+                last = min(hi, lo + (1 << 8 * width) - 1 - base)
+                for c in range(lo, last + 1):
+                    out[c] = (base + c - lo).to_bytes(width, "big").decode(
+                        "utf-16-be", "surrogatepass"
+                    )
+    return out
+
+
+def test_tounicode_lookup_matches_eager_expansion():
+    """Seeded CMaps of interleaved bfchar and bfrange sections, with
+    overlapping rows, array destinations and destinations that
+    outgrow their width: every code looks up what writing each code
+    out in file order would leave."""
+    import random
+
+    from pdfspark.kernel.textops import parse_tounicode_cmap
+
+    rng = random.Random(0x70C0DE)
+
+    def dst():
+        # some destinations sit near the top of their width, so a
+        # range row outgrows it
+        w = rng.choice((2, 2, 4))
+        top = 1 << 16
+        v = rng.choice((rng.randrange(top), top - 1 - rng.randrange(8)))
+        return v.to_bytes(w, "big")
+
+    def hexs(b: bytes) -> bytes:
+        return b"<%s>" % b.hex().encode()
+
+    for _ in range(200):
+        sections, text = [], b""
+        for _ in range(rng.randrange(1, 5)):
+            if rng.random() < 0.4:
+                kind = "char"
+                rows = [(rng.randrange(256), dst()) for _ in range(rng.randrange(1, 6))]
+                body = [b"<%02X> %s" % (c, hexs(d)) for c, d in rows]
+            else:
+                kind, rows = "range", []
+                for _ in range(rng.randrange(1, 5)):
+                    lo = rng.randrange(256)
+                    hi = min(255, lo + rng.randrange(40))
+                    if rng.random() < 0.2:
+                        rows.append((lo, hi, [dst() for _ in range(rng.randrange(4))]))
+                    else:
+                        rows.append((lo, hi, dst()))
+                body = [
+                    b"<%02X> <%02X> %s" % (lo, hi, b"[%s]" % b" ".join(map(hexs, d))
+                                           if isinstance(d, list) else hexs(d))
+                    for lo, hi, d in rows
+                ]
+            sections.append((kind, rows))
+            text += b"%d beginbf%s %s endbf%s\n" % (
+                len(rows), kind.encode(), b" ".join(body), kind.encode()
+            )
+        got = _mapped(parse_tounicode_cmap(text), 512)
+        assert got == _eager_tounicode(sections), text

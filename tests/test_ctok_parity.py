@@ -9,6 +9,8 @@ else.
 
 from __future__ import annotations
 
+import contextlib
+import logging
 import random
 
 import pytest
@@ -48,6 +50,20 @@ def _assert_same(payload: bytes, settings=None):
         assert c[1] == py[1], (payload[:120], c[1], py[1])
 
 
+@contextlib.contextmanager
+def _soft_events(caplog):
+    """Collect the (tier, msg) soft events logged inside the block."""
+    events: list = []
+    with caplog.at_level(logging.DEBUG, logger="pdfspark.kernel"):
+        start = len(caplog.records)
+        yield events
+        events.extend(
+            tuple(rec.getMessage().split(": ", 1))
+            for rec in caplog.records[start:]
+            if rec.name == "pdfspark.kernel"
+        )
+
+
 CORPUS = [
     b"42", b"-0000", b"+1234567890", b"4.", b"-.002", b"34.5", b"0.0",
     b"123456789012345678901234567890",  # > long long
@@ -80,6 +96,9 @@ CORPUS = [
     b"<< /Length -5 >>\nstream\nxx\nendstream",  # negative length
     b"<< /Length /Nope >>\nstream\nxx\nendstream",  # non-int length
     b"{", b"}", b"12x", b"5 0 Rx",
+    # soft events: lone CR after `stream`, no endstream in scan range
+    b"<< /Length 2 >>\nstream\rXXendstream",
+    b"<< /Length 2 >>\nstream\nXX" + b"Y" * 300 + b"endstream",
 ]
 
 
@@ -94,11 +113,54 @@ def test_salvage_mode_parity():
     _assert_same(b"<< /Length /Nope >>\nstream\nBODY", st)  # no endstream
 
 
-def test_strict_tier_parity():
-    # integrity/structure tiers OFF → soft asserts raise in both paths
-    st = ParserSettings(ignore_syntax_errors=False, ignore_structure_errors=False)
-    _assert_same(b"<< /Length 2 >>\nstream\rXXendstream", st)  # lone CR
-    _assert_same(b"<< /Length 2 >>\nstream\nXX" + b"Y" * 300 + b"endstream", st)
+def test_diagnostics_parity(caplog):
+    """Both tiers log the same (tier, msg) soft events, and no soft
+    event raises: the scanners over CORPUS, the content lexers over a
+    dictionary operand followed by `stream`, and the page walks over a
+    /Pages node without /Kids."""
+    from conftest import classic_pdf
+    from pdfspark.kernel import docmodel, textops
+    from pdfspark.kernel.extract import parse_document
+
+    def run(fn, *args):
+        with _soft_events(caplog) as ev:
+            try:
+                out = fn(*args)
+            except (EParseError, RecursionError):
+                out = None
+        return out, ev
+
+    seen = set()
+    for payload in CORPUS:
+        c, c_ev = run(lambda: cos.parse_object(Raw(payload)))
+        py, py_ev = run(lambda: cos._parse_object_py(Raw(payload)))
+        assert c_ev == py_ev, payload[:120]
+        if c_ev:
+            assert c is not None and py is not None, payload[:120]
+        seen.update(c_ev)
+    assert seen == {
+        ("syntax", "lone CR after 'stream' keyword"),
+        ("structure", "endstream not found within scan range"),
+    }
+
+    content = b"<< /Length 2 >>\nstream\rXXendstream BDC (x) Tj"
+    c, c_ev = run(cos._CTOK.lex_content, content)
+    py, py_ev = run(lambda: list(textops._lex_content_py(content)))
+    assert repr(c) == repr(py) and c_ev == py_ev == [
+        ("syntax", "lone CR after 'stream' keyword")
+    ]
+
+    if docmodel._CTOK_WALK is None:
+        return
+    doc = parse_document(
+        classic_pdf([b"<< /Type /Catalog /Pages 2 0 R >>", b"<< /Type /Pages >>"])
+    )
+    c, c_ev = run(doc.pages)
+    with _force_python():
+        py, py_ev = run(doc.pages)
+    assert c == py == [] and c_ev == py_ev == [
+        ("structure", "/Pages node without /Kids")
+    ]
 
 
 def test_indirect_length_resolver_parity():
@@ -531,8 +593,6 @@ def test_cmap_codes_w_parity():
 def test_parse_indirect_parity():
     """C fused seek+verify+parse vs the Python try_read_id path:
     value on verified header, None on every mismatch class."""
-    from pdfspark.kernel.errors import DEFAULT_SETTINGS
-
     pi = getattr(cos._CTOK, "parse_indirect", None)
     if pi is None:
         pytest.skip("C parse_indirect not available")
@@ -559,7 +619,7 @@ def test_parse_indirect_parity():
         (b"7 0 obj<</K 1>>endobj", 0, 7),    # obj abuts <<
     ]
     for data, off, num in cases:
-        c = pi(data, off, num, None, DEFAULT_SETTINGS, False)
+        c = pi(data, off, num, None, False)
         py = py_mirror(data, off, num)
         c_cmp = None if c is None else cos.produce(c)
         assert c_cmp == py, (data, c_cmp, py)
@@ -889,11 +949,11 @@ def test_resolve_edge_semantics():
         assert repr(v) == repr(all_py[num]), num
 
 
-def test_walk_pages_error_contract():
+def test_walk_pages_error_contract(caplog):
     """C walk twin of the Python DFS error paths: kid-not-a-reference,
     page-tree-too-deep and node-visited-twice raise EParseError with
-    the same messages; a /Pages node without /Kids fires the
-    soft-structure event."""
+    the same messages; a /Pages node without /Kids logs the
+    structure event."""
     from pdfspark.kernel import docmodel
     from pdfspark.kernel.cos import CDict, Name, Ref
 
@@ -907,37 +967,31 @@ def test_walk_pages_error_contract():
     # kid is not a reference
     bad = CDict({Name("Type"): Name("Pages"), Name("Kids"): [42]})
     with pytest.raises(EParseError, match="not a reference"):
-        docmodel._CTOK_WALK(bad, 1, lambda r: CDict(), lambda ok, m: None)
+        docmodel._CTOK_WALK(bad, 1, lambda r: CDict())
     # kid resolves to a non-dict
     bad2 = CDict({Name("Type"): Name("Pages"), Name("Kids"): [Ref(2, 0)]})
     with pytest.raises(EParseError, match="is not a dictionary"):
-        docmodel._CTOK_WALK(bad2, 1, lambda r: 7, lambda ok, m: None)
+        docmodel._CTOK_WALK(bad2, 1, lambda r: 7)
     # a 70-level chain of distinct nodes → depth cap
     chain = {k: pages_node(k + 1) for k in range(1, 71)}
     chain[71] = CDict({Name("Type"): Name("Page")})
     with pytest.raises(EParseError, match="too deep"):
-        docmodel._CTOK_WALK(
-            chain[1], 1, lambda r: chain[r.num], lambda ok, m: None
-        )
+        docmodel._CTOK_WALK(chain[1], 1, lambda r: chain[r.num])
     # self-referential tree → the root is visited twice
     loop = pages_node(1)
     with pytest.raises(EParseError, match="visited twice"):
-        docmodel._CTOK_WALK(loop, 1, lambda r: loop, lambda ok, m: None)
+        docmodel._CTOK_WALK(loop, 1, lambda r: loop)
     # kids shared between levels (2^12 leaves if expanded) → the
     # second visit of the first shared node raises
     shared = {k: pages_node(k + 1, k + 1) for k in range(1, 13)}
     shared[13] = CDict({Name("Type"): Name("Page")})
     with pytest.raises(EParseError, match="visited twice"):
-        docmodel._CTOK_WALK(
-            shared[1], 1, lambda r: shared[r.num], lambda ok, m: None
-        )
+        docmodel._CTOK_WALK(shared[1], 1, lambda r: shared[r.num])
     # /Pages without /Kids → soft event, zero pages
-    soft = []
     nk = CDict({Name("Type"): Name("Pages")})
-    rows = docmodel._CTOK_WALK(
-        nk, 1, lambda r: CDict(), lambda ok, m: soft.append((ok, m))
-    )
-    assert rows == [] and soft == [(False, "/Pages node without /Kids")]
+    with _soft_events(caplog) as soft:
+        rows = docmodel._CTOK_WALK(nk, 1, lambda r: CDict())
+    assert rows == [] and soft == [("structure", "/Pages node without /Kids")]
     # kid numbers beyond int64 (corrupt-file territory) must flow
     # through like the Python walk's unbounded ints — never an
     # overflow with a swallowed error
@@ -946,9 +1000,7 @@ def test_walk_pages_error_contract():
         1: CDict({Name("Type"): Name("Pages"), Name("Kids"): [Ref(big, 0)]}),
         big: CDict({Name("Type"): Name("Page")}),
     }
-    rows = docmodel._CTOK_WALK(
-        big_store[1], 1, lambda r: big_store[r.num], lambda ok, m: None
-    )
+    rows = docmodel._CTOK_WALK(big_store[1], 1, lambda r: big_store[r.num])
     assert [r[0] for r in rows] == [big]
 
 
@@ -991,7 +1043,7 @@ def test_walk_pages_inheritance_parity():
 
         return store.get(ref.num, COS_NULL)
 
-    rows = docmodel._CTOK_WALK(store[10], 10, resolver, lambda ok, m: None)
+    rows = docmodel._CTOK_WALK(store[10], 10, resolver)
     assert [r[0] for r in rows] == [13, 12]  # DFS order
     n13, n12 = rows
     assert n13[1] is box_a and n13[3] is res_d and n13[5] == 90

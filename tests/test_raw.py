@@ -3,9 +3,11 @@ PDFRawData.java-transcribed semantics."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
-from pdfspark.kernel.errors import EParseError, ParserSettings
+from pdfspark.kernel.errors import EParseError, soft
 from pdfspark.kernel.raw import Raw
 
 
@@ -80,13 +82,19 @@ def test_read_stream_body_b9():
         Raw(b"short").read_stream_body(100)
 
 
-def test_strict_integrity_mode_raises():
-    # §2.8: data-integrity tier raises by default
-    st = ParserSettings()
-    with pytest.raises(EParseError):
-        st.soft_integrity(False, "boom")
-    # syntax tier logs by default, raises in strict mode
-    st.soft_syntax(False, "tolerated")
-    strict = ParserSettings(ignore_syntax_errors=False)
-    with pytest.raises(EParseError):
-        strict.soft_syntax(False, "boom")
+def test_soft_event_logs_debug_and_never_raises(caplog):
+    # §2.8: every soft assert is a diagnostic — logged at DEBUG on
+    # pdfspark.kernel as "<tier>: <msg>", output unchanged
+    caplog.set_level(logging.DEBUG, logger="pdfspark.kernel")
+    soft("structure", "tolerated")
+    r = Raw(b"\rbody")
+    r.skip_crlf_or_lf()  # lone CR after `stream`: a syntax event
+    assert r.pos == 1
+    assert [
+        (rec.levelno, rec.getMessage())
+        for rec in caplog.records
+        if rec.name == "pdfspark.kernel"
+    ] == [
+        (logging.DEBUG, "structure: tolerated"),
+        (logging.DEBUG, "syntax: lone CR after 'stream' keyword"),
+    ]

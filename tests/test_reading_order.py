@@ -77,7 +77,7 @@ def test_struct_tree_cycle_is_guarded():
 def test_struct_order_none_when_untagged():
     did = "plain1"
     doc = parse_document(build_pdf(did, synth_spans_py(did, TEXT), "classic"))
-    assert doc.struct_order() is None
+    assert doc.struct_order(doc.pages()) is None
 
 
 def _one_page(did: str, body: bytes) -> bytes:

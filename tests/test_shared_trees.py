@@ -2,12 +2,16 @@
 (`/Kids [k+1 0 R k+1 0 R]` at every level): each walk reads a node
 once, so a 2 KB file cannot expand to 2^levels entries. The page tree
 rejects such a document; name and number trees read a shared subtree
-once (PERMISSIVE, like the outline and structure walks)."""
+once (PERMISSIVE, like the outline and structure walks). The page
+tree's root counts as visited under its own object number."""
 
 from __future__ import annotations
 
+import pytest
+
 from conftest import classic_pdf
 from pdfspark.kernel import docmodel
+from pdfspark.kernel.errors import EParseError
 from pdfspark.kernel.extract import extract_spans, parse_document
 
 LEVELS = 12  # 4,096 leaves if the shared kids were expanded
@@ -44,6 +48,36 @@ def test_page_tree_shared_kids_is_an_error(monkeypatch):
         status, err, spans = extract_spans(payload)
         assert (status, spans) == ("error", [])
         assert "page tree node visited twice" in err
+
+
+def test_page_tree_root_has_its_own_number(monkeypatch):
+    # the catalog's /Pages 2 0 R is itself a /Page: its obj_num is 2,
+    # the number a structure element's /Pg names it by
+    payload = classic_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Page /MediaBox [0 0 612 792] /Contents 3 0 R >>",
+        _ONE_PAGE[2],
+    ])
+    for walk in {docmodel._CTOK_WALK, None}:
+        monkeypatch.setattr(docmodel, "_CTOK_WALK", walk)
+        assert [p.obj_num for p in parse_document(payload).pages()] == [2]
+
+
+def test_page_tree_root_revisit_raises_first(monkeypatch):
+    # the root /Pages 2 lists itself: its first kid is already a
+    # re-visit, so the walk raises before resolving that kid
+    payload = classic_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [2 0 R] /Count 1 >>",
+    ])
+    for walk in {docmodel._CTOK_WALK, None}:
+        monkeypatch.setattr(docmodel, "_CTOK_WALK", walk)
+        doc = parse_document(payload)
+        resolve, resolved = doc.parser._resolve, []
+        doc.parser._resolve = lambda ref: resolved.append(ref.num) or resolve(ref)
+        with pytest.raises(EParseError, match="page tree node visited twice"):
+            doc.pages()
+        assert resolved == [2]  # the catalog's /Pages entry only
 
 
 def test_name_tree_shared_kids_read_once():
